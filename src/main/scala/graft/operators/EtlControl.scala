@@ -213,18 +213,41 @@ object EtlControl {
     if (row.isNullAt(0)) defaultUs else row.getLong(0)
   }
 
+  /** One monitor per normalized log directory. Spark's file committer
+    * stages every write to a directory under the shared
+    * `<dir>/_temporary/0` and deletes it when a job commits, so two
+    * concurrent appends to one directory race: one's commit removes
+    * the other's staged files (FileNotFoundException, aborted job, a
+    * lost row). In-JVM appenders — concurrent pipeline sources, the
+    * artifact publishers — take the directory's monitor; appends to
+    * different directories still overlap. */
+  private val appendMonitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Append `rows` as one parquet file to the log at `dir`, serialized
+    * with every other in-JVM append to the same directory. */
+  private def appendLog(spark: SparkSession, dir: String,
+      rows: DataFrame): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString
+    appendMonitors.computeIfAbsent(key, _ => new Object).synchronized {
+      rows.coalesce(1).write.mode(SaveMode.Append).parquet(dir)
+    }
+  }
+
   /** Append one commit row to the control log (the batch_runs insert —
-    * append-only, so commits from concurrent sources never rewrite
-    * each other). */
+    * append-only, and serialized per directory by [[appendLog]], so
+    * commits from concurrent sources never rewrite or lose each
+    * other). */
   def commitRun(spark: SparkSession, controlDir: String, sourceId: String,
       batchId: String, watermarkUs: Long, recordsLoaded: Long,
       status: String = "SUCCESS"): Unit = {
     import spark.implicits._
-    Seq((sourceId, batchId, watermarkUs, recordsLoaded, status))
-      .toDF("source_id", "batch_id", "watermark_us", "records_loaded", "status")
-      .withColumn("committed_at", current_timestamp())
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(controlDir)
+    appendLog(spark, controlDir,
+      Seq((sourceId, batchId, watermarkUs, recordsLoaded, status))
+        .toDF("source_id", "batch_id", "watermark_us", "records_loaded", "status")
+        .withColumn("committed_at", current_timestamp()))
   }
 
   /** Append one task-failure record — the reference's etl_logging
@@ -238,12 +261,11 @@ object EtlControl {
       sourceId: String, batchId: String, stage: String,
       error: Throwable): Unit = {
     import spark.implicits._
-    Seq((sourceId, batchId, stage, error.getClass.getName,
-        String.valueOf(error.getMessage).take(4096)))
-      .toDF("source_id", "batch_id", "stage", "error_class", "error_message")
-      .withColumn("failed_at", current_timestamp())
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(failureDir)
+    appendLog(spark, failureDir,
+      Seq((sourceId, batchId, stage, error.getClass.getName,
+          String.valueOf(error.getMessage).take(4096)))
+        .toDF("source_id", "batch_id", "stage", "error_class", "error_message")
+        .withColumn("failed_at", current_timestamp()))
   }
 
   /** Run one cycle stage as a LOGGED task: a failure appends its
@@ -269,11 +291,10 @@ object EtlControl {
       sourceId: String, batchId: String, durationSec: Double,
       status: String = "SUCCESS"): Unit = {
     import spark.implicits._
-    Seq((sourceId, batchId, durationSec, status))
-      .toDF("source_id", "batch_id", "duration_sec", "status")
-      .withColumn("completed_at", current_timestamp())
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(durationDir)
+    appendLog(spark, durationDir,
+      Seq((sourceId, batchId, durationSec, status))
+        .toDF("source_id", "batch_id", "duration_sec", "status")
+        .withColumn("completed_at", current_timestamp()))
   }
 
   /** Run `body` with wall-clock stamping: the duration row is appended

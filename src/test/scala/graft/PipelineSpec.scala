@@ -154,6 +154,9 @@ class PipelineSpec extends SparkTestBase {
     // diff-gated IDLE, not a rewrite
     for (id <- Seq("marketplace", "crm", "shop_stream"))
       assert(spark.read.parquet(s"$root/target/$id").count() == 7)
+    // both sources of the concurrent second group loaded
+    assert(res.drop(1).forall(r => r.landedRows == 7 && r.loadedRows == 7),
+      s"second group: ${res.drop(1)}")
     val res2 = Pipeline.runFullLoad(spark, cfg, runners, root, "full2",
       stages = Seq(Seq("marketplace"), Seq("crm", "shop_stream")))
     assert(res2.forall(_.loadedRows == 0), "unchanged snapshot → no churn")
@@ -189,5 +192,139 @@ class PipelineSpec extends SparkTestBase {
     feed.rows = feed.rows.map { case (i, t, _) => (i, t, 5.0) }
     val ok = Pipeline.runIncremental(spark, cfg, Map(src.id -> bad), root, "b2")
     assert(ok.head.loadedRows == 4)
+  }
+
+  /** Config with all three sources, each fed 4 rows of amount
+    * `amount(sourceId)`, every runner gated on amount >= 0; the third
+    * result refills every feed with the next window. */
+  private def threeSources(root: String, amount: String => Double,
+      wrap: Pipeline.SourceRunner => Pipeline.SourceRunner = identity) = {
+    val e = env(s"$root/control", retries = "0")
+    val cfg = PipelineConfig.fromEnv(e.get)
+    val feeds = cfg.sources.map(s => s.id -> new Feed).toMap
+    var window = 0L
+    // each refill is a new window: same keys, later timestamps
+    def refill(): Unit = {
+      window += 1
+      for ((id, f) <- feeds) f.rows =
+        (0L until 4L).map(i => (i, window * 100000L + i, amount(id))).toVector
+    }
+    refill()
+    val runners = cfg.sources.map(s => s.id -> wrap(runner(s, feeds(s.id), e,
+      expectations = Seq(Validate.InRange("amount", min = Some(0.0),
+        max = None))))).toMap
+    (cfg, runners, () => refill())
+  }
+
+  private def successes(cfg: PipelineConfig.Resolved, batch: String) =
+    spark.read.parquet(cfg.controlDir)
+      .where(col("status") === "SUCCESS" && col("batch_id") === batch)
+      .select("source_id").collect().map(_.getString(0)).toSet
+
+  test("one failing source leaves its concurrent siblings loaded and committed") {
+    val root = Files.createTempDirectory("pipe-sib").toString
+    var bad = Set("crm")
+    val (cfg, runners, refill) =
+      threeSources(root, id => if (bad(id)) -1.0 else 2.0)
+    val ex = intercept[Pipeline.ValidationException] {
+      Pipeline.runIncremental(spark, cfg, runners, root, "b1")
+    }
+    assert(ex.getMessage.startsWith("crm/b1"), ex.getMessage)
+    assert(ex.getSuppressed.isEmpty)
+    // the siblings published their targets and committed SUCCESS; the
+    // failed source has neither
+    for (id <- Seq("shop_stream", "marketplace"))
+      assert(spark.read.parquet(s"$root/target/$id").count() == 4, id)
+    assert(!new java.io.File(s"$root/target/crm").exists())
+    assert(successes(cfg, "b1") == Set("shop_stream", "marketplace"))
+
+    // two failures: the first in config order surfaces, the other rides
+    // along as suppressed
+    bad = Set("marketplace", "crm")
+    refill()
+    val ex2 = intercept[Pipeline.ValidationException] {
+      Pipeline.runIncremental(spark, cfg, runners, root, "b2")
+    }
+    assert(ex2.getMessage.startsWith("crm/b2"), ex2.getMessage)
+    assert(ex2.getSuppressed.map(_.getMessage.takeWhile(_ != ':')).toSeq ==
+      Seq("marketplace/b2"))
+    assert(successes(cfg, "b2") == Set("shop_stream"))
+
+    // the lease was released only after every chain ended, and then
+    // released: an immediate rerun acquires it and every source loads
+    bad = Set.empty
+    refill()
+    val ok = Pipeline.runIncremental(spark, cfg, runners, root, "b3")
+    assert(ok.map(_.sourceId) == cfg.sources.map(_.id))
+    assert(spark.read.parquet(s"$root/target/crm").count() == 4)
+    assert(successes(cfg, "b3") == cfg.sources.map(_.id).toSet)
+  }
+
+  test("fetch and transform callbacks never overlap, though the source chains do") {
+    val root = Files.createTempDirectory("pipe-cb").toString
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val maxInFlight = new java.util.concurrent.atomic.AtomicInteger
+    val calls = new AtomicLong
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def tracked[T](body: => T): T = {
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), (a, b) => math.max(a, b))
+      calls.incrementAndGet()
+      threads.add(Thread.currentThread().getName)
+      // long enough that unserialized callbacks would overlap
+      try { Thread.sleep(20); body } finally { inFlight.decrementAndGet(); () }
+    }
+    val (cfg, runners, _) = threeSources(root, _ => 1.0, r => r.copy(
+      fetch = (c, t) => tracked(r.fetch(c, t)),
+      transform = df => tracked(r.transform(df))))
+    val res = Pipeline.runIncremental(spark, cfg, runners, root, "b1")
+    assert(res.forall(_.loadedRows == 4))
+    assert(calls.get() == 6, "one page + one transform per source")
+    assert(maxInFlight.get() == 1)
+    // each chain ran on its own pipeline thread, not the caller's
+    assert(threads.size == 3 &&
+      threads.stream().allMatch(_.startsWith("graft-pipeline-")), threads)
+  }
+
+  test("the caller's job group and local properties reach every job of every source") {
+    val root = Files.createTempDirectory("pipe-props").toString
+    val (cfg, runners, _) = threeSources(root, _ => 1.0)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).getOrElse(new java.util.Properties))
+    }
+    val sc = spark.sparkContext
+    // listener events arrive in order: once a job tagged `mark` is seen,
+    // every job started before it has been
+    def drain(mark: String): Unit = {
+      sc.setLocalProperty("graft.test.mark", mark)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.mark", null)
+      def marked = seen.stream().anyMatch(_.getProperty("graft.test.mark") == mark)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!marked && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(marked, s"listener never saw the $mark job")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drain("before")
+      seen.clear()
+      sc.setJobGroup("pipe-props-group", "pipeline under a job group")
+      sc.setLocalProperty("graft.test.caller", "pipe-props")
+      try Pipeline.runIncremental(spark, cfg, runners, root, "b1")
+      finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty("graft.test.caller", null)
+      }
+      drain("after")
+    } finally sc.removeSparkListener(listener)
+    val jobs = seen.toArray(Array.empty[java.util.Properties])
+      .filter(_.getProperty("graft.test.mark") == null)
+    // three sources, each several jobs: landing, validate, MERGE, logs
+    assert(jobs.length >= 3 * 4, s"${jobs.length} jobs")
+    assert(jobs.forall(p =>
+      p.getProperty("spark.jobGroup.id") == "pipe-props-group" &&
+        p.getProperty("graft.test.caller") == "pipe-props"))
   }
 }
