@@ -213,38 +213,30 @@ object EtlControl {
     if (row.isNullAt(0)) defaultUs else row.getLong(0)
   }
 
-  /** One monitor per normalized log directory. Spark's file committer
-    * stages every write to a directory under the shared
+  /** The object-wide monitor serializing in-JVM log appends. Spark's
+    * file committer stages every write to a directory under the shared
     * `<dir>/_temporary/0` and deletes it when a job commits, so two
     * concurrent appends to one directory race: one's commit removes
     * the other's staged files (FileNotFoundException, aborted job, a
-    * lost row). In-JVM appenders — concurrent pipeline sources, the
-    * artifact publishers — take the directory's monitor; appends to
-    * different directories still overlap. */
-  private val appendMonitors =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+    * lost row). Concurrent pipeline sources and the artifact
+    * publishers all append through [[appendLog]]. */
+  private val appendMonitor = new Object
 
   /** Append `rows` as one parquet file to the log at `dir`, serialized
-    * with every other in-JVM append to the same directory. */
-  private def appendLog(spark: SparkSession, dir: String,
-      rows: DataFrame): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val key = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(p).toString
-    appendMonitors.computeIfAbsent(key, _ => new Object).synchronized {
+    * with every other in-JVM append. */
+  private def appendLog(dir: String, rows: DataFrame): Unit =
+    appendMonitor.synchronized {
       rows.coalesce(1).write.mode(SaveMode.Append).parquet(dir)
     }
-  }
 
   /** Append one commit row to the control log (the batch_runs insert —
-    * append-only, and serialized per directory by [[appendLog]], so
-    * commits from concurrent sources never rewrite or lose each
-    * other). */
+    * append-only, and serialized by [[appendLog]], so commits from
+    * concurrent sources never rewrite or lose each other). */
   def commitRun(spark: SparkSession, controlDir: String, sourceId: String,
       batchId: String, watermarkUs: Long, recordsLoaded: Long,
       status: String = "SUCCESS"): Unit = {
     import spark.implicits._
-    appendLog(spark, controlDir,
+    appendLog(controlDir,
       Seq((sourceId, batchId, watermarkUs, recordsLoaded, status))
         .toDF("source_id", "batch_id", "watermark_us", "records_loaded", "status")
         .withColumn("committed_at", current_timestamp()))
@@ -261,7 +253,7 @@ object EtlControl {
       sourceId: String, batchId: String, stage: String,
       error: Throwable): Unit = {
     import spark.implicits._
-    appendLog(spark, failureDir,
+    appendLog(failureDir,
       Seq((sourceId, batchId, stage, error.getClass.getName,
           String.valueOf(error.getMessage).take(4096)))
         .toDF("source_id", "batch_id", "stage", "error_class", "error_message")
@@ -291,7 +283,7 @@ object EtlControl {
       sourceId: String, batchId: String, durationSec: Double,
       status: String = "SUCCESS"): Unit = {
     import spark.implicits._
-    appendLog(spark, durationDir,
+    appendLog(durationDir,
       Seq((sourceId, batchId, durationSec, status))
         .toDF("source_id", "batch_id", "duration_sec", "status")
         .withColumn("completed_at", current_timestamp()))

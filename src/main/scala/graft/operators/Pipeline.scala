@@ -38,7 +38,7 @@ import graft.sources.{PagedRestSource, PipelineConfig, TokenAuth}
   * fresh daemon thread (see [[runIncremental]] for the measured
   * rationale). Two invariants of the one-source-at-a-time loop are
   * kept by construction: appends to a shared control/duration/failure
-  * log are serialized per directory inside [[EtlControl]], and the
+  * log are serialized inside [[EtlControl]], and the
   * caller's [[SourceRunner]] callbacks never run at the same time.
   * The fan-out is per-SOURCE (one thread each), never per-row; all
   * data movement stays inside the composed Spark jobs.
@@ -56,9 +56,10 @@ object Pipeline {
     * `transform` calls — of every runner in the call — never overlap:
     * one lock per pipeline call is held around each of them, so
     * callbacks written for one-at-a-time calls stay correct. Only the
-    * Spark jobs of different sources overlap. `provider` must be
-    * thread-safe ([[PipelineConfig.SourceConfig.credentialProvider]]'s
-    * is). */
+    * Spark jobs of different sources overlap. The `provider` is not
+    * under that lock: each provider serializes its own refreshes, but
+    * the `refreshFn`s of different sources' providers may run at the
+    * same time as each other and as another source's `fetch`. */
   final case class SourceRunner(
       fetch: (Option[String], TokenAuth.Token) => PagedRestSource.Page,
       provider: TokenAuth.CredentialProvider,
@@ -81,13 +82,15 @@ object Pipeline {
     * run of ~45 small Spark jobs whose cost is the per-job scheduling
     * floor and Spark-driver file work, not data. Measured on the
     * perfbench `etl_incremental` workload (local[4], 4-core host), the
-    * chains run back to back kept the cores busy 7.9% of the cycle and
-    * left 2.9 s of a 5.2 s cycle covered by no job. Overlapping them
-    * runs the same 45 jobs with the cores busy 23.5% and 0.75 s
-    * uncovered, and the median cycle drops from 5.20 s to 2.78 s
-    * (10/10 alternating pairs). Big windows lose nothing: their jobs
-    * already fill the cluster, and Spark's scheduler shares it
-    * between concurrent jobs.
+    * chains run back to back kept the cores busy 8.0% of the cycle and
+    * left 3.0 s of a 6.5 s cycle covered by no job. Overlapping them
+    * runs the same 45 jobs with the cores busy 19.9% and 0.9 s
+    * uncovered, and the median cycle drops from 6.47 s to 3.70 s
+    * (10/10 alternating pairs). The gain depends on that property —
+    * job-floor-bound cycles over small windows. Large windows, whose
+    * jobs fill the cluster on their own, are unmeasured: there the
+    * overlap runs the sources' MERGE rewrites and snapshot-diff
+    * shuffles side by side, which may raise peak memory and spill.
     *
     * The call returns once every chain has ended — the lease is held
     * until then — with results in config order. A failed chain does

@@ -65,9 +65,10 @@ object TokenAuth {
   /** The lifecycle owner. `refreshFn` is the token endpoint (gets the
     * prior token for its refresh grant, None on cold start); `clock`
     * returns epoch seconds; `storePath` (optional) persists tokens
-    * across restarts. Driver-side only — paging is sequential, so the
-    * monitor serializing [[validToken]] costs nothing and buys
-    * single-flight refresh for free. */
+    * across restarts. Driver-side only. The monitor serializing
+    * [[validToken]] gives single-flight refresh per provider; it does
+    * not serialize different providers, so the `refreshFn`s of
+    * concurrently running pipeline sources may run at the same time. */
   final class CredentialProvider(
       refreshFn: Option[Token] => Token,
       clock: () => Long,

