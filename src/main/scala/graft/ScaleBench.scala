@@ -50,8 +50,7 @@ object ScaleBench {
     * the idf-weighted form cost the same candidate self-join as plain
     * q19, so their ratio is an engine-constant tie (~1.0) that should
     * hold per round; the output carries `q42_over_q19` so the tie is
-    * tracked without a same-window Scratch session (VERDICT r15
-    * item 3). */
+    * tracked per run of this bench (VERDICT r15 item 3). */
   val simhashPair: Seq[String] = Seq("q19_simhash", "q42_simhash_idf")
 
   def main(args: Array[String]): Unit = {
@@ -60,18 +59,8 @@ object ScaleBench {
       .split(",").map(_.trim.toInt).toSeq
     val work = args.lift(2).getOrElse("/tmp/graft_scale")
     val family = args.lift(3).getOrElse("docs") // docs | joins | all
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     if (family == "recall") {
       runRecall(spark, base, factors, work)
@@ -357,9 +346,9 @@ object ScaleBench {
       if (java.nio.file.Files.isSymbolicLink(p)) java.nio.file.Files.delete(p)
       !java.nio.file.Files.exists(p)
     }
-    // the session's actual core count (SPARK_GRAFT_CPUS-configurable
-    // in main) — NOT a literal 32, so the spread matches the executor
-    // count on any box (r13 ADVICE)
+    // the session's actual core count (GraftSession's N) — NOT a
+    // literal 32, so the spread matches the executor count on any box
+    // (r13 ADVICE)
     val cores = spark.sparkContext.defaultParallelism
     def write(table: String, df: DataFrame): Unit = {
       df.repartition(math.min(f * 4, cores))

@@ -87,11 +87,7 @@ object DupGroups {
     val p = pairs.select(col(aCol).cast("long").as("u"),
         col(bCol).cast("long").as("v"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"CCDEBUG enter t=${System.nanoTime() / 1e9}")
     p.count()
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(s"CCDEBUG p_count t=${System.nanoTime() / 1e9}")
 
     // step-0 edges are the raw pairs, uncanonicalized: large-star
     // symmetrizes via explode (orientation-blind), its window-min is
@@ -192,8 +188,6 @@ object DupGroups {
         val next = smallStar(largeStar(r1))
           .localCheckpoint(eager = false)
         val (innerSig, nextSig) = stepSignatures(r1, next)
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"CCDEBUG step=${it / 2} inner=$innerSig sig=$nextSig t=${System.nanoTime() / 1e9}")
         stepRdds.foreach(_.unpersist(blocking = false))
         stepRdds = Seq(r1, next).flatMap(CacheRegistry.localCheckpointRdd)
         edges = next
@@ -220,10 +214,7 @@ object DupGroups {
             .select($"n".as("node"), coalesce($"comp", $"n").as("component"))
         } else
           edges.select($"hi".as("node"), $"lo".as("component"))
-      val out = result.checkpoint(eager = true)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"CCDEBUG ckpt_done t=${System.nanoTime() / 1e9}")
-      out
+      result.checkpoint(eager = true)
     } finally {
       p.unpersist()
       stepRdds.foreach(_.unpersist(blocking = false))

@@ -340,168 +340,105 @@ object AnalyticsQueries {
       .withColumnRenamed("n_rows", "n_events")
       .sortWithinPartitions("user_id")
 
+  /** q53's incident window: 10 minutes, in microseconds. */
+  private val Q53_WINDOW_US = 600000000L
+
   /** New-in-r6 — §2 #42: interval attribution with NO equi key — every
     * event falling inside any error event's 10-minute incident window,
     * rolled up per incident. The naive `ON ts BETWEEN s AND e` join is
     * a BroadcastNestedLoopJoin; [[RangeJoin.binnedIntervalJoin]] bins
     * time at the window width so it runs as a shuffled equi-join on
     * the bin id (no-BNLJ plan pinned in PlanAuditSpec). Overlapping
-    * windows each get their full event set independently. */
-  def q53RangeJoin(s: SparkSession, dir: String): DataFrame =
-    q53Variant(s, dir, "firstocc")
-
-  /** Measurement hook for the q53 plan-shape candidates (Scratch
-    * drives these; the adopted mode is what [[q53RangeJoin]] calls).
-    * r14 adjudication at x100 (one window, min-of-8 each, alternating;
-    * r14 branch decomposition: the "two" form's distinct-users branch
-    * alone was 12.2 s of its 13.1 s, no-join floor 3.8 s):
-    *   - "firstocc" — ADOPTED, 5.97 s: ONE bin join + ONE plain
-    *                per-incident aggregation; COUNT DISTINCT user is a
-    *                conditional count of first-in-window occurrences
-    *                (prev same-user event < window start), so the
-    *                (incident, user) pair-dedup exchange disappears;
-    *   - "two"    — the r11 form: bin join computed TWICE,
-    *                (count+sum) branch ⋈ distinct-user-pairs branch —
-    *                13.1–16.4 s across this round's windows;
-    *   - "single" — ONE bin join feeding a two-level (incident, user)
-    *                → incident aggregation: 15.8 s (the big partial
-    *                hash table over the fan-out loses to everything);
-    *   - "bcast"  — "single" with the exploded bin side broadcast:
-    *                16.0 s (the saved 10 M-point shuffle is cheap;
-    *                the pair mass is the cost);
-    *   - "sweep"  — the zero-join [[graft.operators.Sweep]] form:
-    *                25.2 s HERE — two full passes over ~34 M delta
-    *                rows cost more than this corpus' modest ~4.6×
-    *                fan-out; it is the scale path only when window
-    *                density makes the fan-out explode (see Sweep's
-    *                scaladoc for the crossover argument). */
-  def q53Variant(s: SparkSession, dir: String, mode: String): DataFrame = {
-    // a typo'd mode must fail loudly, not silently measure the
-    // trailing-else "single" plan in a Scratch slot
-    require(Set("firstocc", "two", "single", "bcast", "sweep").contains(mode),
-      s"unknown q53 mode '$mode'")
-    val winUs = 600000000L // 10 minutes
+    * windows each get their full event set independently.
+    *
+    * The plan shape is the r14 adjudication at x100 (one window,
+    * min-of-8 each, alternating; the two-join form's distinct-users
+    * branch alone was 12.2 s of its 13.1 s, no-join floor 3.8 s):
+    *   - first-occurrence — ADOPTED, 5.97 s: ONE bin join + ONE plain
+    *     per-incident aggregation; COUNT DISTINCT user is a
+    *     conditional count of first-in-window occurrences (prev
+    *     same-user event < window start), so the (incident, user)
+    *     pair-dedup exchange disappears;
+    *   - two joins — the r11 form: bin join computed TWICE, (count+sum)
+    *     branch ⋈ distinct-user-pairs branch — 13.1–16.4 s across that
+    *     round's windows;
+    *   - single join — ONE bin join feeding a two-level (incident,
+    *     user) → incident aggregation: 15.8 s (the big partial hash
+    *     table over the fan-out loses to everything);
+    *   - broadcast — the single-join form with the exploded bin side
+    *     broadcast: 16.0 s (the saved 10 M-point shuffle is cheap; the
+    *     pair mass is the cost);
+    *   - sweep — the zero-join [[graft.operators.Sweep]] form
+    *     ([[q91SweepPortable]]): 25.2 s HERE — two full passes over
+    *     ~34 M delta rows cost more than this corpus' modest ~4.6×
+    *     fan-out; it is the scale path only when window density makes
+    *     the fan-out explode (see Sweep's scaladoc for the crossover
+    *     argument). */
+  def q53RangeJoin(s: SparkSession, dir: String): DataFrame = {
     val ev = eventsUs(s, dir)
     // shuffle_hash on the interval side: the bin join's inputs are
     // modest but its OUTPUT is the ~7× stabbed mass — SHJ skips
     // sorting both inputs ahead of that fan-out (measured r11:
     // SMJ 1.06 s → SHJ 0.83 s with the Expand agg still in place)
-    val incBase = ev.where(col("event_type") === "error")
+    val incidents = ev.where(col("event_type") === "error")
       .select(col("event_id").as("incident_id"), col("ts_us").as("s_us"),
-        (col("ts_us") + winUs).as("e_us"))
-    if (mode == "sweep") {
-      // zero-join sweep form ([[graft.operators.Sweep]]): every window
-      // is the same length, so counts / sums / distinct-user counts are
-      // prefix sums of per-event delta rows evaluated at each incident
-      // start — linear in events + incidents, no pair fan-out at any
-      // error density
-      return graft.operators.Sweep.fixedWindowStats(
-          ev, "ts_us", "user_id", "value",
-          ev.where(col("event_type") === "error")
-            .select(col("event_id").as("incident_id"),
-              col("ts_us").as("s_us")),
-          "incident_id", "s_us", winUs)
-        .select(col("incident_id"), col("n_events"), col("n_users"),
-          col("total_value").cast("double").as("total_value"))
-        .sortWithinPartitions("incident_id")
-    }
-    val incidents =
-      if (mode == "bcast") broadcast(incBase) else incBase.hint("shuffle_hash")
-    if (mode == "firstocc") {
-      // ONE bin join + ONE per-incident aggregation, no distinct: a
-      // joined row is its user's FIRST in-window occurrence iff the
-      // user's previous event time is before the window start (for
-      // each user present in [s, e) exactly one event satisfies it) —
-      // COUNT DISTINCT user becomes a plain conditional count with
-      // map-side partials, killing the (incident, user) pair-dedup
-      // exchange that dominated the two-branch form (12.2 s of 13.1
-      // at x100). Costs one lag window on events (by user) up front.
-      import org.apache.spark.sql.expressions.{Window => W}
-      val nn = ev.where(col("user_id").isNotNull)
-        .select(col("user_id"), col("value"), col("ts_us"))
-        .withColumn("__prev",
-          lag(col("ts_us"), 1).over(W.partitionBy("user_id").orderBy("ts_us")))
-      val nl = ev.where(col("user_id").isNull)
-        .select(col("user_id"), col("value"), col("ts_us"))
-        .withColumn("__prev", lit(null).cast("long"))
-      val pts = nn.unionByName(nl)
-        .select(col("user_id").isNotNull.as("__hasu"), col("__prev"),
-          col("value"), col("ts_us"))
-      val joined = RangeJoin.binnedIntervalJoin(pts, "ts_us", incidents,
-        "s_us", "e_us", binUs = winUs)
-      return joined.groupBy("incident_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("__hasu") &&
-            (col("__prev").isNull || col("__prev") < col("s_us")), 1L)
-            .otherwise(0L)).as("n_users"),
-          sum(col("value").cast("decimal(18,2)")).cast("double")
-            .as("total_value"))
-        .select(col("incident_id"), col("n_events"), col("n_users"),
-          col("total_value"))
-        .sortWithinPartitions("incident_id")
-    }
-    if (mode == "two") {
-      val pts = ev.select(col("event_id"), col("user_id"), col("value"),
-        col("ts_us"))
-      val joined = RangeJoin.binnedIntervalJoin(pts, "ts_us", incidents,
-        "s_us", "e_us", binUs = winUs)
-      // TWO-PHASE distinct instead of mixed count_distinct: the mixed
-      // agg plans an Expand that doubles the joined mass before the
-      // exchange; splitting into (count+sum) ⋈ (distinct-pair count)
-      // runs the join twice but shuffles LESS total — the distinct
-      // branch's map-side partial dedups (incident, user) pairs before
-      // they travel. Measured r11 (pooled minima, one window): Expand
-      // form 0.83 s, two-phase 0.64 s, floor twin (scans + bin shuffle
-      // + Expand agg + sort, no join) 0.51 s — the residual is join
-      // fan-out, not plan shape.
-      val baseAgg = joined.groupBy("incident_id")
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-      val users = joined.select("incident_id", "user_id")
-        .where(col("user_id").isNotNull) // count_distinct ignores nulls
-        .distinct()
-        .groupBy("incident_id").agg(count(lit(1)).as("n_users"))
-      // left join + 0-fill: an incident whose events are all null-user
-      // must keep n_users = 0 exactly like count_distinct would
-      baseAgg.join(users, Seq("incident_id"), "left")
-        .select(col("incident_id"), col("n_events"),
-          coalesce(col("n_users"), lit(0L)).as("n_users"), col("total_value"))
-        .sortWithinPartitions("incident_id")
-    } else {
-      // ONE join, two-level rollup: the (incident, user) partial agg
-      // dedups pairs AND carries (count, decimal sum) map-side — the
-      // same hash table the "two" form's distinct branch builds, plus
-      // two buffer columns — so the fan-out mass is paid once instead
-      // of twice. Decimal partial sums re-summed per incident are
-      // bit-exact (decimal addition is exact and associative; Spark
-      // widens the result precision at each level before the final
-      // double cast). A null-user group aggregates like any other —
-      // count(user_id) at level 2 skips it, exactly count_distinct's
-      // null handling; its events still land in n_events/total_value.
-      val pts = ev.select(col("user_id"), col("value"), col("ts_us"))
-      val joined = RangeJoin.binnedIntervalJoin(pts, "ts_us", incidents,
-        "s_us", "e_us", binUs = winUs)
-      joined.groupBy("incident_id", "user_id")
-        .agg(count(lit(1)).as("__n"),
-          sum(col("value").cast("decimal(18,2)")).as("__v"))
-        .groupBy("incident_id")
-        .agg(sum(col("__n")).as("n_events"),
-          count(col("user_id")).as("n_users"),
-          sum(col("__v")).cast("double").as("total_value"))
-        .select(col("incident_id"), col("n_events"), col("n_users"),
-          col("total_value"))
-        .sortWithinPartitions("incident_id")
-    }
+        (col("ts_us") + Q53_WINDOW_US).as("e_us"))
+      .hint("shuffle_hash")
+    // ONE bin join + ONE per-incident aggregation, no distinct: a
+    // joined row is its user's FIRST in-window occurrence iff the
+    // user's previous event time is before the window start (for
+    // each user present in [s, e) exactly one event satisfies it) —
+    // COUNT DISTINCT user becomes a plain conditional count with
+    // map-side partials, killing the (incident, user) pair-dedup
+    // exchange that dominated the two-branch form (12.2 s of 13.1
+    // at x100). Costs one lag window on events (by user) up front.
+    import org.apache.spark.sql.expressions.{Window => W}
+    val nn = ev.where(col("user_id").isNotNull)
+      .select(col("user_id"), col("value"), col("ts_us"))
+      .withColumn("__prev",
+        lag(col("ts_us"), 1).over(W.partitionBy("user_id").orderBy("ts_us")))
+    val nl = ev.where(col("user_id").isNull)
+      .select(col("user_id"), col("value"), col("ts_us"))
+      .withColumn("__prev", lit(null).cast("long"))
+    val pts = nn.unionByName(nl)
+      .select(col("user_id").isNotNull.as("__hasu"), col("__prev"),
+        col("value"), col("ts_us"))
+    val joined = RangeJoin.binnedIntervalJoin(pts, "ts_us", incidents,
+      "s_us", "e_us", binUs = Q53_WINDOW_US)
+    joined.groupBy("incident_id")
+      .agg(count(lit(1)).as("n_events"),
+        sum(when(col("__hasu") &&
+          (col("__prev").isNull || col("__prev") < col("s_us")), 1L)
+          .otherwise(0L)).as("n_users"),
+        sum(col("value").cast("decimal(18,2)")).cast("double")
+          .as("total_value"))
+      .select(col("incident_id"), col("n_events"), col("n_users"),
+        col("total_value"))
+      .sortWithinPartitions("incident_id")
   }
 
   /** The [[graft.operators.Sweep]] operator's own oracled gate: q53's
-    * semantics through the ZERO-JOIN sweep path (bit-equal to the
-    * adopted firstocc form — asserted in Scratch's q53eq and here by
-    * sharing q53's DuckDB oracle). `_portable` suffix = correctness
-    * artifact, Bench skips it (the sweep is the high-density scale
-    * path, documented slower on THIS corpus' ~4.6× fan-out). */
-  def q91SweepPortable(s: SparkSession, dir: String): DataFrame =
-    q53Variant(s, dir, "sweep")
+    * semantics through the ZERO-JOIN sweep path — every window is the
+    * same length, so counts / sums / distinct-user counts are prefix
+    * sums of per-event delta rows evaluated at each incident start,
+    * linear in events + incidents with no pair fan-out at any error
+    * density. Row-for-row equal to [[q53RangeJoin]] (SweepSpec)
+    * and checked against q53's DuckDB oracle. `_portable` suffix =
+    * correctness artifact, Bench skips it (the sweep is the
+    * high-density scale path, documented slower on THIS corpus' ~4.6×
+    * fan-out). */
+  def q91SweepPortable(s: SparkSession, dir: String): DataFrame = {
+    val ev = eventsUs(s, dir)
+    graft.operators.Sweep.fixedWindowStats(
+        ev, "ts_us", "user_id", "value",
+        ev.where(col("event_type") === "error")
+          .select(col("event_id").as("incident_id"),
+            col("ts_us").as("s_us")),
+        "incident_id", "s_us", Q53_WINDOW_US)
+      .select(col("incident_id"), col("n_events"), col("n_users"),
+        col("total_value").cast("double").as("total_value"))
+      .sortWithinPartitions("incident_id")
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q53_range_join" -> (q53RangeJoin _),

@@ -699,24 +699,6 @@ object LlmQueries {
       .sortWithinPartitions("split", "shard")
   }
 
-  /** q61's pack stage in alternative shapes, for the Scratch same-
-    * window comparisons (windowed = pre-r13 single-window pack;
-    * nocache = distributed pack recomputing the pipeline twice). */
-  private[graft] def q61PackVariant(s: SparkSession, dir: String,
-      mode: String): DataFrame = {
-    val sp = Sampling.hashSplit(q61Clean(s, dir), "doc_id")
-      .select("doc_id", "split", "n_tokens")
-    val packed = mode match {
-      case "windowed" => Sampling.packByBudgetWindowed(
-        sp, Seq("split"), "doc_id", "n_tokens", 1000L)
-      case _ => Sampling.packByBudget(
-        sp, Seq("split"), "doc_id", "n_tokens", 1000L)
-    }
-    packed.groupBy("split", "shard")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"))
-      .sortWithinPartitions("split", "shard")
-  }
-
   /** The corpus-cleaning stages of [[q61CorpusPipeline]] up to the
     * split/pack: crawl → gates → exact dedup → decontaminate. */
   private def q61Clean(s: SparkSession, dir: String): DataFrame = {

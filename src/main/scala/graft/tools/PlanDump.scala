@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev/measurement tool: dump `.explain("formatted")` for every
@@ -13,10 +12,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * Usage: sbt "runMain graft.tools.PlanDump <outDir> <suffix> [sfDir] [only,...]"
   * e.g.   sbt "runMain graft.tools.PlanDump plans/r16 before /root/testdata/sf0.1"
   *
-  * Plans are captured at the Bench's own config (shuffle.partitions =
-  * SPARK_GRAFT_CPUS, AQE on) so the committed shape is what the bench
-  * actually runs; AdaptiveSparkPlan prints isFinalPlan=false because
-  * the dump does not execute the query.
+  * Plans are captured on [[graft.GraftSession]], the session Bench runs
+  * on (shuffle.partitions = SPARK_GRAFT_CPUS, AQE on), so the committed
+  * shape is what the bench actually runs; AdaptiveSparkPlan prints
+  * isFinalPlan=false because the dump does not execute the query.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -24,16 +23,7 @@ object PlanDump {
     val suffix = args.lift(1).getOrElse("before")
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val only = args.lift(3).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.create()
     Files.createDirectories(Paths.get(outDir))
     val queries = graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => !name.endsWith("_portable") }

@@ -107,4 +107,20 @@ class SweepSpec extends SparkTestBase {
     for (w <- Seq(1L, 17L, 250L, 5000L))
       assert(sweep(evR, incR, w, 8) == naive(evR, incR, w), s"w=$w")
   }
+
+  test("q91 sweep form ≡ q53 range-join form row-for-row at sf0.001 and sf0.01") {
+    import graft.queries.AnalyticsQueries.{q53RangeJoin, q91SweepPortable}
+    // column names lead the rows, so a renamed column also fails
+    def rows(df: DataFrame): Seq[Seq[Any]] =
+      try df.columns.toSeq +: df.orderBy(df.columns.map(col).toIndexedSeq: _*)
+        .collect().map(_.toSeq).toSeq
+      finally CacheRegistry.releaseAll()
+    for (dir <- Seq(sf0001, sf001)) {
+      val join = rows(q53RangeJoin(spark, dir))
+      val sweep = rows(q91SweepPortable(spark, dir))
+      assert(join.size > 1, s"no incidents at $dir")
+      assert(sweep == join, s"sweep vs join drift at $dir: " +
+        s"${sweep.diff(join).take(3)} vs ${join.diff(sweep).take(3)}")
+    }
+  }
 }
