@@ -22,7 +22,7 @@ import graft.functions.TextFunctions
   * metadata, the stop-list precedent). The symbols frame is persisted
   * per round and the predecessor freed ([[CacheRegistry]] discipline),
   * with a localCheckpoint lineage cut every few rounds so the plan
-  * tree stays constant-size (the [[DupGroups]] iteration discipline).
+  * tree stays constant-size.
   *
   * Driver-side reference implementations of the same algorithm exist
   * in every tokenizer library; what this gives you is the DISTRIBUTED

@@ -20,9 +20,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Deliberately NOT registered: per-corpus artifact caches whose
   * lifetime is the session by design (pretrained PQ code frames — the
-  * in-memory analogue of [[LshArtifact]]'s parquet), and self-cleaning
-  * iterative operators ([[DupGroups]] frees its own checkpoints before
-  * returning).
+  * in-memory analogue of [[LshArtifact]]'s parquet), and iterative
+  * operators that persist nothing ([[DupGroups]] carries its steps in
+  * shuffle files).
   */
 object CacheRegistry {
 

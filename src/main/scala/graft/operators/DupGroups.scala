@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, LongPairCheckpoint}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-group clustering: near-dup PAIRS → connected components →
   * one canonical survivor per component.
@@ -18,29 +22,32 @@ import org.apache.spark.storage.StorageLevel
   *
   * Algorithm: alternating large-star / small-star (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-  * published shuffle-native CC algorithm. Each round is two
-  * groupBy+join passes over the edge list; the edge multiset converges
-  * to disjoint stars centered on each component's minimum id in
-  * O(log² n) rounds (2–4 in practice on dedup graphs, whose components
-  * are near-cliques with tiny diameter). Nothing ever collects to the
-  * driver except the per-step convergence signature (2 longs); no
+  * published shuffle-native CC algorithm. Each round is two passes
+  * over the edge list, each a shuffle by node plus a per-node minimum;
+  * the edge set converges to disjoint stars centered on each
+  * component's minimum id in O(log² n) rounds (2–4 in practice on
+  * dedup graphs, whose components are near-cliques with tiny
+  * diameter). Nothing ever collects to the driver except the per-step
+  * convergence signatures (2 longs per partition and round); no
   * component is ever materialized as one row (a 10⁷-member boilerplate
   * cluster stays distributed), unlike connected components via
   * `collect_set`/GraphX-style message passing with array state.
   *
-  * The iteration is scheduled for the driver-job floor, which on a
-  * busy cluster (and in local mode) dominates the per-round data work:
-  * TWO star rounds run per materialized step, the step's convergence
-  * signature doubles as its materializing action (so each step is ONE
-  * Spark job — no separate count/checkpoint actions), and the dedup
-  * exchange between the two fused rounds is elided (large-star's
-  * groupBy-min is duplicate-blind, so the inner small-star pass skips
-  * its `distinct`). Steps are cache-persisted, each freed as soon as
-  * its successor materializes; the returned frame is reliable-
-  * checkpointed so EVERY internal cache block is released before the
-  * call returns — callers own no CACHE cleanup, and a failure path
-  * releases the same blocks via try/finally. The checkpoint FILES
-  * live until the RDD is GC'd (with cleanCheckpoints on) or the
+  * The iteration runs below Catalyst, on `RDD[(Long, Long)]` shuffles
+  * (Spark picks its Kryo path for primitive keys and values), so it
+  * generates no code. Its Catalyst form compiled about 46 classes per
+  * call, enough to push a corpus pass past Spark's codegen cache (100
+  * entries in 4 LRU segments of 25) so that most of the pass
+  * recompiled on every call. Each step — two star rounds — is one
+  * Spark job: four shuffle stages (five on the first step) and a
+  * result stage that returns both rounds' signatures. The result is
+  * written by one more job, so a graph that converges in one step
+  * costs two jobs. Nothing is persisted — each step's shuffle files
+  * carry it into the next — so no cache block outlives the call. The
+  * result re-enters SQL reliably checkpointed, as a `LogicalRDD` with
+  * its exact row count and size, so a small cluster map broadcasts
+  * into the caller's join and a large one shuffles. The checkpoint
+  * FILES live until the RDD is GC'd (with cleanCheckpoints on) or the
   * caller frees them via [[CacheRegistry.freeReliableCheckpoints]]
   * once the result is durable elsewhere — which the per-cycle
   * consumer ([[EtlControl.runDedupCycle]]) does.
@@ -59,7 +66,9 @@ object DupGroups {
 
   /** (node, component) for every node incident to `pairs`, where
     * `component` is the minimum node id reachable through the pair
-    * graph. Ids must be integral (long-castable). */
+    * graph. Ids must be integral (long-castable). A null id is no node:
+    * a pair with one null id only makes its other id a node (its own
+    * component), and a pair of two nulls is ignored. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50): DataFrame =
     componentsCore(pairs, aCol, bCol, maxIter, completeNodes = true)
@@ -70,155 +79,116 @@ object DupGroups {
     * just the converged star set (minima and self-loop-only nodes
     * absent): exactly what [[assignClusters]] needs, since its left
     * join + coalesce defaults every unmapped doc to its own id — and
-    * skipping the node-completion stage drops a distinct over the
-    * pair frame, a join, and shrinks the checkpoint from node-count
-    * to star-edge-count rows. */
+    * the checkpoint shrinks from node-count to star-edge-count rows. */
   private def componentsCore(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int, completeNodes: Boolean): DataFrame = {
     val spark = pairs.sparkSession
-    import spark.implicits._
     ensureCheckpointDir(spark)
 
-    // materialize the (possibly expensive — an LSH/Jaccard pipeline)
-    // pair input ONCE before anything branches over it: the node and
-    // edge derivations below each read p twice, and without an
-    // up-front fill their concurrent branches race the cache and can
-    // re-run the whole upstream pipeline.
-    val p = pairs.select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    p.count()
+    // A null endpoint is no node: a pair with one becomes a self-loop
+    // on its other endpoint (a node, never an edge), and a pair of two
+    // nulls is dropped.
+    val input = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
+      .queryExecution.toRdd
+    val edges0: RDD[(Long, Long)] = input.flatMap { r =>
+      if (r.isNullAt(0)) {
+        if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(1)))
+      } else if (r.isNullAt(1)) Some((r.getLong(0), r.getLong(0)))
+      else Some((r.getLong(0), r.getLong(1)))
+    }
+    val part = new HashPartitioner(math.max(1, input.getNumPartitions))
 
-    // step-0 edges are the raw pairs, uncanonicalized: large-star
-    // symmetrizes via explode (orientation-blind), its window-min is
-    // duplicate-blind, and the v > u filter drops self-loops — so no
-    // up-front distinct exchange is needed
-    var edges = p.select($"u".as("hi"), $"v".as("lo"))
+    // Every pass shuffles its (key, neighbor) rows by key ONCE. The
+    // per-key minimum is a reduceByKey over that same partitioning, so
+    // it combines locally with no second shuffle, and the pass streams
+    // the partition's rows against its min map: no key's neighbor list
+    // is ever collected (a hot key is one long stream).
+    def withMins(keyed: RDD[(Long, Long)])(
+        emit: (Iterator[(Long, Long)], mutable.LongMap[Long]) => Iterator[(Long, Long)])
+        : RDD[(Long, Long)] =
+      keyed.zipPartitions(keyed.reduceByKey(part, math.min(_, _))) { (rows, mins) =>
+        emit(rows, mutable.LongMap.from(mins))
+      }
+    // both orientations of every edge, keyed by the first
+    def symmetric(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      e.flatMap { case (a, b) => Iterator((a, b), (b, a)) }.partitionBy(part)
 
     // large-star: every node links its LARGER neighbors to the minimum
     // of its closed neighborhood; small-star: every node links its
     // smaller neighbors (and itself) to that minimum. Both strictly
     // shrink the potential Σ depth; alternation converges to stars.
-    //
-    // Each pass references its input exactly ONCE — symmetrize via
-    // explode (not self-union) and take the neighborhood minimum via a
-    // window (not a groupBy+self-join). Self-referencing formulations
-    // multiply the plan TREE ~5× per pass, which compounds to ~625
-    // duplicated upstream subtrees per fused double-round and stalls
-    // the analyzer (DeduplicateRelations re-aliases every copy); the
-    // single-reference shape keeps the plan linear in fused rounds and
-    // costs one exchange per pass (the window's hash partitioning)
-    // instead of two. Both passes tolerate duplicate input edges
-    // (window-min is duplicate-blind; each input row emits ≤ 2 rows,
-    // so multiplicity never compounds past a constant per step).
-    def largeStar(e: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("u")
-      e.select(explode(array(
-          struct($"hi".as("u"), $"lo".as("v")),
-          struct($"lo".as("u"), $"hi".as("v")))).as("s"))
-        .select($"s.u".as("u"), $"s.v".as("v"))
-        .withColumn("m", least(min($"v").over(w), $"u"))
-        .where($"v" > $"u")
-        // m ≤ u < v, so (v, m) is already canonical (hi > lo)
-        .select($"v".as("hi"), $"m".as("lo"))
-    }
-    // small-star WITHOUT the dedup exchange: m = min(lo) over the hi
-    // group, so (hi, m) has hi > m and (lo, m) has lo ≥ m — output is
-    // already (hi > lo)-oriented once equal pairs are dropped, and the
-    // duplicates a skipped distinct leaves behind are harmless to the
-    // next large-star pass. Used for the inner fused round.
-    def smallStarRaw(e: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("hi")
-      e.withColumn("m", min($"lo").over(w))
-        .select(explode(array(
-          struct($"hi".as("u"), $"m".as("v")),
-          struct($"lo".as("u"), $"m".as("v")))).as("s"))
-        .select($"s.u".as("u"), $"s.v".as("v"))
-        .where($"u" =!= $"v")
-        .select($"u".as("hi"), $"v".as("lo"))
-    }
-    def smallStar(e: DataFrame): DataFrame = smallStarRaw(e).distinct()
-
-    // Order-independent set signatures (the compared frames are
-    // distinct, so xor is collision-safe to ~2⁻⁶⁴ with the count);
-    // signature equality = fixed point = star set (both passes are
-    // monotone in the Kiveris potential and strictly decrease it off
-    // stars, so no non-star cycles exist). Each step's action computes
-    // the signatures of BOTH fused rounds at once via a tagged union —
-    // agreement means the inner round was already a fixed point, so
-    // clique-ish graphs (the dedup norm) converge in ONE job with no
-    // confirm step. Both rounds are lazily checkpointed, so the two
-    // branches share one computation of the inner round (BlockManager
-    // block locks serialize concurrent readers onto a single fill) —
-    // the union does NOT recompute round one.
-    def stepSignatures(inner: DataFrame, outer: DataFrame): ((Long, Long), (Long, Long)) = {
-      val rows = inner.select(lit(1).as("half"), $"hi", $"lo")
-        .union(outer.select(lit(2).as("half"), $"hi", $"lo"))
-        .groupBy("half")
-        .agg(count(lit(1)), expr("bit_xor(xxhash64(hi, lo))"))
-        .collect()
-      def sigOf(h: Int): (Long, Long) = rows.find(_.getInt(0) == h)
-        .map(r => (r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))
-        .getOrElse((0L, 0L))
-      (sigOf(1), sigOf(2))
-    }
-
-    // Lazy localCheckpoint cuts BOTH lineages between steps — the
-    // logical plan (star passes reference their input 2–4× per round;
-    // without a cut the plan tree and the analyzer's work grow
-    // exponentially with rounds) and the RDD chain (constant-size task
-    // binaries) — while staying job-free: the step's signature action
-    // is what materializes the checkpoint. localCheckpoint persists at
-    // the RDD level, which Dataset.unpersist() does NOT release (the
-    // round-6 cache leak), so each step's underlying RDD is captured
-    // from its LogicalRDD and freed explicitly once its successor is
-    // materialized.
-    var stepRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
-
-    try {
-      // Each loop step = two star rounds + one materializing signature
-      // action — ONE Spark job. Steps to convergence are O(log² n),
-      // 1–3 on real dedup graphs (near-clique components).
-      var sig: Option[(Long, Long)] = None
-      var converged = false
-      var it = 0
-      while (!converged && it < maxIter) {
-        val r1 = smallStarRaw(largeStar(edges)).distinct()
-          .localCheckpoint(eager = false)
-        val next = smallStar(largeStar(r1))
-          .localCheckpoint(eager = false)
-        val (innerSig, nextSig) = stepSignatures(r1, next)
-        stepRdds.foreach(_.unpersist(blocking = false))
-        stepRdds = Seq(r1, next).flatMap(CacheRegistry.localCheckpointRdd)
-        edges = next
-        // converged when: empty edge set (self-loop-only input), the
-        // inner round was already a fixed point, or two consecutive
-        // steps agree
-        converged = nextSig._1 == 0L || nextSig == innerSig ||
-          sig.contains(nextSig)
-        sig = Some(nextSig)
-        it += 2
+    // Outputs are (hi, lo) with hi > lo. Neither pass needs
+    // deduplicated input (the min is duplicate-blind), and neither
+    // emits more rows than it reads (large-star: one per undirected
+    // edge; small-star: per key, one (hi, m) for the row whose lo is m
+    // and one (lo, m) for each other row), so duplicates never compound.
+    def largeStar(sym: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      withMins(sym) { (rows, mins) =>
+        rows.collect { case (u, v) if v > u => (v, math.min(mins(u), u)) }
       }
-      require(converged, s"connectedComponents did not converge in $maxIter rounds")
+    def smallStar(e: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      withMins(e.partitionBy(part)) { (rows, mins) =>
+        mins.iterator ++ rows.flatMap { case (hi, lo) =>
+          val m = mins(hi)
+          if (lo != m) Iterator.single((lo, m)) else Iterator.empty
+        }
+      }
 
-      // converged edges are stars (hi = member, lo = component min);
-      // nodes absent from any star are their own component. The result
-      // is reliable-checkpointed (node+component longs — metadata-sized
-      // relative to the corpus) so every cache block below can go.
-      val result =
-        if (completeNodes) {
-          val nodes = p.select($"u".as("n")).union(p.select($"v".as("n")))
-            .distinct()
-          nodes
-            .join(edges.select($"hi".as("n"), $"lo".as("comp")), Seq("n"), "left")
-            .select($"n".as("node"), coalesce($"comp", $"n").as("component"))
-        } else
-          edges.select($"hi".as("node"), $"lo".as("component"))
-      result.checkpoint(eager = true)
-    } finally {
-      p.unpersist()
-      stepRdds.foreach(_.unpersist(blocking = false))
+    // Order-independent set signature of one partition of a symmetric
+    // edge set: count and xor of xxhash64(hi, lo) over its (hi > lo)
+    // rows, which the caller deduplicates — collision-safe to ~2⁻⁶⁴
+    // with the count. Signature equality = fixed point = star set
+    // (both passes are monotone in the Kiveris potential and strictly
+    // decrease it off stars, so no non-star cycles exist).
+    def signature(rows: Iterator[(Long, Long)]): (Long, Long) = {
+      var n, x = 0L
+      rows.foreach { case (hi, lo) =>
+        if (hi > lo) {
+          n += 1
+          x ^= XXH64.hashLong(lo, XXH64.hashLong(hi, 42L))
+        }
+      }
+      (n, x)
     }
+
+    // Each loop step runs two star rounds as ONE job: four shuffles
+    // (the small-star key and the symmetric form of each round's
+    // output; the first step also shuffles the input's symmetric form)
+    // and a result stage that returns both rounds' signatures. Equal
+    // signatures mean the inner round was already a fixed point, so
+    // clique-ish graphs (the dedup norm) converge in one step. Steps to
+    // convergence are O(log² n), 1–3 on real dedup graphs (near-clique
+    // components). `distinct` is partition-local here, with no shuffle:
+    // the rows are already partitioned by key, and equal rows share it.
+    val sym0 = symmetric(edges0)
+    var sym = sym0
+    var converged = false
+    var it = 0
+    while (!converged && it < maxIter) {
+      val inner = symmetric(smallStar(largeStar(sym)))
+      val outer = symmetric(smallStar(largeStar(inner)))
+      def merge(s: (Long, Long), t: (Long, Long)) = (s._1 + t._1, s._2 ^ t._2)
+      val (innerSig, outerSig) = inner.distinct().zipPartitions(outer.distinct()) {
+        (a, b) => Iterator.single((signature(a), signature(b)))
+      }.collect().reduce((p, q) => (merge(p._1, q._1), merge(p._2, q._2)))
+      converged = innerSig == outerSig
+      sym = outer
+      it += 2
+    }
+    require(converged, s"connectedComponents did not converge in $maxIter rounds")
+
+    // converged edges are stars (hi = member, lo = component min),
+    // partitioned by member; nodes absent from any star are their own
+    // component. sym0 holds every non-null endpoint as a key under the
+    // same partitioner, so node completion is a local min.
+    val stars = sym.distinct().filter { case (hi, lo) => hi > lo }
+    val result =
+      if (completeNodes)
+        stars.union(sym0.mapPartitions(_.map { case (n, _) => (n, n) },
+            preservesPartitioning = true))
+          .reduceByKey(part, math.min(_, _))
+      else stars
+    LongPairCheckpoint.checkpoint(spark, result, "node", "component")
   }
 
   /** Incremental cluster maintenance: fold a batch of NEW pairs into

@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.DupGroups
 
@@ -139,5 +143,98 @@ class DupGroupsSpec extends SparkTestBase {
     assert(out.schema.fields.forall(!_.dataType.typeName.contains("array")))
     val rows = out.as[(Long, Long)].collect()
     assert(rows.length === 200 && rows.forall(_._2 == 1L))
+  }
+
+  test("hot star: one center with 100k leaves matches union-find truth") {
+    // the center's neighbor stream is one 100k-row key in the star
+    // passes; leaves sit on both sides of it, so the component is
+    // re-centered on leaf 1
+    val center = 50000L
+    val pairs = (1L to 100001L).filter(_ != center).zipWithIndex.map {
+      case (leaf, i) => if (i % 2 == 0) (center, leaf) else (leaf, center)
+    }
+    val got = ccMap(pairs)
+    assert(got.size === 100001)
+    assert(got === bruteComponents(pairs))
+  }
+
+  private val pairSchema = StructType(Seq(
+    StructField("a", LongType), StructField("b", LongType)))
+  private def nullablePairs(rows: (java.lang.Long, java.lang.Long)*) =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (a, b) => Row(a, b) }, 2), pairSchema)
+  private val fiveDocs = Seq(1L, 2L, 3L, 4L, 5L).toDF("doc_id")
+  private def clusters(pairs: org.apache.spark.sql.DataFrame) =
+    DupGroups.assignClusters(fiveDocs, "doc_id", pairs, "a", "b")
+      .as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+
+  test("null ids: no null node, partners stay nodes, replay stays idempotent") {
+    val pairs = nullablePairs((1L, null), (null, 2L), (3L, 4L), (null, null))
+    val cc = DupGroups.connectedComponents(pairs, "a", "b")
+    val rows = cc.collect().map(r => (Option(r.get(0)), Option(r.get(1))))
+    assert(rows.forall { case (n, c) => n.isDefined && c.isDefined })
+    assert(cc.as[(Long, Long)].collect().toMap ===
+      Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L))
+    val once = DupGroups.updateClusters(cc, pairs, "a", "b").localCheckpoint(true)
+    val twice = DupGroups.updateClusters(once, pairs, "a", "b")
+    assert(twice.count() === 4 && once.count() === 4)
+    assert(clusters(pairs) === Seq((1L, 1L, true), (2L, 2L, true),
+      (3L, 3L, true), (4L, 3L, false), (5L, 5L, true)))
+  }
+
+  test("self-loop-only pairs: every node is its own component") {
+    val pairs = Seq((5L, 5L), (2L, 2L)).toDF("a", "b")
+    assert(DupGroups.connectedComponents(pairs, "a", "b")
+      .as[(Long, Long)].collect().toMap === Map(5L -> 5L, 2L -> 2L))
+    assert(clusters(pairs) === (1L to 5L).map(i => (i, i, true)))
+  }
+
+  test("a pairs frame with zero partitions yields no components") {
+    val zero = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], pairSchema)
+    assert(zero.rdd.getNumPartitions === 0)
+    assert(DupGroups.connectedComponents(zero, "a", "b").isEmpty)
+    assert(clusters(zero) === (1L to 5L).map(i => (i, i, true)))
+  }
+
+  test("a repeated assignClusters call compiles no new code") {
+    def run(offset: Long): Unit = {
+      val docs = (1L to 6L).map(_ + offset).toDF("doc_id")
+      val pairs = Seq((2L, 3L), (3L, 4L), (5L, 6L))
+        .map { case (a, b) => (a + offset, b + offset) }.toDF("a", "b")
+      DupGroups.assignClusters(docs, "doc_id", pairs, "a", "b").collect()
+    }
+    run(0L)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run(100L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before === 0)
+  }
+
+  test("a graph that converges in one step costs at most 3 jobs") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def inGroup[T](g: String)(f: => T): T = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    val docs = (1L to 12L).toDF("doc_id")
+    val pairs = Seq((2L, 3L), (3L, 4L), (2L, 4L), (10L, 11L)).toDF("a", "b")
+    sc.addSparkListener(listener)
+    try {
+      inGroup("dupgroups-cc")(DupGroups.assignClusters(docs, "doc_id", pairs, "a", "b"))
+      // listener events arrive in order: once the marker job is seen,
+      // every job before it has been
+      inGroup("dupgroups-marker")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("dupgroups-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("dupgroups-marker"))
+    } finally sc.removeSparkListener(listener)
+    val ccJobs = groups.toArray.count(_ == "dupgroups-cc")
+    assert(ccJobs >= 1 && ccJobs <= 3, s"$ccJobs jobs")
   }
 }
