@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.sources.ParquetSink
+import graft.sources.{ParquetMeta, ParquetSink}
 
 /** The etl_control watermark cycle that makes incremental runs
   * self-driving (reference: sql/00_master_setup.sql:65-95 —
@@ -13,10 +14,24 @@ import graft.sources.ParquetSink
   * load).
   *
   * Control table: an append-only parquet log of batch commits,
-  * (source_id, batch_id, watermark_us, records_loaded, status). The
-  * effective watermark of a source is the MAX over its SUCCESS rows —
-  * append-only means a crashed run (no commit row) simply leaves the
-  * watermark where it was.
+  * (source_id, batch_id, watermark_us, records_loaded, status,
+  * committed_at). The effective watermark of a source is the MAX over
+  * its SUCCESS rows — append-only means a crashed run (no commit row)
+  * simply leaves the watermark where it was. The duration and failure
+  * logs are separate logs of the same kind.
+  *
+  * The logs are a control plane, not data: every append and every
+  * point read ([[lastWatermarkMicros]], [[expectedRowBounds]],
+  * [[expectedDurationBounds]], the [[runDedupCycle]] batch check) is a
+  * driver-side file operation that runs no Spark job, like the
+  * reference's indexed insert and seek. Layout (one file per appended
+  * row, published by rename), the snapshot fold that keeps a read at
+  * most `ControlLog.FoldThreshold + 1` files, its crash protocol and
+  * the store assumptions are documented on [[ControlLog]].
+  * `spark.read.parquet(dir)` still reads every log, including stores
+  * written by Spark's own writer before; the reporting views
+  * ([[runHistory]], [[successRate]], [[slowRuns]]) keep their
+  * DataFrame API over the live files.
   *
   * Exactly-once: the window filter is INCLUSIVE of the stored
   * watermark (`ts >= wm`) and the new watermark is max(ts) actually
@@ -33,18 +48,55 @@ object EtlControl {
     * queues/skips the second schedule), it does NOT wait. */
   final class LeaseHeldException(msg: String) extends RuntimeException(msg)
 
-  /** A held run lease; [[release]] in a finally. */
+  /** A held run lease; [[release]] in a finally. `nonce` is unique
+    * to this acquire and is written into the lease file. */
   final case class RunLease private[EtlControl] (
       spark: SparkSession, controlDir: String, sourceId: String,
-      holderId: String) {
+      holderId: String, nonce: String) {
     private[EtlControl] def path =
       new org.apache.hadoop.fs.Path(controlDir, s"_lease_$sourceId")
-    def release(): Unit = {
+
+    /** Compare-and-delete: removes the lease file only while it is
+      * still this acquire's. A holder whose lease went stale and was
+      * taken over must not delete the new holder's live lease. The file
+      * is renamed to a tomb first, so the check reads a file no rival
+      * can replace; a tomb that turns out to be a rival's is restored.
+      * In-JVM acquirers are held off by the lease monitor meanwhile;
+      * another process's acquirer can find no lease between that rename
+      * and the restore. */
+    def release(): Unit = leaseMonitor.synchronized {
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(path, false)
+      def ours(p: org.apache.hadoop.fs.Path) =
+        readLease(fs, p).flatMap(leaseNonce).contains(nonce)
+      if (ours(path)) {
+        val tomb = new org.apache.hadoop.fs.Path(controlDir,
+          s"_lease_$sourceId.release.$nonce")
+        if (fs.rename(path, tomb)) {
+          if (ours(tomb)) fs.delete(tomb, false)
+          else fs.rename(tomb, path)
+        }
+      }
       ()
     }
   }
+
+  /** The raw bytes of a lease file, None when it is gone or unreadable. */
+  private def readLease(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[Array[Byte]] =
+    try {
+      val in = fs.open(p)
+      try Some(in.readAllBytes()) finally in.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  private def leaseProps(bytes: Array[Byte]): Option[java.util.Properties] =
+    try {
+      val props = new java.util.Properties()
+      props.load(new java.io.ByteArrayInputStream(bytes))
+      Some(props)
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  private def leaseNonce(bytes: Array[Byte]): Option[String] =
+    leaseProps(bytes).flatMap(p => Option(p.getProperty("nonce")))
 
   /** MAX-ACTIVE-RUNS=1 for one source: the reference serializes runs
     * (`max_active_runs=1`, incremental_refresh_bridge_dag.py:50) so a
@@ -65,7 +117,8 @@ object EtlControl {
       sourceId: String, holderId: String, ttlMs: Long,
       nowMs: () => Long = () => System.currentTimeMillis()): RunLease =
     leaseMonitor.synchronized {
-      val lease = RunLease(spark, controlDir, sourceId, holderId)
+      val lease = RunLease(spark, controlDir, sourceId, holderId,
+        java.util.UUID.randomUUID().toString)
       val p = lease.path
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.mkdirs(p.getParent)
@@ -74,24 +127,11 @@ object EtlControl {
         // from its acquired_at_ms, and the same bytes identify the file
         // after the takeover rename below — verification needs to know
         // the renamed file IS the one whose staleness was observed.
-        val observedBytes: Option[Array[Byte]] = try {
-          val in = fs.open(p)
-          try {
-            val buf = new java.io.ByteArrayOutputStream(256)
-            val tmp = new Array[Byte](4096)
-            var r = in.read(tmp)
-            while (r >= 0) { buf.write(tmp, 0, r); r = in.read(tmp) }
-            Some(buf.toByteArray)
-          } finally in.close()
-        } catch { case scala.util.control.NonFatal(_) => None }
+        val observedBytes = readLease(fs, p)
         val observedMtime = fs.getFileStatus(p).getModificationTime
-        val acquiredAt = observedBytes.flatMap { bs =>
-          try {
-            val props = new java.util.Properties()
-            props.load(new java.io.ByteArrayInputStream(bs))
-            Option(props.getProperty("acquired_at_ms")).map(_.toLong)
-          } catch { case scala.util.control.NonFatal(_) => None }
-        }.getOrElse(observedMtime)
+        val acquiredAt = observedBytes.flatMap(leaseProps)
+          .flatMap(props => Option(props.getProperty("acquired_at_ms")))
+          .flatMap(_.toLongOption).getOrElse(observedMtime)
         if (nowMs() - acquiredAt <= ttlMs)
           throw new LeaseHeldException(
             s"run lease for $sourceId is held (age ${nowMs() - acquiredAt} ms" +
@@ -115,21 +155,12 @@ object EtlControl {
         // Verify the tomb is the file we observed (byte-equal content;
         // mtime when the content was torn/unreadable — rename preserves
         // it). On mismatch, restore the rival's lease and back off.
-        val tombMatchesObserved = try {
-          val st = fs.getFileStatus(tomb)
-          observedBytes match {
-            case Some(ob) =>
-              val in = fs.open(tomb)
-              try {
-                val buf = new java.io.ByteArrayOutputStream(256)
-                val tmp = new Array[Byte](4096)
-                var r = in.read(tmp)
-                while (r >= 0) { buf.write(tmp, 0, r); r = in.read(tmp) }
-                java.util.Arrays.equals(ob, buf.toByteArray)
-              } finally in.close()
-            case None => st.getModificationTime == observedMtime
-          }
-        } catch { case scala.util.control.NonFatal(_) => false }
+        val tombMatchesObserved = observedBytes match {
+          case Some(ob) => readLease(fs, tomb).exists(java.util.Arrays.equals(ob, _))
+          case None =>
+            try fs.getFileStatus(tomb).getModificationTime == observedMtime
+            catch { case scala.util.control.NonFatal(_) => false }
+        }
         if (!tombMatchesObserved) {
           fs.rename(tomb, p) // best-effort restore of the rival's lease
           throw new LeaseHeldException(
@@ -159,6 +190,7 @@ object EtlControl {
         val props = new java.util.Properties()
         props.setProperty("holder_id", holderId)
         props.setProperty("acquired_at_ms", nowMs().toString)
+        props.setProperty("nonce", lease.nonce)
         props.store(out, "graft run lease")
       } finally out.close()
       lease
@@ -186,61 +218,70 @@ object EtlControl {
     try body finally lease.release()
   }
 
-  /** Last committed watermark (epoch micros) for `sourceId`, or
-    * `defaultUs` if the control table has no SUCCESS rows for it. */
-  /** A control/target dir counts as present only when it has content —
-    * a pre-created empty directory (mktemp conventions) must behave
-    * like a missing one, not crash parquet schema inference. */
+  /** A parquet dir counts as present only when it has content — a
+    * pre-created empty directory (mktemp conventions) must behave like
+    * a missing one, not crash parquet schema inference. */
   private[operators] def nonEmptyDir(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // hidden (_/.-prefixed) entries — the run-lease marker, _SUCCESS,
-    // checksums — don't make a dir readable: Spark's file index skips
-    // them too, so counting them would send a lease-only control dir
-    // into parquet schema inference
+    // hidden (_/.-prefixed) entries — _SUCCESS, checksums — don't make a
+    // dir readable: Spark's file index skips them too
     fs.exists(p) && fs.listStatus(p).exists { s =>
       val n = s.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
   }
 
+  /** The live SUCCESS rows of `sourceId` in the log at `dir`, read on
+    * the driver. */
+  private def successRows(spark: SparkSession, dir: String,
+      sourceId: String): Seq[ControlLog.Row] =
+    ControlLog.read(spark.sparkContext.hadoopConfiguration, dir).filter(r =>
+      r("source_id") == sourceId && r("status") == "SUCCESS")
+
+  /** Last committed watermark (epoch micros) for `sourceId`, or
+    * `defaultUs` if the control table has no SUCCESS rows for it. */
   def lastWatermarkMicros(spark: SparkSession, controlDir: String,
-      sourceId: String, defaultUs: Long): Long = {
-    if (!nonEmptyDir(spark, controlDir)) return defaultUs
-    val row = spark.read.parquet(controlDir)
-      .where(col("source_id") === sourceId && col("status") === "SUCCESS")
-      .agg(max("watermark_us")).head()
-    if (row.isNullAt(0)) defaultUs else row.getLong(0)
+      sourceId: String, defaultUs: Long): Long =
+    successRows(spark, controlDir, sourceId)
+      .map(_("watermark_us").asInstanceOf[Long])
+      .maxOption.getOrElse(defaultUs)
+
+  /** The logs' row schemas, as Spark's writer stamped the pre-existing
+    * stores: string columns nullable, the rest not. */
+  private val commitLogSchema = StructType(Seq(
+    StructField("source_id", StringType), StructField("batch_id", StringType),
+    StructField("watermark_us", LongType, nullable = false),
+    StructField("records_loaded", LongType, nullable = false),
+    StructField("status", StringType),
+    StructField("committed_at", TimestampType, nullable = false)))
+  private val durationLogSchema = StructType(Seq(
+    StructField("source_id", StringType), StructField("batch_id", StringType),
+    StructField("duration_sec", DoubleType, nullable = false),
+    StructField("status", StringType),
+    StructField("completed_at", TimestampType, nullable = false)))
+  private val failureLogSchema = StructType(Seq(
+    StructField("source_id", StringType), StructField("batch_id", StringType),
+    StructField("stage", StringType), StructField("error_class", StringType),
+    StructField("error_message", StringType),
+    StructField("failed_at", TimestampType, nullable = false)))
+
+  /** Now, in epoch micros — the precision Spark's `current_timestamp`
+    * stamped the logs with. */
+  private def nowMicros(): Long = {
+    val t = java.time.Instant.now()
+    t.getEpochSecond * 1000000L + t.getNano / 1000
   }
-
-  /** The object-wide monitor serializing in-JVM log appends. Spark's
-    * file committer stages every write to a directory under the shared
-    * `<dir>/_temporary/0` and deletes it when a job commits, so two
-    * concurrent appends to one directory race: one's commit removes
-    * the other's staged files (FileNotFoundException, aborted job, a
-    * lost row). Concurrent pipeline sources and the artifact
-    * publishers all append through [[appendLog]]. */
-  private val appendMonitor = new Object
-
-  /** Append `rows` as one parquet file to the log at `dir`, serialized
-    * with every other in-JVM append. */
-  private def appendLog(dir: String, rows: DataFrame): Unit =
-    appendMonitor.synchronized {
-      rows.coalesce(1).write.mode(SaveMode.Append).parquet(dir)
-    }
 
   /** Append one commit row to the control log (the batch_runs insert —
-    * append-only, and serialized by [[appendLog]], so commits from
-    * concurrent sources never rewrite or lose each other). */
+    * append-only: each row is its own file, so commits from concurrent
+    * sources never rewrite or lose each other). */
   def commitRun(spark: SparkSession, controlDir: String, sourceId: String,
       batchId: String, watermarkUs: Long, recordsLoaded: Long,
-      status: String = "SUCCESS"): Unit = {
-    import spark.implicits._
-    appendLog(controlDir,
-      Seq((sourceId, batchId, watermarkUs, recordsLoaded, status))
-        .toDF("source_id", "batch_id", "watermark_us", "records_loaded", "status")
-        .withColumn("committed_at", current_timestamp()))
-  }
+      status: String = "SUCCESS"): Unit =
+    ControlLog.append(spark.sparkContext.hadoopConfiguration, controlDir,
+      commitLogSchema,
+      Seq(sourceId, batchId, watermarkUs, recordsLoaded, status, nowMicros()))
 
   /** Append one task-failure record — the reference's etl_logging
     * surface (src/utils/etl_logging.py logs per-task failures into
@@ -251,14 +292,11 @@ object EtlControl {
     * batch_id, stage, error_class, error_message, failed_at). */
   def logTaskFailure(spark: SparkSession, failureDir: String,
       sourceId: String, batchId: String, stage: String,
-      error: Throwable): Unit = {
-    import spark.implicits._
-    appendLog(failureDir,
-      Seq((sourceId, batchId, stage, error.getClass.getName,
-          String.valueOf(error.getMessage).take(4096)))
-        .toDF("source_id", "batch_id", "stage", "error_class", "error_message")
-        .withColumn("failed_at", current_timestamp()))
-  }
+      error: Throwable): Unit =
+    ControlLog.append(spark.sparkContext.hadoopConfiguration, failureDir,
+      failureLogSchema,
+      Seq(sourceId, batchId, stage, error.getClass.getName,
+        String.valueOf(error.getMessage).take(4096), nowMicros()))
 
   /** Run one cycle stage as a LOGGED task: a failure appends its
     * record to `failureDir` (stage + error class — the alertable
@@ -281,13 +319,10 @@ object EtlControl {
     * (source_id, batch_id, duration_sec, status, completed_at). */
   def logRunDuration(spark: SparkSession, durationDir: String,
       sourceId: String, batchId: String, durationSec: Double,
-      status: String = "SUCCESS"): Unit = {
-    import spark.implicits._
-    appendLog(durationDir,
-      Seq((sourceId, batchId, durationSec, status))
-        .toDF("source_id", "batch_id", "duration_sec", "status")
-        .withColumn("completed_at", current_timestamp()))
-  }
+      status: String = "SUCCESS"): Unit =
+    ControlLog.append(spark.sparkContext.hadoopConfiguration, durationDir,
+      durationLogSchema,
+      Seq(sourceId, batchId, durationSec, status, nowMicros()))
 
   /** Run `body` with wall-clock stamping: the duration row is appended
     * on success AND on failure (status FAILURE — the slow-or-dead runs
@@ -315,7 +350,7 @@ object EtlControl {
     * [[graft.sources.PipelineConfig.PerformanceThresholds.maxExecutionSec]]. */
   def slowRuns(spark: SparkSession, durationDir: String,
       maxExecutionSec: Double): DataFrame =
-    spark.read.parquet(durationDir)
+    ControlLog.frame(spark, durationDir, durationLogSchema)
       .where(col("duration_sec") > maxExecutionSec)
       .select("source_id", "batch_id", "duration_sec", "status", "completed_at")
 
@@ -327,36 +362,14 @@ object EtlControl {
   def expectedDurationBounds(spark: SparkSession, durationDir: String,
       sourceId: String, tolerance: Double = 1.0,
       slaCapSec: Option[Double] = None): Option[Double] = {
-    val hist =
-      if (!nonEmptyDir(spark, durationDir)) None
-      else spark.read.parquet(durationDir)
-        .where(col("source_id") === sourceId && col("status") === "SUCCESS")
-        .orderBy(desc("completed_at"))
-        .select("duration_sec").limit(1).collect()
-        .headOption.map(_.getDouble(0) * (1.0 + tolerance))
+    val hist = successRows(spark, durationDir, sourceId)
+      .maxByOption(_("completed_at").asInstanceOf[Long])
+      .map(_("duration_sec").asInstanceOf[Double] * (1.0 + tolerance))
     (hist, slaCapSec) match {
       case (Some(h), Some(c)) => Some(math.min(h, c))
       case (h, c) => h.orElse(c)
     }
   }
-
-  /** Empty frame with `schema` when `dir` has no parquet yet — the
-    * reporting views below must work before any log exists. */
-  private def readLogOr(spark: SparkSession, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    if (nonEmptyDir(spark, dir)) spark.read.parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  private val commitLogSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "source_id string, batch_id string, watermark_us bigint, " +
-      "records_loaded bigint, status string, committed_at timestamp")
-  private val durationLogSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "source_id string, batch_id string, duration_sec double, " +
-      "status string, completed_at timestamp")
-  private val failureLogSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "source_id string, batch_id string, stage string, error_class string, " +
-      "error_message string, failed_at timestamp")
 
   /** Recent-runs view — the reference's run-summary read over
     * etl_control.batch_runs (sql/00_master_setup.sql:65-76: per-batch
@@ -379,17 +392,17 @@ object EtlControl {
     * limit downstream as needed. */
   def runHistory(spark: SparkSession, controlDir: String,
       durationDir: String = "", failureDir: String = ""): DataFrame = {
-    val commits = readLogOr(spark, controlDir, commitLogSchema)
+    val commits = ControlLog.frame(spark, controlDir, commitLogSchema)
       .select(col("source_id"), col("batch_id"),
         col("status").as("commit_status"),
         col("records_loaded"), col("watermark_us"), col("committed_at"))
-    val durations = readLogOr(spark,
+    val durations = ControlLog.frame(spark,
         if (durationDir.isEmpty) controlDir + "/_none_" else durationDir,
         durationLogSchema)
       .groupBy("source_id", "batch_id")
       .agg(max("duration_sec").as("duration_sec"),
         max("completed_at").as("completed_at"))
-    val failures = readLogOr(spark,
+    val failures = ControlLog.frame(spark,
         if (failureDir.isEmpty) controlDir + "/_none_" else failureDir,
         failureLogSchema)
       .groupBy("source_id", "batch_id")
@@ -467,18 +480,15 @@ object EtlControl {
     * no history exists (first batch — nothing to compare against).
     * Feed the result to [[Validate.RowCountBetween]]. */
   def expectedRowBounds(spark: SparkSession, controlDir: String,
-      sourceId: String, tolerance: Double = 0.5): Option[(Long, Long)] = {
-    if (!nonEmptyDir(spark, controlDir)) return None
-    val rows = spark.read.parquet(controlDir)
-      .where(col("source_id") === sourceId && col("status") === "SUCCESS")
-      .orderBy(desc("watermark_us"), desc("committed_at"))
-      .select("records_loaded").limit(1).collect()
-    rows.headOption.map { r =>
-      val n = r.getLong(0).toDouble
-      (math.floor(n * (1 - tolerance)).toLong,
-        math.ceil(n * (1 + tolerance)).toLong)
-    }
-  }
+      sourceId: String, tolerance: Double = 0.5): Option[(Long, Long)] =
+    successRows(spark, controlDir, sourceId)
+      .maxByOption(r => (r("watermark_us").asInstanceOf[Long],
+        r("committed_at").asInstanceOf[Long]))
+      .map { r =>
+        val n = r("records_loaded").asInstanceOf[Long].toDouble
+        (math.floor(n * (1 - tolerance)).toLong,
+          math.ceil(n * (1 + tolerance)).toLong)
+      }
 
   /** Diff-driven FULL-SNAPSHOT cycle: the reference's full-load
     * sources (shopee full_load DAG) rewrite their whole target every
@@ -505,7 +515,7 @@ object EtlControl {
         watermarkUs = 0L, recordsLoaded = n, status = "SUCCESS")
       return (n, 0L, 0L)
     }
-    val target = spark.read.parquet(targetDir)
+    val target = ParquetMeta.readParquet(spark, targetDir)
     val diff = Incremental.snapshotDiff(target, snapshot, keys).persist()
     try {
       val counts = diff.groupBy("change_op").count().collect()
@@ -539,10 +549,8 @@ object EtlControl {
       sourceId: String, pairs: DataFrame, aCol: String, bCol: String,
       assignDir: String, batchId: String, watermarkUs: Long = 0L,
       failBeforeCommit: Boolean = false): (Long, Boolean) = {
-    if (nonEmptyDir(spark, controlDir) && !spark.read.parquet(controlDir)
-        .where(col("source_id") === sourceId && col("batch_id") === batchId &&
-          col("status") === "SUCCESS")
-        .isEmpty)
+    if (successRows(spark, controlDir, sourceId)
+        .exists(_("batch_id") == batchId))
       return (spark.read.parquet(assignDir).count(), false)
     val updated =
       if (!nonEmptyDir(spark, assignDir))
@@ -590,7 +598,7 @@ object EtlControl {
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val merged =
         if (fs.exists(new org.apache.hadoop.fs.Path(targetDir))) {
-          val target = spark.read.parquet(targetDir)
+          val target = ParquetMeta.readParquet(spark, targetDir)
           Incremental.upsert(target, delta.select(target.columns.map(col).toSeq: _*),
             keys, order = Seq(col(tsCol)))
         } else

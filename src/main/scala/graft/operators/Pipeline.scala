@@ -37,9 +37,10 @@ import graft.sources.{PagedRestSource, PipelineConfig, TokenAuth}
   * tasks, and so are these — each source's chain runs on its own
   * fresh daemon thread (see [[runIncremental]] for the measured
   * rationale). Two invariants of the one-source-at-a-time loop are
-  * kept by construction: appends to a shared control/duration/failure
-  * log are serialized inside [[EtlControl]], and the
-  * caller's [[SourceRunner]] callbacks never run at the same time.
+  * kept by construction: concurrent appends to a shared
+  * control/duration/failure log never lose a row (each is its own file,
+  * published by rename — see [[ControlLog]]), and the caller's
+  * [[SourceRunner]] callbacks never run at the same time.
   * The fan-out is per-SOURCE (one thread each), never per-row; all
   * data movement stays inside the composed Spark jobs.
   */
@@ -79,14 +80,17 @@ object Pipeline {
     * all sources at once, as the reference DAG's parallel chains.
     *
     * Why concurrently: a 15-minute window is small, so a cycle is a
-    * run of ~45 small Spark jobs whose cost is the per-job scheduling
-    * floor and Spark-driver file work, not data. Measured on the
-    * perfbench `etl_incremental` workload (local[4], 4-core host), the
-    * chains run back to back kept the cores busy 8.0% of the cycle and
-    * left 3.0 s of a 6.5 s cycle covered by no job. Overlapping them
-    * runs the same 45 jobs with the cores busy 19.9% and 0.9 s
-    * uncovered, and the median cycle drops from 6.47 s to 3.70 s
-    * (10/10 alternating pairs). The gain depends on that property —
+    * run of small Spark jobs whose cost is the per-job scheduling floor
+    * and Spark-driver file work, not data. Measured on the perfbench
+    * `etl_incremental` workload (local[4], 4-core host), when a cycle
+    * was 45 jobs, the chains run back to back kept the cores busy 8.0%
+    * of the cycle and left 3.0 s of a 6.5 s cycle covered by no job.
+    * Overlapping them ran the same 45 jobs with the cores busy 19.9%
+    * and 0.9 s uncovered, and the median cycle dropped from 6.47 s to
+    * 3.70 s (10/10 alternating pairs). A cycle is now 24 jobs (8 per
+    * source): the control-log appends and reads and the schema of the
+    * landing and target reads cost no job (see [[EtlControl]]). The
+    * gain depends on that property —
     * job-floor-bound cycles over small windows. Large windows, whose
     * jobs fill the cluster on their own, are unmeasured: there the
     * overlap runs the sources' MERGE rewrites and snapshot-diff

@@ -138,9 +138,10 @@ object PagedRestSource {
       },
       landingDir, flushEvery, maxPages, maxRetries, startCursor)
 
-  /** The landed (page_idx, payload) frame. */
+  /** The landed (page_idx, payload) frame; its schema comes from a
+    * footer on the driver ([[ParquetMeta.readParquet]]), not a Spark job. */
   def readLanding(spark: SparkSession, landingDir: String): DataFrame =
-    spark.read.parquet(landingDir)
+    ParquetMeta.readParquet(spark, landingDir)
 
   /** Landed payloads parsed through the explicit order schema — the
     * [[JsonOrderSource]] composition point: the result is the same
