@@ -3,21 +3,14 @@ package graft.operators
 import java.io.FileNotFoundException
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 import graft.sources.ParquetMeta
@@ -27,11 +20,12 @@ import graft.sources.ParquetMeta
   * operations on the driver, so no control event costs a Spark job.
   *
   * Layout of a log directory:
-  *   - entries: one parquet file per appended row, written through
-  *     parquet-hadoop to a hidden `_tmp-<uuid>` name and renamed to
-  *     `part-<uuid>.parquet`. Every file carries Spark's row-metadata
-  *     footer key, so `spark.read.parquet(dir)` infers exactly the
-  *     schema of a Spark-written log; timestamps are INT64 micros.
+  *   - entries: one parquet file per appended row, written by the
+  *     driver-side writer [[ParquetMeta.writeFile]] to a hidden
+  *     `_tmp-<uuid>` name and renamed to `part-<uuid>.parquet`. Every
+  *     file carries Spark's row-metadata footer key, so
+  *     `spark.read.parquet(dir)` infers exactly the schema of a
+  *     Spark-written log; timestamps are INT64 micros.
   *     Entries written by Spark's own writer (INT96 timestamps) read
   *     the same, side by side;
   *   - snapshots: `snapshot-<uuid>.parquet`, the rows of every entry it
@@ -81,8 +75,6 @@ private[graft] object ControlLog {
   private val FoldedKey = "graft.log.folded"
   private val SnapshotPrefix = "snapshot-"
   private val FoldTempPrefix = "_fold-"
-  /** Spark's writer-version footer key (Spark keeps its constant private). */
-  private val SparkVersionKey = "org.apache.spark.version"
 
   /** One log row by column name; timestamps are epoch micros. */
   type Row = Map[String, Any]
@@ -103,8 +95,8 @@ private[graft] object ControlLog {
     val d = new Path(dir)
     val fs = d.getFileSystem(conf)
     fs.mkdirs(d)
-    write(fs, conf, d, s"part-${UUID.randomUUID()}.parquet", schema,
-      Seq(schema.fieldNames.zip(values).toMap), folded = Nil)
+    ParquetMeta.writeFile(conf, d, s"part-${UUID.randomUUID()}.parquet",
+      schema, Iterator(values))
     maybeFold(fs, conf, d, schema)
   }
 
@@ -222,47 +214,6 @@ private[graft] object ControlLog {
     (julianDay - 2440588L) * 86400000000L + nanos / 1000L
   }
 
-  private val toParquet = new SparkToParquetSchemaConverter(
-    outputTimestampType = SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS)
-
-  /** Write `rows` to a hidden temp, then rename it to `name` in `d`. */
-  private def write(fs: FileSystem, conf: Configuration, d: Path, name: String,
-      schema: StructType, rows: Seq[Row], folded: Seq[String]): Path = {
-    val tmp = new Path(d,
-      (if (folded.isEmpty) "_tmp-" else FoldTempPrefix) + UUID.randomUUID())
-    val parquetSchema: MessageType = toParquet.convert(schema)
-    val meta = Map(SparkVersionKey -> org.apache.spark.SPARK_VERSION_SHORT,
-      ParquetReadSupport.SPARK_METADATA_KEY -> schema.json) ++
-      (if (folded.isEmpty) Map.empty else Map(FoldedKey -> folded.mkString("\n")))
-    val w = ExampleParquetWriter.builder(tmp).withConf(conf)
-      .withType(parquetSchema).withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withExtraMetaData(meta.asJava).build()
-    try rows.foreach(r => w.write(encode(parquetSchema, schema, r)))
-    finally w.close()
-    if (folded.nonEmpty) foldTestHook("written")
-    val dst = new Path(d, name)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"could not publish $tmp as $dst")
-    dst
-  }
-
-  private def encode(t: MessageType, schema: StructType, r: Row): Group = {
-    val g = new SimpleGroup(t)
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      r.getOrElse(f.name, null) match {
-        case null => require(f.nullable, s"null in non-nullable ${f.name}")
-        case v => f.dataType match {
-          case StringType => g.add(i, v.asInstanceOf[String])
-          case LongType | TimestampType => g.add(i, v.asInstanceOf[Long])
-          case DoubleType => g.add(i, v.asInstanceOf[Double])
-          case other => throw new IllegalArgumentException(
-            s"unsupported control-log column ${f.name}: $other")
-        }
-      }
-    }
-    g
-  }
-
   /** Finish an interrupted fold, then fold if the log is past the
     * threshold. Skipped when another thread is folding this log. A
     * failure leaves a readable log (see the crash protocol) and is
@@ -279,8 +230,13 @@ private[graft] object ControlLog {
         // a log holding files of another shape is left as it is
         if (files.forall(_._1.contains(schema))) {
           val folded = before.present.map(_.getName)
-          write(fs, conf, d, s"$SnapshotPrefix${UUID.randomUUID()}.parquet",
-            schema, files.flatMap(_._2), folded)
+          ParquetMeta.writeFile(conf, d,
+            s"$SnapshotPrefix${UUID.randomUUID()}.parquet", schema,
+            files.iterator.flatMap(_._2).map(r =>
+              schema.fieldNames.toSeq.map(r.getOrElse(_, null))),
+            meta = Map(FoldedKey -> folded.mkString("\n")),
+            tempPrefix = FoldTempPrefix,
+            beforePublish = () => foldTestHook("written"))
           foldTestHook("renamed")
           finishFold(fs, d, before.present, folded.toSet)
         }

@@ -501,20 +501,37 @@ object EtlControl {
     * EtlControlSpec), and the log's records_loaded now measures real
     * churn, so [[expectedRowBounds]] gates on "how much changed",
     * which is the quantity that signals an upstream incident. Returns
-    * (inserts, updates, deletes). */
+    * (inserts, updates, deletes).
+    *
+    * `expectations` gates the snapshot as in [[runIncrementalCycle]]:
+    * a failure throws [[Validate.ValidationException]] before the
+    * target is touched. On the bootstrap its counters replace the row
+    * count the commit needs; after that they run as one aggregate
+    * ahead of the diff. */
   def runSnapshotCycle(spark: SparkSession, controlDir: String,
       sourceId: String, snapshot: DataFrame, keys: Seq[String],
-      targetDir: String, batchId: String): (Long, Long, Long) = {
+      targetDir: String, batchId: String,
+      expectations: Seq[Validate.Expectation] = Nil): (Long, Long, Long) = {
+    // the gate's counters include the row count, so the bootstrap's
+    // count is the gate's aggregate
+    val gate = Validate.counters(expectations)
+    def gated(): Long = {
+      val row = snapshot.agg(gate.head, gate.tail: _*).head()
+      Validate.requirePassed(s"$sourceId/$batchId",
+        Validate.verdicts(expectations, row, 0))
+      row.getLong(0)
+    }
     val fs = new org.apache.hadoop.fs.Path(targetDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(targetDir))) {
-      val n = snapshot.count()
+      val n = gated()
       ParquetSink.atomicReplace(spark, targetDir)(
         staging => snapshot.write.parquet(staging))
       commitRun(spark, controlDir, sourceId, batchId,
         watermarkUs = 0L, recordsLoaded = n, status = "SUCCESS")
       return (n, 0L, 0L)
     }
+    if (expectations.nonEmpty) gated()
     val target = ParquetMeta.readParquet(spark, targetDir)
     val diff = Incremental.snapshotDiff(target, snapshot, keys).persist()
     try {
@@ -572,9 +589,20 @@ object EtlControl {
   }
 
   /** One self-driving incremental cycle against a parquet target:
-    * read watermark → pushed-down window scan → MERGE into target
+    * read watermark → window stats (+ quality gate) → MERGE into target
     * (staged atomic swap) → commit new watermark. Returns
     * (newWatermarkUs, deltaRows).
+    *
+    * `expectations` is the batch's quality gate over the whole
+    * `source`, not just the window — the reference validates a loaded
+    * batch before it loads it (misa_crm_loader.py:1021). The gate's
+    * counters ride in the window-stats aggregate the cycle runs anyway,
+    * so the gate costs no pass of its own: with expectations the one
+    * aggregate scans all of `source` and counts the window with
+    * conditional aggregates; without, it scans only the pushed-down
+    * window. A failed expectation throws
+    * [[Validate.ValidationException]] before anything is staged, so the
+    * target and the control log stay as they were.
     *
     * `failBeforeCommit` is a crash-injection hook for the
     * exactly-once spec: it stops after the target is published but
@@ -583,13 +611,22 @@ object EtlControl {
   def runIncrementalCycle(spark: SparkSession, controlDir: String,
       sourceId: String, source: DataFrame, tsCol: String,
       keys: Seq[String], targetDir: String, defaultWatermarkUs: Long,
-      batchId: String, failBeforeCommit: Boolean = false): (Long, Long) = {
+      batchId: String, failBeforeCommit: Boolean = false,
+      expectations: Seq[Validate.Expectation] = Nil): (Long, Long) = {
     val wm = lastWatermarkMicros(spark, controlDir, sourceId, defaultWatermarkUs)
     // literal timestamp predicate on the scan column → PushedFilters
-    val delta = source.where(col(tsCol) >= timestamp_micros(lit(wm)))
-    val stats = delta.agg(
-      count(lit(1)).as("n"), max(unix_micros(col(tsCol))).as("mx"),
-      count(when(unix_micros(col(tsCol)) > wm, 1)).as("nNew")).head()
+    val inWindow = col(tsCol) >= timestamp_micros(lit(wm))
+    val delta = source.where(inWindow)
+    val windowStats = Seq(
+      count(when(inWindow, 1)).as("n"),
+      max(when(inWindow, unix_micros(col(tsCol)))).as("mx"),
+      count(when(unix_micros(col(tsCol)) > wm, 1)).as("nNew"))
+    val gate = if (expectations.isEmpty) Nil else Validate.counters(expectations)
+    val stats = (if (gate.isEmpty) delta else source)
+      .agg(windowStats.head, windowStats.tail ++ gate: _*).head()
+    if (gate.nonEmpty)
+      Validate.requirePassed(s"$sourceId/$batchId",
+        Validate.verdicts(expectations, stats, windowStats.length))
     val (nRows, newWm) =
       (stats.getLong(0), if (stats.isNullAt(1)) wm else stats.getLong(1))
     val nNew = stats.getLong(2)

@@ -24,12 +24,14 @@ import graft.sources.{PagedRestSource, PipelineConfig, TokenAuth}
   *   - transform: the caller's landing→typed frame function (the
   *     per-source transformer — schema is source-specific, so it is
   *     wiring, not config);
-  *   - validate: [[Validate.check]] — a failed expectation aborts the
-  *     source's chain BEFORE the load touches the target (the
-  *     reference's validate-then-load task order);
-  *   - load + watermark: [[EtlControl.runIncrementalCycle]] (MERGE +
-  *     exactly-once commit) or [[EtlControl.runSnapshotCycle]] (full
-  *     replace), both staged-atomic;
+  *   - validate + load + watermark: [[EtlControl.runIncrementalCycle]]
+  *     (MERGE + exactly-once commit) or [[EtlControl.runSnapshotCycle]]
+  *     (full replace), both staged-atomic. Each takes the source's
+  *     expectations and computes their [[Validate]] counters in the
+  *     aggregate it runs before the load anyway (the window stats, the
+  *     bootstrap row count); a failed expectation throws
+  *     [[Validate.ValidationException]] BEFORE the load touches the
+  *     target (the reference's validate-then-load task order);
   *   - failure/duration logs: [[EtlControl.timedRun]] +
   *     [[EtlControl.retryingRun]] with the schedule's retry policy.
   *
@@ -46,7 +48,8 @@ import graft.sources.{PagedRestSource, PipelineConfig, TokenAuth}
   */
 object Pipeline {
 
-  final class ValidationException(msg: String) extends RuntimeException(msg)
+  /** A source's batch failed its quality gate. */
+  type ValidationException = Validate.ValidationException
 
   /** Per-source wiring the typed config cannot carry: the transport,
     * its credential lifecycle, the landing→typed transform, and the
@@ -87,9 +90,12 @@ object Pipeline {
     * of the cycle and left 3.0 s of a 6.5 s cycle covered by no job.
     * Overlapping them ran the same 45 jobs with the cores busy 19.9%
     * and 0.9 s uncovered, and the median cycle dropped from 6.47 s to
-    * 3.70 s (10/10 alternating pairs). A cycle is now 24 jobs (8 per
-    * source): the control-log appends and reads and the schema of the
-    * landing and target reads cost no job (see [[EtlControl]]). The
+    * 3.70 s (10/10 alternating pairs). A cycle is now 15 jobs (5 per
+    * source: the window-stats aggregate that carries the quality gate,
+    * 3 jobs with a [[Validate.Unique]] expectation, then the 2-job
+    * MERGE write). The landing write, the control-log appends and
+    * reads and the schema of the landing and target reads cost no job
+    * (see [[PagedRestSource]] and [[EtlControl]]). The
     * gain depends on that property —
     * job-floor-bound cycles over small windows. Large windows, whose
     * jobs fill the cluster on their own, are unmeasured: there the
@@ -223,28 +229,19 @@ object Pipeline {
           // transform
           val typed = runner.transform(
             PagedRestSource.readLanding(spark, landingDir))
-          // validate BEFORE the target is touched
-          if (runner.expectations.nonEmpty) {
-            val failed = Validate.check(typed, runner.expectations)
-              .where(org.apache.spark.sql.functions.col("passed") === false)
-              .collect()
-            if (failed.nonEmpty)
-              throw new ValidationException(
-                s"${src.id}/$batchId: ${failed.length} expectation(s) " +
-                  s"failed: " + failed.map(r =>
-                    s"${r.getAs[String]("expectation")}(${r.getAs[String]("column")})")
-                    .mkString(", "))
-          }
-          // load + watermark commit
+          // validate + load + watermark commit: the cycle's pre-load
+          // aggregate runs the gate and throws before the target is touched
           if (fullLoad) {
             val (ins, upd, del) = EtlControl.runSnapshotCycle(spark,
-              cfg.controlDir, src.id, typed, runner.keys, targetDir, batchId)
+              cfg.controlDir, src.id, typed, runner.keys, targetDir, batchId,
+              runner.expectations)
             (p, landedRows, 0L, ins + upd + del)
           } else {
             val (newWm, rows) = EtlControl.runIncrementalCycle(spark,
               cfg.controlDir, src.id, typed, runner.tsCol, runner.keys,
               targetDir, defaultWatermarkUs, batchId,
-              failBeforeCommit = failBeforeCommit)
+              failBeforeCommit = failBeforeCommit,
+              expectations = runner.expectations)
             (p, landedRows, newWm, rows)
           }
         }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Declarative data-quality validation gates.
@@ -70,9 +70,18 @@ object Validate {
     val threshold = 0.0
   }
 
+  /** A batch failed its quality gate; the message names every failed
+    * expectation. */
+  final class ValidationException(msg: String) extends RuntimeException(msg)
+
+  /** One expectation's outcome over a frame of `nRows` rows — one row
+    * of the [[check]] report. */
+  final case class Verdict(expectation: Expectation, nRows: Long,
+      nBad: Long, badRate: Double, passed: Boolean)
+
   /** Per-expectation violation counter (null-safe: sums coalesce to 0
     * on an empty frame). */
-  private def badCount(e: Expectation): org.apache.spark.sql.Column = e match {
+  private def badCount(e: Expectation): Column = e match {
     case NotNull(c, _) =>
       coalesce(sum(when(col(c).isNull, 1L)), lit(0L))
     case TypeConforms(c, t, _) =>
@@ -86,6 +95,48 @@ object Validate {
     case Unique(c, _) =>
       coalesce(count(col(c)) - count_distinct(col(c)), lit(0L))
     case RowCountBetween(_, _) => lit(0L)
+  }
+
+  /** The aggregate columns of one gate: the row count, then one
+    * violation counter per expectation. Callers add them to an
+    * aggregate they already run and read the verdicts back with
+    * [[verdicts]], so the gate costs no pass of its own. */
+  private[graft] def counters(expectations: Seq[Expectation]): Seq[Column] =
+    count(lit(1)).as("__n") +: expectations.zipWithIndex.map { case (e, i) =>
+      badCount(e).as(s"__bad$i")
+    }
+
+  /** The verdicts of `expectations` from the [[counters]] values of one
+    * aggregate row, starting at field `at`. The rate and the comparison
+    * are the [[check]] report's: `round(bad / max(n, 1), 6)` is Spark's
+    * half-up `BigDecimal.valueOf(d).setScale(6)`. */
+  private[graft] def verdicts(expectations: Seq[Expectation],
+      row: Row, at: Int): Seq[Verdict] = {
+    val n = row.getLong(at)
+    expectations.zipWithIndex.map { case (e, i) =>
+      e match {
+        case RowCountBetween(mn, mx) =>
+          val ok = n >= mn && n <= mx
+          Verdict(e, n, 0L, if (ok) 0.0 else 1.0, ok)
+        case _ =>
+          val bad = row.getLong(at + 1 + i)
+          val rate = java.math.BigDecimal.valueOf(
+              bad.toDouble / math.max(n, 1L).toDouble)
+            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+          Verdict(e, n, bad, rate, rate <= e.threshold)
+      }
+    }
+  }
+
+  /** Throws [[ValidationException]] naming every failed verdict in
+    * (expectation, column) order — the [[check]] report's order. */
+  private[graft] def requirePassed(batch: String, vs: Seq[Verdict]): Unit = {
+    val failed = vs.filterNot(_.passed)
+      .sortBy(v => (v.expectation.label, v.expectation.column))
+    if (failed.nonEmpty)
+      throw new ValidationException(s"$batch: ${failed.length} expectation(s) " +
+        "failed: " + failed.map(v =>
+          s"${v.expectation.label}(${v.expectation.column})").mkString(", "))
   }
 
   /** Run every expectation in one aggregate pass; returns the
@@ -108,13 +159,12 @@ object Validate {
     * (twin figures in BASELINE.md r13). */
   def check(df: DataFrame, expectations: Seq[Expectation]): DataFrame = {
     require(expectations.nonEmpty, "no expectations given")
-    val aggs = expectations.zipWithIndex.map { case (e, i) =>
-      badCount(e).as(s"__bad$i")
-    }
-    report(df.agg(count(lit(1)).as("__n"), aggs: _*), expectations)
+    val cs = counters(expectations)
+    report(df.agg(cs.head, cs.tail: _*), expectations)
   }
 
-  /** Explode the one-row aggregate into the per-expectation report. */
+  /** Explode the one-row [[counters]] aggregate into the
+    * per-expectation report. */
   private def report(agged: DataFrame,
       expectations: Seq[Expectation]): DataFrame = {
     val reportRows = expectations.zipWithIndex.map { case (e, i) =>

@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Paged-extraction source contract — the reference's REST extractors
   * (token auth, cursor paging, bounded retry; see
@@ -19,7 +20,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     forever is an extractor hazard the reference caps too);
   *   - pages STREAM to a parquet landing zone in bounded flushes —
   *     driver memory holds `flushEvery` pages, never the backfill
-  *     (the bounded-metadata discipline: a page is API-page-sized);
+  *     (the bounded-metadata discipline: a page is API-page-sized).
+  *     The driver holds those rows already, so each flush is one
+  *     `part-<uuid>.parquet` file written by the driver-side writer
+  *     ([[ParquetMeta.writeFile]]: hidden temp, then rename) — no Spark
+  *     job, and the files read exactly like Spark-written ones;
   *   - the landed frame is (page_idx, payload) — parsing is the
   *     existing explicit-schema path ([[JsonOrderSource.read]]'s
   *     schema via `from_json`, no inference scan), so the landed zone
@@ -36,6 +41,12 @@ object PagedRestSource {
 
   /** One fetched page: raw payload lines + next cursor (None = done). */
   case class Page(rows: Seq[String], next: Option[String])
+
+  /** The landed rows' schema — what Spark's writer stamped for a
+    * `(Long, String)` frame. */
+  private val LandingSchema = StructType(Seq(
+    StructField("page_idx", LongType, nullable = false),
+    StructField("payload", StringType)))
 
   /** Exhausted retry or runaway-cursor failure. */
   final class ExtractionException(msg: String, cause: Throwable = null)
@@ -56,10 +67,9 @@ object PagedRestSource {
       flushEvery: Int = 100, maxPages: Int = 100000,
       maxRetries: Int = 3, startCursor: Option[String] = None): (Long, Long) = {
     require(flushEvery >= 1 && maxPages >= 1 && maxRetries >= 1)
-    import spark.implicits._
-    val fs = new Path(landingDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(landingDir), true) // per-extraction scratch
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(landingDir)
+    dir.getFileSystem(conf).delete(dir, true) // per-extraction scratch
 
     def fetchWithRetry(cursor: Option[String]): Page = {
       var attempt = 0
@@ -76,13 +86,12 @@ object PagedRestSource {
       throw new IllegalStateException("unreachable")
     }
 
-    var buffer = Vector.empty[(Long, String)]
-    var firstFlush = true
-    def flush(): Unit = if (buffer.nonEmpty) {
-      val mode = if (firstFlush) SaveMode.Overwrite else SaveMode.Append
-      buffer.toDF("page_idx", "payload").coalesce(1)
-        .write.mode(mode).parquet(landingDir)
-      firstFlush = false
+    // one file per flush, written on the driver: no Spark job
+    var buffer = Vector.empty[Seq[Any]]
+    def flush(): Unit = {
+      ParquetMeta.writeFile(conf, dir,
+        s"part-${java.util.UUID.randomUUID()}.parquet", LandingSchema,
+        buffer.iterator)
       buffer = Vector.empty
     }
 
@@ -95,20 +104,17 @@ object PagedRestSource {
         throw new ExtractionException(
           s"cursor chain exceeded maxPages=$maxPages — runaway pager")
       val page = fetchWithRetry(cursor)
-      buffer ++= page.rows.map(r => (pageIdx, r))
+      buffer ++= page.rows.map(r => Seq(pageIdx, r))
       rows += page.rows.length
       pageIdx += 1
-      if (pageIdx % flushEvery == 0) flush()
+      if (pageIdx % flushEvery == 0 && buffer.nonEmpty) flush()
       cursor = page.next
       done = page.next.isEmpty
     }
-    flush()
     // an extraction whose every page was empty still lands a readable
     // (schema'd) zero-row table — "nothing new today" is a legal
     // result, not a missing artifact (the refreshPairs precedent)
-    if (firstFlush)
-      Seq.empty[(Long, String)].toDF("page_idx", "payload")
-        .write.mode(SaveMode.Overwrite).parquet(landingDir)
+    if (buffer.nonEmpty || rows == 0) flush()
     (pageIdx, rows)
   }
 

@@ -1,12 +1,22 @@
 package graft.sources
 
+import java.util.UUID
+
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types._
 
 /** Exact row counts from parquet FOOTER metadata — no data pages read.
   *
@@ -33,6 +43,11 @@ import org.apache.spark.sql.SparkSession
   * Counts are exact (footers are written with the data, atomically per
   * file); equality with the scan-based count is spec'd per table in
   * ParquetMetaSpec, both paths.
+  *
+  * The same driver-side footer work backs the ETL cycles: their known-
+  * schema reads ([[readParquet]]) take the schema from one footer, and
+  * [[writeFile]] writes the rows the driver already holds — control-log
+  * rows and fetched pages — as Spark-compatible parquet without a job.
   */
 object ParquetMeta {
 
@@ -63,6 +78,58 @@ object ParquetMeta {
   private[graft] def open(conf: Configuration, file: Path): ParquetFileReader =
     ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
       org.apache.parquet.HadoopReadOptions.builder(conf).build())
+
+  private val toParquet = new SparkToParquetSchemaConverter(
+    outputTimestampType = SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS)
+  /** Spark's writer-version footer key (Spark keeps its constant private). */
+  private val SparkVersionKey = "org.apache.spark.version"
+
+  /** The driver-side parquet writer: no Spark job, for rows the driver
+    * already holds (control-log rows, fetched pages). Writes `rows`
+    * (values in `schema` order; string, long, double and timestamp
+    * columns, timestamps as epoch micros) to a hidden
+    * `<tempPrefix><uuid>` file in `dir`, runs `beforePublish`, then
+    * renames the file to `name` and returns its path. The footer
+    * carries Spark's schema and version keys, nullability included, as
+    * Spark's writer stamps them, so `spark.read.parquet` and
+    * [[footerSchema]] read the file like a Spark-written one; `meta`
+    * adds keys. Timestamps are INT64 micros, not Spark's default INT96. */
+  private[graft] def writeFile(conf: Configuration, dir: Path, name: String,
+      schema: StructType, rows: Iterator[Seq[Any]],
+      meta: Map[String, String] = Map.empty, tempPrefix: String = "_tmp-",
+      beforePublish: () => Unit = () => ()): Path = {
+    val tmp = new Path(dir, tempPrefix + UUID.randomUUID())
+    val parquetSchema = toParquet.convert(schema)
+    val footer = Map(SparkVersionKey -> org.apache.spark.SPARK_VERSION_SHORT,
+      ParquetReadSupport.SPARK_METADATA_KEY -> schema.json) ++ meta
+    val w = ExampleParquetWriter.builder(tmp).withConf(conf)
+      .withType(parquetSchema).withCompressionCodec(CompressionCodecName.SNAPPY)
+      .withExtraMetaData(footer.asJava).build()
+    try rows.foreach(r => w.write(encode(parquetSchema, schema, r)))
+    finally w.close()
+    beforePublish()
+    val dst = new Path(dir, name)
+    if (!dir.getFileSystem(conf).rename(tmp, dst))
+      throw new java.io.IOException(s"could not publish $tmp as $dst")
+    dst
+  }
+
+  private def encode(t: MessageType, schema: StructType, values: Seq[Any]): Group = {
+    val g = new SimpleGroup(t)
+    schema.fields.iterator.zip(values).zipWithIndex.foreach { case ((f, v), i) =>
+      v match {
+        case null => require(f.nullable, s"null in non-nullable ${f.name}")
+        case _ => f.dataType match {
+          case StringType => g.add(i, v.asInstanceOf[String])
+          case LongType | TimestampType => g.add(i, v.asInstanceOf[Long])
+          case DoubleType => g.add(i, v.asInstanceOf[Double])
+          case other => throw new IllegalArgumentException(
+            s"unsupported column ${f.name} for the driver-side writer: $other")
+        }
+      }
+    }
+    g
+  }
 
   /** The Spark schema Spark's writer stamps into a file's footer
     * (`org.apache.spark.sql.parquet.row.metadata`), if there is one. */
@@ -105,9 +172,24 @@ object ParquetMeta {
 
   /** Sum of row-group row counts in one file's footer. */
   def footerRowCount(conf: Configuration, file: Path): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = open(conf, file)
     try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
     finally reader.close()
+  }
+
+  /** `read` over every file in a Spark job. Ships path STRINGS
+    * (Path/Configuration are not serializable); each task builds one
+    * default Configuration for its partition's files — the site files
+    * on the executor classpath carry the filesystem bindings. */
+  private def onExecutors[A: scala.reflect.ClassTag](spark: SparkSession,
+      files: Seq[Path])(read: (Configuration, Path) => A)
+      : org.apache.spark.rdd.RDD[A] = {
+    val names = files.map(_.toString)
+    val slices = math.min(names.size, spark.sparkContext.defaultParallelism * 4)
+    spark.sparkContext.parallelize(names, slices).mapPartitions { it =>
+      val conf = new Configuration()
+      it.map(s => read(conf, new Path(s)))
+    }
   }
 
   /** Exact `count(*)` of the parquet table at `path` from footers
@@ -121,14 +203,7 @@ object ParquetMeta {
       files.asJava.parallelStream()
         .mapToLong(f => footerRowCount(conf, f)).sum()
     } else {
-      // ship path STRINGS (Path/Configuration are not serializable);
-      // tasks rebuild a default Configuration — the site files on the
-      // executor classpath carry the filesystem bindings
-      val names = files.map(_.toString)
-      val slices = math.min(names.size,
-        spark.sparkContext.defaultParallelism * 4)
-      spark.sparkContext.parallelize(names, slices)
-        .map(s => footerRowCount(new Configuration(), new Path(s)))
+      onExecutors(spark, files)((conf, f) => footerRowCount(conf, f))
         .sum().toLong
     }
   }
@@ -143,7 +218,7 @@ object ParquetMeta {
   private[graft] def footerColumnStats(conf: Configuration, file: Path,
       cols: Seq[String]): ColStats = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val reader = open(conf, file)
     try {
       val blocks = reader.getFooter.getBlocks.asScala
       val rows = blocks.map(_.getRowCount).sum
@@ -246,11 +321,7 @@ object ParquetMeta {
           .reduce(mergeStats(cols)(_, _))
           .orElseThrow(() => new IllegalArgumentException(s"no files under $path"))
       } else {
-        val names = files.map(_.toString)
-        val slices = math.min(names.size,
-          spark.sparkContext.defaultParallelism * 4)
-        spark.sparkContext.parallelize(names, slices)
-          .map(s => footerColumnStats(new Configuration(), new Path(s), cols))
+        onExecutors(spark, files)((conf, f) => footerColumnStats(conf, f, cols))
           .reduce(mergeStats(cols)(_, _))
       }
     import spark.implicits._

@@ -3,7 +3,6 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -42,33 +41,6 @@ class ControlLogSpec extends SparkTestBase {
     sparkAppend(dir, rows
       .toDF("source_id", "batch_id", "duration_sec", "status", "at")
       .withColumn("completed_at", timestamp_micros(col("at"))).drop("at"))
-
-  /** Spark jobs `body` starts on this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    def inGroup(g: String)(f: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try f finally sc.clearJobGroup()
-    }
-    sc.addSparkListener(listener)
-    try {
-      inGroup("control-body")(body)
-      // listener events arrive in order: once the marker job is seen,
-      // every job before it has been
-      inGroup("control-marker")(sc.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains("control-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("control-marker"))
-    } finally sc.removeSparkListener(listener)
-    groups.toArray.count(_ == "control-body")
-  }
 
   test("a stale holder's release leaves its taker's live lease in place") {
     val control = tmp("lease-release")

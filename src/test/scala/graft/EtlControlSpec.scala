@@ -458,6 +458,49 @@ class EtlControlSpec extends SparkTestBase {
     assert(wm == expectWm, "watermark must land at the feed's max ts")
   }
 
+  test("the quality gate inside the incremental cycle: a failure stages nothing, a pass changes nothing") {
+    import graft.operators.Validate
+    val t0 = 1704067200000000L
+    val passing = Seq(Validate.NotNull("event_id"), Validate.Unique("event_id"),
+      Validate.NotNull("ts"), Validate.RowCountBetween(1, Long.MaxValue))
+    val gated = Files.createTempDirectory("etlgate").toString
+    val plain = Files.createTempDirectory("etlgate-plain").toString
+    def cycle(dir: String, batch: String, upTo: String,
+        exps: Seq[Validate.Expectation]) =
+      EtlControl.runIncrementalCycle(spark, s"$dir/control", "events",
+        feed(upTo), "ts", Seq("event_id"), s"$dir/target", t0, batch,
+        expectations = exps)
+    // passing expectations: the same (watermark, rows) and target rows
+    // as the ungated cycle
+    for ((batch, upTo) <- Seq("b1" -> "2024-01-10", "b2" -> "2024-01-20")) {
+      assert(cycle(gated, batch, upTo, passing) == cycle(plain, batch, upTo, Nil))
+      val (g, p) = (spark.read.parquet(s"$gated/target"),
+        spark.read.parquet(s"$plain/target"))
+      assert(g.count() == p.count() && g.except(p).isEmpty && p.except(g).isEmpty)
+    }
+    // a failing gate throws before anything is staged: the target's
+    // files are byte-identical and no commit row is written
+    def files(dir: String): Map[String, Seq[Byte]] = {
+      val root = java.nio.file.Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.filter(Files.isRegularFile(_)).toArray.toSeq.map { f =>
+        val path = f.asInstanceOf[java.nio.file.Path]
+        root.relativize(path).toString -> Files.readAllBytes(path).toSeq
+      }.toMap
+      finally walk.close()
+    }
+    val (target, control) = (files(s"$gated/target"), files(s"$gated/control"))
+    val wm = EtlControl.lastWatermarkMicros(spark, s"$gated/control", "events", t0)
+    val e = intercept[Validate.ValidationException] {
+      cycle(gated, "b3", "2024-02-01", passing ++ Seq(
+        Validate.RowCountBetween(0, 10), Validate.InSet("event_type", Seq("nope"))))
+    }
+    assert(e.getMessage ==
+      "events/b3: 2 expectation(s) failed: in_set(event_type), row_count()")
+    assert(files(s"$gated/target") == target && files(s"$gated/control") == control)
+    assert(EtlControl.lastWatermarkMicros(spark, s"$gated/control", "events", t0) == wm)
+  }
+
   test("empty window advances nothing and commits the same watermark") {
     val dir = Files.createTempDirectory("etlctl2").toString
     val control = s"$dir/control"

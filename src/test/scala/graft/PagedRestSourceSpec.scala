@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{JsonOrderSource, PagedRestSource}
+import graft.sources.{JsonOrderSource, PagedRestSource, ParquetMeta}
 import graft.sources.PagedRestSource.Page
 
 /** Paged-extraction contract against a deterministic fake transport:
@@ -84,5 +84,37 @@ class PagedRestSourceSpec extends SparkTestBase {
     PagedRestSource.fetchToLanding(spark, pager(), landing)
     assert(PagedRestSource.readLanding(spark, landing).count() == 100L,
       "second extraction must replace, not double, the landing zone")
+  }
+
+  test("landing runs no Spark job, and reads like a Spark-written landing zone") {
+    val root = Files.createTempDirectory("paged-landing5").toString
+    val empty: Option[String] => Page = { cursor =>
+      val p = cursor.map(_.toInt).getOrElse(0)
+      Page(Seq.empty, if (p < 2) Some((p + 1).toString) else None)
+    }
+    assert(jobsOf {
+      PagedRestSource.fetchToLanding(spark, pager(), s"$root/raw", flushEvery = 7)
+      PagedRestSource.fetchToLanding(spark, empty, s"$root/empty")
+    } == 0)
+    // four flushes of at most 7 pages, then the zero-row file
+    def parts(d: String) = new java.io.File(d).list().toSeq
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts(s"$root/raw").length == 4 && parts(s"$root/empty").length == 1)
+    // the same rows and schema as Spark's own writer lands
+    import spark.implicits._
+    val sparkWritten = (0 until 25).flatMap(p =>
+      (0 until 4).map(i => (p.toLong, orderLine(p * 4 + i))))
+      .toDF("page_idx", "payload")
+    sparkWritten.write.parquet(s"$root/spark")
+    assert(ParquetMeta.footerSchema(spark, s"$root/raw") ==
+      ParquetMeta.footerSchema(spark, s"$root/spark"))
+    for (read <- Seq(PagedRestSource.readLanding(spark, _: String),
+        spark.read.parquet(_: String))) {
+      val landed = read(s"$root/raw")
+      assert(landed.schema == read(s"$root/spark").schema)
+      assert(landed.except(sparkWritten).isEmpty &&
+        sparkWritten.except(landed).isEmpty && landed.count() == 100L)
+      assert(read(s"$root/empty").schema == landed.schema)
+    }
   }
 }

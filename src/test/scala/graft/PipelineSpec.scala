@@ -327,4 +327,22 @@ class PipelineSpec extends SparkTestBase {
       p.getProperty("spark.jobGroup.id") == "pipe-props-group" &&
         p.getProperty("graft.test.caller") == "pipe-props"))
   }
+
+  test("a three-source cycle with a four-expectation gate runs at most 15 Spark jobs") {
+    val root = Files.createTempDirectory("pipe-jobs").toString
+    // the gate of the bench's order sources: NotNull + Unique on the key,
+    // a range and a status set
+    val (cfg, runners, refill) = threeSources(root, _ => 1.0, r => r.copy(
+      transform = df => r.transform(df).withColumn("status", lit("COMPLETED")),
+      expectations = Seq(Validate.NotNull("id"), Validate.Unique("id"),
+        Validate.InRange("amount", min = Some(0.0), max = None),
+        Validate.InSet("status", Seq("COMPLETED", "CANCELLED")))))
+    Pipeline.runIncremental(spark, cfg, runners, root, "b1")
+    refill()
+    var res: Seq[Pipeline.CycleResult] = Nil
+    val jobs = jobsOf { res = Pipeline.runIncremental(spark, cfg, runners, root, "b2") }
+    assert(res.map(_.loadedRows) == Seq(4L, 4L, 4L))
+    assert(jobs <= 15, s"$jobs jobs")
+    assert(successes(cfg, "b2") == cfg.sources.map(_.id).toSet)
+  }
 }

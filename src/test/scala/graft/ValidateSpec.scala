@@ -146,4 +146,60 @@ class ValidateSpec extends SparkTestBase {
       .linesIterator.count(_.contains("Scan"))
     assert(scans <= 1, s"expected a single scan, plan has $scans")
   }
+
+  test("driver-side verdicts equal check's report over an (n, n_bad, threshold) grid") {
+    // round(rate, 6) is half-up on the decimal form of the double:
+    // 1/128 = 0.0078125, 3/128 = 0.0234375 and 1/640 = 0.0015625 sit
+    // exactly on the boundary and round up
+    val thresholds = Seq(0.0, 0.0015625, 0.001563, 0.0078125, 0.007812,
+      0.007813, 0.0234375, 0.023438, 1.0 / 3, 0.333333, 0.5, 1.0)
+    def rows(vs: Seq[Verdict]) = vs.map(v => (v.expectation.label,
+      v.expectation.column, v.expectation.threshold, v.nRows, v.nBad,
+      v.badRate, v.passed))
+    for (n <- Seq(0, 1, 7, 128, 640)) {
+      val badCounts = Seq(0, 1, 3, n / 2, n).filter(_ <= n).distinct
+      val id = col("id")
+      // per bad count k, the first k rows are null / negative / not a
+      // number; `u` has duplicates and nulls
+      val df = spark.range(n).select(badCounts.flatMap(k => Seq(
+        when(id < k, lit(null)).otherwise(id).as(s"nul$k"),
+        when(id < k, lit(-1L)).otherwise(id).as(s"neg$k"),
+        when(id < k, lit("x")).otherwise(lit("1")).as(s"str$k"))) :+
+        when(id % 3 === 0, lit(null)).otherwise(id % 5).as("u"): _*)
+      val exps = badCounts.flatMap(k => thresholds.flatMap(t => Seq(
+        NotNull(s"nul$k", t), InRange(s"neg$k", Some(0.0), None, t),
+        InSet(s"str$k", Seq("1"), t), TypeConforms(s"str$k", "bigint", t)))) ++
+        thresholds.map(Unique("u", _)) ++
+        Seq(RowCountBetween(n, n), RowCountBetween(n, n + 5),
+          RowCountBetween(0, n), RowCountBetween(n + 1, n + 9),
+          RowCountBetween(math.max(n - 9, 0), math.max(n - 1, 0)))
+      val cs = Validate.counters(exps)
+      val driver = Validate.verdicts(exps, df.agg(cs.head, cs.tail: _*).head(), 0)
+      val report = Validate.check(df, exps).collect().toSeq.map(r =>
+        (r.getString(0), r.getString(1), r.getDouble(5), r.getLong(2),
+          r.getLong(3), r.getDouble(4), r.getBoolean(6)))
+      assert(report.length == exps.length)
+      val mine = rows(driver)
+      assert(mine.diff(report).isEmpty && report.diff(mine).isEmpty, s"n = $n")
+      if (n == 128) {
+        val passed = driver.map(v => v.expectation -> v.passed).toMap
+        assert(!passed(NotNull("nul1", 0.0078125)) && passed(NotNull("nul1", 0.007813)))
+        assert(!passed(NotNull("nul3", 0.0234375)) && passed(NotNull("nul3", 0.023438)))
+      }
+      if (n == 640)
+        assert(driver.exists(v => v.expectation == NotNull("nul1", 0.0015625) &&
+          v.badRate == 0.001563 && !v.passed))
+    }
+  }
+
+  test("requirePassed names every failed expectation in report order") {
+    val exps = Seq(Unique("id"), RowCountBetween(5, 9), NotNull("id"),
+      InRange("amount", Some(0.0), None), InSet("cat", Seq("a")))
+    val cs = Validate.counters(exps)
+    val vs = Validate.verdicts(exps, frame.agg(cs.head, cs.tail: _*).head(), 0)
+    val e = intercept[ValidationException](Validate.requirePassed("src/b1", vs))
+    assert(e.getMessage == "src/b1: 4 expectation(s) failed: " +
+      "in_range(amount), in_set(cat), row_count(), unique(id)")
+    Validate.requirePassed("src/b1", vs.filter(_.passed)) // no throw
+  }
 }
