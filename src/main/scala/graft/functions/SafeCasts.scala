@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
 import org.apache.spark.sql.functions._
+
+import graft.plans.{SafeDoubleExpr, SafeLongExpr}
 
 /** Null-on-error typed casts + unix-epoch conversions.
   *
@@ -11,7 +14,8 @@ import org.apache.spark.sql.functions._
   * `_unix_to_datetime` maps 0/None to null).
   *
   * Spark-first: everything is a Column expression (`try_cast`, `when`,
-  * `timestamp_seconds`) — whole-stage-codegen friendly, no UDFs, so the
+  * `timestamp_seconds`, and the `safe_long`/`safe_double` kernels for
+  * string input) — whole-stage-codegen friendly, no UDFs, so the
   * same plan scales from local[32] to a 1000-executor cluster unchanged.
   */
 object SafeCasts {
@@ -31,19 +35,13 @@ object SafeCasts {
     * The `safe_long` kernel decides certain values/nulls over the
     * UTF-8 bytes and bails to a real Cast(TRY) eval only on ambiguous
     * input — semantics are try_cast BY CONSTRUCTION (equality fuzzed
-    * in GraftExtensionsSpec). Vanilla sessions keep try_cast. Only for
-    * string columns: numeric inputs must keep [[safeInt]]'s native
-    * numeric cast semantics (e.g. double→bigint truncation). */
-  def safeIntStr(c: Column): Column =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      call_function("safe_long", c)
-    else c.try_cast("bigint")
+    * in GraftExtensionsSpec). Only for string columns: numeric inputs
+    * must keep [[safeInt]]'s native numeric cast semantics (e.g.
+    * double→bigint truncation). */
+  def safeIntStr(c: Column): Column = ExpressionColumn(SafeLongExpr(expression(c)))
 
   /** [[safeFloat]] specialized to STRING input — see [[safeIntStr]]. */
-  def safeFloatStr(c: Column): Column =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      call_function("safe_double", c)
-    else c.try_cast("double")
+  def safeFloatStr(c: Column): Column = ExpressionColumn(SafeDoubleExpr(expression(c)))
 
   /** Python-side truthiness for strings: lower(x) in (true,1,yes,on);
     * null stays null; anything else false.

@@ -1,15 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+
+import graft.plans.{ClassifierMilliExpr, FingerprintMd5Expr}
 
 /** Text-analysis column functions for large-scale corpus pipelines:
   * normalization, tokenization, quality metrics, language heuristic,
   * rolling-hash fingerprint.
   *
-  * All pure Column expressions (regexp/split/higher-order functions) —
-  * whole-stage codegen, no UDFs, row-local (zero shuffle): the same
-  * expressions run unchanged over a 100 TB corpus.
+  * All Column expressions (regexp/split/higher-order functions, and
+  * graft's native kernels for the classifier score and fingerprint) —
+  * no UDFs, row-local (zero shuffle): the same expressions run
+  * unchanged over a 100 TB corpus.
   */
 object TextFunctions {
 
@@ -148,48 +153,18 @@ object TextFunctions {
     * part at scale. Everything is integer arithmetic on md5 buckets,
     * so a SQL oracle replays scores bit-exactly.
     *
-    * Pure Column expressions — codegen'd, row-local, ZERO shuffle:
-    * classifier-scoring a 100 TB corpus is a map-only pass over the
-    * scan, the plan you want (a shuffle here would be a design bug).
-    * The token array is bound once as a lambda value (the
-    * [[topNgramFraction]] interpreted-eval discipline) — it is
-    * referenced three times (unigrams + both bigram slices). */
+    * One codegen'd [[graft.plans.ClassifierMilliExpr]] pass — row-local,
+    * ZERO shuffle: classifier-scoring a 100 TB corpus is a map-only
+    * pass over the scan, the plan you want (a shuffle here would be a
+    * design bug). */
   def classifierScoreMilli(c: Column, buckets: Int = 65536): Column =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      call_function("classifier_milli", c, lit(buckets))
-    else classifierScoreMilliHof(c, buckets)
-
-  /** Portable Column form (also the native kernel's equivalence oracle
-    * in GraftExtensionsSpec). */
-  def classifierScoreMilliHof(c: Column, buckets: Int = 65536): Column = {
-    val scored = transform(array(tokens(c)), ts => {
-      val n1 = greatest(size(ts) - 1, lit(0))
-      val bigrams = zip_with(slice(ts, lit(1), n1), slice(ts, lit(2), n1),
-        (a, b) => concat(a, lit("_"), b))
-      aggregate(concat(ts, bigrams), lit(0L), (acc, g) => {
-        val bkt = tokenHashMd5(g) % lit(buckets.toLong)
-        acc + (bkt * lit(2654435761L) % lit(2147483648L) % lit(2001L) - lit(1000L))
-      })
-    })
-    element_at(scored, 1)
-  }
+    ExpressionColumn(ClassifierMilliExpr(expression(c), Literal(buckets)))
 
   /** Polynomial rolling-hash document fingerprint over token md5-hashes,
     * mod 1e9+7 (modulo applied per step — keeps every intermediate in
     * 35 bits so the same fold works in engines that trap on int64
-    * overflow). Fold order = left-to-right, seed = first token hash. */
+    * overflow). Fold order = left-to-right, seed = first token hash.
+    * One pass of the [[graft.plans.FingerprintMd5Expr]] kernel. */
   def fingerprint(c: Column): Column =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      call_function("fingerprint_md5", c)
-    else fingerprintHof(c)
-
-  /** Portable Column form (also the native kernel's equivalence oracle
-    * in GraftExtensionsSpec). */
-  def fingerprintHof(c: Column): Column = {
-    val hs = transform(tokens(c), tokenHashMd5 _)
-    aggregate(
-      slice(hs, lit(2), greatest(size(hs) - 1, lit(0))),
-      element_at(hs, 1),
-      (acc, h) => pmod(acc * lit(31L) + h, lit(1000000007L)))
-  }
+    ExpressionColumn(FingerprintMd5Expr(expression(c)))
 }

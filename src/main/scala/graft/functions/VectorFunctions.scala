@@ -1,48 +1,38 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
 import org.apache.spark.sql.functions._
 
-/** Dense-vector math over `array<float>` embedding columns.
+import graft.plans.{VecDot, VecL2Sq}
+
+/** Dense-vector math over `array<float>` embedding columns, on graft's
+  * native codegen'd kernels ([[graft.plans.VecDot]]/[[graft.plans.VecL2Sq]]):
+  * one tight Java loop per row, where the equivalent higher-order
+  * functions (`zip_with`/`aggregate`) evaluate interpreted with a
+  * per-row zipped-array allocation. That matters because the dot
+  * product is the inner loop of every ANN/near-dup query
+  * (|pairs| × dim multiplies).
   *
-  * Two equivalent forms, picked at plan-build time: the portable
-  * higher-order-function form (`zip_with`/`aggregate` — works in any
-  * vanilla session), and graft's native codegen'd kernels
-  * ([[graft.plans.VecDot]]/[[graft.plans.VecL2Sq]]) when
-  * GraftExtensions is registered — HOFs evaluate interpreted with a
-  * per-row zipped-array allocation, while the native form is one tight
-  * Java loop, which matters because the dot product is the inner loop
-  * of every ANN/near-dup query (|pairs| × dim multiplies).
-  *
-  * Both paths widen floats element-wise to double and fold
-  * left-to-right from 0.0 — bit-equal results (GraftExtensionsSpec). */
+  * The kernels widen floats element-wise to double and fold
+  * left-to-right from 0.0 — bit-equal to the `zip_with`/`aggregate`
+  * fold (GraftExtensionsSpec); a length mismatch yields null. */
 object VectorFunctions {
 
-  private def native: Boolean = graft.plans.GraftExtensions.nativeAvailable
-
-  private def sumFold(arr: Column): Column =
-    aggregate(arr, lit(0.0), (acc, v) => acc + v)
+  private def constArray(v: Array[Double]): Column = array(v.map(lit).toSeq: _*)
 
   def dot(a: Column, b: Column): Column =
-    if (native) call_function("vec_dot", a, b)
-    else sumFold(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
+    ExpressionColumn(VecDot(expression(a), expression(b)))
 
-  def norm(a: Column): Column =
-    if (native) sqrt(call_function("vec_dot", a, a))
-    else sqrt(sumFold(transform(a, x => x.cast("double") * x.cast("double"))))
+  def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
   /** Signed projection against a constant hyperplane (for LSH). */
-  def dotConst(a: Column, plane: Array[Double]): Column =
-    if (native) call_function("vec_dot", a, array(plane.map(lit).toSeq: _*))
-    else sumFold(zip_with(a, array(plane.map(lit).toSeq: _*),
-      (x, p) => x.cast("double") * p))
+  def dotConst(a: Column, plane: Array[Double]): Column = dot(a, constArray(plane))
 
   /** Squared L2 distance to a constant centroid (for IVF assignment). */
   def l2sqConst(a: Column, cent: Array[Double]): Column =
-    if (native) call_function("vec_l2sq", a, array(cent.map(lit).toSeq: _*))
-    else sumFold(zip_with(a, array(cent.map(lit).toSeq: _*),
-      (x, c) => (x.cast("double") - c) * (x.cast("double") - c)))
+    ExpressionColumn(VecL2Sq(expression(a), expression(constArray(cent))))
 }

@@ -2,10 +2,12 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
-import graft.plans.GraftExtensions
+import graft.plans.BloomMightContain
 
 /** Bloom-filter key pruning for joins whose small side is too large to
   * broadcast as a hash relation but whose KEY SET fits a sketch.
@@ -27,9 +29,7 @@ import graft.plans.GraftExtensions
   * 10⁸ keys ⇒ ~3·10⁻⁴ of ONE colliding pair, and a collision only
   * adds a false positive, never drops a row, because the exact join
   * runs on the real key columns). The probe is the native codegen'd
-  * `bloom_might_contain`; in a vanilla session (no GraftExtensions)
-  * the prune degrades to a no-op and the exact joins carry the full
-  * semantics — same results, no pruning.
+  * [[graft.plans.BloomMightContain]] kernel.
   */
 object BloomPrune {
 
@@ -45,12 +45,9 @@ object BloomPrune {
     bos.toByteArray
   }
 
-  /** Membership probe column; `lit(true)` in vanilla sessions (the
-    * callers' exact joins keep semantics; only the pruning is lost). */
+  /** Membership probe column: false proves the keys are absent. */
   def mightContainKeys(bloomBytes: Array[Byte], keys: Seq[Column]): Column =
-    if (GraftExtensions.nativeAvailable)
-      call_function("bloom_might_contain", lit(bloomBytes), xxhash64(keys: _*))
-    else lit(true)
+    ExpressionColumn(BloomMightContain(Literal(bloomBytes), expression(xxhash64(keys: _*))))
 
   /** Conservative wire-size estimate of a `nKeys`-column key set with
     * `expectedItems` rows — the adaptivity input for

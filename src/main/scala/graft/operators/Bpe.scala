@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions
+import graft.plans.SubwordCountExpr
 
 /** BPE tokenizer induction (Sennrich et al. 2016, "Neural Machine
   * Translation of Rare Words with Subword Units") — the
@@ -245,32 +248,16 @@ object Bpe {
 
   /** Tokenize the corpus with a learned merge table: apply the merges
     * in rank order to every word — a corpus-wide MAP-ONLY pass (the
-    * merge table is a local constant folded into the expression; no
-    * broadcast, no shuffle, no UDF). Returns docs + `n_subwords`, the
-    * real token count every budget/packing decision wants. Expression
-    * depth is |merges| nested folds — intended for the small
+    * merge table is a literal argument of the codegen'd
+    * [[graft.plans.SubwordCountExpr]] kernel; no broadcast, no
+    * shuffle, no UDF). Returns docs + `n_subwords`, the real token
+    * count every budget/packing decision wants. Each word costs
+    * |merges| rewrite passes over its symbols — intended for the small
     * high-frequency merge prefixes those decisions need, not a full
     * 50k-merge production vocab (which would compile the merge table
     * into a broadcast map + one mapPartitions, the codec shape). */
   def subwordCount(docs: DataFrame, textCol: String, merges: Seq[Merge]): DataFrame =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      docs.withColumn("n_subwords",
-        call_function("subword_count", col(textCol),
-          lit(merges.map(_.left).toArray),
-          lit(merges.map(_.right).toArray)))
-    else subwordCountHof(docs, textCol, merges)
-
-  /** Portable Column form (also the native kernel's equivalence oracle
-    * in GraftExtensionsSpec). */
-  def subwordCountHof(docs: DataFrame, textCol: String, merges: Seq[Merge]): DataFrame =
-    docs.withColumn("n_subwords",
-      aggregate(
-        filter(TextFunctions.tokens(col(textCol)), w => length(w) > 0),
-        lit(0L),
-        (acc, w) => {
-          val merged = merges.foldLeft(charSymbols(w)) {
-            (c, m) => applyMerge(c, m.left, m.right)
-          }
-          acc + size(merged).cast("long")
-        }))
+    docs.withColumn("n_subwords", ExpressionColumn(SubwordCountExpr(
+      expression(col(textCol)),
+      Literal(merges.map(_.left).toArray), Literal(merges.map(_.right).toArray))))
 }

@@ -105,15 +105,17 @@ private[graft] object ControlLog {
     retryingVanished(conf, dir)(_.flatMap(readFile(conf, _)._2))
 
   /** The live files as a DataFrame — `spark.read.parquet` over exactly
-    * the live set, or an empty frame with `empty` when there is none.
-    * A fold between this call and the frame's action can delete a file
-    * the frame names; that action then fails and must be rerun. */
-  def frame(spark: SparkSession, dir: String, empty: StructType): DataFrame = {
+    * the live set with the log's known `schema` (so building the frame
+    * runs no schema-inference job), or an empty frame with `schema`
+    * when there is none. A fold between this call and the frame's
+    * action can delete a file the frame names; that action then fails
+    * and must be rerun. */
+  def frame(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
     val live = retryingVanished(spark.sparkContext.hadoopConfiguration, dir)(identity)
     if (live.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
-    else spark.read.parquet(live.map(_.toString): _*)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(live.map(_.toString): _*)
   }
 
   /** Present non-hidden files, snapshots' folded sets, and the live set. */

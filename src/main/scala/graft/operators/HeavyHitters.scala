@@ -2,11 +2,13 @@ package graft.operators
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
-import graft.plans.GraftExtensions
+import graft.plans.CmsEstimate
 
 /** Count-min-sketch heavy hitters: exact "keys with count ≥ t" answers
   * whose shuffle volume scales with the HEAVY rows, not the corpus.
@@ -91,15 +93,9 @@ object HeavyHitters {
   }
 
   /** Row-local frequency estimate of `keys` against a serialized
-    * sketch — never below the true count. In a vanilla session (no
-    * GraftExtensions) degrades to `Long.MaxValue`: every row survives
-    * the pre-filter and the exact aggregate alone carries the
-    * semantics (same results, no pruning) — the [[BloomPrune]]
-    * fallback discipline. */
+    * sketch — never below the true count. */
   def estimate(cms: Array[Byte], keys: Seq[Column]): Column =
-    if (GraftExtensions.nativeAvailable)
-      call_function("cms_estimate", lit(cms), xxhash64(keys: _*))
-    else lit(Long.MaxValue)
+    ExpressionColumn(CmsEstimate(Literal(cms), expression(xxhash64(keys: _*))))
 
   /** Exact heavy hitters from a prebuilt sketch: CMS-prune rows whose
     * key cannot reach `minCount`, exact-count the survivors, drop the

@@ -1,14 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
+import graft.plans.{ClassifierWeightedExpr, GramBucketsExpr}
 
 /** TRAINED hashed-gram importance model — the DSIR discipline (Xie et
   * al. 2023, "Data Selection for Language Models via Importance
   * Resampling") with estimated weights, upgrading
-  * [[TextFunctions.classifierScoreMilli]]'s deterministic stand-in:
+  * [[graft.functions.TextFunctions.classifierScoreMilli]]'s deterministic stand-in:
   * estimate P(target | gram bucket) from a labeled corpus split
   * (target = the distribution you want more of — a reference corpus,
   * a language, a quality tier), then score every document by the sum
@@ -22,31 +24,16 @@ import graft.functions.TextFunctions
   * Scale shape: TRAINING is one pass — explode grams, one shuffle on
   * the bucket (map-side combined), weight table = `buckets` rows (a
   * lake artifact at 100 TB, the pretrained-centroid discipline).
-  * SCORING is one pass — explode grams, BROADCAST-join the weight
-  * table, one map-side-combined sum per doc; the corpus never joins
-  * itself and the only corpus-sized shuffle is the per-doc sum. */
+  * SCORING is one map-only pass — the weight table densifies into a
+  * bucket-indexed array the `classifier_weighted` kernel reads per
+  * gram; the corpus never joins itself and never shuffles. */
 object ImportanceModel {
 
   /** Hashed uni+bigram bucket ids of a text column — the same feature
-    * space as [[TextFunctions.classifierScoreMilli]] (md5-portable).
-    * Token array bound once per the interpreted-eval discipline. */
+    * space as [[graft.functions.TextFunctions.classifierScoreMilli]]
+    * (md5-portable), from the one-pass `gram_buckets` kernel. */
   def gramBuckets(c: Column, buckets: Int = 65536): Column =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      call_function("gram_buckets", c, lit(buckets))
-    else gramBucketsHof(c, buckets)
-
-  /** Portable Column form (also the native kernel's equivalence
-    * oracle in GraftExtensionsSpec). */
-  def gramBucketsHof(c: Column, buckets: Int = 65536): Column = {
-    val out = transform(array(TextFunctions.tokens(c)), ts => {
-      val n1 = greatest(size(ts) - 1, lit(0))
-      val bigrams = zip_with(slice(ts, lit(1), n1), slice(ts, lit(2), n1),
-        (a, b) => concat(a, lit("_"), b))
-      transform(concat(ts, bigrams),
-        g => TextFunctions.tokenHashMd5(g) % lit(buckets.toLong))
-    })
-    element_at(out, 1)
-  }
+    ExpressionColumn(GramBucketsExpr(expression(c), Literal(buckets)))
 
   /** Estimate the weight table from a labeled corpus: (bucket,
     * w_milli) for every bucket seen in training. One gram explode +
@@ -64,50 +51,30 @@ object ImportanceModel {
   /** Score every doc under a trained weight table: Σ w(bucket) over
     * the doc's grams, unseen buckets scoring 0.
     *
-    * Native path (r9): the weight table densifies into a
-    * bucket-indexed long array (≤ `buckets` · 8 B — 512 KB at the
-    * default 2¹⁶, bounded metadata like the IVF centroids) and
-    * scoring becomes ONE `classifier_weighted` kernel call per row —
-    * map-only, zero shuffle, no gram explode at all. Fallback (and
-    * the shape to keep for bucket counts too big to inline, say
-    * ≥ 2²⁴): explode grams, BROADCAST-join the weights, one
-    * map-side-combined sum per doc — the corpus never joins itself. */
+    * The weight table densifies into a bucket-indexed long array
+    * (≤ `buckets` · 8 B — 512 KB at the default 2¹⁶, bounded metadata
+    * like the IVF centroids) and scoring is ONE `classifier_weighted`
+    * kernel call per row — map-only, zero shuffle, no gram explode at
+    * all. Bucket counts too big to inline (say ≥ 2²⁴) would take the
+    * broadcast-join shape instead: explode grams, BROADCAST-join the
+    * weights, one map-side-combined sum per doc. */
   def score(docs: DataFrame, idCol: String, textCol: String,
-      weights: DataFrame, buckets: Int = 65536): DataFrame =
-    if (graft.plans.GraftExtensions.nativeAvailable) {
-      val dense = new Array[Long](buckets)
-      weights.select("bucket", "w_milli").collect().foreach { r =>
-        val b = r.getLong(0)
-        // a weights table trained under a LARGER bucket count would
-        // index past the dense array — fail with the actual mismatch
-        // instead of an ArrayIndexOutOfBounds (the join fallback merely
-        // never matches those grams, silently scoring them 0; a
-        // train/score bucket mismatch is a bug either way)
-        require(b >= 0 && b < buckets,
-          s"weights table bucket $b is outside [0, $buckets) — the " +
-            "table was trained with a different bucket count than " +
-            s"score(buckets = $buckets); retrain or pass the matching count")
-        dense(b.toInt) = r.getLong(1)
-      }
-      // coalesce for null-text parity with the join form (whose
-      // explode drops the row and the outer coalesce lands 0)
-      docs.withColumn("score_milli",
-        coalesce(call_function("classifier_weighted", col(textCol),
-          lit(dense)), lit(0L)))
-    } else scoreViaJoin(docs, idCol, textCol, weights, buckets)
-
-  /** The broadcast-join scoring form (also the native kernel's
-    * equivalence oracle in GraftExtensionsSpec). */
-  def scoreViaJoin(docs: DataFrame, idCol: String, textCol: String,
       weights: DataFrame, buckets: Int = 65536): DataFrame = {
-    val scores = docs
-      .select(col(idCol).as("__id"),
-        explode(gramBuckets(col(textCol), buckets)).as("bucket"))
-      .join(broadcast(weights), Seq("bucket"), "left")
-      .groupBy("__id")
-      .agg(sum(coalesce(col("w_milli"), lit(0L))).as("score_milli"))
-    docs.join(scores, docs(idCol) === scores("__id"), "left")
-      .withColumn("score_milli", coalesce(col("score_milli"), lit(0L)))
-      .drop("__id")
+    val dense = new Array[Long](buckets)
+    weights.select("bucket", "w_milli").collect().foreach { r =>
+      val b = r.getLong(0)
+      // a weights table trained under a LARGER bucket count would
+      // index past the dense array — fail with the actual mismatch
+      // instead of an ArrayIndexOutOfBounds
+      require(b >= 0 && b < buckets,
+        s"weights table bucket $b is outside [0, $buckets) — the " +
+          "table was trained with a different bucket count than " +
+          s"score(buckets = $buckets); retrain or pass the matching count")
+      dense(b.toInt) = r.getLong(1)
+    }
+    // coalesce: a null text scores 0
+    docs.withColumn("score_milli",
+      coalesce(ExpressionColumn(ClassifierWeightedExpr(
+        expression(col(textCol)), Literal(dense))), lit(0L)))
   }
 }

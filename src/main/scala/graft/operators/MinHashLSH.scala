@@ -1,14 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.plans.{ArrayPmodExpr, MinHashSignature}
 
 /** MinHash + banded LSH near-duplicate detection.
   *
-  * Pipeline: word-shingles → xxhash64 → k permutation min-hashes
-  * (higher-order functions, row-local, codegen) → b bands of r rows →
+  * Pipeline: word-shingle hashes → k permutation min-hashes (the
+  * codegen'd [[graft.plans.MinHashSignature]] kernel, row-local) → b
+  * bands of r rows →
   * band-bucket join for candidates → exact shingle-Jaccard verify on
   * candidates only.
   *
@@ -46,30 +50,22 @@ object MinHashLSH {
       rnd.nextInt(Int.MaxValue).toLong))
   }
 
-  /** Distinct word-shingle hashes for one document (row-local).
+  /** Distinct word-shingle hashes for one document (row-local), in
+    * the minhash domain [0, 2³¹−1).
     *
-    * Native path (GraftExtensions): token-hash array → one codegen'd
-    * pass mixing each n-window of longs — no per-shingle string. The
-    * token-hash array is the expression's single child, so it is
-    * evaluated once per row. (A pure-HOF positional variant was tried
-    * and is a trap: a captured outer array referenced by k element_at
-    * lambdas is INLINED k× — no common-subexpression elimination inside
-    * lambdas — measured 5× slower than even the string path.)
-    *
-    * Portable path: n-gram strings → xxhash64 (shingle identity is
-    * positional either way; hash VALUES differ between paths, which is
-    * fine — minhash consumers only need set semantics + a fixed choice
-    * per session). */
+    * Token-hash array → one codegen'd pass mixing each n-window of
+    * longs ([[TextDedup.shingleHashes64]]) — no per-shingle string —
+    * then `array_pmod`, a native element-wise pmod that keeps the whole
+    * shingle→signature projection codegen'd (any HOF in the chain would
+    * force it interpreted end-to-end). The token-hash array is the
+    * expression's single child, so it is evaluated once per row. (A
+    * pure-HOF positional variant was tried and is a trap: a captured
+    * outer array referenced by k element_at lambdas is INLINED k× — no
+    * common-subexpression elimination inside lambdas — measured 5×
+    * slower than even the string path.) */
   def shingleHashes(textCol: Column, n: Int = 3): Column =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      // array_pmod is value-identical to the transform; being native
-      // it keeps the whole shingle→signature projection codegen'd
-      // (any HOF in the chain would force it interpreted end-to-end)
-      call_function("array_pmod",
-        TextDedup.shingleHashes64(textCol, n), lit(Prime))
-    else
-      transform(TextDedup.shingleHashes64(textCol, n),
-        h => pmod(h, lit(Prime)))
+    ExpressionColumn(ArrayPmodExpr(
+      expression(TextDedup.shingleHashes64(textCol, n)), Literal(Prime)))
 
   /** Engine-portable shingle hashes: md5 of the n-gram STRING (first 8
     * hex chars) mod P — DuckDB computes the identical value, enabling
@@ -79,21 +75,6 @@ object MinHashLSH {
   def shingleHashesPortable(textCol: Column, n: Int = 3): Column =
     transform(TextDedup.shingles(textCol, n),
       s => pmod(conv(substring(md5(s), 1, 8), 16, 10).cast("long"), lit(Prime)))
-
-  /** k min-hash values as an array column — ONE fold over the shingle
-    * array updating all k minima per element (k separate
-    * `array_min(transform(...))` expressions would re-walk the array k
-    * times and overflow whole-stage codegen's method budget, falling
-    * back to interpreted eval — ~60× slower at bench scale). */
-  def signature(shingleHashCol: Column, perms: Seq[(Long, Long)]): Column = {
-    val params = array(perms.map { case (a, b) =>
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }: _*)
-    aggregate(shingleHashCol,
-      array_repeat(lit(Prime), perms.size),
-      (acc, h) => zip_with(acc, params, (cur, p) =>
-        least(cur, pmod(h * p.getField("a") + p.getField("b"), lit(Prime)))))
-  }
 
   /** docs → (id, band, band_hash) — one row per band. */
   def bandBuckets(docs: DataFrame, idCol: String, textCol: String,
@@ -116,14 +97,8 @@ object MinHashLSH {
       persistResult: Boolean = true): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     val r = numPerm / bands
-    val perms = permutations(numPerm, seed)
-    // Native codegen'd expression when the session has GraftExtensions
-    // (bit-equal arithmetic), portable HOF fold otherwise.
-    val sigExpr =
-      if (numPerm == 64 && seed == 42L && graft.plans.GraftExtensions.nativeAvailable)
-        call_function("minhash_sig", col("sh"))
-      else signature(col("sh"), perms)
-    val withSig = docHashes.select(col("doc"), sigExpr.as("sig"))
+    val sig = ExpressionColumn(MinHashSignature(expression(col("sh")), numPerm, seed))
+    val withSig = docHashes.select(col("doc"), sig.as("sig"))
     def bandKey(j: Int): Column = {
       val vals = (0 until r).map(i => element_at(col("sig"), j * r + i + 1))
       if (portableBandKey) concat_ws(",", vals.map(_.cast("string")): _*)

@@ -1,10 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions
-import graft.plans.GraftExtensions
+import graft.plans.{PqAdc, PqEncode}
 
 /** Product-quantization ANN (Jégou et al. 2011) — the memory-bound
   * scale path [[Ann]]'s IVF composes with: each vector becomes `m`
@@ -55,18 +57,11 @@ object Pq {
     Codebook(m, ksub, dsub, cents)
   }
 
-  /** Row-local PQ codes for a vector column — native one-pass kernel
-    * when available, else composed per-subspace argmins (fallback for
-    * vanilla sessions; fine at small m·ksub, the native form is the
-    * scale path). */
+  /** Row-local PQ codes for a vector column — the one-pass
+    * [[graft.plans.PqEncode]] kernel (per-subspace argmin, bit-equal
+    * to composing [[Ann.clusterOf]] per subspace). */
   def encode(vecCol: Column, cb: Codebook): Column =
-    if (GraftExtensions.nativeAvailable)
-      call_function("pq_encode", vecCol,
-        array(cb.flat.map(lit).toSeq: _*), lit(cb.m), lit(cb.ksub))
-    else
-      array((0 until cb.m).map { j =>
-        Ann.clusterOf(slice(vecCol, j * cb.dsub + 1, cb.dsub), cb.cents(j))
-      }: _*)
+    ExpressionColumn(PqEncode(expression(vecCol), Literal(cb.flat), cb.m, cb.ksub))
 
   /** The persistable encoded artifact: (id, codes, norm). The norm
     * rides along so ADC inner products rank by approximate COSINE
@@ -92,17 +87,10 @@ object Pq {
     t
   }
 
-  /** Approximate score column: Σⱼ table[j·ksub + codes[j]] — native m
-    * table lookups per row, or the portable HOF fold (bit-equal,
-    * asserted in GraftExtensionsSpec). */
+  /** Approximate score column: Σⱼ table[j·ksub + codes[j]] — m table
+    * lookups per row in the [[graft.plans.PqAdc]] kernel. */
   def adcScore(codesCol: Column, table: Array[Double], ksub: Int): Column =
-    if (GraftExtensions.nativeAvailable)
-      call_function("pq_adc", codesCol, array(table.map(lit).toSeq: _*), lit(ksub))
-    else
-      aggregate(
-        zip_with(codesCol, sequence(lit(0), size(codesCol) - 1),
-          (c, j) => element_at(array(table.map(lit).toSeq: _*), j * ksub + c + 1)),
-        lit(0.0), (acc, v) => acc + v)
+    ExpressionColumn(PqAdc(expression(codesCol), Literal(table), ksub))
 
   /** Encoded artifact with the IVF cell id riding along — the IVF-PQ
     * layout: at scale the codes table is partitioned by `ivf_cell`

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.plans.{SimHash128, SimHash128Weighted, SimHash64}
 
 /** SimHash near-duplicate fingerprinting.
   *
@@ -75,33 +77,15 @@ object SimHash {
     * 17–32) — gives the 128-bit fingerprint its hi stream. */
   def md5TokenHashHi(t: Column): Column = signedFromHex16(substring(md5(t), 17, 16))
 
-  /** 64-bit simhash of the token multiset. Uses the native codegen'd
-    * expression when the session has GraftExtensions (bit-equal),
-    * else the portable higher-order-function fold. */
+  /** 64-bit simhash of the token multiset — the native codegen'd
+    * [[graft.plans.SimHash64]] kernel. */
   def simhash64(textCol: Column,
-      tokenHash: Column => Column = xxhash64(_)): Column = {
-    val hashes = transform(TextFunctions.tokens(textCol), t => tokenHash(t))
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      call_function("simhash64", hashes)
-    else simhash64Hof(hashes)
-  }
+      tokenHash: Column => Column = xxhash64(_)): Column =
+    simhash64Of(transform(TextFunctions.tokens(textCol), t => tokenHash(t)))
 
-  /** Portable fold form (also the equivalence oracle for the native
-    * expression in GraftExtensionsSpec). */
-  def simhash64Hof(hashes: Column): Column = {
-    val bitIdx = sequence(lit(0), lit(Bits - 1))
-    // counters[b] += tokenHash bit b ? +1 : −1, one fold over tokens
-    val counters = aggregate(hashes,
-      array_repeat(lit(0L), Bits),
-      (acc, h) => zip_with(acc, bitIdx,
-        (a, b) => a + call_function("getbit", h, b).cast("long") * lit(2L) - lit(1L)))
-    // fingerprint = Σ 2^b over positive counters; 1L<<63 wraps to
-    // Long.MinValue, whose bit pattern IS bit 63 (sum stays in range).
-    val powers = array((0 until Bits).map(b => lit(1L << b)): _*)
-    aggregate(
-      zip_with(counters, powers, (cnt, p) => when(cnt > 0, p).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc + v)
-  }
+  /** 64-bit simhash of an `array<long>` of feature hashes. */
+  private def simhash64Of(hashes: Column): Column =
+    ExpressionColumn(SimHash64(expression(hashes)))
 
   /** (doc, fp) per row — the 64-bit fingerprint (lo half of the
     * 128-bit one; kept for callers that only need a compact sketch). */
@@ -217,17 +201,12 @@ object SimHash {
           TextDedup.shingleHashes64(col(textCol), shingleN).as("__lo"))
         .where(size(col("__lo")) > 0)
         .withColumn("__w", wts(col("__lo")))
-      if (graft.plans.GraftExtensions.nativeAvailable)
-        base.select(col("doc"),
-            call_function("simhash128w", col("__lo"), col("__w")).as("__fp"))
-          .select(col("doc"),
-            element_at(col("__fp"), 1).as("fp_hi"),
-            element_at(col("__fp"), 2).as("fp_lo"))
-      else
-        base.select(col("doc"),
-          simhash64WeightedHof(transform(col("__lo"), h => xxhash64(h)),
-            col("__w")).as("fp_hi"),
-          simhash64WeightedHof(col("__lo"), col("__w")).as("fp_lo"))
+      base.select(col("doc"),
+          ExpressionColumn(SimHash128Weighted(
+            expression(col("__lo")), expression(col("__w")))).as("__fp"))
+        .select(col("doc"),
+          element_at(col("__fp"), 1).as("fp_hi"),
+          element_at(col("__fp"), 2).as("fp_lo"))
     } else {
       val shs = TextDedup.shingles(col(textCol), shingleN)
       docs.select(col(idCol).as("doc"),
@@ -274,10 +253,6 @@ object SimHash {
   def fingerprints128(docs: DataFrame, idCol: String, textCol: String,
       portable: Boolean = false, shingleN: Int = 3,
       stop: Array[Long] = Array.empty): DataFrame = {
-    def sh(hashes: Column): Column =
-      if (graft.plans.GraftExtensions.nativeAvailable)
-        call_function("simhash64", hashes)
-      else simhash64Hof(hashes)
     if (!portable) {
       val lo0 = TextDedup.shingleHashes64(col(textCol), shingleN)
       val lo =
@@ -285,20 +260,15 @@ object SimHash {
         else filter(lo0, h => !array_contains(lit(stop), h))
       val base = docs.select(col(idCol).as("doc"), lo.as("__lo"))
         .where(size(col("__lo")) > 0)
-      if (graft.plans.GraftExtensions.nativeAvailable)
-        // fused kernel: ONE pass maintains all 128 counters, deriving
-        // the hi-stream hash inline — no materialized hi array, no
-        // second fold (bit-equal to the two-call form, asserted in
-        // GraftExtensionsSpec)
-        base.select(col("doc"),
-            call_function("simhash128", col("__lo")).as("__fp"))
-          .select(col("doc"),
-            element_at(col("__fp"), 1).as("fp_hi"),
-            element_at(col("__fp"), 2).as("fp_lo"))
-      else
-        base.select(col("doc"),
-          sh(transform(col("__lo"), h => xxhash64(h))).as("fp_hi"),
-          sh(col("__lo")).as("fp_lo"))
+      // fused kernel: ONE pass maintains all 128 counters, deriving
+      // the hi-stream hash inline — no materialized hi array, no
+      // second fold (bit-equal to two simhash64 calls, the hi one over
+      // xxhash64 of each lo hash; asserted in GraftExtensionsSpec)
+      base.select(col("doc"),
+          ExpressionColumn(SimHash128(expression(col("__lo")))).as("__fp"))
+        .select(col("doc"),
+          element_at(col("__fp"), 1).as("fp_hi"),
+          element_at(col("__fp"), 2).as("fp_lo"))
     } else {
       val shs0 = TextDedup.shingles(col(textCol), shingleN)
       val shs =
@@ -309,7 +279,7 @@ object SimHash {
           transform(shs, s => md5TokenHashHi(s)).as("__hi"))
         .where(size(col("__lo")) > 0)
         .select(col("doc"),
-          sh(col("__hi")).as("fp_hi"), sh(col("__lo")).as("fp_lo"))
+          simhash64Of(col("__hi")).as("fp_hi"), simhash64Of(col("__lo")).as("fp_lo"))
     }
   }
 

@@ -1,10 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, ExpressionColumn}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.plans.{ChunkHashesExpr, DropTokenSpansExpr, ShingleHashes, TokenHashesExpr, WindowHashes}
 
 /** Exact + n-gram-Jaccard document deduplication.
   *
@@ -40,21 +43,12 @@ object TextDedup {
       i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
   }
 
-  /** Distinct 64-bit shingle hashes: native one-pass window mix over
-    * token hashes when GraftExtensions is registered, else n-gram
-    * strings → xxhash64. Either way one value per distinct positional
-    * n-gram (cross-path hash VALUES differ; set cardinalities agree
-    * modulo ~2⁻⁶⁴ collisions). */
+  /** Distinct 64-bit shingle hashes: the one-pass [[ShingleHashes]]
+    * mix over each n-window of token hashes — one value per distinct
+    * positional n-gram, no per-shingle string. The token hashes are
+    * bit-identical to `transform(tokens, xxhash64)`. */
   def shingleHashes64(textCol: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      // token_hashes produces BIT-IDENTICAL xxhash64 values to the
-      // transform(tokens, xxhash64) HOF (which evaluates interpreted,
-      // one projection dispatch per token) — downstream shingle/band
-      // values and persisted artifacts are unchanged
-      call_function("shingle_hashes",
-        call_function("token_hashes", textCol), lit(n))
-    else
-      transform(shingles(textCol, n), s => xxhash64(s))
+    ExpressionColumn(ShingleHashes(TokenHashesExpr(expression(textCol)), Literal(n)))
 
   /** Benchmark decontamination: flag corpus docs sharing ≥ `minOverlap`
     * distinct n-gram shingles with ANY benchmark doc — the eval-set
@@ -117,17 +111,6 @@ object TextDedup {
       chunkTokens: Int = 10): DataFrame =
     chunkDedupAgainst(docs, idCol, textCol, chunkTokens, prior = null)
 
-  /** The per-doc chunk-string array (row-local; never materialized as
-    * rows) — shared by the hash explode and the rebuild so the two
-    * sides are the same expression bit-for-bit. */
-  private def chunkArray(textCol: String, chunkTokens: Int): org.apache.spark.sql.Column = {
-    val toks = TextFunctions.tokens(col(textCol))
-    val nChunks = greatest(
-      ceil(size(toks).cast("double") / chunkTokens).cast("int"), lit(1))
-    transform(sequence(lit(0), nChunks - 1),
-      i => concat_ws(" ", slice(toks, i * chunkTokens + 1, lit(chunkTokens))))
-  }
-
   /** The NARROW (id, pos, chunk_hash) frame [[chunkDedup]] dedups over
     * — chunk strings are built and hashed inside the projection
     * (xxhash64 over the chunk text, the store contract) and never
@@ -137,13 +120,10 @@ object TextDedup {
   private[graft] def chunkHashExplode(docs: DataFrame, idCol: String,
       textCol: String, chunkTokens: Int): DataFrame = {
     require(chunkTokens >= 1, s"chunkTokens must be >= 1, got $chunkTokens")
-    // native chunk_hashes returns BIT-IDENTICAL xxhash64 values to the
-    // Column form (the store contract is path-independent), it just
-    // skips the interpreted chunk-string transform chain
-    val hashes =
-      if (graft.plans.GraftExtensions.nativeAvailable)
-        call_function("chunk_hashes", col(textCol), lit(chunkTokens))
-      else transform(chunkArray(textCol, chunkTokens), c => xxhash64(c))
+    // chunk_hashes is xxhash64 of each chunk's string, bit for bit,
+    // without materializing the chunk strings
+    val hashes = ExpressionColumn(
+      ChunkHashesExpr(expression(col(textCol)), Literal(chunkTokens)))
     docs.select(col(idCol).as("__id"),
       posexplode(hashes).as(Seq("pos", "__h")))
   }
@@ -186,15 +166,27 @@ object TextDedup {
     * and it leaves no release obligation on library callers. */
   def chunkDedupAgainst(docs: DataFrame, idCol: String, textCol: String,
       chunkTokens: Int, prior: DataFrame): DataFrame =
-    chunkDedupImpl(docs, idCol, textCol, chunkTokens, prior,
-      native = graft.plans.GraftExtensions.nativeAvailable)
+    // a dropped chunk i is exactly the token range
+    // [i·chunkTokens, i·chunkTokens + chunkTokens), so the rebuild is
+    // the drop_token_spans kernel — one coverage pass, no chunk strings
+    // materialized at all (chunks are contiguous tokens re-joined with " ")
+    chunkDrops(docs, idCol, textCol, chunkTokens, prior)
+      .withColumn("__rb", ExpressionColumn(DropTokenSpansExpr(
+        expression(col("__text")),
+        expression(transform(col("__drops"), p => p * chunkTokens)),
+        Literal(chunkTokens))))
+      .select(col(idCol),
+        col("__rb.text").as(textCol),
+        (ceil(col("__rb.n_total").cast("double") / chunkTokens).cast("long")
+          - size(col("__drops")).cast("long")).as("n_chunks_kept"),
+        ceil(col("__rb.n_total").cast("double") / chunkTokens).cast("long")
+          .as("n_chunks_total"))
 
-  /** Impl with the rebuild path explicit (native `drop_token_spans`
-    * kernel vs the HOF chunk filter) — result-identical, asserted in
-    * GraftExtensionsSpec. */
-  private[graft] def chunkDedupImpl(docs: DataFrame, idCol: String,
-      textCol: String, chunkTokens: Int, prior: DataFrame,
-      native: Boolean): DataFrame = {
+  /** (id, __drops, __text): each doc with the sorted positions of its
+    * dropped chunk occurrences — [[chunkDedupAgainst]]'s input to the
+    * rebuild. */
+  private[graft] def chunkDrops(docs: DataFrame, idCol: String,
+      textCol: String, chunkTokens: Int, prior: DataFrame): DataFrame = {
     def narrow = chunkHashExplode(docs, idCol, textCol, chunkTokens)
     // only duplicated hashes can drop an occurrence — cnt > 1 shrinks
     // the probe's build side to the repeated-chunk set
@@ -221,37 +213,11 @@ object TextDedup {
           struct(col("__id"), col("pos")) =!= col("__first")))
       .groupBy("__id")
       .agg(sort_array(collect_list(col("pos"))).as("__drops"))
-    val joined = docs
+    docs
       .join(dropPos, docs(idCol) === dropPos("__id"), "left")
       .select(col(idCol),
         coalesce(col("__drops"), array().cast("array<int>")).as("__drops"),
         col(textCol).as("__text"))
-    if (native)
-      // a dropped chunk i is exactly the token range
-      // [i·chunkTokens, i·chunkTokens + chunkTokens), so the rebuild
-      // is the drop_token_spans kernel — one coverage pass, no chunk
-      // strings materialized at all (string-identical to the HOF form:
-      // chunks are contiguous tokens and both paths re-join with " ")
-      joined
-        .withColumn("__rb", call_function("drop_token_spans", col("__text"),
-          transform(col("__drops"), p => p * chunkTokens), lit(chunkTokens)))
-        .select(col(idCol),
-          col("__rb.text").as(textCol),
-          (ceil(col("__rb.n_total").cast("double") / chunkTokens).cast("long")
-            - size(col("__drops")).cast("long")).as("n_chunks_kept"),
-          ceil(col("__rb.n_total").cast("double") / chunkTokens).cast("long")
-            .as("n_chunks_total"))
-    else {
-      val chunks = chunkArray("__text", chunkTokens)
-      joined
-        .select(col(idCol), col("__drops"), chunks.as("__chunks"))
-        .select(col(idCol),
-          array_join(filter(col("__chunks"),
-            (c, i) => !array_contains(col("__drops"), i)), " ").as(textCol),
-          (size(col("__chunks")) - size(col("__drops"))).cast("long")
-            .as("n_chunks_kept"),
-          size(col("__chunks")).cast("long").as("n_chunks_total"))
-    }
   }
 
   /** ANY-ALIGNMENT exact-substring dedup (Lee et al. 2022's actual
@@ -273,83 +239,66 @@ object TextDedup {
     * combinable, AQE-skew-splittable, no hot-window partition);
     * duplicated positions collapse to ONE doc-sized array row each
     * (bounded by the doc's own token count — the same bound as the
-    * text column itself), and the rebuild is a row-local HOF filter.
+    * text column itself), and the rebuild is a row-local kernel pass.
     * Returns (id, text, n_tokens_kept, n_tokens_total). Like
     * [[chunkDedup]], run once per corpus snapshot (coverage is defined
     * against the input's occurrence order). Documents shorter than
     * `spanTokens` carry no windows and pass through whole. */
   def substringDedup(docs: DataFrame, idCol: String, textCol: String,
       spanTokens: Int = 50): DataFrame =
-    substringDedupImpl(docs, idCol, textCol, spanTokens,
-      native = graft.plans.GraftExtensions.nativeAvailable)
+    substringDedupImpl(docs, idCol, textCol, spanTokens, prior = null)
 
   /** [[substringDedup]] against a PRIOR window-hash store (column
-    * `window_hash`) — the incremental/streaming form. Window hashes
-    * are path-dependent (native kernel vs string fallback), so a
-    * persisted store must be written and read under the SAME session
-    * flavor; [[windowHashes]] therefore stamps each store row with a
-    * `hash_flavor` column and this method FAILS FAST when the store's
-    * flavor disagrees with the session's (a store without the column —
-    * written before the marker existed — is accepted as-is, matching
-    * the old behavior). The chunk store needs no marker: its hashes
-    * are path-independent xxhash64 strings. */
+    * `window_hash`) — the incremental/streaming form. [[windowHashes]]
+    * stamps each store row with a `hash_flavor` column ("native": the
+    * [[WindowHashes]] kernel's values). Older builds could also write
+    * "string" stores, whose per-window string hashes this build never
+    * computes, so this method FAILS FAST on any other flavor (a store
+    * without the column — written before the marker existed — is
+    * accepted as-is). The chunk store needs no marker: its hashes are
+    * xxhash64 of the chunk strings under every build. */
   def substringDedupAgainst(docs: DataFrame, idCol: String,
       textCol: String, spanTokens: Int, prior: DataFrame): DataFrame = {
-    val native = graft.plans.GraftExtensions.nativeAvailable
-    checkWindowHashFlavor(prior, native)
-    substringDedupImpl(docs, idCol, textCol, spanTokens,
-      native = native, prior = prior)
+    checkWindowHashFlavor(prior)
+    substringDedupImpl(docs, idCol, textCol, spanTokens, prior)
   }
 
   /** The flavor tag [[windowHashes]] stamps into a persisted store. */
-  private[graft] def windowHashFlavor(native: Boolean): String =
-    if (native) "native" else "string"
+  private[graft] val WindowHashFlavor = "native"
 
-  /** Fail fast when a prior window-hash store was written under the
-    * other hash path — mixed flavors would silently match nothing and
-    * keep every duplicate. Bounded driver work: the distinct of a
-    * constant column (≤ 2 values). NULL flavors are legacy rows (files
-    * written before the marker existed, surfaced as nulls by a
-    * mergeSchema read of a mixed store) and are accepted as-is — the
-    * same grandfathering as a store with no marker column at all.
-    * Callers reading a store that may mix legacy and stamped files
-    * should read with mergeSchema=true, else parquet picks ONE file's
-    * schema and the marker can silently vanish
-    * ([[graft.streaming.StreamingDedup]] does). */
-  private[graft] def checkWindowHashFlavor(prior: DataFrame,
-      native: Boolean): Unit =
+  /** Fail fast when a prior window-hash store was written under another
+    * hash path — mixed flavors would silently match nothing and keep
+    * every duplicate. Bounded driver work: the distinct of a constant
+    * column (≤ 2 values). NULL flavors are legacy rows (files written
+    * before the marker existed, surfaced as nulls by a mergeSchema read
+    * of a mixed store) and are accepted as-is — the same grandfathering
+    * as a store with no marker column at all. Callers reading a store
+    * that may mix legacy and stamped files should read with
+    * mergeSchema=true, else parquet picks ONE file's schema and the
+    * marker can silently vanish ([[graft.streaming.StreamingDedup]]
+    * does). */
+  private[graft] def checkWindowHashFlavor(prior: DataFrame): Unit =
     if (prior != null && prior.columns.contains("hash_flavor")) {
       val stored = prior.select("hash_flavor")
         .where(col("hash_flavor").isNotNull).distinct()
         .collect().map(_.getString(0)).toSet
-      val session = windowHashFlavor(native)
-      if (!stored.subsetOf(Set(session)))
+      if (!stored.subsetOf(Set(WindowHashFlavor)))
         throw new IllegalStateException(
           s"window-hash store flavor mismatch: store written under " +
-            s"[${stored.mkString(", ")}], session computes '$session' " +
-            "hashes — dedup against this store would match nothing. " +
-            "Re-open the session with the matching GraftExtensions " +
-            "registration, or rebuild the store.")
+            s"[${stored.mkString(", ")}], graft computes " +
+            s"'$WindowHashFlavor' hashes — dedup against this store " +
+            "would match nothing. Rebuild the store.")
     }
 
   /** The positional (id, pos, window-hash) frame [[substringDedup]]
     * dedups over — shared with the streaming fold's store
-    * contribution. */
+    * contribution. The codegen'd one-pass [[WindowHashes]] kernel over
+    * token hashes; a doc shorter than the span carries no windows. */
   private[graft] def windowExplode(docs: DataFrame, idCol: String,
-      textCol: String, spanTokens: Int, native: Boolean): DataFrame = {
+      textCol: String, spanTokens: Int): DataFrame = {
     require(spanTokens >= 1, s"spanTokens must be >= 1, got $spanTokens")
-    val toks = TextFunctions.tokens(col(textCol))
-    val nw = size(toks) - spanTokens + 1
-    // sequence(0, nw-1) would COUNT DOWN for nw <= 0 — guard to empty
-    val winIdx = when(nw > 0, sequence(lit(0), nw - 1))
-      .otherwise(array().cast("array<int>"))
-    val winHashes =
-      if (native)
-        call_function("window_hashes",
-          call_function("token_hashes", col(textCol)), lit(spanTokens))
-      else
-        transform(winIdx,
-          i => xxhash64(concat_ws(" ", slice(toks, i + 1, lit(spanTokens)))))
+    val winHashes = ExpressionColumn(WindowHashes(
+      TokenHashesExpr(expression(col(textCol))), Literal(spanTokens)))
     docs.select(col(idCol).as("__id"),
       posexplode(winHashes).as(Seq("pos", "__h")))
   }
@@ -359,28 +308,36 @@ object TextDedup {
     * [[chunkHashes]] twin for the sliding-window family). The constant
     * `hash_flavor` column records which hash path wrote the store so
     * [[substringDedupAgainst]] can fail fast instead of silently
-    * matching nothing under the other flavor. */
+    * matching nothing under another flavor. */
   def windowHashes(docs: DataFrame, idCol: String, textCol: String,
-      spanTokens: Int = 50): DataFrame = {
-    val native = graft.plans.GraftExtensions.nativeAvailable
-    windowExplode(docs, idCol, textCol, spanTokens, native = native)
+      spanTokens: Int = 50): DataFrame =
+    windowExplode(docs, idCol, textCol, spanTokens)
       .groupBy(col("__h").as("window_hash"))
       .agg(min(col("__id")).as("doc_id"))
-      .withColumn("hash_flavor", lit(windowHashFlavor(native)))
-  }
+      .withColumn("hash_flavor", lit(WindowHashFlavor))
 
-  /** Impl with the window-hash path explicit: native = the codegen'd
-    * one-pass `window_hashes` kernel over token hashes; fallback = a
-    * per-window string build (one allocation + O(span) copying per
-    * window). Hash VALUES differ across paths; the dedup RESULT is
-    * identical (equality classes — the shingleHashes64 argument),
-    * asserted in GraftExtensionsSpec. `prior` (column `window_hash`,
-    * optional) marks a window duplicated even when it is the batch's
-    * first occurrence — the incremental form ([[chunkDedupAgainst]]'s
-    * contract applied to sliding windows). */
-  private[graft] def substringDedupImpl(docs: DataFrame, idCol: String,
-      textCol: String, spanTokens: Int, native: Boolean,
-      prior: DataFrame = null): DataFrame = {
+  /** `prior` (column `window_hash`, optional) marks a window duplicated
+    * even when it is the batch's first occurrence — the incremental
+    * form ([[chunkDedupAgainst]]'s contract applied to sliding
+    * windows). The rebuild is one drop_token_spans coverage pass over
+    * the token array. */
+  private def substringDedupImpl(docs: DataFrame, idCol: String,
+      textCol: String, spanTokens: Int, prior: DataFrame): DataFrame =
+    windowDups(docs, idCol, textCol,
+        windowExplode(docs, idCol, textCol, spanTokens), prior)
+      .withColumn("__rb", ExpressionColumn(DropTokenSpansExpr(
+        expression(col("__text")), expression(col("__dups")),
+        Literal(spanTokens))))
+      .select(col(idCol),
+        col("__rb.text").as(textCol),
+        col("__rb.n_kept").as("n_tokens_kept"),
+        col("__rb.n_total").as("n_tokens_total"))
+
+  /** (id, __dups, __text): each doc with the sorted start positions of
+    * its duplicated window occurrences in `windows` (an
+    * (__id, pos, __h) frame, evaluated once per consumer). */
+  private[graft] def windowDups(docs: DataFrame, idCol: String,
+      textCol: String, windows: => DataFrame, prior: DataFrame): DataFrame = {
     // the window frame is NOT cached: its two consumers re-run the
     // explode, which is one codegen'd kernel pass over the scan —
     // measured cheaper than writing the n_tokens-per-doc narrow frame
@@ -395,7 +352,7 @@ object TextDedup {
     // map-side and broadcasts the (tiny) duplicated-hash set. The
     // second explode is the price of skew immunity; the 30× amplified
     // sweep (q84 2.8×, q67 2.6× — sub-linear) shows it amortizing.
-    def windows = windowExplode(docs, idCol, textCol, spanTokens, native)
+    //
     // only DUPLICATED hashes can mark a range (cnt > 1), so the probe's
     // build side is the repeated-window set — tiny on real corpora, and
     // AQE broadcasts the join at runtime when it is (the r9 chunkDedup
@@ -422,36 +379,11 @@ object TextDedup {
           struct(col("__id"), col("pos")) =!= col("__first")))
       .groupBy("__id")
       .agg(sort_array(collect_list(col("pos"))).as("__dups"))
-    val joined = docs
+    docs
       .join(dupPos, docs(idCol) === dupPos("__id"), "left")
       .select(col(idCol),
         coalesce(col("__dups"), array().cast("array<int>")).as("__dups"),
         col(textCol).as("__text"))
-    if (native)
-      // one coverage pass over the token array (the HOF form pays
-      // O(tokens × ranges) exists() scans TWICE — once for the text,
-      // once for the count)
-      joined
-        .withColumn("__rb", call_function("drop_token_spans",
-          col("__text"), col("__dups"), lit(spanTokens)))
-        .select(col(idCol),
-          col("__rb.text").as(textCol),
-          col("__rb.n_kept").as("n_tokens_kept"),
-          col("__rb.n_total").as("n_tokens_total"))
-    else {
-      val toks = TextFunctions.tokens(col("__text"))
-      joined
-        .select(col(idCol), col("__dups"), toks.as("__toks"))
-        .select(col(idCol),
-          array_join(filter(col("__toks"), (t, i) =>
-            !exists(col("__dups"),
-              p => p <= i && i < p + spanTokens)), " ").as(textCol),
-          size(filter(col("__toks"), (t, i) =>
-            !exists(col("__dups"),
-              p => p <= i && i < p + spanTokens))).cast("long")
-            .as("n_tokens_kept"),
-          size(col("__toks")).cast("long").as("n_tokens_total"))
-    }
   }
 
   /** Prefix-filtered postings: (doc, block, sz, sh), keeping per doc

@@ -5,151 +5,66 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension registering graft's native expressions as SQL
-  * functions (`spark.sql.extensions=graft.plans.GraftExtensions`):
+  * functions (`spark.sql.extensions=graft.plans.GraftExtensions`), one
+  * per entry of [[GraftExtensions.functions]]: `minhash_sig(array<long>)`
+  * (64 permutations, seed 42), `simhash64`, `vec_dot`,
+  * `bloom_might_contain`, the text kernels and the rest.
   *
-  *   - `minhash_sig(array<long>)` → array<long>  (64 perms, seed 42)
-  *   - `simhash64(array<long>)`   → long
-  *   - `vec_dot(arr, arr)` / `vec_l2sq(arr, arr)` → double
-  *   - `bloom_might_contain(binary, long)` → boolean
-  *
-  * Operators probe the registry at plan-build time and use the native
-  * form when available, falling back to the portable higher-order-
-  * function form otherwise — the library works in a vanilla session and
-  * accelerates in a graft-extended one.
+  * The registration serves SQL callers only. Library operators build
+  * each kernel as its case class through
+  * [[org.apache.spark.sql.ExpressionColumn]], so every kernel has one
+  * implementation and library results do not depend on whether a
+  * session registered the extension.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      (args: Seq[Expression]) => MinHashSignature(args.head, 64, 42L)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash128"),
-      new ExpressionInfo(classOf[SimHash128].getName, "simhash128"),
-      (args: Seq[Expression]) => SimHash128(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash128w"),
-      new ExpressionInfo(classOf[SimHash128Weighted].getName, "simhash128w"),
-      (args: Seq[Expression]) => SimHash128Weighted(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (args: Seq[Expression]) => ShingleHashes(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("window_hashes"),
-      new ExpressionInfo(classOf[WindowHashes].getName, "window_hashes"),
-      (args: Seq[Expression]) => WindowHashes(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "pq_encode"),
-      (args: Seq[Expression]) => PqEncode(args(0), args(1),
-        args(2).eval().asInstanceOf[Int], args(3).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc"),
-      new ExpressionInfo(classOf[PqAdc].getName, "pq_adc"),
-      (args: Seq[Expression]) => PqAdc(args(0), args(1),
-        args(2).eval().asInstanceOf[Int])))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "bloom_might_contain"),
-      (args: Seq[Expression]) => BloomMightContain(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("cms_estimate"),
-      new ExpressionInfo(classOf[CmsEstimate].getName, "cms_estimate"),
-      (args: Seq[Expression]) => CmsEstimate(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("text_scores"),
-      new ExpressionInfo(classOf[TextScoresExpr].getName, "text_scores"),
-      (args: Seq[Expression]) => TextScoresExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("text_full_stats"),
-      new ExpressionInfo(classOf[TextFullStatsExpr].getName, "text_full_stats"),
-      (args: Seq[Expression]) => TextFullStatsExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("text_rep_scores"),
-      new ExpressionInfo(classOf[TextRepScoresExpr].getName, "text_rep_scores"),
-      (args: Seq[Expression]) => TextRepScoresExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("token_count"),
-      new ExpressionInfo(classOf[TokenCountExpr].getName, "token_count"),
-      (args: Seq[Expression]) => TokenCountExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("fingerprint_md5"),
-      new ExpressionInfo(classOf[FingerprintMd5Expr].getName, "fingerprint_md5"),
-      (args: Seq[Expression]) => FingerprintMd5Expr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("classifier_milli"),
-      new ExpressionInfo(classOf[ClassifierMilliExpr].getName, "classifier_milli"),
-      (args: Seq[Expression]) => ClassifierMilliExpr(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("array_pmod"),
-      new ExpressionInfo(classOf[ArrayPmodExpr].getName, "array_pmod"),
-      (args: Seq[Expression]) => ArrayPmodExpr(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("token_hashes"),
-      new ExpressionInfo(classOf[TokenHashesExpr].getName, "token_hashes"),
-      (args: Seq[Expression]) => TokenHashesExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("pii_scan"),
-      new ExpressionInfo(classOf[PiiScanExpr].getName, "pii_scan"),
-      (args: Seq[Expression]) => PiiScanExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("json_long"),
-      new ExpressionInfo(classOf[JsonLongExpr].getName, "json_long"),
-      (args: Seq[Expression]) => JsonLongExpr(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("json_scan"),
-      new ExpressionInfo(classOf[JsonScanExpr].getName, "json_scan"),
-      (args: Seq[Expression]) => JsonScanExpr(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("safe_long"),
-      new ExpressionInfo(classOf[SafeLongExpr].getName, "safe_long"),
-      (args: Seq[Expression]) => SafeLongExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("safe_double"),
-      new ExpressionInfo(classOf[SafeDoubleExpr].getName, "safe_double"),
-      (args: Seq[Expression]) => SafeDoubleExpr(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("chunk_hashes"),
-      new ExpressionInfo(classOf[ChunkHashesExpr].getName, "chunk_hashes"),
-      (args: Seq[Expression]) => ChunkHashesExpr(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("gram_buckets"),
-      new ExpressionInfo(classOf[GramBucketsExpr].getName, "gram_buckets"),
-      (args: Seq[Expression]) => GramBucketsExpr(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("classifier_weighted"),
-      new ExpressionInfo(classOf[ClassifierWeightedExpr].getName, "classifier_weighted"),
-      (args: Seq[Expression]) => ClassifierWeightedExpr(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("subword_count"),
-      new ExpressionInfo(classOf[SubwordCountExpr].getName, "subword_count"),
-      (args: Seq[Expression]) => SubwordCountExpr(args(0), args(1), args(2))))
-    ext.injectFunction((
-      FunctionIdentifier("drop_token_spans"),
-      new ExpressionInfo(classOf[DropTokenSpansExpr].getName, "drop_token_spans"),
-      (args: Seq[Expression]) => DropTokenSpansExpr(args(0), args(1), args(2))))
-    ext.injectFunction((
-      FunctionIdentifier("text_gate"),
-      new ExpressionInfo(classOf[TextGateExpr].getName, "text_gate"),
-      (args: Seq[Expression]) => TextGateExpr(args(0), args(1), args(2))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (args: Seq[Expression]) => VecDot(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_l2sq"),
-      new ExpressionInfo(classOf[VecL2Sq].getName, "vec_l2sq"),
-      (args: Seq[Expression]) => VecL2Sq(args(0), args(1))))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
 }
 
 object GraftExtensions {
-  /** True when the active session has graft's native functions. */
+
+  private def int(e: Expression): Int = e.eval().asInstanceOf[Int]
+
+  /** (SQL name, expression class, builder) of every registered function. */
+  val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("minhash_sig", classOf[MinHashSignature], a => MinHashSignature(a.head, 64, 42L)),
+    ("simhash64", classOf[SimHash64], a => SimHash64(a.head)),
+    ("simhash128", classOf[SimHash128], a => SimHash128(a.head)),
+    ("simhash128w", classOf[SimHash128Weighted], a => SimHash128Weighted(a(0), a(1))),
+    ("shingle_hashes", classOf[ShingleHashes], a => ShingleHashes(a(0), a(1))),
+    ("window_hashes", classOf[WindowHashes], a => WindowHashes(a(0), a(1))),
+    ("pq_encode", classOf[PqEncode], a => PqEncode(a(0), a(1), int(a(2)), int(a(3)))),
+    ("pq_adc", classOf[PqAdc], a => PqAdc(a(0), a(1), int(a(2)))),
+    ("bloom_might_contain", classOf[BloomMightContain], a => BloomMightContain(a(0), a(1))),
+    ("cms_estimate", classOf[CmsEstimate], a => CmsEstimate(a(0), a(1))),
+    ("text_scores", classOf[TextScoresExpr], a => TextScoresExpr(a.head)),
+    ("text_full_stats", classOf[TextFullStatsExpr], a => TextFullStatsExpr(a.head)),
+    ("text_rep_scores", classOf[TextRepScoresExpr], a => TextRepScoresExpr(a.head)),
+    ("token_count", classOf[TokenCountExpr], a => TokenCountExpr(a.head)),
+    ("fingerprint_md5", classOf[FingerprintMd5Expr], a => FingerprintMd5Expr(a.head)),
+    ("classifier_milli", classOf[ClassifierMilliExpr], a => ClassifierMilliExpr(a(0), a(1))),
+    ("array_pmod", classOf[ArrayPmodExpr], a => ArrayPmodExpr(a(0), a(1))),
+    ("token_hashes", classOf[TokenHashesExpr], a => TokenHashesExpr(a.head)),
+    ("pii_scan", classOf[PiiScanExpr], a => PiiScanExpr(a.head)),
+    ("json_long", classOf[JsonLongExpr], a => JsonLongExpr(a(0), a(1))),
+    ("json_scan", classOf[JsonScanExpr], a => JsonScanExpr(a(0), a(1))),
+    ("safe_long", classOf[SafeLongExpr], a => SafeLongExpr(a.head)),
+    ("safe_double", classOf[SafeDoubleExpr], a => SafeDoubleExpr(a.head)),
+    ("chunk_hashes", classOf[ChunkHashesExpr], a => ChunkHashesExpr(a(0), a(1))),
+    ("gram_buckets", classOf[GramBucketsExpr], a => GramBucketsExpr(a(0), a(1))),
+    ("classifier_weighted", classOf[ClassifierWeightedExpr],
+      a => ClassifierWeightedExpr(a(0), a(1))),
+    ("subword_count", classOf[SubwordCountExpr], a => SubwordCountExpr(a(0), a(1), a(2))),
+    ("drop_token_spans", classOf[DropTokenSpansExpr],
+      a => DropTokenSpansExpr(a(0), a(1), a(2))),
+    ("text_gate", classOf[TextGateExpr], a => TextGateExpr(a(0), a(1), a(2))),
+    ("vec_dot", classOf[VecDot], a => VecDot(a(0), a(1))),
+    ("vec_l2sq", classOf[VecL2Sq], a => VecL2Sq(a(0), a(1))))
+
+  /** True when the active session registered graft's SQL functions. */
   def nativeAvailable: Boolean =
     org.apache.spark.sql.SparkSession.getActiveSession
       .exists(_.catalog.functionExists("minhash_sig"))

@@ -12,8 +12,8 @@ import graft.operators.MinHashLSH
   *
   * This is the "drop to a custom Catalyst Expression" rung of the
   * preference ladder: the semantics ARE expressible with built-ins
-  * (aggregate + zip_with fold — kept in [[MinHashLSH.signature]] as the
-  * portable path and as the equivalence oracle in tests), but the fold
+  * (an aggregate + zip_with fold — kept in the test suite as this
+  * kernel's equivalence reference), but the fold
   * allocates a fresh 64-element array per shingle element. Here the
   * generated code keeps one `long[numPerm]` and updates it in place —
   * no per-element allocation, no virtual calls — and the interpreted

@@ -18,9 +18,9 @@ import org.apache.spark.sql.types._
   * row's approximate score is m table lookups — no per-row float
   * vector math at all. Both are the hot loop of a PQ scan, hence
   * native codegen'd expressions with the codebook/table pinned in the
-  * references array ([[VecBinaryFold]] precedent); portable HOF forms
-  * live in [[graft.operators.Pq]], bit-equality asserted in
-  * GraftExtensionsSpec.
+  * references array ([[VecBinaryFold]] precedent), called by
+  * [[graft.operators.Pq]]; bit-equality with the per-subspace argmin
+  * and the HOF table fold is asserted in GraftExtensionsSpec.
   */
 abstract class PqExpr extends BinaryExpression {
   override def nullable: Boolean = true

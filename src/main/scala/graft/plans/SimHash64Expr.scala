@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 /** Native 64-bit SimHash over an `array<long>` of token hashes: one
   * pass, 64 in-place counters, codegen'd — replaces an
   * aggregate(zip_with) fold that allocates a 64-element array per
-  * token. Bit-equal to [[graft.operators.SimHash.simhash64]]'s
-  * counter/threshold semantics (counter > 0 sets the bit).
+  * token. Bit-equal to that fold's counter/threshold semantics
+  * (counter > 0 sets the bit; the fold is the test reference).
   */
 case class SimHash64(child: Expression)
     extends UnaryExpression {

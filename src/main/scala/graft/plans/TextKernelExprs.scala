@@ -12,9 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * forms evaluate interpreted (the [[TextScores]] motivation): the
   * Gopher repetition signals, the md5-token rolling fingerprint, the
   * hashed-gram classifier score, and the dedup-rebuild span filter.
-  * Every kernel is VALUE-IDENTICAL to its Column-expression fallback —
-  * asserted row-for-row (incl. edge cases) in GraftExtensionsSpec; the
-  * HOF forms remain the vanilla-session path.
+  * Every kernel is VALUE-IDENTICAL to the Column-expression form it
+  * replaces — asserted row-for-row (incl. edge cases) in
+  * GraftExtensionsSpec against those forms, kept there as references.
+  * The kernels are the only implementation the operators build.
   *
   * Why these exist (r9): the bench's count() → noop-sink fix exposed
   * that the output columns of q59/q24/q72 and the q67/q84 rebuilds had

@@ -23,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * does no cross-predicate subexpression elimination). On q61's gate
   * that cost ~8 ms/row interpreted; this kernel is one ~µs pass:
   * normalize + tokenize once, then stopword/distinct/bigram counts
-  * from the same token array. The HOF forms remain the vanilla-session
-  * fallback (the [[ShingleHashes]] degradation contract).
+  * from the same token array. The operators build this kernel in
+  * every session; the HOF columns remain as its test references.
   *
   * Exactness notes (every step mirrors the Column chain bit-for-bit):
   * trim is UTF8String.trim (0x20 only), lower is UTF8String

@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * array — no window of the full span exists, so the document carries
   * no dedupable range (the operator's pass-through contract).
   *
-  * Replaces the HOF fallback's per-window string build
-  * (`concat_ws` over an n-token slice → xxhash64 — one string
-  * allocation per window, O(span) character copying each) with pure
-  * long arithmetic. Hash VALUES differ from the fallback's; equality
+  * Replaces a per-window string build (`concat_ws` over an n-token
+  * slice → xxhash64 — one string allocation per window, O(span)
+  * character copying each) with pure long arithmetic. Hash VALUES
+  * differ from that string form's, which older builds could persist
+  * (the `hash_flavor` "string" store the operator rejects); equality
   * classes agree modulo ~2⁻⁶⁴ collisions (the shingle_hashes
   * precedent), which is all the consumer uses.
   */

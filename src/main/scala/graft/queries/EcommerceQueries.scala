@@ -1,12 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, ExpressionColumn, SparkSession}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.{EtlMeta, SafeCasts}
 import graft.operators._
+import graft.plans.{JsonLongExpr, JsonScanExpr}
 import graft.sources.ParquetSink
 
 /** Driver-checked query set covering SURVEY.md §2 rows 1–16 (the
@@ -69,26 +72,19 @@ object EcommerceQueries {
     * (shopee_orders_transformer.py:145-365). Explicit schema; no
     * inference scan. */
   def q03NormalizeProps(s: SparkSession, dir: String): DataFrame = {
-    // native: json_long's flat-object byte scan replaces the per-row
-    // Jackson parse (exact from_json fallback inside the kernel for any
-    // non-clean row). The predicate duplicating the expression into the
-    // Filter is then harmless — the r9 profile showed the Jackson parse
-    // itself (run 2× per surviving row + again in the range-sort
-    // sampling pass) was the 10.6× gap, not the plan shape.
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      t(s, dir, "events")
-        .select(col("event_id"), col("event_type"),
-          call_function("json_long", col("props"), lit("k")).as("prop_k"))
-        .where(col("prop_k").isNotNull)
-        .sortWithinPartitions("event_id")
-    else {
-      val ev = Normalize.parseJson(t(s, dir, "events"), "props",
-        StructType(Seq(StructField("k", LongType))))
-      ev.select(col("event_id"), col("event_type"),
-          col("parsed.k").as("prop_k"))
-        .where(col("prop_k").isNotNull)
-        .sortWithinPartitions("event_id")
-    }
+    // json_long's flat-object byte scan replaces the per-row Jackson
+    // parse of from_json(props, struct<k: bigint>) (exact from_json
+    // fallback inside the kernel for any non-clean row). The predicate
+    // duplicating the expression into the Filter is then harmless —
+    // the r9 profile showed the Jackson parse itself (run 2× per
+    // surviving row + again in the range-sort sampling pass) was the
+    // 10.6× gap, not the plan shape.
+    t(s, dir, "events")
+      .select(col("event_id"), col("event_type"),
+        ExpressionColumn(JsonLongExpr(expression(col("props")), Literal("k")))
+          .as("prop_k"))
+      .where(col("prop_k").isNotNull)
+      .sortWithinPartitions("event_id")
   }
 
   /** §2 #4 — array explode → child rows
@@ -464,19 +460,16 @@ object EcommerceQueries {
     val corrupted = t(s, dir, "events").withColumn("props",
       when(col("event_id") % 7 === 0, translate(col("props"), "{", "<"))
         .otherwise(col("props")))
-    // native: json_scan fuses parse + quarantine flag in one fast-path
-    // byte scan (exact PERMISSIVE from_json fallback inside the
-    // kernel); null props coalesce to not-quarantined, matching
-    // from_json(null) → null struct → corrupt-col isNotNull = false
-    val parsed =
-      if (graft.plans.GraftExtensions.nativeAvailable)
-        corrupted
-          .withColumn("__p", call_function("json_scan", col("props"), lit("k")))
-          .withColumn("is_quarantined", coalesce(col("__p.corrupt"), lit(false)))
-          .withColumn("parsed", struct(col("__p.val").as("k")))
-      else Normalize.parseJsonWithQuarantine(corrupted, "props",
-        StructType(Seq(StructField("k", LongType))))
-    parsed
+    // json_scan fuses parse + quarantine flag in one fast-path byte
+    // scan (exact PERMISSIVE from_json fallback inside the kernel —
+    // Normalize.parseJsonWithQuarantine's semantics); null props
+    // coalesce to not-quarantined, matching from_json(null) → null
+    // struct → corrupt-col isNotNull = false
+    corrupted
+      .withColumn("__p",
+        ExpressionColumn(JsonScanExpr(expression(col("props")), Literal("k"))))
+      .withColumn("is_quarantined", coalesce(col("__p.corrupt"), lit(false)))
+      .withColumn("parsed", struct(col("__p.val").as("k")))
       .groupBy("event_type")
       .agg(
         count(when(!col("is_quarantined"), 1)).as("n_valid"),

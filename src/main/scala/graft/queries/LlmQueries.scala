@@ -1,11 +1,14 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, ExpressionColumn, SparkSession}
+import org.apache.spark.sql.ExpressionColumn.expression
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.operators._
+import graft.plans.{PiiScanExpr, TextFullStatsExpr, TextGateExpr, TextRepScoresExpr, TextScoresExpr, TokenCountExpr}
 
 /** SURVEY.md §2 rows 17–21: LLM-data-pipeline operators over the
   * `documents` and `embeddings` tables. SQL-expressible ops carry a
@@ -264,31 +267,20 @@ object LlmQueries {
   /** §2 #20 — per-doc text analysis: token counts, punctuation and
     * stopword density, language heuristic, quality score. */
   def q23TextStats(s: SparkSession, dir: String): DataFrame = {
-    // native: one text_full_stats pass — the HOF columns each
+    // one text_full_stats pass — the equivalent HOF columns each
     // re-normalize and re-tokenize; r11 folds est_bpe into the same
     // kernel walk (it was a second full-text regexp_count pass —
     // java.util.regex over every byte; the run-count equivalence is
     // documented in TextScores.computeRaw and spec'd vs regexp_count)
-    val base =
-      if (graft.plans.GraftExtensions.nativeAvailable)
-        t(s, dir, "documents")
-          .withColumn("__st", call_function("text_full_stats", col("text")))
-          .select(col("doc_id"),
-            col("__st.n_tokens").as("n_tokens"),
-            col("__st.est_bpe_tokens").as("est_bpe_tokens"),
-            col("__st.punct_ratio").as("punct_ratio"),
-            col("__st.stop_ratio").as("stop_ratio"),
-            col("__st.lang_pred").as("lang_pred"),
-            col("__st.quality").as("quality"))
-      else
-        t(s, dir, "documents").select(
-          col("doc_id"),
-          TextFunctions.tokenCount(col("text")).cast("bigint").as("n_tokens"),
-          TextFunctions.bpeishTokenCount(col("text")).as("est_bpe_tokens"),
-          TextFunctions.punctRatio(col("text")).as("punct_ratio"),
-          TextFunctions.stopwordRatio(col("text")).as("stop_ratio"),
-          TextFunctions.langId(col("text")).as("lang_pred"),
-          TextFunctions.qualityScore(col("text")).as("quality"))
+    val base = t(s, dir, "documents")
+      .withColumn("__st", ExpressionColumn(TextFullStatsExpr(expression(col("text")))))
+      .select(col("doc_id"),
+        col("__st.n_tokens").as("n_tokens"),
+        col("__st.est_bpe_tokens").as("est_bpe_tokens"),
+        col("__st.punct_ratio").as("punct_ratio"),
+        col("__st.stop_ratio").as("stop_ratio"),
+        col("__st.lang_pred").as("lang_pred"),
+        col("__st.quality").as("quality"))
     base.sortWithinPartitions("doc_id")
   }
 
@@ -592,37 +584,27 @@ object LlmQueries {
     * 500 k source docs in the r15 measurement above. */
   private val Q58_DISTRIBUTED_PACK_MIN_DOCS = 300000L
 
-  /** `token_count(text)` as bigint — native one-byte-scan kernel when
-    * the session has graft's extensions, the Column HOF form
-    * otherwise (value-identical; pinned in GraftExtensionsSpec). */
+  /** `token_count(text)` as bigint — the one-byte-scan kernel,
+    * value-identical to `TextFunctions.tokenCount` (pinned in
+    * GraftExtensionsSpec). */
   private def nTokensCol: org.apache.spark.sql.Column =
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      call_function("token_count", col("text"))
-    else TextFunctions.tokenCount(col("text")).cast("long")
+    ExpressionColumn(TokenCountExpr(expression(col("text"))))
 
   /** New-in-r6 — Gopher/MassiveText repetition filters: duplicate-token
-    * fraction and top-2/3-gram share, plus the combined flag. Pure
-    * row-local Column HOFs (no hashing — both engines compute on the
+    * fraction and top-2/3-gram share, plus the combined flag. One
+    * row-local kernel pass (no hashing — both engines compute on the
     * literal n-gram strings), thresholds applied to the rounded values
     * on both sides. */
   def q59Repetition(s: SparkSession, dir: String): DataFrame = {
-    // native: ONE text_rep_scores pass (tokenize once, count grams by
-    // exact string) — the HOF forms are interpreted and the top-n-gram
-    // count is O(distinct·grams) string comparisons per row
-    val scored =
-      if (graft.plans.GraftExtensions.nativeAvailable)
-        t(s, dir, "documents")
-          .withColumn("__r", call_function("text_rep_scores", col("text")))
-          .select(col("doc_id"),
-            round(col("__r.dup_frac"), 6).as("dup_token_frac"),
-            round(col("__r.top2"), 6).as("top2_frac"),
-            round(col("__r.top3"), 6).as("top3_frac"))
-      else
-        t(s, dir, "documents").select(
-          col("doc_id"),
-          round(TextFunctions.dupTokenFraction(col("text")), 6).as("dup_token_frac"),
-          round(TextFunctions.topNgramFraction(col("text"), 2), 6).as("top2_frac"),
-          round(TextFunctions.topNgramFraction(col("text"), 3), 6).as("top3_frac"))
+    // ONE text_rep_scores pass (tokenize once, count grams by exact
+    // string) — the equivalent HOF forms are interpreted and the
+    // top-n-gram count is O(distinct·grams) string comparisons per row
+    val scored = t(s, dir, "documents")
+      .withColumn("__r", ExpressionColumn(TextRepScoresExpr(expression(col("text")))))
+      .select(col("doc_id"),
+        round(col("__r.dup_frac"), 6).as("dup_token_frac"),
+        round(col("__r.top2"), 6).as("top2_frac"),
+        round(col("__r.top3"), 6).as("top3_frac"))
     scored
       .withColumn("is_repetitive",
         col("dup_token_frac") > 0.4 || col("top2_frac") > 0.2)
@@ -639,25 +621,17 @@ object LlmQueries {
       concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
         lit("@mail.example.com from host 10.0."),
         (col("doc_id") % 200).cast("string"), lit(".25")))
-    // native: the counts, the two-stage redaction and the md5 fuse
-    // into one pii_scan call — same java.util.regex engine, the
-    // fusion only deletes the repeated passes (the Column chain runs
-    // four regex walks plus md5 over fresh conversions)
-    if (graft.plans.GraftExtensions.nativeAvailable)
-      withPii
-        .withColumn("__p", call_function("pii_scan", col("text2")))
-        .select(col("doc_id"),
-          col("__p.n_emails").as("n_emails"),
-          col("__p.n_ips").as("n_ips"),
-          col("__p.redacted_md5").as("redacted_md5"))
-        .sortWithinPartitions("doc_id")
-    else withPii.select(
-        col("doc_id"),
-        regexp_count(col("text2"), lit(TextFunctions.EmailRe))
-          .cast("long").as("n_emails"),
-        regexp_count(col("text2"), lit(TextFunctions.Ipv4Re))
-          .cast("long").as("n_ips"),
-        md5(TextFunctions.redactPii(col("text2"))).as("redacted_md5"))
+    // the counts, the two-stage redaction and the md5 fuse into one
+    // pii_scan call — same java.util.regex engine as the Column chain
+    // (regexp_count ×2, redactPii, md5), the fusion only deletes the
+    // repeated passes (the chain runs four regex walks plus md5 over
+    // fresh conversions)
+    withPii
+      .withColumn("__p", ExpressionColumn(PiiScanExpr(expression(col("text2")))))
+      .select(col("doc_id"),
+        col("__p.n_emails").as("n_emails"),
+        col("__p.n_ips").as("n_ips"),
+        col("__p.redacted_md5").as("redacted_md5"))
       .sortWithinPartitions("doc_id")
   }
 
@@ -710,31 +684,20 @@ object LlmQueries {
       d.where(col("doc_id") % 5 === 0).crossJoin(broadcast(off))
         .select((col("doc_id") + col("off")).as("doc_id"), col("text"),
           col("source")))
-    // native path: one text_scores kernel call per surviving row (the
-    // getFields CSE-share it) and the gate as ONE un-splittable
-    // text_gate predicate — predicate pushdown would otherwise split
-    // the gate into three conjuncts that each re-run the full
-    // interpreted HOF chain per row (TextScoresExpr scaladoc)
-    val native = graft.plans.GraftExtensions.nativeAvailable
-    val scored =
-      if (native)
-        crawl.withColumn("__sc", call_function("text_scores", col("text")))
-          .withColumn("lang_pred", col("__sc.lang_pred"))
-          .withColumn("quality", round(col("__sc.quality"), 6))
-          .withColumn("t2", round(col("__sc.t2"), 6))
-          .withColumn("n_tokens", col("__sc.n_tokens"))
-          .drop("__sc")
-      else
-        crawl
-          .withColumn("lang_pred", TextFunctions.langId(col("text")))
-          .withColumn("quality", round(TextFunctions.qualityScore(col("text")), 6))
-          .withColumn("t2", round(TextFunctions.topNgramFraction(col("text"), 2), 6))
-          .withColumn("n_tokens", TextFunctions.tokenCount(col("text")).cast("long"))
-    val filtered =
-      if (native)
-        scored.where(call_function("text_gate", col("text"), lit(0.75), lit(0.2)))
-      else scored.where(col("lang_pred") === "en" &&
-        col("quality") >= 0.75 && col("t2") <= 0.2)
+    // one text_scores kernel call per surviving row (the getFields
+    // CSE-share it) and the gate as ONE un-splittable text_gate
+    // predicate — predicate pushdown would otherwise split the gate
+    // into three conjuncts that each re-run the full scoring per row
+    // (TextScoresExpr scaladoc)
+    val filtered = crawl
+      .withColumn("__sc", ExpressionColumn(TextScoresExpr(expression(col("text")))))
+      .withColumn("lang_pred", col("__sc.lang_pred"))
+      .withColumn("quality", round(col("__sc.quality"), 6))
+      .withColumn("t2", round(col("__sc.t2"), 6))
+      .withColumn("n_tokens", col("__sc.n_tokens"))
+      .drop("__sc")
+      .where(ExpressionColumn(TextGateExpr(expression(col("text")),
+        Literal(0.75), Literal(0.2))))
     val deduped = Dedup.keepFirst(
       filtered.withColumn("text_hash",
         md5(TextFunctions.normalizeText(col("text")))),

@@ -339,10 +339,9 @@ object StreamingDedup {
     * doc-tagged store append; tears heal on redelivery in both
     * orders). Equals [[graft.operators.TextDedup.substringDedup]]
     * over the whole corpus under doc-id-ordered arrival. The
-    * window-hash store is session-flavor-bound (native kernel vs
-    * string fallback); the store carries a `hash_flavor` marker and
-    * every batch FAILS FAST if the session's flavor disagrees with
-    * what the store was written under — see `substringDedupAgainst`. */
+    * window-hash store carries a `hash_flavor` marker, and every batch
+    * FAILS FAST on a store written under another flavor (an older
+    * build's "string" hashes) — see `substringDedupAgainst`. */
   def continuousSubstringDedup(docs: org.apache.spark.sql.DataFrame,
       outDir: String, storeDir: String, idCol: String, textCol: String,
       spanTokens: Int = 50):
@@ -371,8 +370,7 @@ object StreamingDedup {
           // (legacy rows then surface as accepted nulls)
           if (nonEmptyDir(storeDir))
             TextDedup.checkWindowHashFlavor(
-              spark.read.option("mergeSchema", "true").parquet(storeDir),
-              graft.plans.GraftExtensions.nativeAvailable)
+              spark.read.option("mergeSchema", "true").parquet(storeDir))
           if (!guarded.isEmpty) {
             val prior =
               if (!nonEmptyDir(storeDir)) null

@@ -159,6 +159,32 @@ class ControlLogSpec extends SparkTestBase {
     assert(spark.read.parquet(target).count() == second.count())
   }
 
+  test("building the run-history, success-rate and slow-run frames runs no Spark job") {
+    val root = tmp("frame-jobs")
+    val (control, durations, failures) =
+      (s"$root/control", s"$root/durations", s"$root/failures")
+    val t0 = 1704067200000000L
+    oldCommits(control, Seq(("a", "old0", t0, 10L, "SUCCESS", t0)))
+    oldDurations(durations, Seq(("a", "old0", 1.0, "SUCCESS", t0)))
+    EtlControl.commitRun(spark, control, "a", "b1", t0 + 1L, 5L)
+    EtlControl.logRunDuration(spark, durations, "a", "b1", 9.0)
+    EtlControl.logTaskFailure(spark, failures, "a", "b2", "load",
+      new IllegalStateException("boom"))
+    var frames = Seq.empty[DataFrame]
+    assert(jobsOf {
+      frames = Seq(
+        EtlControl.runHistory(spark, control, durations, failures),
+        EtlControl.successRate(spark, control, durations, failures),
+        EtlControl.slowRuns(spark, durations, 5.0))
+    } == 0)
+    val Seq(history, rate, slow) = frames
+    assert(history.select("batch_id").as[String].collect().sorted.toSeq ==
+      Seq("b1", "b2", "old0"))
+    assert(rate.select("n_runs", "n_failed").as[(Long, Long)].collect().toSeq ==
+      Seq((3L, 1L)))
+    assert(slow.select("batch_id").as[String].collect().toSeq == Seq("b1"))
+  }
+
   test("footer-schema reads equal spark.read.parquet, and fall back without a Spark footer") {
     import org.apache.parquet.example.data.simple.SimpleGroup
     import org.apache.parquet.hadoop.example.ExampleParquetWriter

@@ -1,11 +1,15 @@
 package graft
 
+import org.apache.spark.sql.ExpressionColumn
+import org.apache.spark.sql.ExpressionColumn.expression
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
-import graft.operators.{MinHashLSH, SimHash}
+import graft.operators.MinHashLSH
+import graft.plans.MinHashSignature
 
 /** The native codegen'd expressions must be bit-equal to the portable
-  * higher-order-function forms they accelerate. */
+  * higher-order-function forms they accelerate (the Column forms the
+  * library still uses, or their [[HofReference]] copies). */
 class GraftExtensionsSpec extends SparkTestBase {
 
   test("extensions are registered in the session") {
@@ -19,12 +23,19 @@ class GraftExtensionsSpec extends SparkTestBase {
   test("native minhash_sig ≡ HOF signature on the corpus") {
     val docs = Tables.load(spark, sf0001, "documents")
     val sh = MinHashLSH.shingleHashes(col("text"))
-    val perms = MinHashLSH.permutations(64, 42L)
-    val both = docs.select(
-      call_function("minhash_sig", sh).as("native"),
-      MinHashLSH.signature(sh, perms).as("hof"))
-    val diff = both.where(col("native") =!= col("hof")).count()
-    assert(diff == 0, s"$diff rows diverge between native and HOF signatures")
+    // the registered SQL default, and non-default parameters built
+    // directly as the library builds them
+    for ((numPerm, seed, native) <- Seq(
+        (64, 42L, call_function("minhash_sig", sh)),
+        (128, 7L, ExpressionColumn(MinHashSignature(expression(sh), 128, 7L))))) {
+      val perms = MinHashLSH.permutations(numPerm, seed)
+      val both = docs.select(
+        native.as("native"),
+        HofReference.signature(sh, perms).as("hof"))
+      val diff = both.where(col("native") =!= col("hof")).count()
+      assert(diff == 0,
+        s"$diff rows diverge between native and HOF signatures ($numPerm, $seed)")
+    }
   }
 
   test("native simhash64 ≡ HOF simhash on the corpus") {
@@ -32,7 +43,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     val hashes = transform(TextFunctions.tokens(col("text")), t => xxhash64(t))
     val both = docs.select(
       call_function("simhash64", hashes).as("native"),
-      SimHash.simhash64Hof(hashes).as("hof"))
+      HofReference.simhash64Hof(hashes).as("hof"))
     val diff = both.where(col("native") =!= col("hof")).count()
     assert(diff == 0, s"$diff rows diverge between native and HOF simhash")
   }
@@ -54,7 +65,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     // and the HOF fallback agrees with the native per-half form
     val hofDiff = docs.select(
         call_function("simhash64", lo).as("n"),
-        graft.operators.SimHash.simhash64Hof(lo).as("h"))
+        HofReference.simhash64Hof(lo).as("h"))
       .where(col("n") =!= col("h")).count()
     assert(hofDiff == 0)
   }
@@ -155,14 +166,12 @@ class GraftExtensionsSpec extends SparkTestBase {
     // must be identical row for row
     val docs = Tables.load(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).limit(200)
-    def run(native: Boolean) =
-      graft.operators.TextDedup
-        .substringDedupImpl(docs, "doc_id", "text", 10, native)
-        .collect()
+    def run(df: org.apache.spark.sql.DataFrame) =
+      df.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .toSet
-    val nat = run(native = true)
-    val hof = run(native = false)
+    val nat = run(graft.operators.TextDedup.substringDedup(docs, "doc_id", "text", 10))
+    val hof = run(HofReference.substringDedup(docs, "doc_id", "text", 10))
     assert(nat == hof && nat.nonEmpty)
     // and the empty-for-short-docs contract holds natively: a doc
     // below the span yields no windows at all
@@ -176,7 +185,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     import graft.operators.TextDedup
     val docs = Tables.load(spark, sf0001, "documents")
       .select(col("doc_id"), col("text")).limit(20)
-    // the store stamps the session's flavor (this suite runs native)
+    // the store stamps "native", the only flavor this build computes
     val store = TextDedup.windowHashes(docs, "doc_id", "text", 10)
     assert(store.select("hash_flavor").distinct()
       .collect().map(_.getString(0)).toSet == Set("native"))
@@ -202,13 +211,13 @@ class GraftExtensionsSpec extends SparkTestBase {
     store.drop("hash_flavor").write.parquet(dir) // legacy epoch
     store.write.mode("append").parquet(dir) // stamped epoch
     val mixed = spark.read.option("mergeSchema", "true").parquet(dir)
-    TextDedup.checkWindowHashFlavor(mixed, native = true) // must not throw
+    TextDedup.checkWindowHashFlavor(mixed) // must not throw
     assert(TextDedup.substringDedupAgainst(docs, "doc_id", "text", 10,
       mixed).count() == 20)
     val mixedForeign = mixed.withColumn("hash_flavor",
       coalesce(col("hash_flavor"), lit("string")))
     intercept[IllegalStateException] {
-      TextDedup.checkWindowHashFlavor(mixedForeign, native = true)
+      TextDedup.checkWindowHashFlavor(mixedForeign)
     }
   }
 
@@ -310,9 +319,9 @@ class GraftExtensionsSpec extends SparkTestBase {
     import graft.functions.TextFunctions
     val diff = kernelDocs.select(
         call_function("fingerprint_md5", col("text")).as("fp_n"),
-        TextFunctions.fingerprintHof(col("text")).as("fp_hof"),
+        HofReference.fingerprintHof(col("text")).as("fp_hof"),
         call_function("classifier_milli", col("text"), lit(65536)).as("cl_n"),
-        TextFunctions.classifierScoreMilliHof(col("text")).as("cl_hof"))
+        HofReference.classifierScoreMilliHof(col("text")).as("cl_hof"))
       .where(col("fp_n") =!= col("fp_hof") ||
         col("cl_n") =!= col("cl_hof")).count()
     assert(diff == 0, s"$diff rows diverge on fingerprint/classifier kernels")
@@ -329,7 +338,7 @@ class GraftExtensionsSpec extends SparkTestBase {
     val docs = kernelDocs
     val nat = Bpe.subwordCount(docs, "text", merges)
       .select("n_subwords").collect().map(_.getLong(0)).toSeq
-    val hof = Bpe.subwordCountHof(docs, "text", merges)
+    val hof = HofReference.subwordCountHof(docs, "text", merges)
       .select("n_subwords").collect().map(_.getLong(0)).toSeq
     assert(nat == hof && nat.exists(_ > 0))
   }
@@ -482,7 +491,7 @@ break", "k": 6}""", "").toDF("doc")
     import graft.operators.ImportanceModel
     val diff = kernelDocs.select(
         call_function("gram_buckets", col("text"), lit(65536)).as("n"),
-        ImportanceModel.gramBucketsHof(col("text")).as("h"))
+        HofReference.gramBucketsHof(col("text")).as("h"))
       .where(col("n") =!= col("h")).count()
     assert(diff == 0, s"$diff rows diverge on gram buckets")
   }
@@ -497,7 +506,7 @@ break", "k": 6}""", "").toDF("doc")
       .select(col("doc_id"), col("score_milli"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val nat = rows(ImportanceModel.score(docs, "doc_id", "text", weights))
-    val hof = rows(ImportanceModel.scoreViaJoin(docs, "doc_id", "text", weights))
+    val hof = rows(HofReference.scoreViaJoin(docs, "doc_id", "text", weights))
     assert(nat == hof && nat.exists(_._2 != 0L))
   }
 
@@ -510,15 +519,59 @@ break", "k": 6}""", "").toDF("doc")
           concat(lit("shared banner tokens one two three four five six seven "),
             col("text"))).otherwise(col("text")).as("text"))
       .limit(300)
-    def run(native: Boolean) =
-      TextDedup.chunkDedupImpl(docs, "doc_id", "text", 10, prior = null,
-          native = native)
-        .collect()
+    def run(df: org.apache.spark.sql.DataFrame) =
+      df.collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
         .toSet
-    val nat = run(native = true)
-    val hof = run(native = false)
+    val nat = run(TextDedup.chunkDedup(docs, "doc_id", "text", 10))
+    val hof = run(HofReference.chunkDedup(docs, "doc_id", "text", 10))
     assert(nat == hof && nat.nonEmpty)
     assert(nat.exists(r => r._3 < r._4), "planted boilerplate must dedup")
+  }
+
+  test("a session without graft's SQL functions computes the same rows") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import graft.operators.{BloomPrune, SimHash, TextDedup}
+    import graft.plans.GraftExtensions
+    val bare = spark.newSession()
+    val registry = bare.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    GraftExtensions.functions.foreach { case (name, _, _) =>
+      registry.dropFunction(FunctionIdentifier(name))
+    }
+    assert(!bare.catalog.functionExists("minhash_sig"))
+    def rows(df: DataFrame): Set[String] = df.collect().map(_.toString).toSet
+    def outputs(s: SparkSession): Seq[Set[String]] = {
+      SparkSession.setActiveSession(s)
+      try {
+        val docs = Tables.load(s, sf0001, "documents").select("doc_id", "text")
+        val customer = Tables.load(s, sf0001, "customer")
+          .select("c_custkey", "c_mktsegment", "c_acctbal")
+        val delta = customer.where(col("c_custkey") % 10 === 0)
+          .withColumn("c_mktsegment", lit("REFRESH"))
+        val store = TextDedup.windowHashes(docs, "doc_id", "text", 10)
+        assert(rows(store.select("hash_flavor").distinct()) == Set("[native]"))
+        Seq(
+          rows(MinHashLSH.nearDupPairs(docs, "doc_id", "text", 0.5)),
+          rows(SimHash.fingerprints128(docs, "doc_id", "text")),
+          rows(TextDedup.substringDedup(docs, "doc_id", "text", 10)),
+          // past the broadcast threshold: the bloom-split regime
+          rows(BloomPrune.prunedDeleteInsert(customer, delta, Seq("c_custkey"),
+            expectedItems = 1000000L)),
+          rows(docs.select(col("doc_id"),
+            TextDedup.shingleHashes64(col("text"), 3))),
+          rows(store))
+      } finally {
+        graft.operators.CacheRegistry.releaseAll()
+        SparkSession.setActiveSession(spark)
+      }
+    }
+    val viaBare = outputs(bare)
+    val viaDefault = outputs(spark)
+    assert(viaBare.forall(_.nonEmpty))
+    viaBare.zip(viaDefault).zipWithIndex.foreach { case ((b, d), i) =>
+      assert(b == d, s"output $i differs without the registry")
+    }
   }
 }

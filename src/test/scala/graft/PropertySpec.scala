@@ -277,26 +277,22 @@ class PropertySpec extends SparkTestBase {
     val texts = samples(Gen.listOfN(25, textGen), 4).flatten
     val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3))).toSet
     // chunk dedup: native rebuild vs HOF rebuild, row-for-row
-    def chunkRun(native: Boolean) =
-      TextDedup.chunkDedupImpl(docs, "doc_id", "text", 3, prior = null,
-          native = native)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(3))).toSet
-    assert(chunkRun(true) == chunkRun(false))
+    assert(rows(TextDedup.chunkDedup(docs, "doc_id", "text", 3)) ==
+      rows(HofReference.chunkDedup(docs, "doc_id", "text", 3)))
     // substring dedup likewise (small span → dense overlapping ranges)
-    def subRun(native: Boolean) =
-      TextDedup.substringDedupImpl(docs, "doc_id", "text", 4, native)
-        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(3))).toSet
-    assert(subRun(true) == subRun(false))
+    assert(rows(TextDedup.substringDedup(docs, "doc_id", "text", 4)) ==
+      rows(HofReference.substringDedup(docs, "doc_id", "text", 4)))
     // subword count under a merge table with chaining + marker merges
     val merges = Seq(Bpe.Merge(0, "a", "a", "aa", 0), Bpe.Merge(1, "t", "h", "th", 0),
       Bpe.Merge(2, "e", "</w>", "e</w>", 0), Bpe.Merge(3, "th", "e</w>", "the</w>", 0))
     val nat = Bpe.subwordCount(docs, "text", merges)
       .select("doc_id", "n_subwords").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hof = Bpe.subwordCountHof(docs, "text", merges)
+    val hof = HofReference.subwordCountHof(docs, "text", merges)
       .select("doc_id", "n_subwords").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(nat == hof)
