@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Nested-JSON → relational normalization.
   *
@@ -19,11 +19,6 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * fan-out is pipelined inside whole-stage codegen.
   */
 object Normalize {
-
-  /** Parse a JSON string column against an explicit schema. */
-  def parseJson(df: DataFrame, jsonCol: String, schema: DataType,
-      as: String = "parsed"): DataFrame =
-    df.withColumn(as, from_json(col(jsonCol), schema))
 
   /** Child table: parent keys + fields projected from a struct column.
     * Rows where the struct is null are dropped (reference skips orders

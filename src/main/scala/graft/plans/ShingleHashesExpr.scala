@@ -2,10 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-
-import graft.operators.MinHashLSH
 
 /** Distinct n-gram shingle hashes from a token-hash array, one pass:
   * for each window of n token hashes, a 64-bit avalanche mix,
@@ -17,7 +15,8 @@ import graft.operators.MinHashLSH
   * MinHashLSH.shingleHashes).
   *
   * Windows shorter than n (doc with < n tokens) hash the available
-  * prefix — every non-empty document yields ≥1 shingle.
+  * prefix — every non-empty document yields ≥1 shingle. The body is
+  * [[HashKernels.shingleHashes]].
   */
 case class ShingleHashes(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -25,78 +24,14 @@ case class ShingleHashes(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes"
 
-  override def nullSafeEval(tokenHashes: Any, nAny: Any): Any = {
-    val arr = tokenHashes.asInstanceOf[ArrayData]
-    val n = nAny.asInstanceOf[Int]
-    val m = arr.numElements()
-    val windows = math.max(m - n + 1, 1)
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    var i = 0
-    while (i < windows) {
-      var h = ShingleHashes.Seed
-      var k = 0
-      while (k < n && i + k < m) {
-        h = ShingleHashes.mix(h, arr.getLong(i + k)) + k
-        k += 1
-      }
-      seen.add(h)
-      i += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(tokenHashes: Any, n: Any): Any =
+    HashKernels.shingleHashes(tokenHashes.asInstanceOf[ArrayData], n.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (th, nArg) => {
-      val m = ctx.freshName("m")
-      val win = ctx.freshName("win")
-      val seen = ctx.freshName("seen")
-      val i = ctx.freshName("i")
-      val k = ctx.freshName("k")
-      val h = ctx.freshName("h")
-      val v = ctx.freshName("v")
-      val out = ctx.freshName("out")
-      val j = ctx.freshName("j")
-      val it = ctx.freshName("it")
-      val P = MinHashLSH.Prime
-      s"""
-         |int $m = $th.numElements();
-         |int $win = java.lang.Math.max($m - $nArg + 1, 1);
-         |java.util.LinkedHashSet<Long> $seen = new java.util.LinkedHashSet<Long>();
-         |for (int $i = 0; $i < $win; $i++) {
-         |  long $h = ${ShingleHashes.Seed}L;
-         |  for (int $k = 0; $k < $nArg && $i + $k < $m; $k++) {
-         |    long x = $th.getLong($i + $k);
-         |    x = (x ^ (x >>> 33)) * ${ShingleHashes.Mult1}L;
-         |    $h = ($h ^ x) * ${ShingleHashes.Mult2}L + $k;
-         |  }
-         |  $seen.add($h);
-         |}
-         |long[] $out = new long[$seen.size()];
-         |int $j = 0;
-         |java.util.Iterator<Long> $it = $seen.iterator();
-         |while ($it.hasNext()) { $out[$j++] = ((Long) $it.next()).longValue(); }
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (th, n) =>
+      s"${ev.value} = graft.plans.HashKernels.shingleHashes($th, $n);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ShingleHashes =
     copy(left = newLeft, right = newRight)
-}
-
-object ShingleHashes {
-  val Seed: Long = -7046029254386353131L
-  val Mult1: Long = -49064778989728563L   // murmur3 fmix multiplier
-  val Mult2: Long = -4417276706812531889L // murmur3 fmix multiplier 2
-
-  def mix(h: Long, x0: Long): Long = {
-    // interpreted twin of the generated code (k-dependence is applied
-    // by the caller adding k; here matched by call order)
-    val x = (x0 ^ (x0 >>> 33)) * Mult1
-    (h ^ x) * Mult2
-  }
 }

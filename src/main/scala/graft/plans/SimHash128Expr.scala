@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native 128-bit SimHash over an `array<long>` of feature (lo)
@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * Catalyst's XXH64 long-mix — exactly `xxhash64(h)` (seed 42), so
   * the result is bit-equal to two `simhash64` calls over `lo` and
   * `transform(lo, xxhash64)` (asserted in GraftExtensionsSpec) while
-  * skipping the materialized hi array and the second fold.
+  * skipping the materialized hi array and the second fold. The body
+  * is [[HashKernels.simhash128]].
   */
 case class SimHash128(child: Expression)
     extends UnaryExpression {
@@ -19,61 +20,11 @@ case class SimHash128(child: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "simhash128"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val cnt = new Array[Int](128)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      val lo = arr.getLong(i)
-      val hi = XXH64.hashLong(lo, 42L)
-      var b = 0
-      while (b < 64) {
-        if (((lo >>> b) & 1L) == 1L) cnt(b) += 1 else cnt(b) -= 1
-        if (((hi >>> b) & 1L) == 1L) cnt(b + 64) += 1 else cnt(b + 64) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var fpLo = 0L
-    var fpHi = 0L
-    var b = 0
-    while (b < 64) {
-      if (cnt(b) > 0) fpLo |= (1L << b)
-      if (cnt(b + 64) > 0) fpHi |= (1L << b)
-      b += 1
-    }
-    new GenericArrayData(Array(fpHi, fpLo))
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashKernels.simhash128(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val cnt = ctx.freshName("cnt")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val fpLo = ctx.freshName("fpLo")
-      val fpHi = ctx.freshName("fpHi")
-      val xxh = classOf[XXH64].getName.stripSuffix("$")
-      s"""
-         |int[] $cnt = new int[128];
-         |for (int $i = 0; $i < $c.numElements(); $i++) {
-         |  long $lo = $c.getLong($i);
-         |  long $hi = $xxh.hashLong($lo, 42L);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ((($lo >>> $b) & 1L) == 1L) $cnt[$b]++; else $cnt[$b]--;
-         |    if ((($hi >>> $b) & 1L) == 1L) $cnt[$b + 64]++; else $cnt[$b + 64]--;
-         |  }
-         |}
-         |long $fpLo = 0L; long $fpHi = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($cnt[$b] > 0) $fpLo |= (1L << $b);
-         |  if ($cnt[$b + 64] > 0) $fpHi |= (1L << $b);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[] {$fpHi, $fpLo});
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = graft.plans.HashKernels.simhash128($c);")
 
   override protected def withNewChildInternal(newChild: Expression): SimHash128 =
     copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Weighted 128-bit SimHash: like [[SimHash128]] (one pass, both
@@ -16,7 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * element-aligned; mismatched lengths yield null (a malformed weights
   * projection must surface, not silently truncate). Bit-equal to the
   * portable fold `SimHash.simhash64WeightedHof` per half (asserted in
-  * GraftExtensionsSpec).
+  * GraftExtensionsSpec). The body is [[HashKernels.simhash128Weighted]].
   */
 case class SimHash128Weighted(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -25,70 +25,14 @@ case class SimHash128Weighted(left: Expression, right: Expression)
   override def nullable: Boolean = true // length-mismatch yields null
   override def prettyName: String = "simhash128w"
 
-  override def nullSafeEval(hashes: Any, weights: Any): Any = {
-    val hs = hashes.asInstanceOf[ArrayData]
-    val ws = weights.asInstanceOf[ArrayData]
-    val n = hs.numElements()
-    if (n != ws.numElements()) return null
-    val cnt = new Array[Long](128)
-    var i = 0
-    while (i < n) {
-      val lo = hs.getLong(i)
-      val hi = XXH64.hashLong(lo, 42L)
-      val w = ws.getLong(i)
-      var b = 0
-      while (b < 64) {
-        if (((lo >>> b) & 1L) == 1L) cnt(b) += w else cnt(b) -= w
-        if (((hi >>> b) & 1L) == 1L) cnt(b + 64) += w else cnt(b + 64) -= w
-        b += 1
-      }
-      i += 1
-    }
-    var fpLo = 0L
-    var fpHi = 0L
-    var b = 0
-    while (b < 64) {
-      if (cnt(b) > 0) fpLo |= (1L << b)
-      if (cnt(b + 64) > 0) fpHi |= (1L << b)
-      b += 1
-    }
-    new GenericArrayData(Array(fpHi, fpLo))
-  }
+  override def nullSafeEval(hashes: Any, weights: Any): Any =
+    HashKernels.simhash128Weighted(
+      hashes.asInstanceOf[ArrayData], weights.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (h, wArr) => {
-      val cnt = ctx.freshName("cnt")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val lo = ctx.freshName("lo")
-      val hi = ctx.freshName("hi")
-      val w = ctx.freshName("w")
-      val fpLo = ctx.freshName("fpLo")
-      val fpHi = ctx.freshName("fpHi")
-      val xxh = classOf[XXH64].getName.stripSuffix("$")
-      s"""
-         |if ($h.numElements() != $wArr.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $cnt = new long[128];
-         |  for (int $i = 0; $i < $h.numElements(); $i++) {
-         |    long $lo = $h.getLong($i);
-         |    long $hi = $xxh.hashLong($lo, 42L);
-         |    long $w = $wArr.getLong($i);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      if ((($lo >>> $b) & 1L) == 1L) $cnt[$b] += $w; else $cnt[$b] -= $w;
-         |      if ((($hi >>> $b) & 1L) == 1L) $cnt[$b + 64] += $w; else $cnt[$b + 64] -= $w;
-         |    }
-         |  }
-         |  long $fpLo = 0L; long $fpHi = 0L;
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ($cnt[$b] > 0) $fpLo |= (1L << $b);
-         |    if ($cnt[$b + 64] > 0) $fpHi |= (1L << $b);
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(new long[] {$fpHi, $fpLo});
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (h, w) =>
+      s"""${ev.value} = graft.plans.HashKernels.simhash128Weighted($h, $w);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SimHash128Weighted =

@@ -574,4 +574,108 @@ break", "k": 6}""", "").toDF("doc")
       assert(b == d, s"output $i differs without the registry")
     }
   }
+
+  test("hash, PQ and vector kernels: interpreted eval ≡ generated code, row for row") {
+    import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types._
+    import graft.operators.Pq
+    import graft.plans._
+    // inputs land in parquet, so neither run can constant-fold or
+    // local-relation-fold a kernel: every value below is computed per row
+    val dir = java.nio.file.Files.createTempDirectory("kernel-paths").toString
+    def edges(schema: StructType, rows: Seq[Any]*): DataFrame =
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map(r => Row.fromSeq(r)): _*), schema)
+    val longs = ArrayType(LongType)
+    val hashSchema = StructType(Seq(StructField("id", LongType),
+      StructField("th", longs), StructField("w", longs)))
+    val th = transform(TextFunctions.tokens(col("text")), t => xxhash64(t))
+    val w = transform(col("th"), h => (pmod(h, lit(8)) + 1).cast("long"))
+    Tables.load(spark, sf001, "documents")
+      .select(col("doc_id").as("id"), th.as("th"))
+      // every 7th document carries one weight too many (ragged → null)
+      .withColumn("w", when(col("id") % 7 === 0, concat(w, array(lit(1L))))
+        .otherwise(w))
+      .unionByName(edges(hashSchema,
+        Seq(-1L, null, null),
+        Seq(-2L, Seq.empty[Long], Seq.empty[Long]),
+        Seq(-3L, Seq(1L, 2L), Seq(1L)),
+        Seq(-4L, Seq(1L, 2L, 3L), Seq(1L, 1L, 1L)),
+        Seq(-5L, Seq(Long.MinValue, -1L, 0L, Long.MaxValue), Seq(-3L, 0L, 5L, 1L))))
+      .write.parquet(s"$dir/hash")
+
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val cb = Pq.train(emb, "vec_id", "embedding", m = 4, ksub = 8, iters = 1)
+    val q = emb.where(col("vec_id") === 3L)
+      .select(transform(col("embedding"), _.cast("double")))
+      .head().getSeq[Double](0).toArray
+    val table = Pq.adcTable(q, cb)
+    val floats = ArrayType(FloatType)
+    val vecSchema = StructType(Seq(StructField("id", LongType),
+      StructField("a", floats), StructField("b", floats),
+      StructField("codes", ArrayType(IntegerType))))
+    val holed = Seq.tabulate[Any](cb.dim)(i => if (i == 2) null else 0.5f)
+    emb.select(col("vec_id").as("id"), col("embedding").as("a"))
+      .withColumn("b", lead(col("a"), 1).over(
+        org.apache.spark.sql.expressions.Window.orderBy("id")))
+      .withColumn("codes", Pq.encode(col("a"), cb))
+      .unionByName(edges(vecSchema,
+        Seq(-1L, null, Seq(1f), null),
+        Seq(-2L, Seq(1f, 2f), Seq(1f, 2f, 3f), Seq(0, 0, 0)),
+        Seq(-3L, Seq(1f, null, 3f), Seq(1f, 2f, 3f), Seq(0, null, 0, 0)),
+        Seq(-4L, Seq(1f), Seq(1f), Seq(99, 0, 0, 0)),
+        Seq(-5L, Seq.empty[Float], Seq.empty[Float], Seq(-1, 0, 0, 0)),
+        Seq(-6L, holed, holed, Seq(7, 0, 1, 2))))
+      .write.parquet(s"$dir/vec")
+
+    def k(e: Expression): org.apache.spark.sql.Column = ExpressionColumn(e)
+    def x(c: String): Expression = expression(col(c))
+    def d(c: String): Expression = expression(col(c).cast("array<double>"))
+    def run(s: SparkSession): Seq[(Boolean, Seq[Row])] = Seq(
+      s.read.parquet(s"$dir/hash").select(col("id"),
+        k(MinHashSignature(x("th"), 64, 42L)),
+        k(MinHashSignature(x("th"), 128, 7L)),
+        k(SimHash64(x("th"))),
+        k(SimHash128(x("th"))),
+        k(SimHash128Weighted(x("th"), x("w"))),
+        k(ShingleHashes(x("th"), Literal(3))),
+        k(ShingleHashes(x("th"), Literal(1))),
+        k(WindowHashes(x("th"), Literal(10))),
+        k(WindowHashes(x("th"), Literal(1)))),
+      s.read.parquet(s"$dir/vec").select(col("id"),
+        k(VecDot(x("a"), x("b"))),
+        k(VecL2Sq(x("a"), x("b"))),
+        k(VecDot(d("a"), x("b"))),
+        k(VecL2Sq(x("a"), d("b"))),
+        k(PqEncode(x("a"), Literal(cb.flat), cb.m, cb.ksub)),
+        k(PqEncode(d("a"), Literal(cb.flat), cb.m, cb.ksub)),
+        k(PqAdc(x("codes"), Literal(table), cb.ksub)))
+    ).map { df =>
+      val rows = df.collect().sortBy(_.getLong(0)).toSeq
+      (df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]), rows)
+    }
+
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val generated = run(spark)
+    val evaluated = run(interpreted)
+    assert(generated.forall(_._1) && !evaluated.exists(_._1),
+      "the default run must be whole-stage generated, the other interpreted")
+    generated.zip(evaluated).foreach { case ((_, g), (_, e)) =>
+      assert(g.size == e.size && g.size > 100)
+      val diff = g.zip(e).filter { case (a, b) => a != b }
+      assert(diff.isEmpty, s"${diff.size} rows differ, first: ${diff.headOption}")
+    }
+    // the edge rows reach both paths: nulls propagate, mismatches null out
+    val Seq(hashEdges, vecEdges) = generated.map(_._2
+      .filter(_.getLong(0) < 0).map(r => r.getLong(0) -> r).toMap)
+    assert(hashEdges(-1L).isNullAt(1) && hashEdges(-3L).isNullAt(5)
+      && hashEdges(-4L).getSeq[Long](8).isEmpty)
+    assert(vecEdges(-2L).isNullAt(1) && vecEdges(-3L).isNullAt(1)
+      && vecEdges(-5L).getDouble(1) == 0.0 && vecEdges(-4L).isNullAt(5)
+      && vecEdges(-6L).isNullAt(5) && vecEdges(-4L).isNullAt(7) && !vecEdges(-6L).isNullAt(7))
+  }
 }

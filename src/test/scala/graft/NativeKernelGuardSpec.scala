@@ -10,7 +10,8 @@ import graft.plans.GraftExtensions
 
 /** Keeps one implementation per native kernel: library code builds
   * each kernel as its case class, so no `src/main` file may probe the
-  * session's function registry or resolve a graft kernel by SQL name. */
+  * session's function registry or resolve a graft kernel by SQL name,
+  * and generated code calls the Scala body interpreted eval runs. */
 class NativeKernelGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -38,5 +39,22 @@ class NativeKernelGuardSpec extends AnyFunSuite {
       if registered(m.group(1))
     } yield s"$file: ${m.group(1)}"
     assert(byName.isEmpty, byName)
+  }
+
+  test("no doGenCode under plans/ holds a loop: generated code calls the one body") {
+    val plans = mainSources.filter(_._2.startsWith("package graft.plans"))
+    val loops = for {
+      (file, text) <- plans
+      lines = text.split("\n").toSeq
+      (line, at) <- lines.zipWithIndex
+      if line.contains("def doGenCode")
+      indent = line.indexWhere(_ != ' ')
+      // the method ends at the next line indented no deeper than its def
+      body = lines.drop(at + 1).takeWhile(l =>
+        l.trim.isEmpty || l.indexWhere(_ != ' ') > indent)
+      if body.exists(l => l.contains("for (") || l.contains("while ("))
+    } yield s"$file:${at + 1}"
+    assert(plans.exists(_._2.contains("def doGenCode")))
+    assert(loops.isEmpty, s"doGenCode with its own loop: $loops")
   }
 }

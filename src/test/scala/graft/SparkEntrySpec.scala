@@ -27,9 +27,9 @@ class SparkEntrySpec extends SparkTestBase {
     // q42 is the slowest rows-only query: its q43 portable twin
     // oracles the ALGORITHM bit-for-bit through DuckDB, but q42's own
     // rows live in the native kernel hash domain (shingle_hashes mixes
-    // token hashes; the vanilla fallback hashes the shingle string —
-    // deliberately different flavors, so native-vs-fallback full-query
-    // equality is NOT an invariant). The loud-failure gate is this pin:
+    // token hashes, where the portable twin hashes the shingle string,
+    // so the two queries' rows are NOT equal, only overlapping). The
+    // loud-failure gate is this pin:
     // the query is fully deterministic, so any regression in
     // token_hashes / shingle_hashes / simhash128w / the banded-idf
     // weighting moves at least one fingerprint and changes this row
