@@ -9,9 +9,10 @@ import graft.operators.MinHashLSH
   * shingle hashes: [[MinHashSignature]], [[SimHash64]], [[SimHash128]],
   * [[SimHash128Weighted]], [[ShingleHashes]] and [[WindowHashes]].
   * Each expression's `nullSafeEval` calls the method here and its
-  * `doGenCode` emits the same call, the [[TextKernels]] pattern; each
-  * body is one pass with in-place counters and no per-element
-  * allocation. */
+  * `doGenCode` emits the same call, the [[TextKernels]] pattern. The
+  * MinHash and SimHash bodies are one pass with in-place counters and
+  * no per-element allocation; [[shingleHashes]] boxes each window hash
+  * into the set that drops repeats. */
 object HashKernels {
 
   // the n-gram window hash: a murmur3-fmix-style avalanche per token

@@ -17,11 +17,13 @@ import org.apache.spark.sql.types._
   * products are precomputed ONCE into a (m·ksub)-entry table, and each
   * row's approximate score is m table lookups — no per-row float
   * vector math at all. Both are the hot loop of a PQ scan, hence
-  * native expressions with the codebook/table pinned in the generated
-  * code's references array, called by [[graft.operators.Pq]]. Eval and
-  * the generated code both call the one body in [[PqKernels]];
-  * bit-equality with the per-subspace argmin and the HOF table fold is
-  * asserted in GraftExtensionsSpec.
+  * native codegen'd expressions with the codebook/table pinned in the
+  * references array ([[VecBinaryFold]] precedent), called by
+  * [[graft.operators.Pq]]; bit-equality with the per-subspace argmin
+  * and the HOF table fold is asserted in GraftExtensionsSpec. Like
+  * [[VecBinaryFold]], each loop is written for eval and for the
+  * generated code, which keeps the per-element reads monomorphic per
+  * query; GraftExtensionsSpec requires the two to agree row for row.
   */
 abstract class PqExpr extends BinaryExpression {
   override def nullable: Boolean = true
@@ -68,15 +70,78 @@ case class PqEncode(vec: Expression, codebook: Expression, m: Int, ksub: Int)
   }
   @transient private lazy val dsub: Int = cb.length / (m * ksub)
 
-  override def nullSafeEval(v: Any, c: Any): Any =
-    PqKernels.encode(v.asInstanceOf[ArrayData], isFloatArr(vec), cb, m, ksub, dsub)
+  override def nullSafeEval(v: Any, c: Any): Any = {
+    val arr = v.asInstanceOf[ArrayData]
+    if (arr.numElements() != m * dsub) return null
+    val f = isFloatArr(vec)
+    val codes = new Array[Int](m)
+    var j = 0
+    while (j < m) {
+      var best = 0
+      var bestD = Double.MaxValue
+      var c2 = 0
+      while (c2 < ksub) {
+        val base = (j * ksub + c2) * dsub
+        var d = 0.0
+        var t = 0
+        while (t < dsub) {
+          val i = j * dsub + t
+          if (arr.isNullAt(i)) return null
+          val x = if (f) arr.getFloat(i).toDouble else arr.getDouble(i)
+          val diff = x - cb(base + t)
+          d += diff * diff
+          t += 1
+        }
+        if (d < bestD) { bestD = d; best = c2 }
+        c2 += 1
+      }
+      codes(j) = best
+      j += 1
+    }
+    new GenericArrayData(codes)
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cbRef = ctx.addReferenceObj("pqCodebook", cb, "double[]")
-    nullSafeCodeGen(ctx, ev, (v, _) =>
-      s"""${ev.value} = graft.plans.PqKernels.encode(
-         |  $v, ${isFloatArr(vec)}, $cbRef, $m, $ksub, $dsub);
-         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+    nullSafeCodeGen(ctx, ev, (v, _) => {
+      val codes = ctx.freshName("codes")
+      val j = ctx.freshName("j")
+      val c = ctx.freshName("c")
+      val t = ctx.freshName("t")
+      val d = ctx.freshName("d")
+      val x = ctx.freshName("x")
+      val diff = ctx.freshName("diff")
+      val best = ctx.freshName("best")
+      val bestD = ctx.freshName("bestD")
+      val base = ctx.freshName("base")
+      val getX =
+        if (isFloatArr(vec)) s"(double) $v.getFloat($j * $dsub + $t)"
+        else s"$v.getDouble($j * $dsub + $t)"
+      s"""
+         |if ($v.numElements() != ${m * dsub}) { ${ev.isNull} = true; } else {
+         |  int[] $codes = new int[$m];
+         |  for (int $j = 0; $j < $m && !${ev.isNull}; $j++) {
+         |    int $best = 0; double $bestD = Double.MAX_VALUE;
+         |    for (int $c = 0; $c < $ksub; $c++) {
+         |      int $base = ($j * $ksub + $c) * $dsub;
+         |      double $d = 0.0;
+         |      for (int $t = 0; $t < $dsub; $t++) {
+         |        if ($v.isNullAt($j * $dsub + $t)) { ${ev.isNull} = true; break; }
+         |        double $x = $getX;
+         |        double $diff = $x - $cbRef[$base + $t];
+         |        $d += $diff * $diff;
+         |      }
+         |      if (${ev.isNull}) break;
+         |      if ($d < $bestD) { $bestD = $d; $best = $c; }
+         |    }
+         |    $codes[$j] = $best;
+         |  }
+         |  if (!${ev.isNull}) {
+         |    ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
+         |  }
+         |}
+       """.stripMargin
+    })
   }
 
   override protected def withNewChildrenInternal(
@@ -112,15 +177,38 @@ case class PqAdc(codes: Expression, table: Expression, ksub: Int)
   }
   @transient private lazy val m: Int = tbl.length / ksub
 
-  override def nullSafeEval(c: Any, t: Any): Any =
-    PqKernels.adc(c.asInstanceOf[ArrayData], tbl, m, ksub)
+  override def nullSafeEval(c: Any, t: Any): Any = {
+    val arr = c.asInstanceOf[ArrayData]
+    if (arr.numElements() != m) return null
+    var s = 0.0
+    var j = 0
+    while (j < m) {
+      if (arr.isNullAt(j)) return null
+      val code = arr.getInt(j)
+      if (code < 0 || code >= ksub) return null
+      s += tbl(j * ksub + code)
+      j += 1
+    }
+    s
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val tblRef = ctx.addReferenceObj("adcTable", tbl, "double[]")
     nullSafeCodeGen(ctx, ev, (c, _) => {
       val s = ctx.freshName("s")
-      s"""java.lang.Double $s = graft.plans.PqKernels.adc($c, $tblRef, $m, $ksub);
-         |if ($s == null) { ${ev.isNull} = true; } else { ${ev.value} = $s.doubleValue(); }
+      val j = ctx.freshName("j")
+      val code = ctx.freshName("code")
+      s"""
+         |if ($c.numElements() != $m) { ${ev.isNull} = true; } else {
+         |  double $s = 0.0;
+         |  for (int $j = 0; $j < $m; $j++) {
+         |    if ($c.isNullAt($j)) { ${ev.isNull} = true; break; }
+         |    int $code = $c.getInt($j);
+         |    if ($code < 0 || $code >= $ksub) { ${ev.isNull} = true; break; }
+         |    $s += $tblRef[$j * $ksub + $code];
+         |  }
+         |  if (!${ev.isNull}) ${ev.value} = $s;
+         |}
        """.stripMargin
     })
   }
@@ -128,57 +216,4 @@ case class PqAdc(codes: Expression, table: Expression, ksub: Int)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdc =
     copy(codes = newLeft, table = newRight)
-}
-
-object PqKernels {
-
-  /** The m codes of a vector: per subspace j, the lowest code c whose
-    * sub-centroid cb[(j·ksub + c)·dsub ..] is nearest in squared L2
-    * (elements widened to double; `vFloat`: the array holds floats).
-    * Null when the vector is not m·dsub long or holds a null. */
-  def encode(v: ArrayData, vFloat: Boolean, cb: Array[Double],
-      m: Int, ksub: Int, dsub: Int): ArrayData = {
-    if (v.numElements() != m * dsub) return null
-    val codes = new Array[Int](m)
-    var j = 0
-    while (j < m) {
-      var best = 0
-      var bestD = Double.MaxValue
-      var c = 0
-      while (c < ksub) {
-        val base = (j * ksub + c) * dsub
-        var d = 0.0
-        var t = 0
-        while (t < dsub) {
-          val i = j * dsub + t
-          if (v.isNullAt(i)) return null
-          val x = if (vFloat) v.getFloat(i).toDouble else v.getDouble(i)
-          val diff = x - cb(base + t)
-          d += diff * diff
-          t += 1
-        }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      codes(j) = best
-      j += 1
-    }
-    new GenericArrayData(codes)
-  }
-
-  /** Σⱼ tbl[j·ksub + codes[j]] over the m codes; null when the codes
-    * are not m long, or a code is null or outside [0, ksub). */
-  def adc(codes: ArrayData, tbl: Array[Double], m: Int, ksub: Int): java.lang.Double = {
-    if (codes.numElements() != m) return null
-    var s = 0.0
-    var j = 0
-    while (j < m) {
-      if (codes.isNullAt(j)) return null
-      val code = codes.getInt(j)
-      if (code < 0 || code >= ksub) return null
-      s += tbl(j * ksub + code)
-      j += 1
-    }
-    s
-  }
 }

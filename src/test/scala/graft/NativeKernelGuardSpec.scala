@@ -11,7 +11,8 @@ import graft.plans.GraftExtensions
 /** Keeps one implementation per native kernel: library code builds
   * each kernel as its case class, so no `src/main` file may probe the
   * session's function registry or resolve a graft kernel by SQL name,
-  * and generated code calls the Scala body interpreted eval runs. */
+  * and, outside the vector kernels, generated code calls the Scala
+  * body interpreted eval runs. */
 class NativeKernelGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -41,7 +42,12 @@ class NativeKernelGuardSpec extends AnyFunSuite {
     assert(byName.isEmpty, byName)
   }
 
-  test("no doGenCode under plans/ holds a loop: generated code calls the one body") {
+  /** The kernels that keep their loop in generated code: each reads a
+    * float/double vector element by element, and only per-query
+    * generated code keeps those reads monomorphic (see VecBinaryFold). */
+  private val vectorLoopFiles = Set("VectorExprs.scala", "PqExprs.scala")
+
+  test("no doGenCode under plans/ outside the vector kernels holds a loop") {
     val plans = mainSources.filter(_._2.startsWith("package graft.plans"))
     val loops = for {
       (file, text) <- plans
@@ -53,8 +59,8 @@ class NativeKernelGuardSpec extends AnyFunSuite {
       body = lines.drop(at + 1).takeWhile(l =>
         l.trim.isEmpty || l.indexWhere(_ != ' ') > indent)
       if body.exists(l => l.contains("for (") || l.contains("while ("))
-    } yield s"$file:${at + 1}"
+    } yield file
     assert(plans.exists(_._2.contains("def doGenCode")))
-    assert(loops.isEmpty, s"doGenCode with its own loop: $loops")
+    assert(loops.toSet == vectorLoopFiles, s"doGenCode with its own loop: $loops")
   }
 }
