@@ -50,9 +50,6 @@ object SafeCasts {
     when(c.isNull, lit(null).cast("boolean"))
       .otherwise(lower(trim(c)).isin("true", "1", "yes", "on"))
 
-  /** Numeric truthiness: x != 0 (Python bool(number)). */
-  def safeBoolNumeric(c: Column): Column = c =!= 0
-
   /** str(value) truncated to maxLength (shopee_orders_transformer.py:45-63). */
   def safeString(c: Column, maxLength: Int): Column =
     substring(c.cast("string"), 1, maxLength)

@@ -153,7 +153,7 @@ object TextFunctions {
     * part at scale. Everything is integer arithmetic on md5 buckets,
     * so a SQL oracle replays scores bit-exactly.
     *
-    * One codegen'd [[graft.plans.ClassifierMilliExpr]] pass — row-local,
+    * One codegen'd [[graft.plans.TextKernels.classifierMilli]] pass — row-local,
     * ZERO shuffle: classifier-scoring a 100 TB corpus is a map-only
     * pass over the scan, the plan you want (a shuffle here would be a
     * design bug). */
@@ -164,7 +164,7 @@ object TextFunctions {
     * mod 1e9+7 (modulo applied per step — keeps every intermediate in
     * 35 bits so the same fold works in engines that trap on int64
     * overflow). Fold order = left-to-right, seed = first token hash.
-    * One pass of the [[graft.plans.FingerprintMd5Expr]] kernel. */
+    * One pass of the [[graft.plans.TextKernels.fingerprintMd5]] kernel. */
   def fingerprint(c: Column): Column =
     ExpressionColumn(FingerprintMd5Expr(expression(c)))
 }

@@ -249,8 +249,8 @@ object Bpe {
   /** Tokenize the corpus with a learned merge table: apply the merges
     * in rank order to every word — a corpus-wide MAP-ONLY pass (the
     * merge table is a literal argument of the codegen'd
-    * [[graft.plans.SubwordCountExpr]] kernel; no broadcast, no
-    * shuffle, no UDF). Returns docs + `n_subwords`, the real token
+    * `subword_count` kernel, [[graft.plans.TextKernels.subwordCount]];
+    * no broadcast, no shuffle, no UDF). Returns docs + `n_subwords`, the real token
     * count every budget/packing decision wants. Each word costs
     * |merges| rewrite passes over its symbols — intended for the small
     * high-frequency merge prefixes those decisions need, not a full

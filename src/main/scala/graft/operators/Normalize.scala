@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * Spark-first: `from_json` with an explicit schema (never inference on
   * the hot path — inference is a second full scan), struct field
-  * projection for 1:1 children, `explode`/`posexplode` (codegen'd
-  * generators) for 1:N. Parsing is row-local → no shuffle at all; the
+  * projection for 1:1 children, `explode` (a codegen'd generator)
+  * for 1:N. Parsing is row-local → no shuffle at all; the
   * fan-out is pipelined inside whole-stage codegen.
   */
 object Normalize {
@@ -34,13 +34,6 @@ object Normalize {
   def childFromArray(df: DataFrame, parentKeys: Seq[String],
       arrayCol: String, as: String): DataFrame =
     df.select(parentKeys.map(col) :+ explode(col(arrayCol)).as(as): _*)
-
-  /** As childFromArray but keeps the element ordinal (positional PK for
-    * arrays without a natural key). */
-  def childFromArrayWithPos(df: DataFrame, parentKeys: Seq[String],
-      arrayCol: String, as: String, posAs: String = "pos"): DataFrame =
-    df.select(parentKeys.map(col) :+ posexplode(col(arrayCol)): _*)
-      .withColumnRenamed("pos", posAs).withColumnRenamed("col", as)
 
   /** Parse with a quarantine side-channel: rows whose JSON fails the
     * schema keep their parsed fields null and get

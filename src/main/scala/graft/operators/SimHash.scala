@@ -78,7 +78,7 @@ object SimHash {
   def md5TokenHashHi(t: Column): Column = signedFromHex16(substring(md5(t), 17, 16))
 
   /** 64-bit simhash of the token multiset — the native codegen'd
-    * [[graft.plans.SimHash64]] kernel. */
+    * [[graft.plans.HashKernels.simhash64]] kernel. */
   def simhash64(textCol: Column,
       tokenHash: Column => Column = xxhash64(_)): Column =
     simhash64Of(transform(TextFunctions.tokens(textCol), t => tokenHash(t)))

@@ -43,10 +43,10 @@ object TextDedup {
       i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
   }
 
-  /** Distinct 64-bit shingle hashes: the one-pass [[ShingleHashes]]
-    * mix over each n-window of token hashes — one value per distinct
-    * positional n-gram, no per-shingle string. The token hashes are
-    * bit-identical to `transform(tokens, xxhash64)`. */
+  /** Distinct 64-bit shingle hashes: the one-pass
+    * [[graft.plans.HashKernels.shingleHashes]] mix over each n-window
+    * of token hashes — one value per distinct positional n-gram, no
+    * per-shingle string. The token hashes are bit-identical to `transform(tokens, xxhash64)`. */
   def shingleHashes64(textCol: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
     ExpressionColumn(ShingleHashes(TokenHashesExpr(expression(textCol)), Literal(n)))
 
@@ -251,7 +251,7 @@ object TextDedup {
   /** [[substringDedup]] against a PRIOR window-hash store (column
     * `window_hash`) — the incremental/streaming form. [[windowHashes]]
     * stamps each store row with a `hash_flavor` column ("native": the
-    * [[WindowHashes]] kernel's values). Older builds could also write
+    * [[graft.plans.HashKernels.windowHashes]] kernel's values). Older builds could also write
     * "string" stores, whose per-window string hashes this build never
     * computes, so this method FAILS FAST on any other flavor (a store
     * without the column — written before the marker existed — is
@@ -292,7 +292,8 @@ object TextDedup {
 
   /** The positional (id, pos, window-hash) frame [[substringDedup]]
     * dedups over — shared with the streaming fold's store
-    * contribution. The codegen'd one-pass [[WindowHashes]] kernel over
+    * contribution. The codegen'd one-pass
+    * [[graft.plans.HashKernels.windowHashes]] kernel over
     * token hashes; a doc shorter than the span carries no windows. */
   private[graft] def windowExplode(docs: DataFrame, idCol: String,
       textCol: String, spanTokens: Int): DataFrame = {

@@ -6,13 +6,14 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import graft.operators.MinHashLSH
 
 /** The one body of each hash kernel over an `array<long>` of token or
-  * shingle hashes: [[MinHashSignature]], [[SimHash64]], [[SimHash128]],
-  * [[SimHash128Weighted]], [[ShingleHashes]] and [[WindowHashes]].
-  * Each expression's `nullSafeEval` calls the method here and its
-  * `doGenCode` emits the same call, the [[TextKernels]] pattern. The
-  * MinHash and SimHash bodies are one pass with in-place counters and
-  * no per-element allocation; [[shingleHashes]] boxes each window hash
-  * into the set that drops repeats. */
+  * shingle hashes: [[MinHashSignature]] and the `simhash64`,
+  * `simhash128`, `simhash128w`, `shingle_hashes` and `window_hashes`
+  * rows of the kernel table (the `graft.plans` package object).
+  * Interpreted eval calls the method here and generated code emits the
+  * same call, the [[TextKernels]] pattern. The MinHash and SimHash
+  * bodies are one pass with in-place counters and no per-element
+  * allocation; [[shingleHashes]] boxes each window hash into the set
+  * that drops repeats. */
 object HashKernels {
 
   // the n-gram window hash: a murmur3-fmix-style avalanche per token
@@ -57,7 +58,10 @@ object HashKernels {
   }
 
   /** 64-bit SimHash: bit b is set when more hashes have it set than
-    * clear. */
+    * clear. One pass over 64 in-place counters; it replaces an
+    * aggregate(zip_with) fold that allocates a 64-element array per
+    * token, and is bit-equal to that fold's counter/threshold
+    * semantics (the fold is the test reference). */
   def simhash64(arr: ArrayData): Long = {
     val cnt = new Array[Int](64)
     var i = 0
@@ -81,7 +85,11 @@ object HashKernels {
   }
 
   /** `[fp_hi, fp_lo]`: [[simhash64]] of the hashes (lo) and of their
-    * `xxhash64` (seed 42) (hi), in one pass. */
+    * `xxhash64` (seed 42) (hi), in one pass. Each hi hash is derived
+    * inline with Catalyst's XXH64 long-mix, so the result is bit-equal
+    * to two `simhash64` calls over `lo` and `transform(lo, xxhash64)`
+    * (asserted in GraftExtensionsSpec) without the materialized hi
+    * array or the second fold. */
   def simhash128(arr: ArrayData): ArrayData = {
     val cnt = new Array[Long](128)
     var i = 0
@@ -93,8 +101,12 @@ object HashKernels {
     fingerprint128(cnt)
   }
 
-  /** [[simhash128]] with each hash's votes scaled by its weight;
-    * null when the arrays' lengths differ. */
+  /** [[simhash128]] with each hash's votes scaled by its weight: the
+    * idf-weighting Charikar/Manku simhash uses, so corpus-wide frequent
+    * features cannot dominate the fingerprint (a stop-list is the
+    * weight-0 case). Null when the arrays' lengths differ, so a
+    * malformed weights projection surfaces instead of truncating.
+    * Bit-equal per half to `SimHash.simhash64WeightedHof`. */
   def simhash128Weighted(hs: ArrayData, ws: ArrayData): ArrayData = {
     val n = hs.numElements()
     if (n != ws.numElements()) return null
@@ -130,7 +142,12 @@ object HashKernels {
   }
 
   /** Distinct hashes of every n-token window, in first-seen order; a
-    * document shorter than n yields the hash of the whole document. */
+    * document shorter than n yields the hash of the whole document, so
+    * every non-empty document has a shingle. Values are full 64-bit:
+    * consumers that need the minhash domain reduce mod 2³¹−1
+    * themselves, which keeps the collision budget of exact set-count
+    * users (blockedJaccardPairs) at ~2⁻⁶⁴. Replaces building each
+    * n-gram as a string and hashing it. */
   def shingleHashes(arr: ArrayData, n: Int): ArrayData = {
     val m = arr.numElements()
     val windows = math.max(m - n + 1, 1)
@@ -147,8 +164,16 @@ object HashKernels {
     new GenericArrayData(out)
   }
 
-  /** The hash of every n-token window by start position; a document
-    * shorter than n yields none. */
+  /** The hash of every n-token window by start position: the
+    * [[shingleHashes]] windows without deduplication, the shape
+    * [[graft.operators.TextDedup.substringDedup]] needs (its coverage
+    * union is keyed on the window's start). Unlike [[shingleHashes]], a
+    * document shorter than n yields an EMPTY array: no window of the
+    * full span exists, so the document carries no dedupable range (the
+    * operator's pass-through contract). Values differ from the older
+    * per-window string hash (the `hash_flavor` "string" store the
+    * operator rejects); equality classes agree up to ~2⁻⁶⁴
+    * collisions, which is all the consumer uses. */
   def windowHashes(arr: ArrayData, n: Int): ArrayData = {
     val windows = math.max(arr.numElements() - n + 1, 0)
     val out = new Array[Long](windows)

@@ -28,11 +28,6 @@ import org.apache.spark.sql.types._
 abstract class PqExpr extends BinaryExpression {
   override def nullable: Boolean = true
 
-  protected def isFloatArr(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
   /** Constant argument (codebook / ADC table) as a pinned double[]. */
   protected def constDoubles(e: Expression): Array[Double] = {
     val ad = e.eval().asInstanceOf[ArrayData]
@@ -73,7 +68,7 @@ case class PqEncode(vec: Expression, codebook: Expression, m: Int, ksub: Int)
   override def nullSafeEval(v: Any, c: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
     if (arr.numElements() != m * dsub) return null
-    val f = isFloatArr(vec)
+    val f = VecBinaryFold.isFloat(vec)
     val codes = new Array[Int](m)
     var j = 0
     while (j < m) {
@@ -115,7 +110,7 @@ case class PqEncode(vec: Expression, codebook: Expression, m: Int, ksub: Int)
       val bestD = ctx.freshName("bestD")
       val base = ctx.freshName("base")
       val getX =
-        if (isFloatArr(vec)) s"(double) $v.getFloat($j * $dsub + $t)"
+        if (VecBinaryFold.isFloat(vec)) s"(double) $v.getFloat($j * $dsub + $t)"
         else s"$v.getDouble($j * $dsub + $t)"
       s"""
          |if ($v.numElements() != ${m * dsub}) { ${ev.isNull} = true; } else {

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -480,7 +478,8 @@ object TextKernels {
 
   @inline private def isWsB(c: Int): Boolean = (c >= 0x09 && c <= 0x0d) || c == 0x20
 
-  /** `safe_long(s)` ≡ `try_cast(s AS BIGINT)`, boxed Long or null. */
+  /** `safe_long(s)` ≡ `try_cast(s AS BIGINT)`, boxed Long or null,
+    * without a per-row exception on unparseable input. */
   def safeLong(text: UTF8String): java.lang.Long = {
     val b = text.getBytes
     val n = b.length
@@ -523,7 +522,8 @@ object TextKernels {
     ok
   }
 
-  /** `safe_double(s)` ≡ `try_cast(s AS DOUBLE)`, boxed Double or null. */
+  /** `safe_double(s)` ≡ `try_cast(s AS DOUBLE)`, boxed Double or null,
+    * without a per-row exception on unparseable input. */
   def safeDouble(text: UTF8String): java.lang.Double = {
     val b = text.getBytes
     val n = b.length
@@ -586,6 +586,9 @@ object TextKernels {
   @inline private def isJsonWs(c: Int): Boolean =
     c == ' ' || c == '\t' || c == '\n' || c == '\r'
 
+  /** `json_long(doc, field)` ≡ `from_json(doc, struct<field:bigint>)
+    * .field`, boxed Long or null: the flat-object byte scan, with an
+    * exact from_json fallback for anything it does not take. */
   def jsonLong(text: UTF8String, field: UTF8String): java.lang.Long =
     jsonLongFast(text, field) match {
       case JsonBail => jsonLongSlow(text, field)
@@ -678,12 +681,6 @@ object TextKernels {
     null // unreachable
   }
 
-  /** The q60 PII pass fused AND regex-free: (n_emails, n_ips, md5 of
-    * the email→IPv4-redacted text). Same observable semantics as the
-    * Column chain (emails count+replace on the original, IPs counted
-    * on the ORIGINAL text, IP replace on the email-redacted text), but
-    * via the byte scanners above — no regex engine, no UTF-16 decode,
-    * MD5 over the redacted UTF-8 bytes directly. */
   /** Strict well-formed-UTF-8 check (RFC 3629: no overlongs, no
     * encoded surrogates, max U+10FFFF). When this holds,
     * `new String(bytes, UTF_8).getBytes(UTF_8)` is the identity, so
@@ -721,6 +718,12 @@ object TextKernels {
     true
   }
 
+  /** The q60 PII pass fused AND regex-free: (n_emails, n_ips, md5 of
+    * the email→IPv4-redacted text). Same observable semantics as the
+    * Column chain (emails count+replace on the original, IPs counted
+    * on the ORIGINAL text, IP replace on the email-redacted text), but
+    * via the byte scanners above — no regex engine, no UTF-16 decode,
+    * MD5 over the redacted UTF-8 bytes directly. */
   def piiScan(text: UTF8String): InternalRow = {
     val rawBytes = text.getBytes
     // Ill-formed UTF-8: the Column-chain oracle decodes to String
@@ -923,309 +926,4 @@ object TextKernels {
     }
     total
   }
-}
-
-/** `text_rep_scores(text)` → struct<dup_frac, top2, top3>. */
-case class TextRepScoresExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextKernels.RepSchema
-  override def prettyName: String = "text_rep_scores"
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.repScores(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextKernels.repScores($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `token_count(text)` → bigint, ≡
-  * `TextFunctions.tokenCount(text).cast("long")`. */
-case class TokenCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "token_count"
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.tokenCount(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextKernels.tokenCount($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `fingerprint_md5(text)` → bigint. */
-case class FingerprintMd5Expr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "fingerprint_md5"
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.fingerprintMd5(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextKernels.fingerprintMd5($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `classifier_milli(text, buckets)` → bigint. */
-case class ClassifierMilliExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "classifier_milli"
-
-  override def nullSafeEval(text: Any, buckets: Any): Any =
-    TextKernels.classifierMilli(text.asInstanceOf[UTF8String],
-      buckets.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, b) =>
-      s"${ev.value} = graft.plans.TextKernels.classifierMilli($c, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** `pii_scan(text)` → struct<n_emails, n_ips, redacted_md5>. */
-case class PiiScanExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextKernels.PiiSchema
-  override def prettyName: String = "pii_scan"
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.piiScan(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextKernels.piiScan($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `json_long(doc, field)` → bigint, ≡ `from_json(doc,
-  * struct<field:bigint>).field` (fast flat-object byte scan, exact
-  * from_json fallback — see [[TextKernels.jsonLong]]). */
-case class JsonLongExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "json_long"
-
-  override def nullSafeEval(doc: Any, field: Any): Any = {
-    val r = TextKernels.jsonLong(doc.asInstanceOf[UTF8String],
-      field.asInstanceOf[UTF8String])
-    if (r == null) null else r.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, f) => {
-      val r = ctx.freshName("jsonLong")
-      s"""java.lang.Long $r = graft.plans.TextKernels.jsonLong($d, $f);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** `json_scan(doc, field)` → struct<val bigint, corrupt boolean> ≡
-  * PERMISSIVE from_json with a corrupt-record column (see
-  * [[TextKernels.jsonScan]]). */
-case class JsonScanExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = TextKernels.JsonScanSchema
-  override def prettyName: String = "json_scan"
-
-  override def nullSafeEval(doc: Any, field: Any): Any =
-    TextKernels.jsonScan(doc.asInstanceOf[UTF8String],
-      field.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, f) =>
-      s"${ev.value} = graft.plans.TextKernels.jsonScan($d, $f);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** `safe_long(s)` → bigint ≡ `try_cast(s AS BIGINT)` without the
-  * per-row exception on unparseable input (see
-  * [[TextKernels.safeLong]]). */
-case class SafeLongExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "safe_long"
-
-  override def nullSafeEval(s: Any): Any = {
-    val r = TextKernels.safeLong(s.asInstanceOf[UTF8String])
-    if (r == null) null else r.longValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("safeLong")
-      s"""java.lang.Long $r = graft.plans.TextKernels.safeLong($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.longValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `safe_double(s)` → double ≡ `try_cast(s AS DOUBLE)` without the
-  * per-row exception on unparseable input. */
-case class SafeDoubleExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "safe_double"
-
-  override def nullSafeEval(s: Any): Any = {
-    val r = TextKernels.safeDouble(s.asInstanceOf[UTF8String])
-    if (r == null) null else r.doubleValue()
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("safeDouble")
-      s"""java.lang.Double $r = graft.plans.TextKernels.safeDouble($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `array_pmod(arr, m)` → array<bigint>. */
-case class ArrayPmodExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "array_pmod"
-
-  override def nullSafeEval(arr: Any, m: Any): Any =
-    TextKernels.arrayPmod(arr.asInstanceOf[ArrayData], m.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, m) =>
-      s"${ev.value} = graft.plans.TextKernels.arrayPmod($a, $m);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** `token_hashes(text)` → array<bigint>. */
-case class TokenHashesExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "token_hashes"
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.tokenHashes(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextKernels.tokenHashes($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `chunk_hashes(text, chunk_tokens)` → array<bigint>. */
-case class ChunkHashesExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "chunk_hashes"
-
-  override def nullSafeEval(text: Any, chunkTokens: Any): Any =
-    TextKernels.chunkHashes(text.asInstanceOf[UTF8String],
-      chunkTokens.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, ct) =>
-      s"${ev.value} = graft.plans.TextKernels.chunkHashes($c, $ct);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** `gram_buckets(text, buckets)` → array<bigint>. */
-case class GramBucketsExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "gram_buckets"
-
-  override def nullSafeEval(text: Any, buckets: Any): Any =
-    TextKernels.gramBuckets(text.asInstanceOf[UTF8String],
-      buckets.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, b) =>
-      s"${ev.value} = graft.plans.TextKernels.gramBuckets($c, $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** `classifier_weighted(text, weights_by_bucket)` → bigint. */
-case class ClassifierWeightedExpr(left: Expression, right: Expression)
-  extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "classifier_weighted"
-
-  override def nullSafeEval(text: Any, weights: Any): Any =
-    TextKernels.classifierWeighted(text.asInstanceOf[UTF8String],
-      weights.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, w) =>
-      s"${ev.value} = graft.plans.TextKernels.classifierWeighted($c, $w);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression,
-      newRight: Expression): Expression = copy(left = newLeft, right = newRight)
-}
-
-/** `subword_count(text, merge_lefts, merge_rights)` → bigint. */
-case class SubwordCountExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "subword_count"
-
-  override def nullSafeEval(text: Any, lefts: Any, rights: Any): Any =
-    TextKernels.subwordCount(text.asInstanceOf[UTF8String],
-      lefts.asInstanceOf[ArrayData], rights.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, l, r) =>
-      s"${ev.value} = graft.plans.TextKernels.subwordCount($c, $l, $r);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-/** `drop_token_spans(text, starts, span)` →
-  * struct<text, n_kept, n_total>. */
-case class DropTokenSpansExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = TextKernels.DropSchema
-  override def prettyName: String = "drop_token_spans"
-
-  override def nullSafeEval(text: Any, starts: Any, span: Any): Any =
-    TextKernels.dropTokenSpans(text.asInstanceOf[UTF8String],
-      starts.asInstanceOf[ArrayData], span.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, s, w) =>
-      s"${ev.value} = graft.plans.TextKernels.dropTokenSpans($c, $s, $w);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

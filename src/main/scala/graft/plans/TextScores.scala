@@ -3,8 +3,6 @@ package graft.plans
 import java.math.RoundingMode
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -170,6 +168,7 @@ object TextScores {
     (lang, quality, t2, nTokens, punctRatio, langRatio, bpe)
   }
 
+  /** The `text_scores` row: (lang_pred, quality, t2, n_tokens). */
   def compute(text: UTF8String): InternalRow = {
     val (lang, quality, t2, nTokens, _, _, _) = computeRaw(text)
     new GenericInternalRow(Array[Any](
@@ -177,7 +176,10 @@ object TextScores {
   }
 
   /** The full q23 stat row: (n_tokens, punct_ratio, stop_ratio,
-    * lang_pred, quality) — same pass, wider output. */
+    * lang_pred, quality, est_bpe_tokens) — same pass, wider output.
+    * The HOF columns each re-normalize and re-tokenize the text; here
+    * the punct/stop ratios fall out of the [[computeRaw]] loop that
+    * quality and lang-ID already pay for. */
   def computeFull(text: UTF8String): InternalRow = {
     val (lang, quality, _, nTokens, punctRatio, stopRatio, bpe) =
       computeRaw(text)
@@ -187,7 +189,8 @@ object TextScores {
   }
 
   /** The q61 gate in one call: en + round6(quality) ≥ minQ +
-    * round6(t2) ≤ maxT2 — identical to filtering the rounded columns. */
+    * round6(t2) ≤ maxT2 — identical to filtering the rounded columns,
+    * and the un-splittable filter form of [[compute]]. */
   def gate(text: UTF8String, minQuality: Double, maxT2: Double): Boolean = {
     val (lang, quality, t2, _, _, _, _) = computeRaw(text)
     lang == "en" && round6(quality) >= minQuality && round6(t2) <= maxT2
@@ -206,60 +209,4 @@ object TextScores {
     StructField("lang_pred", StringType, nullable = false),
     StructField("quality", DoubleType, nullable = false),
     StructField("est_bpe_tokens", LongType, nullable = false)))
-}
-
-/** `text_scores(text)` → struct<lang_pred, quality, t2, n_tokens>. */
-case class TextScoresExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextScores.Schema
-  override def prettyName: String = "text_scores"
-
-  override def nullSafeEval(text: Any): Any =
-    TextScores.compute(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextScores.compute($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `text_full_stats(text)` → struct<n_tokens, punct_ratio,
-  * stop_ratio, lang_pred, quality> — the q23 stat row in ONE pass
-  * (the HOF columns each re-normalize and re-tokenize the text;
-  * punct/stop ratios fall out of the [[TextScores.computeRaw]] loop
-  * that quality and lang-ID already pay for). */
-case class TextFullStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = TextScores.FullSchema
-  override def prettyName: String = "text_full_stats"
-
-  override def nullSafeEval(text: Any): Any =
-    TextScores.computeFull(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextScores.computeFull($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** `text_gate(text, minQuality, maxT2)` → boolean (one kernel call —
-  * the un-splittable filter form of [[TextScoresExpr]]). */
-case class TextGateExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "text_gate"
-
-  override def nullSafeEval(text: Any, minQ: Any, maxT2: Any): Any =
-    TextScores.gate(text.asInstanceOf[UTF8String],
-      minQ.asInstanceOf[Double], maxT2.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, q, t) =>
-      s"${ev.value} = graft.plans.TextScores.gate($c, $q, $t);")
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

@@ -32,16 +32,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * shorter side with null, which nulls the fold).
   */
 abstract class VecBinaryFold extends BinaryExpression {
+  import VecBinaryFold.isFloat
+
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
 
   protected def combineJava(x: String, y: String): String
   protected def combineScala(x: Double, y: Double): Double
-
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
@@ -88,6 +85,15 @@ abstract class VecBinaryFold extends BinaryExpression {
          |}
        """.stripMargin
     })
+}
+
+object VecBinaryFold {
+  /** True for an `array<float>` vector; the vector and PQ kernels read
+    * any other vector as `array<double>`. */
+  private[plans] def isFloat(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
 }
 
 /** Σ xᵢ·yᵢ — the ANN hot loop (cosine numerator; norm via vec_dot(a,a)). */

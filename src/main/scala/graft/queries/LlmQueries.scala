@@ -688,7 +688,7 @@ object LlmQueries {
     // CSE-share it) and the gate as ONE un-splittable text_gate
     // predicate — predicate pushdown would otherwise split the gate
     // into three conjuncts that each re-run the full scoring per row
-    // (TextScoresExpr scaladoc)
+    // (TextScores scaladoc)
     val filtered = crawl
       .withColumn("__sc", ExpressionColumn(TextScoresExpr(expression(col("text")))))
       .withColumn("lang_pred", col("__sc.lang_pred"))

@@ -678,4 +678,75 @@ break", "k": 6}""", "").toDF("doc")
       && vecEdges(-5L).getDouble(1) == 0.0 && vecEdges(-4L).isNullAt(5)
       && vecEdges(-6L).isNullAt(5) && vecEdges(-4L).isNullAt(7) && !vecEdges(-6L).isNullAt(7))
   }
+
+  test("text kernels: interpreted eval ≡ generated code, row for row") {
+    import org.apache.spark.sql.{Row, SparkSession}
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.plans._
+    // the corpus and the text_scores battery, plus a null, control
+    // characters and the json_long / safe_long / pii_scan edges, so every
+    // kernel meets input it parses; written to parquet, so neither run
+    // can fold a kernel into a constant
+    val dir = java.nio.file.Files.createTempDirectory("text-kernel-paths").toString
+    val more = Seq(null, "\u0000", "nul\u0000 bell\u0007 esc\u001b end",
+      """{"k": 76}""", """{"k": null}""", """{"k": 7.5}""", """{"k": 5} x""",
+      "{\"k\":\t5\n}", """not json""", "12", "-9223372036854775808", "12.7",
+      "1e3", "NaN", " 12", "Brand#13", "two a@b.cc b@c.dd mails 10.0.0.1")
+    val edges = spark.createDataFrame(
+      java.util.Arrays.asList(more.map(t => Row(t)): _*),
+      StructType(Seq(StructField("text", StringType))))
+    kernelDocs.unionByName(edges)
+      .withColumn("id", monotonically_increasing_id())
+      .withColumn("th", transform(TextFunctions.tokens(col("text")), t => xxhash64(t)))
+      .write.parquet(s"$dir/text")
+
+    def k(e: Expression): org.apache.spark.sql.Column = ExpressionColumn(e)
+    val text = expression(col("text"))
+    val weights = Literal(Array.tabulate(64)(i => (i * 37 % 101 - 50).toLong))
+    def run(s: SparkSession): (Boolean, Seq[Row]) = {
+      val df = s.read.parquet(s"$dir/text").select(col("id"),
+        k(TextRepScoresExpr(text)),
+        k(TokenCountExpr(text)),
+        k(FingerprintMd5Expr(text)),
+        k(ClassifierMilliExpr(text, Literal(65536))),
+        k(PiiScanExpr(text)),
+        k(JsonLongExpr(text, Literal("k"))),
+        k(JsonScanExpr(text, Literal("k"))),
+        k(SafeLongExpr(text)),
+        k(SafeDoubleExpr(text)),
+        k(ArrayPmodExpr(expression(col("th")), Literal(2305843009213693951L))),
+        k(TokenHashesExpr(text)),
+        k(ChunkHashesExpr(text, Literal(10))),
+        k(GramBucketsExpr(text, Literal(4096))),
+        k(ClassifierWeightedExpr(text, weights)),
+        k(SubwordCountExpr(text, Literal(Array("e", "t", "th", "a", "i")),
+          Literal(Array("</w>", "h", "e</w>", "a", "n")))),
+        k(DropTokenSpansExpr(text, Literal(Array(-2, 0, 5, 12)), Literal(3))),
+        k(TextScoresExpr(text)),
+        k(TextFullStatsExpr(text)),
+        k(TextGateExpr(text, Literal(0.75), Literal(0.2))))
+      (df.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]),
+        df.collect().sortBy(_.getLong(0)).toSeq)
+    }
+
+    val interpreted = spark.newSession()
+    interpreted.conf.set("spark.sql.codegen.wholeStage", "false")
+    interpreted.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    val (wholeStage, generated) = run(spark)
+    val (wholeStageOff, evaluated) = run(interpreted)
+    assert(wholeStage && !wholeStageOff,
+      "the default run must be whole-stage generated, the other interpreted")
+    assert(generated.size == evaluated.size && generated.size > 100)
+    val diff = generated.zip(evaluated).filter { case (a, b) => a != b }
+    assert(diff.isEmpty, s"${diff.size} rows differ, first: ${diff.headOption}")
+    // the edge rows reach both paths: a null text nulls every kernel, and
+    // the nullable kernels return values and nulls
+    val nulls = generated.filter(r => r.isNullAt(2))
+    assert(nulls.size == 1 && (1 to 19).forall(nulls.head.isNullAt))
+    assert(generated.exists(r => !r.isNullAt(8) && r.getLong(8) == Long.MinValue))
+    assert(generated.exists(r => !r.isNullAt(6) && r.getLong(6) == 76L))
+    assert(generated.exists(r => !r.isNullAt(2) && r.isNullAt(6) && r.isNullAt(9)))
+  }
 }

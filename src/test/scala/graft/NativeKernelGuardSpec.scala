@@ -4,15 +4,17 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.GraftExtensions
 
 /** Keeps one implementation per native kernel: library code builds
-  * each kernel as its case class, so no `src/main` file may probe the
-  * session's function registry or resolve a graft kernel by SQL name,
-  * and, outside the vector kernels, generated code calls the Scala
-  * body interpreted eval runs. */
+  * each kernel as its expression (a kernel-table row or one of the
+  * kernel classes), so no `src/main` file may probe the session's
+  * function registry or resolve a graft kernel by SQL name, and,
+  * outside the vector kernels, generated code calls the Scala body
+  * interpreted eval runs. */
 class NativeKernelGuardSpec extends AnyFunSuite {
 
   private def mainSources: Seq[(String, String)] = {
@@ -62,5 +64,25 @@ class NativeKernelGuardSpec extends AnyFunSuite {
     } yield file
     assert(plans.exists(_._2.contains("def doGenCode")))
     assert(loops.toSet == vectorLoopFiles, s"doGenCode with its own loop: $loops")
+  }
+
+  /** The kernels that stay classes: three pin objects in generated code
+    * and four keep their loop there; every other kernel is a row of the
+    * kernel table on its three generic expressions. */
+  private val kernelClasses = Set("MinHashSignature", "BloomMightContain",
+    "CmsEstimate", "VecDot", "VecL2Sq", "PqEncode", "PqAdc",
+    "UnaryKernel", "BinaryKernel", "TernaryKernel")
+
+  test("no expression case class under plans/ outside the kernel classes") {
+    val caseClass = "case class (\\w+)".r
+    val declared = for {
+      (_, text) <- mainSources if text.startsWith("package graft.plans")
+      m <- caseClass.findAllMatchIn(text)
+    } yield m.group(1)
+    val expressions = declared.filter(name =>
+      scala.util.Try(Class.forName(s"graft.plans.$name")).toOption
+        .exists(classOf[Expression].isAssignableFrom))
+    assert(expressions.toSet == kernelClasses,
+      s"one-line kernels belong in the kernel table: ${expressions.toSet -- kernelClasses}")
   }
 }
