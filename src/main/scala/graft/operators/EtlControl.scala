@@ -219,16 +219,18 @@ object EtlControl {
   }
 
   /** A parquet dir counts as present only when it has content — a
-    * pre-created empty directory (mktemp conventions) must behave like
+    * pre-created empty directory (mktemp conventions), or one holding
+    * only the `_temporary/` of a crashed first write, must behave like
     * a missing one, not crash parquet schema inference. */
-  private[operators] def nonEmptyDir(spark: SparkSession, dir: String): Boolean = {
+  private[graft] def nonEmptyDir(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // hidden (_/.-prefixed) entries — _SUCCESS, checksums — don't make a
-    // dir readable: Spark's file index skips them too
+    // hidden entries — _SUCCESS, _temporary, checksums — don't make a
+    // dir readable; Spark's file index skips them too, but keeps
+    // `_`-prefixed partition dirs (`__kb=3`)
     fs.exists(p) && fs.listStatus(p).exists { s =>
       val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".")
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
     }
   }
 
@@ -630,23 +632,8 @@ object EtlControl {
     val (nRows, newWm) =
       (stats.getLong(0), if (stats.isNullAt(1)) wm else stats.getLong(1))
     val nNew = stats.getLong(2)
-    if (nRows > 0) {
-      val fs = new org.apache.hadoop.fs.Path(targetDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val merged =
-        if (fs.exists(new org.apache.hadoop.fs.Path(targetDir))) {
-          val target = ParquetMeta.readParquet(spark, targetDir)
-          Incremental.upsert(target, delta.select(target.columns.map(col).toSeq: _*),
-            keys, order = Seq(col(tsCol)))
-        } else
-          // bootstrap load: the first window can already carry several
-          // versions of one key — same keep-last contract as the MERGE
-          Dedup.keepLast(delta, keys, Seq(col(tsCol)))
-      // merged reads the live target, so materialize to staging BEFORE
-      // the swap (atomicReplace stages for exactly this reason)
-      ParquetSink.atomicReplace(spark, targetDir)(
-        staging => merged.write.parquet(staging))
-    }
+    if (nRows > 0)
+      Incremental.mergeInto(spark, targetDir, delta, keys, Seq(col(tsCol)))
     // a cycle that saw only the replayed boundary rows commits as IDLE:
     // audit-visible, but excluded from the watermark read and from
     // expectedRowBounds (an idle period must not poison the row-count

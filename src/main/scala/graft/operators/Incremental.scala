@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.{ParquetMeta, ParquetSink}
 
 /** Incremental-load semantics: window filter, upsert/MERGE, delete+insert,
   * full replace, schema projection.
@@ -32,15 +34,12 @@ object Incremental {
 
   /** MERGE: rows from `updates` replace same-key rows in `base`; new keys
     * append. One union + one hash shuffle on `keys` (the keep-last
-    * window); no driver round-trips. `order` breaks intra-source
-    * duplicates (e.g. update_time); source precedence wins above it. */
+    * window); no driver round-trips. `order` decides between versions
+    * of a key (e.g. update_time or a sequence number); source precedence
+    * breaks its ties, so an update equal in `order` to a base row wins. */
   def upsert(base: DataFrame, updates: DataFrame, keys: Seq[String],
-      order: Seq[Column] = Nil): DataFrame = {
-    val cols = base.columns.toSeq
-    val tagged = base.select(cols.map(col): _*).withColumn("__src", lit(0))
-      .unionByName(updates.select(cols.map(col): _*).withColumn("__src", lit(1)))
-    Dedup.keepLast(tagged, keys, order :+ col("__src")).drop("__src")
-  }
+      order: Seq[Column] = Nil): DataFrame =
+    keepLastOf(base, updates, keys, order)(identity)
 
   /** [[upsert]] whose single window exchange is RANGE-partitioned on
     * the keys (range clusters equal keys exactly like hash), so the
@@ -51,13 +50,43 @@ object Incremental {
     * (asserted in OperatorsSpec); prefer plain [[upsert]] when the
     * output is consumed unordered. */
   def upsertOrdered(base: DataFrame, updates: DataFrame, keys: Seq[String],
-      order: Seq[Column] = Nil): DataFrame = {
+      order: Seq[Column] = Nil): DataFrame =
+    keepLastOf(base, updates, keys, order)(_.repartitionByRange(keys.map(col): _*))
+
+  /** `base` ∪ `updates` (projected onto `base`'s columns), each row
+    * tagged with its source, then keep-last on `keys` by `order` and
+    * the tag; `exchange` may re-partition the tagged rows first. */
+  private def keepLastOf(base: DataFrame, updates: DataFrame, keys: Seq[String],
+      order: Seq[Column])(exchange: DataFrame => DataFrame): DataFrame = {
     val cols = base.columns.toSeq
     val tagged = base.select(cols.map(col): _*).withColumn("__src", lit(0))
       .unionByName(updates.select(cols.map(col): _*).withColumn("__src", lit(1)))
-      .repartitionByRange(keys.map(col): _*)
-    Dedup.keepLast(tagged, keys, order :+ col("__src")).drop("__src")
+    Dedup.keepLast(exchange(tagged), keys, order :+ col("__src")).drop("__src")
   }
+
+  /** The keep-last rows of `updates` MERGEd into `target` by [[upsert]],
+    * or of `updates` alone when there is no target yet: a bootstrap load
+    * can already carry several versions of one key. */
+  private[graft] def mergeRows(target: Option[DataFrame], updates: DataFrame,
+      keys: Seq[String], order: Seq[Column]): DataFrame =
+    target.fold(Dedup.keepLast(updates, keys, order))(upsert(_, updates, keys, order))
+
+  /** MERGE `updates` into the keep-last parquet target at `targetDir`
+    * (misa_crm_loader.py:215-500 on a plain filesystem): one row per
+    * `keys`, the highest `order` winning and, on equal `order`, the
+    * update over the target row. An absent or empty target is
+    * bootstrapped from `updates`. The merged rows read the live target,
+    * so they are written to staging and published by
+    * [[graft.sources.ParquetSink.atomicReplace]], which rewrites the
+    * whole target; the presence test runs after its crash recovery has
+    * restored a target left aside by an interrupted swap. */
+  def mergeInto(spark: SparkSession, targetDir: String, updates: DataFrame,
+      keys: Seq[String], order: Seq[Column]): Unit =
+    ParquetSink.atomicReplace(spark, targetDir) { staging =>
+      val target = Some(targetDir).filter(EtlControl.nonEmptyDir(spark, _))
+        .map(ParquetMeta.readParquet(spark, _))
+      mergeRows(target, updates, keys, order).write.parquet(staging)
+    }
 
   /** Delete-by-key then insert (bridge refresh). The delta key set is
     * small relative to base → broadcast the anti-join side. */

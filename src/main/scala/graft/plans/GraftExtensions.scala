@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.SPARK_DOC_ROOT
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -31,15 +32,30 @@ object GraftExtensions {
 
   type Registration = (String, Class[_ <: Expression], Seq[Expression] => Expression)
 
+  /** `args` of a SQL call of `name`, which takes `n`: any other count
+    * fails analysis with Spark's WRONG_NUM_ARGS error, as a built-in
+    * function's call does. */
+  private[plans] def checkArity(name: String, n: Int,
+      args: Seq[Expression]): Seq[Expression] =
+    if (args.length == n) args
+    else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+      "functionName" -> s"`$name`", "expectedNum" -> n.toString,
+      "actualNum" -> args.length.toString, "docroot" -> SPARK_DOC_ROOT))
+
+  /** The registration of `name`, taking `n` arguments. */
+  private def row(name: String, cls: Class[_ <: Expression], n: Int)(
+      build: Seq[Expression] => Expression): Registration =
+    (name, cls, args => build(checkArity(name, n, args)))
+
   /** (SQL name, expression class, builder) of every registered function. */
   val functions: Seq[Registration] = Seq[Registration](
-    ("minhash_sig", classOf[MinHashSignature], a => MinHashSignature(a.head, 64, 42L)),
-    ("pq_encode", classOf[PqEncode], a => PqEncode(a(0), a(1), int(a(2)), int(a(3)))),
-    ("pq_adc", classOf[PqAdc], a => PqAdc(a(0), a(1), int(a(2)))),
-    ("bloom_might_contain", classOf[BloomMightContain], a => BloomMightContain(a(0), a(1))),
-    ("cms_estimate", classOf[CmsEstimate], a => CmsEstimate(a(0), a(1))),
-    ("vec_dot", classOf[VecDot], a => VecDot(a(0), a(1))),
-    ("vec_l2sq", classOf[VecL2Sq], a => VecL2Sq(a(0), a(1)))) ++
+    row("minhash_sig", classOf[MinHashSignature], 1)(a => MinHashSignature(a(0), 64, 42L)),
+    row("pq_encode", classOf[PqEncode], 4)(a => PqEncode(a(0), a(1), int(a(2)), int(a(3)))),
+    row("pq_adc", classOf[PqAdc], 3)(a => PqAdc(a(0), a(1), int(a(2)))),
+    row("bloom_might_contain", classOf[BloomMightContain], 2)(a => BloomMightContain(a(0), a(1))),
+    row("cms_estimate", classOf[CmsEstimate], 2)(a => CmsEstimate(a(0), a(1))),
+    row("vec_dot", classOf[VecDot], 2)(a => VecDot(a(0), a(1))),
+    row("vec_l2sq", classOf[VecL2Sq], 2)(a => VecL2Sq(a(0), a(1)))) ++
     kernels.map(k => (k.name, k.exprClass, k.build _))
 
   /** True when the active session registered graft's SQL functions. */

@@ -23,8 +23,13 @@ sealed abstract class Kernel(val name: String, val dataType: DataType,
   /** The expression class of this row's calls, for the SQL registry. */
   def exprClass: Class[_ <: Expression]
 
-  /** This row applied to the arguments of a SQL call. */
+  /** This row applied to the arguments of a SQL call; a call with
+    * another number of arguments than the row takes fails analysis. */
   def build(args: Seq[Expression]): Expression
+
+  /** `args`, checked to number `n` (Spark's WRONG_NUM_ARGS otherwise). */
+  protected def arity(n: Int, args: Seq[Expression]): Seq[Expression] =
+    GraftExtensions.checkArity(name, n, args)
 
   /** The generated statement computing `ev` from the argument values. */
   def code(ctx: CodegenContext, ev: ExprCode, args: String*): String = {
@@ -51,7 +56,7 @@ final class Kernel1[A](name: String, dataType: DataType, body: String,
   def apply(child: Expression): Expression = UnaryKernel(this, child)
   def eval(a: Any): Any = f(a.asInstanceOf[A])
   def exprClass: Class[_ <: Expression] = classOf[UnaryKernel]
-  def build(args: Seq[Expression]): Expression = apply(args.head)
+  def build(args: Seq[Expression]): Expression = apply(arity(1, args).head)
 }
 
 final class Kernel2[A, B](name: String, dataType: DataType, body: String,
@@ -60,7 +65,8 @@ final class Kernel2[A, B](name: String, dataType: DataType, body: String,
   def apply(left: Expression, right: Expression): Expression = BinaryKernel(this, left, right)
   def eval(a: Any, b: Any): Any = f(a.asInstanceOf[A], b.asInstanceOf[B])
   def exprClass: Class[_ <: Expression] = classOf[BinaryKernel]
-  def build(args: Seq[Expression]): Expression = apply(args(0), args(1))
+  def build(args: Seq[Expression]): Expression =
+    arity(2, args) match { case Seq(a, b) => apply(a, b) }
 }
 
 final class Kernel3[A, B, C](name: String, dataType: DataType, body: String,
@@ -71,7 +77,8 @@ final class Kernel3[A, B, C](name: String, dataType: DataType, body: String,
   def eval(a: Any, b: Any, c: Any): Any =
     f(a.asInstanceOf[A], b.asInstanceOf[B], c.asInstanceOf[C])
   def exprClass: Class[_ <: Expression] = classOf[TernaryKernel]
-  def build(args: Seq[Expression]): Expression = apply(args(0), args(1), args(2))
+  def build(args: Seq[Expression]): Expression =
+    arity(3, args) match { case Seq(a, b, c) => apply(a, b, c) }
 }
 
 /** A call of a [[Kernel]] row. It keeps the arity class's null-safe

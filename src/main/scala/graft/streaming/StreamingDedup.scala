@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+
+import graft.operators.{CacheRegistry, EtlControl, TextDedup}
 
 /** The reference's 15-minute incremental micro-batch DAG
   * (dags/incremental_etl_dag.py) re-expressed as Structured Streaming:
@@ -179,10 +181,7 @@ object StreamingDedup {
       (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val spark = batch.sparkSession
         import org.apache.spark.sql.functions.{col, lit, max, min}
-        val fs = new org.apache.hadoop.fs.Path(corpusDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val corpusExists = fs.exists(new org.apache.hadoop.fs.Path(corpusDir)) &&
-          fs.listStatus(new org.apache.hadoop.fs.Path(corpusDir)).nonEmpty
+        val corpusExists = EtlControl.nonEmptyDir(spark, corpusDir)
         // the anti join only guards against ids ALREADY IN the corpus;
         // duplicate ids arriving within one micro-batch (routine under
         // at-least-once sources) would all survive it and append
@@ -280,58 +279,13 @@ object StreamingDedup {
     * pre-crash prior. The reverse tear (output landed, store did not)
     * heals because the store append recomputes from the full delivered
     * batch, not the guarded remainder. */
-  def continuousChunkDedup(docs: org.apache.spark.sql.DataFrame,
+  def continuousChunkDedup(docs: DataFrame,
       outDir: String, storeDir: String, idCol: String, textCol: String,
-      chunkTokens: Int = 10):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.outputMode("append").foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.functions.col
-        import graft.operators.TextDedup
-        def nonEmptyDir(dir: String): Boolean = {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.exists(p) && fs.listStatus(p).nonEmpty
-        }
-        val batchD = batch.dropDuplicates(Seq(idCol))
-        val guarded =
-          if (!nonEmptyDir(outDir)) batchD
-          else batchD.join(spark.read.parquet(outDir).select(col(idCol)),
-            Seq(idCol), "left_anti")
-        try {
-        if (!guarded.isEmpty) {
-          // prior = the store MINUS rows introduced by docs this batch
-          // is (re)processing — restores the pre-crash prior when a
-          // torn run appended hashes but never published the docs
-          val prior =
-            if (!nonEmptyDir(storeDir)) null
-            else spark.read.parquet(storeDir)
-              .join(guarded.select(col(idCol).as("doc_id")),
-                Seq("doc_id"), "left_anti")
-          TextDedup.chunkDedupAgainst(guarded, idCol, textCol,
-              chunkTokens, prior)
-            .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
-        }
-        // store maintenance from the FULL delivered batch (not the
-        // guard survivors): heals the output-landed/store-missed tear
-        val hashes = TextDedup.chunkHashes(batchD, idCol, textCol, chunkTokens)
-        val newHashes =
-          if (!nonEmptyDir(storeDir)) hashes
-          else hashes.join(
-            spark.read.parquet(storeDir).select(col("chunk_hash")),
-            Seq("chunk_hash"), "left_anti")
-        if (!newHashes.isEmpty)
-          newHashes.write.mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(storeDir)
-        } finally {
-          // defensive: release anything an operator registered this
-          // batch (the chunk path no longer caches, but a long-lived
-          // stream must never accumulate registry entries)
-          graft.operators.CacheRegistry.releaseAll()
-        }
-        ()
-    }
+      chunkTokens: Int = 10): DataStreamWriter[Row] =
+    continuousSpanDedup(docs, outDir, storeDir, idCol, "chunk_hash")(
+      TextDedup.chunkHashes(_, idCol, textCol, chunkTokens),
+      TextDedup.chunkDedupAgainst(_, idCol, textCol, chunkTokens, _),
+      _ => ())
 
   /** CONTINUOUS any-alignment substring dedup — the sliding-window
     * twin of [[continuousChunkDedup]], same store/output dual-write
@@ -342,56 +296,65 @@ object StreamingDedup {
     * window-hash store carries a `hash_flavor` marker, and every batch
     * FAILS FAST on a store written under another flavor (an older
     * build's "string" hashes) — see `substringDedupAgainst`. */
-  def continuousSubstringDedup(docs: org.apache.spark.sql.DataFrame,
+  def continuousSubstringDedup(docs: DataFrame,
       outDir: String, storeDir: String, idCol: String, textCol: String,
-      spanTokens: Int = 50):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      spanTokens: Int = 50): DataStreamWriter[Row] =
+    continuousSpanDedup(docs, outDir, storeDir, idCol, "window_hash")(
+      TextDedup.windowHashes(_, idCol, textCol, spanTokens),
+      TextDedup.substringDedupAgainst(_, idCol, textCol, spanTokens, _),
+      // mergeSchema: a store whose older files predate the hash_flavor
+      // marker is a mixed-schema store; a plain read may pick a
+      // markerless file's schema and skip the check (legacy rows then
+      // surface as accepted nulls)
+      spark => TextDedup.checkWindowHashFlavor(
+        spark.read.option("mergeSchema", "true").parquet(storeDir)))
+
+  /** The span-dedup protocol both continuous sinks run per micro-batch,
+    * with `hashes` (a batch's doc-tagged store rows, one per `hashCol`
+    * value) and `dedupAgainst` (the deduped docs of a batch against a
+    * prior store, or null for none) as its operator. `checkStore` runs
+    * on a present store before anything is written, even when the
+    * batch is fully redelivered, so the hash-append path cannot mix
+    * flavors either. */
+  private def continuousSpanDedup(docs: DataFrame, outDir: String,
+      storeDir: String, idCol: String, hashCol: String)(
+      hashes: DataFrame => DataFrame,
+      dedupAgainst: (DataFrame, DataFrame) => DataFrame,
+      checkStore: SparkSession => Unit): DataStreamWriter[Row] =
     docs.writeStream.outputMode("append").foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      (batch: Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
         import org.apache.spark.sql.functions.col
-        import graft.operators.TextDedup
-        def nonEmptyDir(dir: String): Boolean = {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.exists(p) && fs.listStatus(p).nonEmpty
-        }
+        def store: Option[DataFrame] = Some(storeDir)
+          .filter(EtlControl.nonEmptyDir(spark, _)).map(spark.read.parquet(_))
         val batchD = batch.dropDuplicates(Seq(idCol))
         val guarded =
-          if (!nonEmptyDir(outDir)) batchD
+          if (!EtlControl.nonEmptyDir(spark, outDir)) batchD
           else batchD.join(spark.read.parquet(outDir).select(col(idCol)),
             Seq(idCol), "left_anti")
         try {
-          // flavor check runs even when guarded is empty — the
-          // hash-append path below must not mix flavors either.
-          // mergeSchema: a store whose older files predate the
-          // hash_flavor marker is a mixed-schema store; a plain read
-          // may pick a markerless file's schema and skip the check
-          // (legacy rows then surface as accepted nulls)
-          if (nonEmptyDir(storeDir))
-            TextDedup.checkWindowHashFlavor(
-              spark.read.option("mergeSchema", "true").parquet(storeDir))
+          if (EtlControl.nonEmptyDir(spark, storeDir)) checkStore(spark)
           if (!guarded.isEmpty) {
-            val prior =
-              if (!nonEmptyDir(storeDir)) null
-              else spark.read.parquet(storeDir)
-                .join(guarded.select(col(idCol).as("doc_id")),
-                  Seq("doc_id"), "left_anti")
-            TextDedup.substringDedupAgainst(guarded, idCol, textCol,
-                spanTokens, prior)
-              .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(outDir)
+            // prior = the store MINUS rows introduced by docs this batch
+            // is (re)processing — restores the pre-crash prior when a
+            // torn run appended hashes but never published the docs
+            val prior = store.map(_.join(
+              guarded.select(col(idCol).as("doc_id")), Seq("doc_id"),
+              "left_anti")).orNull
+            dedupAgainst(guarded, prior)
+              .write.mode(SaveMode.Append).parquet(outDir)
           }
-          val hashes = TextDedup.windowHashes(batchD, idCol, textCol, spanTokens)
-          val newHashes =
-            if (!nonEmptyDir(storeDir)) hashes
-            else hashes.join(
-              spark.read.parquet(storeDir).select(col("window_hash")),
-              Seq("window_hash"), "left_anti")
+          // store maintenance from the FULL delivered batch (not the
+          // guard survivors): heals the output-landed/store-missed tear
+          val newHashes = store.fold(hashes(batchD))(s =>
+            hashes(batchD).join(s.select(col(hashCol)), Seq(hashCol), "left_anti"))
           if (!newHashes.isEmpty)
-            newHashes.write.mode(org.apache.spark.sql.SaveMode.Append)
-              .parquet(storeDir)
+            newHashes.write.mode(SaveMode.Append).parquet(storeDir)
         } finally {
-          graft.operators.CacheRegistry.releaseAll()
+          // defensive: release anything an operator registered this
+          // batch (the span paths no longer cache, but a long-lived
+          // stream must never accumulate registry entries)
+          CacheRegistry.releaseAll()
         }
         ()
     }

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.{Dedup, Incremental}
+import graft.operators.{EtlControl, Incremental}
 
 /** Write-side of the streaming incremental path: each micro-batch is
   * MERGEd into a keep-last parquet target — the streaming form of the
@@ -12,11 +12,13 @@ import graft.operators.{Dedup, Incremental}
   * the same MERGE once per 15-min Airflow tick; foreachBatch runs it
   * per micro-batch with exactly the same batch semantics).
   *
-  * Exactness: the sink upserts on the business key with a sequence
-  * column deciding the winner, so replays of an at-least-once source
-  * batch are idempotent — the target equals the batch keep-last of the
-  * whole feed (asserted in StreamingSinkSpec), which is the
-  * "exactness-preserving" contract a lake MERGE needs.
+  * Exactness: both upsert sinks merge through `Incremental`'s keep-last
+  * MERGE, the one the ETL cycle runs: the highest sequence number wins
+  * per business key, and on an equal one the later delivery wins. So
+  * replays of an at-least-once source batch are idempotent — the target
+  * equals the batch keep-last of the whole feed (asserted in
+  * StreamingSinkSpec), which is the "exactness-preserving" contract a
+  * lake MERGE needs.
   *
   * Scale: [[upsertSinkPartitioned]] rewrites only the key-hash
   * partition directories a batch touches (dynamic partition
@@ -26,6 +28,21 @@ import graft.operators.{Dedup, Incremental}
   * Delta/Iceberg MERGE would replace on a lakehouse.
   */
 object StreamingSink {
+
+  /** foreachBatch sink writing `artifact(batch)` as one file under
+    * `artifactDir/batch_id=<id>`: a replayed batch OVERWRITES its own
+    * directory, so the artifact log stays correct under foreachBatch's
+    * at-least-once contract. */
+  private def perBatchArtifact(updates: DataFrame, artifactDir: String)(
+      artifact: DataFrame => DataFrame): DataStreamWriter[Row] =
+    updates.writeStream
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        artifact(batch).coalesce(1)
+          .write.mode("overwrite").parquet(s"$artifactDir/batch_id=$batchId")
+        ()
+      }
 
   /** Sketch-artifact sink — the streaming producer of
     * [[graft.operators.Stats.sketchArtifacts]]: each micro-batch
@@ -38,16 +55,9 @@ object StreamingSink {
     * counts without touching the event stream again, the streaming
     * half of SURVEY §2 row 38. */
   def sketchArtifactSink(updates: DataFrame, artifactDir: String,
-      keyCol: String, distinctCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    updates.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Stats.sketchArtifacts(batch, keyCol, distinctCol)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$artifactDir/batch_id=$batchId")
-        ()
-      }
+      keyCol: String, distinctCol: String): DataStreamWriter[Row] =
+    perBatchArtifact(updates, artifactDir)(
+      graft.operators.Stats.sketchArtifacts(_, keyCol, distinctCol))
 
   /** Count-min-sketch artifact sink — the streaming producer of
     * [[graft.operators.HeavyHitters]] state (SURVEY §7's round-7
@@ -65,18 +75,10 @@ object StreamingSink {
   def cmsArtifactSink(updates: DataFrame, artifactDir: String,
       keys: Seq[String], eps: Double = graft.operators.HeavyHitters.DefaultEps,
       confidence: Double = graft.operators.HeavyHitters.DefaultConfidence)
-      : DataStreamWriter[org.apache.spark.sql.Row] =
-    updates.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.HeavyHitters
-          .sketchAndCount(batch, keys, eps, confidence)
-          .where(col("sketch").isNotNull) // empty batch → no artifact row
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$artifactDir/batch_id=$batchId")
-        ()
-      }
+      : DataStreamWriter[Row] =
+    perBatchArtifact(updates, artifactDir)(
+      graft.operators.HeavyHitters.sketchAndCount(_, keys, eps, confidence)
+        .where(col("sketch").isNotNull)) // empty batch → no artifact row
 
   /** Profile-artifact sink — the streaming producer of
     * [[graft.operators.Validate.profileByKey]] artifacts: each
@@ -89,52 +91,27 @@ object StreamingSink {
     * batches' artifacts — no event rescan, the same
     * artifact-not-rescan discipline as the HLL and CMS sinks. */
   def profileArtifactSink(updates: DataFrame, artifactDir: String,
-      keyCol: String, valCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    updates.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Validate.profileByKey(batch, keyCol, valCol)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$artifactDir/batch_id=$batchId")
-        ()
-      }
+      keyCol: String, valCol: String): DataStreamWriter[Row] =
+    perBatchArtifact(updates, artifactDir)(
+      graft.operators.Validate.profileByKey(_, keyCol, valCol))
 
-  /** Attach a foreachBatch upsert sink to `updates`. `targetDir` is
-    * created on first batch; subsequent batches merge on `keyCols`
-    * keep-last by `seqCol`. Rewrites the WHOLE target per batch — the
-    * simplest stand-in; [[upsertSinkPartitioned]] is the scale-shaped
-    * variant that rewrites only touched key-buckets. */
+  /** Attach a foreachBatch upsert sink to `updates`: each micro-batch
+    * is one [[graft.operators.Incremental.mergeInto]] of the batch into
+    * `targetDir` on `keyCols`, keep-last by `seqCol` — the first batch
+    * creates the target, a stale replayed row loses to the target's
+    * newer one, and on an equal `seqCol` the batch's row wins. Rewrites
+    * the WHOLE target per batch, published by
+    * `ParquetSink.atomicReplace` (no crash point leaves the target
+    * missing) — the simplest stand-in; [[upsertSinkPartitioned]] is the
+    * scale-shaped variant that rewrites only touched key-buckets. */
   def upsertSink(spark: SparkSession, updates: DataFrame,
-      targetDir: String, keyCols: Seq[String], seqCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      targetDir: String, keyCols: Seq[String], seqCol: String): DataStreamWriter[Row] =
     updates.writeStream
       .outputMode("update")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(targetDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val dst = new org.apache.hadoop.fs.Path(targetDir)
-        // keep-last WITHIN the batch first (a batch can carry several
-        // versions of one key), then merge against the target.
-        val batchWinners =
-          Dedup.keepLast(batch, keyCols, Seq(col(seqCol)))
-        val merged =
-          if (fs.exists(dst)) {
-            val target = spark.read.parquet(targetDir)
-            // seq-aware upsert: existing target rows win over STALE
-            // update rows (replayed batches), new seqs win over old.
-            Dedup.keepLast(
-              target.unionByName(batchWinners), keyCols, Seq(col(seqCol)))
-          } else batchWinners
-        // parquet has no transactional MERGE — stage, move the old
-        // copy aside, publish, delete last (ParquetSink.atomicReplace):
-        // no crash point leaves the target missing; the residual
-        // non-atomic window is the aside+publish rename pair, the best
-        // a plain FS offers (a lakehouse table format would make this
-        // a metadata commit instead).
-        graft.sources.ParquetSink.atomicReplace(spark, targetDir)(
-          staging => merged.write.parquet(staging))
+        Incremental.mergeInto(batch.sparkSession, targetDir, batch, keyCols,
+          Seq(col(seqCol)))
         ()
       }
 
@@ -145,35 +122,31 @@ object StreamingSink {
     * present in the written frame, so untouched buckets stay
     * byte-identical on disk (asserted in StreamingSinkSpec). Per-batch
     * cost is O(touched-buckets / nBuckets of the target), not
-    * O(target): the partition-pruned read of touched buckets + the
-    * same seq-aware keep-last merge. The merged frame is
-    * localCheckpoint-ed to break lineage before overwriting the
-    * directories it was read from. Reads of the target see an extra
-    * `__kb` int column (drop it, or read through [[readPartitioned]]). */
+    * O(target): the partition-pruned read of touched buckets, merged
+    * with the batch by the same keep-last MERGE as [[upsertSink]]
+    * (`Incremental.upsert`, so the tie rule is the same too). The
+    * merged frame is localCheckpoint-ed to break lineage before
+    * overwriting the directories it was read from. Reads of the target
+    * see an extra `__kb` int column (drop it, or read through
+    * [[readPartitioned]]). */
   def upsertSinkPartitioned(spark: SparkSession, updates: DataFrame,
       targetDir: String, keyCols: Seq[String], seqCol: String,
-      nBuckets: Int = 32): DataStreamWriter[org.apache.spark.sql.Row] =
+      nBuckets: Int = 32): DataStreamWriter[Row] =
     updates.writeStream
       .outputMode("update")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(targetDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bucketOf = pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets.toLong))
-          .cast("int")
-        val batchWinners = Dedup.keepLast(batch, keyCols, Seq(col(seqCol)))
-          .withColumn("__kb", bucketOf)
-        val exists = fs.exists(new org.apache.hadoop.fs.Path(targetDir))
-        val merged =
-          if (exists) {
-            val touched = batchWinners.select("__kb").distinct()
+        val keyed = batch.withColumn("__kb",
+          pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets.toLong)).cast("int"))
+        val existing = Some(targetDir).filter(EtlControl.nonEmptyDir(spark, _))
+          .map { dir =>
+            val touched = keyed.select("__kb").distinct()
               .collect().map(_.getInt(0)).toSeq // bounded by nBuckets
-            val existing = spark.read.parquet(targetDir)
+            spark.read.parquet(dir)
               .where(col("__kb").isin(touched: _*)) // partition-pruned
-            Dedup.keepLast(existing.unionByName(batchWinners),
-              keyCols, Seq(col(seqCol)))
-          } else batchWinners
+          }
+        val merged = Incremental.mergeRows(existing, keyed, keyCols, Seq(col(seqCol)))
         // checkpoint breaks lineage from the directories being
         // overwritten; its RDD-level blocks are freed after the write
         // (a stream of N batches must not accumulate N checkpoints)

@@ -18,6 +18,25 @@ class GraftExtensionsSpec extends SparkTestBase {
     // and usable from plain SQL
     val r = spark.sql("SELECT simhash64(array(1L, 2L, 3L)) AS fp").head().getLong(0)
     assert(r != 0L)
+    // a call with the wrong number of arguments fails analysis, naming
+    // the function and its arity: a Kernel1, Kernel2 and Kernel3 row and
+    // a hand-written registration, each with one too many and one too few
+    Seq("token_count('a b', 'extra')" -> ("token_count", 1, 2),
+      "token_count()" -> ("token_count", 1, 0),
+      "classifier_milli('a', 8, 3)" -> ("classifier_milli", 2, 3),
+      "classifier_milli('a')" -> ("classifier_milli", 2, 1),
+      "text_gate('a', 0.5D, 0.5D, 3)" -> ("text_gate", 3, 4),
+      "text_gate('a', 0.5D)" -> ("text_gate", 3, 2),
+      "vec_dot(array(1.0D), array(1.0D), array(1.0D))" -> ("vec_dot", 2, 3),
+      "vec_dot(array(1.0D))" -> ("vec_dot", 2, 1)).foreach {
+      case (call, (name, arity, actual)) =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          spark.sql(s"SELECT $call").collect())
+        assert(e.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", call)
+        assert(e.getMessageParameters.get("functionName") == s"`$name`", call)
+        assert(e.getMessageParameters.get("expectedNum") == arity.toString, call)
+        assert(e.getMessageParameters.get("actualNum") == actual.toString, call)
+    }
   }
 
   test("native minhash_sig ≡ HOF signature on the corpus") {

@@ -511,4 +511,30 @@ class StreamingDedupSpec extends SparkTestBase {
       .where(col("count") > 1)
     assert(dup.isEmpty, "no duplicate store hashes")
   }
+
+  test("continuousChunkDedup: an output dir holding only a crashed write's _temporary/ is absent") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    def tmp(p: String): String =
+      java.nio.file.Files.createTempDirectory(p).toString
+    val out = tmp("ccd-tmp-out") + "/docs"
+    val store = tmp("ccd-tmp-store") + "/hashes"
+    // what a first append that crashed before its job commit leaves
+    assert(new java.io.File(out + "/_temporary/0").mkdirs())
+    val docs = Tables.load(spark, sf0001, "documents")
+      .select("doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+      .take(20)
+    val input = MemoryStream[(Long, String)]
+    val query = StreamingDedup.continuousChunkDedup(
+        input.toDF().toDF("doc_id", "text"), out, store, "doc_id", "text")
+      .option("checkpointLocation", tmp("ccd-tmp-ckpt"))
+      .start()
+    try {
+      input.addData(docs.toSeq: _*)
+      query.processAllAvailable()
+    } finally query.stop()
+    assert(spark.read.parquet(out).select("doc_id").as[Long].collect().sorted.toSeq ==
+      docs.map(_._1).toSeq)
+  }
 }

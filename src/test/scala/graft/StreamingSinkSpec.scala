@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Incremental}
 import graft.streaming.StreamingDedup.Upd
 import graft.streaming.StreamingSink
 
@@ -114,6 +114,54 @@ class StreamingSinkSpec extends SparkTestBase {
     (before.keySet - touched.head).foreach { k =>
       assert(before(k) == after(k), s"bucket $k was rewritten")
     }
+  }
+
+  /** The MERGE-agreement feed: new keys, a higher-seq update, a stale
+    * replay that must lose, and a later delivery repeating a target
+    * row's key and seq with another payload, which must win. */
+  private val mergeFeed = Seq(
+    Seq(Upd(1L, 1L, "created", 10.0), Upd(2L, 1L, "created", 5.0)),
+    Seq(Upd(1L, 2L, "paid", 12.0), Upd(3L, 1L, "created", 7.0)),
+    Seq(Upd(1L, 1L, "created", 10.0)),
+    Seq(Upd(2L, 1L, "cancelled", 0.0)))
+
+  private def tmpTarget(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
+
+  test("one MERGE: mergeInto, upsertSink and upsertSinkPartitioned keep the same rows") {
+    import spark.implicits._
+    val direct = tmpTarget("graft_merge")
+    mergeFeed.foreach(b => Incremental.mergeInto(spark, direct, b.toDF(),
+      Seq("key"), Seq(col("seq"))))
+    // one query per batch, so every batch is its own delivery
+    val whole = tmpTarget("graft_sink")
+    mergeFeed.foreach(b => runBatches(whole, Seq(b)))
+    val bucketed = tmpTarget("graft_psink")
+    mergeFeed.foreach(b => runPartitionedBatches(bucketed, Seq(b), nBuckets = 4))
+
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Upd] = df.as[Upd].collect().toSet
+    val want = Set(Upd(1L, 2L, "paid", 12.0), Upd(2L, 1L, "cancelled", 0.0),
+      Upd(3L, 1L, "created", 7.0))
+    assert(rows(spark.read.parquet(direct)) == want, "mergeInto")
+    assert(rows(spark.read.parquet(whole)) == want, "upsertSink")
+    assert(rows(StreamingSink.readPartitioned(spark, bucketed)) == want,
+      "upsertSinkPartitioned")
+  }
+
+  test("mergeInto: a target left aside by an interrupted swap is merged into, not replaced") {
+    import spark.implicits._
+    val target = tmpTarget("graft_merge_aside")
+    Incremental.mergeInto(spark, target, mergeFeed.head.toDF(), Seq("key"),
+      Seq(col("seq")))
+    // a crash between atomicReplace's move-aside and its publish
+    val fs = new org.apache.hadoop.fs.Path(target)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new org.apache.hadoop.fs.Path(target),
+      new org.apache.hadoop.fs.Path(target + "__old_crashed")))
+    Incremental.mergeInto(spark, target, Seq(Upd(3L, 1L, "created", 7.0)).toDF(),
+      Seq("key"), Seq(col("seq")))
+    assert(spark.read.parquet(target).as[Upd].collect().map(_.key).sorted.toSeq ==
+      Seq(1L, 2L, 3L))
   }
 
   test("sketch-artifact sink: merged artifacts equal exact distincts; replay-safe") {
