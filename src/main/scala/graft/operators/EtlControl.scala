@@ -226,12 +226,9 @@ object EtlControl {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // hidden entries — _SUCCESS, _temporary, checksums — don't make a
-    // dir readable; Spark's file index skips them too, but keeps
-    // `_`-prefixed partition dirs (`__kb=3`)
-    fs.exists(p) && fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
-    }
+    // dir readable
+    fs.exists(p) &&
+      fs.listStatus(p).exists(s => !ParquetMeta.isHidden(s.getPath.getName))
   }
 
   /** The live SUCCESS rows of `sourceId` in the log at `dir`, read on
@@ -523,9 +520,7 @@ object EtlControl {
         Validate.verdicts(expectations, row, 0))
       row.getLong(0)
     }
-    val fs = new org.apache.hadoop.fs.Path(targetDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(targetDir))) {
+    if (!nonEmptyDir(spark, targetDir)) {
       val n = gated()
       ParquetSink.atomicReplace(spark, targetDir)(
         staging => snapshot.write.parquet(staging))
@@ -588,6 +583,35 @@ object EtlControl {
     if (!failBeforeCommit)
       commitRun(spark, controlDir, sourceId, batchId, watermarkUs, n)
     (n, true)
+  }
+
+  /** Self-driving exactly-once APPEND cycle over a doc-id watermark,
+    * for stores that only grow ([[LshArtifact]], [[PostingsArtifact]]):
+    * read the watermark (−1 before the first commit) → the docs
+    * strictly above it (ids are unique, so no boundary replay is
+    * needed) → `append(delta, wm)`, which writes the rows the store
+    * does not hold yet ([[Incremental.newRows]] with a `> wm` window)
+    * and returns how many it counts as written → commit max(delta id).
+    * Returns that count, 0 without a job past the aggregate when no doc
+    * is above the watermark.
+    *
+    * Append-then-commit: a crash between them replays the window, and
+    * the guarded append turns the replay into appending only what the
+    * torn run missed. A replay that writes nothing still commits, so
+    * the watermark moves past it. `failBeforeCommit` stops before the
+    * commit — the worst-ordered crash, for the exactly-once specs. */
+  private[graft] def runAppendCycle(spark: SparkSession, controlDir: String,
+      sourceId: String, batchId: String, docs: DataFrame, idCol: String,
+      failBeforeCommit: Boolean)(append: (DataFrame, Long) => Long): Long = {
+    val wm = lastWatermarkMicros(spark, controlDir, sourceId, -1L)
+    val delta = docs.where(col(idCol) > wm)
+    val stats = delta.agg(count(lit(1)), max(col(idCol).cast("long"))).head()
+    if (stats.getLong(0) == 0L) return 0L
+    val written = append(delta, wm)
+    if (!failBeforeCommit)
+      commitRun(spark, controlDir, sourceId, batchId,
+        watermarkUs = stats.getLong(1), recordsLoaded = written)
+    written
   }
 
   /** One self-driving incremental cycle against a parquet target:

@@ -88,6 +88,22 @@ object Incremental {
       mergeRows(target, updates, keys, order).write.parquet(staging)
     }
 
+  /** The exactly-once guard of an append-only parquet store: the rows of
+    * `rows` whose `keys` the store at `storeDir` does not already hold
+    * among its rows matching `window`. A replayed or torn append then
+    * re-appends exactly what is missing. An absent or empty store holds
+    * nothing, so `rows` come back unchanged. `window` is a scan
+    * predicate the caller proves every matching store row satisfies
+    * (a doc-id replay window); on id-ranged append files the reader
+    * skips older files from their footer min/max. The store side keeps
+    * its duplicate keys: a left-anti join's result does not depend on
+    * them. */
+  private[graft] def newRows(spark: SparkSession, storeDir: String,
+      rows: DataFrame, keys: Seq[String], window: Column = lit(true)): DataFrame =
+    if (!EtlControl.nonEmptyDir(spark, storeDir)) rows
+    else rows.join(spark.read.parquet(storeDir).where(window)
+      .select(keys.map(col): _*), keys, "left_anti")
+
   /** Delete-by-key then insert (bridge refresh). The delta key set is
     * small relative to base → broadcast the anti-join side. */
   def deleteInsert(base: DataFrame, delta: DataFrame, keys: Seq[String]): DataFrame = {

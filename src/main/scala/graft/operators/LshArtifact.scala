@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,16 +12,15 @@ import org.apache.spark.sql.functions._
   * ONLY the day's new documents (watermark-scoped, pushed-down scan)
   * and the candidate self-join reads parquet.
   *
-  * Control-log contract (same ordering as [[EtlControl]]: write, then
-  * watermark): the watermark unit is the DOC ID high-water mark —
-  * unlike timestamps, ids are unique, so the window is strictly-above
-  * and no boundary replay is needed. The append itself is guarded by
-  * an anti join on the artifact's existing (doc, band) keys, so a
-  * crash between append and commit replays the window into a no-op
-  * (re-signed rows are dropped, never duplicated), and a TORN append —
-  * one that task-committed only some of a doc's band rows before the
-  * job died — is healed on replay, which appends exactly the missing
-  * (doc, band) rows — asserted in LshArtifactSpec.
+  * Exactly-once: [[refresh]] runs the doc-id watermark cycle every
+  * append-only store shares ([[EtlControl.runAppendCycle]]: append,
+  * then watermark), and its append goes through the shared guard
+  * ([[Incremental.newRows]]) on the (doc, band) key over the `doc > wm`
+  * window. A crash between append and commit replays the window into
+  * a no-op (re-signed rows are dropped, never duplicated), and a TORN
+  * append — one that task-committed only some of a doc's band rows
+  * before the job died — is healed on replay, which appends exactly
+  * the missing (doc, band) rows — asserted in LshArtifactSpec.
   */
 object LshArtifact {
 
@@ -32,88 +29,61 @@ object LshArtifact {
     * above it (a backfill-sized "batch") the probe joins shuffled. */
   val BroadcastNewSideMaxRows: Int = 4 << 20
 
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
-
   /** Sign any documents not yet in the artifact and append their band
-    * buckets; commit the new doc-id watermark. Returns the number of
-    * NEW documents signed — 0 on a replay or an unchanged corpus (the
+    * buckets; commit the new doc-id watermark
+    * ([[EtlControl.runAppendCycle]]). Returns the number of NEW
+    * documents signed — 0 on a replay or an unchanged corpus (the
     * "second run recomputes zero signatures" observable).
     *
     * `failBeforeCommit` stops after the append but before the
     * watermark commit — the worst-ordered crash, which the next run
-    * absorbs via the anti-join guard. */
+    * absorbs via the (doc, band) guard. */
   def refresh(spark: SparkSession, controlDir: String, artifactDir: String,
       sourceId: String, docs: DataFrame, idCol: String, textCol: String,
       batchId: String, numPerm: Int = 64, bands: Int = 16,
       shingleN: Int = 3, seed: Long = 42L, stop: Array[Long] = null,
-      failBeforeCommit: Boolean = false): Long = {
-    val wm = EtlControl.lastWatermarkMicros(spark, controlDir, sourceId, -1L)
-    val delta = docs.where(col(idCol) > wm)
-    val stats = delta.agg(count(lit(1)), max(col(idCol).cast("long"))).head()
-    val (n, newWm) = (stats.getLong(0),
-      if (stats.isNullAt(1)) wm else stats.getLong(1))
-    if (n == 0L) return 0L
-    val raw = delta.select(col(idCol).cast("long").as("doc"),
-      MinHashLSH.shingleHashes(col(textCol), shingleN).as("sh"))
-    val filtered =
-      if (stop == null || stop.isEmpty) raw
-      else raw.select(col("doc"),
-        filter(col("sh"), h => !array_contains(lit(stop), h)).as("sh"))
-    val bb = MinHashLSH.bandBucketsFromHashes(filtered, numPerm, bands,
-      seed, persistResult = false)
-    // replay guard at (doc, band) granularity, NOT doc presence: a
-    // crash mid-append can task-commit SOME of a doc's band rows
-    // (FileOutputCommitter v2 / death during job commit), and a
-    // doc-level guard would then skip the doc forever with a partial
-    // signature — silently losing candidate recall. Anti-joining on
-    // the (doc, band) key re-appends exactly the missing rows (each
-    // band_hash is a pure function of the text, so refills are
-    // bit-identical to what the torn run would have written) and is a
-    // no-op for complete docs. Parquet task commits are file-atomic,
-    // so a (doc, band) row is either fully present or absent — there
-    // is no sub-row tear to guard.
-    // every bb row has doc > wm, so artifact rows at or below the
-    // watermark can never match the guard — filter the guard scan to
-    // doc > wm. Appends are doc-ranged files (monotone ids), so the
-    // pushed filter zone-prunes the read to the torn replay window
-    // instead of the whole store (the r13 store-growth finding: the
-    // guard scan was the growth term, not recompute).
-    val toWrite =
-      if (!exists(spark, artifactDir)) bb
-      else bb.join(
-        spark.read.parquet(artifactDir).where(col("doc") > wm)
-          .select(col("doc"), col("band")).distinct(),
-        Seq("doc", "band"), "left_anti")
-    val staged = toWrite.persist()
-    try {
-      val written = staged.select(countDistinct(col("doc"))).head().getLong(0)
-      if (written > 0)
-        // range-sorted by doc so the replay guard's `doc > wm` read
-        // and the incremental probe's `doc > sinceId` slice zone-prune
-        // to the new files instead of scanning the whole artifact.
-        // COST ADJUDICATED (r15): the r14 bench's q66 +52 % suspicion
-        // pointed here, but this append (and the probe-count guard
-        // below in verifiedPairs) runs only on the artifact's FIRST
-        // build — the steady-state read path Bench times doesn't
-        // execute it, and the next clean window reproduced r13's
-        // 0.70 s (0.71) on code including this sort. Window noise;
-        // the sort stays as the zone-prune price on the refresh path.
-        staged.repartitionByRange(col("doc"))
-          .sortWithinPartitions("doc")
-          .write.mode(SaveMode.Append).parquet(artifactDir)
-      // a catch-up replay (n > 0 docs scanned, 0 written) still commits
-      // SUCCESS so the watermark advances past the replayed window —
-      // otherwise every later run would re-sign it forever
-      if (!failBeforeCommit)
-        EtlControl.commitRun(spark, controlDir, sourceId, batchId,
-          watermarkUs = newWm, recordsLoaded = written)
-      written
-    } finally { staged.unpersist(); () }
-  }
+      failBeforeCommit: Boolean = false): Long =
+    EtlControl.runAppendCycle(spark, controlDir, sourceId, batchId, docs,
+        idCol, failBeforeCommit) { (delta, wm) =>
+      val raw = delta.select(col(idCol).cast("long").as("doc"),
+        MinHashLSH.shingleHashes(col(textCol), shingleN).as("sh"))
+      val filtered =
+        if (stop == null || stop.isEmpty) raw
+        else raw.select(col("doc"),
+          filter(col("sh"), h => !array_contains(lit(stop), h)).as("sh"))
+      val bb = MinHashLSH.bandBucketsFromHashes(filtered, numPerm, bands,
+        seed, persistResult = false)
+      // replay guard at (doc, band) granularity, NOT doc presence: a
+      // crash mid-append can task-commit SOME of a doc's band rows
+      // (FileOutputCommitter v2 / death during job commit), and a
+      // doc-level guard would then skip the doc forever with a partial
+      // signature — silently losing candidate recall. Each band_hash is
+      // a pure function of the text, so refills are bit-identical to
+      // what the torn run would have written. Every bb row has
+      // doc > wm, so the guard reads only the artifact's `doc > wm`
+      // files (the r13 store-growth finding: the guard scan was the
+      // growth term, not recompute).
+      val staged = Incremental.newRows(spark, artifactDir, bb,
+        Seq("doc", "band"), col("doc") > wm).persist()
+      try {
+        val written = staged.select(countDistinct(col("doc"))).head().getLong(0)
+        if (written > 0)
+          // range-sorted by doc so the replay guard's `doc > wm` read
+          // and the incremental probe's `doc > sinceId` slice zone-prune
+          // to the new files instead of scanning the whole artifact.
+          // COST ADJUDICATED (r15): the r14 bench's q66 +52 % suspicion
+          // pointed here, but this append (and the probe-count guard
+          // below in verifiedPairs) runs only on the artifact's FIRST
+          // build — the steady-state read path Bench times doesn't
+          // execute it, and the next clean window reproduced r13's
+          // 0.70 s (0.71) on code including this sort. Window noise;
+          // the sort stays as the zone-prune price on the refresh path.
+          staged.repartitionByRange(col("doc"))
+            .sortWithinPartitions("doc")
+            .write.mode(SaveMode.Append).parquet(artifactDir)
+        written
+      } finally { staged.unpersist(); () }
+    }
 
   /** The persisted (doc, band, band_hash) frame. */
   def bandBuckets(spark: SparkSession, artifactDir: String): DataFrame =

@@ -1,7 +1,5 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,23 +27,19 @@ import org.apache.spark.sql.functions._
   * ([[TextDedup.prefixIndex]]'s argument needs the CURRENT global
   * frequency order).
   *
-  * Control-log contract (the [[LshArtifact]] ordering: append, then
-  * watermark): the watermark unit is the doc-id high-water mark. The
-  * artifact holds exactly ONE row per document (the shingle array),
-  * and parquet task commits are file-atomic, so a row is either fully
-  * present or absent — doc-presence anti-join is therefore a COMPLETE
-  * replay guard here (no sub-doc tear exists, unlike the per-band rows
-  * that forced [[LshArtifact]] to guard on (doc, band)). A crash
-  * between append and watermark commit replays the window into
-  * appending exactly the docs the torn run missed.
+  * Exactly-once: both refreshes run the doc-id watermark cycle every
+  * append-only store shares ([[EtlControl.runAppendCycle]]: append,
+  * then watermark) and guard their appends with
+  * [[Incremental.newRows]] over the doc-id window. The shingle
+  * artifact holds exactly ONE row per document, and parquet task
+  * commits are file-atomic, so a row is either fully present or absent
+  * — doc presence is therefore a COMPLETE replay guard here (no
+  * sub-doc tear exists, unlike the per-band rows that make
+  * [[LshArtifact]] guard on (doc, band)). A crash between append and
+  * watermark commit replays the window into appending exactly the docs
+  * the torn run missed.
   */
 object PostingsArtifact {
-
-  private def exists(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).nonEmpty
-  }
 
   /** Shingle any documents not yet in the artifact and append their
     * (doc, block, sz, shs) rows; commit the new doc-id watermark.
@@ -59,32 +53,26 @@ object PostingsArtifact {
   def refresh(spark: SparkSession, controlDir: String, artifactDir: String,
       sourceId: String, docs: DataFrame, idCol: String, textCol: String,
       blockCol: String, batchId: String, shingleN: Int = 3,
-      failBeforeCommit: Boolean = false): Long = {
-    val wm = EtlControl.lastWatermarkMicros(spark, controlDir, sourceId, -1L)
-    val delta = docs.where(col(idCol) > wm)
-    val stats = delta.agg(count(lit(1)), max(col(idCol).cast("long"))).head()
-    val (n, newWm) = (stats.getLong(0),
-      if (stats.isNullAt(1)) wm else stats.getLong(1))
-    if (n == 0L) return 0L
-    val base = delta.select(col(idCol).cast("long").as("doc"),
-        col(blockCol).as("block"),
-        TextDedup.shingleHashes64(col(textCol), shingleN).as("shs"))
-      .withColumn("sz", size(col("shs")).cast("long"))
-    val toWrite =
-      if (!exists(spark, artifactDir)) base
-      else base.join(
-        spark.read.parquet(artifactDir).select(col("doc")).distinct(),
-        Seq("doc"), "left_anti")
-    val staged = toWrite.persist()
+      failBeforeCommit: Boolean = false): Long =
+    EtlControl.runAppendCycle(spark, controlDir, sourceId, batchId, docs,
+        idCol, failBeforeCommit) { (delta, wm) =>
+      val base = delta.select(col(idCol).cast("long").as("doc"),
+          col(blockCol).as("block"),
+          TextDedup.shingleHashes64(col(textCol), shingleN).as("shs"))
+        .withColumn("sz", size(col("shs")).cast("long"))
+      appendNew(spark, artifactDir,
+        Incremental.newRows(spark, artifactDir, base, Seq("doc"), col("doc") > wm))
+    }
+
+  /** Appends `rows` to the store at `dir` (also when empty while the
+    * store is absent, so a store that saw a cycle is always readable)
+    * and returns their count. */
+  private def appendNew(spark: SparkSession, dir: String, rows: DataFrame): Long = {
+    val staged = rows.persist()
     try {
       val written = staged.count()
-      if (written > 0)
-        staged.write.mode(SaveMode.Append).parquet(artifactDir)
-      // a catch-up replay (n > 0 docs scanned, 0 written) still commits
-      // SUCCESS so the watermark advances past the replayed window
-      if (!failBeforeCommit)
-        EtlControl.commitRun(spark, controlDir, sourceId, batchId,
-          watermarkUs = newWm, recordsLoaded = written)
+      if (written > 0 || !EtlControl.nonEmptyDir(spark, dir))
+        staged.write.mode(SaveMode.Append).parquet(dir)
       written
     } finally { staged.unpersist(); () }
   }
@@ -138,30 +126,14 @@ object PostingsArtifact {
       failBeforeCommit: Boolean = false): Long = {
     refresh(spark, controlDir, artifactDir, s"$sourceId#shs", docs,
       idCol, textCol, blockCol, batchId, shingleN)
-    val wm = EtlControl.lastWatermarkMicros(spark, controlDir,
-      s"$sourceId#pairs", -1L)
-    val stats = docs.agg(max(col(idCol).cast("long"))).head()
-    val newWm = if (stats.isNullAt(0)) wm else stats.getLong(0)
-    if (newWm <= wm) return 0L
-    val batch = pairs(spark, artifactDir, minJaccard, sinceId = wm)
-    val toWrite =
-      if (!exists(spark, pairsDir)) batch
-      else batch.join(
-        spark.read.parquet(pairsDir).select("doc_a", "doc_b"),
-        Seq("doc_a", "doc_b"), "left_anti")
-    val staged = toWrite.persist()
-    try {
-      val written = staged.count()
-      // bootstrap writes even an EMPTY frame: the pair table must be
-      // readable (schema'd) after the first cycle — a corpus with no
-      // qualifying pairs is a legal state, not a missing artifact
-      if (written > 0 || !exists(spark, pairsDir))
-        staged.write.mode(SaveMode.Append).parquet(pairsDir)
-      if (!failBeforeCommit)
-        EtlControl.commitRun(spark, controlDir, s"$sourceId#pairs", batchId,
-          watermarkUs = newWm, recordsLoaded = written)
-      written
-    } finally { staged.unpersist(); () }
+    // a pair in the batch touches a doc above wm and has doc_a < doc_b,
+    // so its doc_b is above wm: the guard reads only those store rows
+    EtlControl.runAppendCycle(spark, controlDir, s"$sourceId#pairs", batchId,
+        docs, idCol, failBeforeCommit) { (_, wm) =>
+      appendNew(spark, pairsDir, Incremental.newRows(spark, pairsDir,
+        pairs(spark, artifactDir, minJaccard, sinceId = wm),
+        Seq("doc_a", "doc_b"), col("doc_b") > wm))
+    }
   }
 
   /** The persisted (doc_a, doc_b, jaccard) frame. */

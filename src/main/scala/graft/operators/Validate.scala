@@ -187,12 +187,6 @@ object Validate {
       .orderBy("expectation", "column")
   }
 
-  /** Referential-integrity gate: the rate of non-null child keys with
-    * no matching parent key must be ≤ maxOrphanRate (nulls are not FK
-    * violations — SQL FK semantics). Same report schema as [[check]],
-    * so the rows union into one quality report. One anti-join on the
-    * key — shuffled on both sides at scale, AQE-skew-splittable;
-    * Catalyst broadcasts the parent side when it is small. */
   /** Per-key statistical profile in ONE aggregate pass: row count,
     * null count, mean and sample-stddev of `valCol` — the persistable
     * per-batch artifact a drift monitor compares across loads (the
@@ -238,6 +232,12 @@ object Validate {
           col("rel_mean_shift") > relTol)
   }
 
+  /** Referential-integrity gate: the rate of non-null child keys with
+    * no matching parent key must be ≤ maxOrphanRate (nulls are not FK
+    * violations — SQL FK semantics). Same report schema as [[check]],
+    * so the rows union into one quality report. One anti-join on the
+    * key — shuffled on both sides at scale, AQE-skew-splittable;
+    * Catalyst broadcasts the parent side when it is small. */
   def checkFk(child: DataFrame, parent: DataFrame,
       childKey: String, parentKey: String,
       maxOrphanRate: Double = 0.0): DataFrame = {

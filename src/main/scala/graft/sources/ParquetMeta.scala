@@ -51,9 +51,16 @@ import org.apache.spark.sql.types._
   */
 object ParquetMeta {
 
+  /** Spark's file-index rule for names that hold no table data:
+    * metadata and in-flight entries (`_SUCCESS`, `_temporary`, `.crc`
+    * checksums). A `_`-prefixed name containing `=` is a partition
+    * directory (`__kb=3`) and stays visible. */
+  private[graft] def isHidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+
   /** Data files under `path` (recursively), or `path` itself if a
-    * file. Hidden/metadata entries (`_SUCCESS`, `.crc`, …) excluded —
-    * the same filter FileIndex applies when planning a scan. */
+    * file. Hidden/metadata entries ([[isHidden]]) excluded — the same
+    * filter FileIndex applies when planning a scan. */
   def listDataFiles(spark: SparkSession, path: String): Seq[Path] = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(path)
@@ -62,10 +69,7 @@ object ParquetMeta {
       val st = fs.getFileStatus(p)
       if (st.isFile) Seq(p)
       else fs.listStatus(p).toSeq
-        .filterNot { s =>
-          val n = s.getPath.getName
-          n.startsWith("_") || n.startsWith(".")
-        }
+        .filterNot(s => isHidden(s.getPath.getName))
         .flatMap(s => if (s.isDirectory) walk(s.getPath) else Seq(s.getPath))
     }
     walk(root)
@@ -152,10 +156,8 @@ object ParquetMeta {
     if (spark.sessionState.conf.isParquetSchemaMergingEnabled) return None
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val entries = root.getFileSystem(conf).listStatus(root).toSeq.filterNot { s =>
-      val n = s.getPath.getName
-      n.startsWith("_") || n.startsWith(".")
-    }
+    val entries = root.getFileSystem(conf).listStatus(root).toSeq
+      .filterNot(s => isHidden(s.getPath.getName))
     if (entries.isEmpty || entries.exists(_.isDirectory)) return None
     val reader = open(conf, entries.head.getPath)
     try sparkSchema(reader) finally reader.close()

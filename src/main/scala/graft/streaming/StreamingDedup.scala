@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
-import graft.operators.{CacheRegistry, EtlControl, TextDedup}
+import graft.operators.{CacheRegistry, EtlControl, Incremental, TextDedup}
 
 /** The reference's 15-minute incremental micro-batch DAG
   * (dags/incremental_etl_dag.py) re-expressed as Structured Streaming:
@@ -127,8 +127,8 @@ object StreamingDedup {
   }
 
   /** CONTINUOUS-INGEST near-dup maintenance: every micro-batch of new
-    * documents is (1) idempotently appended to the corpus lake table
-    * (doc-id anti-join guard), then (2) folded through
+    * documents is (1) idempotently appended to the corpus lake table,
+    * then (2) folded through
     * [[graft.operators.LshArtifact.dailyDedupRun]] — sign the new
     * docs into the persisted band-bucket artifact, probe it for
     * candidates touching the batch, verify, and fold the pair batch
@@ -141,6 +141,13 @@ object StreamingDedup {
     * batch id without running a job — so redelivery is a no-op, and
     * the maintained assignment equals what one big batch rebuild over
     * the same documents would say (asserted in StreamingDedupSpec).
+    *
+    * The corpus append's guard is [[graft.operators.Incremental.newRows]]
+    * on the doc id. For integral ids a per-run id high-water mark skips
+    * it for every batch wholly above the corpus (the monotone-arrival
+    * contract below), and a redelivered batch falls back to the guard
+    * over the batch's `id BETWEEN min AND max` window; other id types
+    * guard over the whole corpus.
     *
     * Per-batch cost is batch-sized + candidate-sized, never
     * corpus-sized: signatures are computed only for the batch (the
@@ -157,24 +164,18 @@ object StreamingDedup {
     // driver; one closure instance per started query): initialized
     // with ONE corpus max scan on the run's first guarded batch, then
     // maintained incrementally — so the steady-state append guard is
-    // O(batch), never O(store). The r13 store-growth decomposition
-    // found this full-corpus id-column anti-join scan was the growth
-    // term; under the documented monotone-arrival contract every
-    // routine batch skips it outright (batch min id > HWM ⇒ no id can
-    // already exist), and a redelivered window falls back to the
-    // anti join RANGE-FILTERED to [batch min, batch max] — appends are
-    // id-ranged files, so the pushed filter zone-prunes the read to
-    // the replayed window. The HWM only ever overshoots (max of batch
-    // maxima ≥ true corpus max), which can only force the safe
-    // fallback, never a wrong skip — PROVIDED this query is the
-    // corpusDir's ONLY writer while it runs. SINGLE-WRITER CONTRACT:
-    // an external append (a batch dailyDedupRun, a second streaming
-    // query on the same store) can land ids above this run's cached
-    // HWM, and a later batch reusing those ids would skip the
-    // anti-join and append duplicates. Exclusive ownership of
-    // corpusDir for the lifetime of the query is part of the
-    // monotone-arrival contract (acquireRunLease in EtlControl is the
-    // repo's mutual-exclusion primitive for enforcing it).
+    // O(batch), never O(store) (the r13 store-growth decomposition
+    // found the full-corpus guard scan was the growth term). The HWM
+    // only ever overshoots (max of batch maxima ≥ true corpus max),
+    // which can only force the guarded fallback, never a wrong skip —
+    // PROVIDED this query is the corpusDir's ONLY writer while it runs.
+    // SINGLE-WRITER CONTRACT: an external append (a batch
+    // dailyDedupRun, a second streaming query on the same store) can
+    // land ids above this run's cached HWM, and a later batch reusing
+    // those ids would skip the guard and append duplicates. Exclusive
+    // ownership of corpusDir for the lifetime of the query is part of
+    // the monotone-arrival contract (acquireRunLease in EtlControl is
+    // the repo's mutual-exclusion primitive for enforcing it).
     var corpusHwm: Option[Long] = None
     var hwmInit = false
     docs.writeStream.outputMode("append").foreachBatch {
@@ -182,16 +183,16 @@ object StreamingDedup {
         val spark = batch.sparkSession
         import org.apache.spark.sql.functions.{col, lit, max, min}
         val corpusExists = EtlControl.nonEmptyDir(spark, corpusDir)
-        // the anti join only guards against ids ALREADY IN the corpus;
+        // the guard only drops ids ALREADY IN the corpus;
         // duplicate ids arriving within one micro-batch (routine under
         // at-least-once sources) would all survive it and append
         // duplicate corpus rows + 2x band rows per doc into the
         // artifact — dedupe the batch itself first
         val batchDistinct = batch.dropDuplicates(Seq(idCol))
-        // the id-range guard is exact only for integral ids (a cast in
+        // the id-range window is exact only for integral ids (a cast in
         // the corpus-side filter would defeat pushdown and, for
-        // strings, change comparison semantics) — others keep the
-        // full-scan anti join
+        // strings, change comparison semantics) — others guard over
+        // the whole corpus
         val idIsIntegral = batch.schema(idCol).dataType match {
           case org.apache.spark.sql.types.LongType |
                org.apache.spark.sql.types.IntegerType |
@@ -200,11 +201,9 @@ object StreamingDedup {
           case _ => false
         }
         val guarded =
-          if (!corpusExists) batchDistinct
-          else if (!idIsIntegral)
-            batchDistinct.join(
-              spark.read.parquet(corpusDir).select(col(idCol)),
-              Seq(idCol), "left_anti")
+          if (!idIsIntegral) Incremental.newRows(spark, corpusDir,
+            batchDistinct, Seq(idCol))
+          else if (!corpusExists) batchDistinct
           else {
             if (!hwmInit) {
               corpusHwm = spark.read.parquet(corpusDir)
@@ -224,11 +223,8 @@ object StreamingDedup {
               val allNew = corpusHwm.forall(_ < bMin)
               corpusHwm = Some(corpusHwm.fold(bMax)(math.max(_, bMax)))
               if (allNew) batchDistinct
-              else batchDistinct.join(
-                spark.read.parquet(corpusDir)
-                  .where(col(idCol) >= lit(bMin) && col(idCol) <= lit(bMax))
-                  .select(col(idCol)),
-                Seq(idCol), "left_anti")
+              else Incremental.newRows(spark, corpusDir, batchDistinct,
+                Seq(idCol), col(idCol).between(lit(bMin), lit(bMax)))
             }
           }
         val appended = !guarded.isEmpty
@@ -325,29 +321,25 @@ object StreamingDedup {
       (batch: Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
         import org.apache.spark.sql.functions.col
-        def store: Option[DataFrame] = Some(storeDir)
-          .filter(EtlControl.nonEmptyDir(spark, _)).map(spark.read.parquet(_))
         val batchD = batch.dropDuplicates(Seq(idCol))
-        val guarded =
-          if (!EtlControl.nonEmptyDir(spark, outDir)) batchD
-          else batchD.join(spark.read.parquet(outDir).select(col(idCol)),
-            Seq(idCol), "left_anti")
+        val guarded = Incremental.newRows(spark, outDir, batchD, Seq(idCol))
         try {
           if (EtlControl.nonEmptyDir(spark, storeDir)) checkStore(spark)
           if (!guarded.isEmpty) {
             // prior = the store MINUS rows introduced by docs this batch
             // is (re)processing — restores the pre-crash prior when a
             // torn run appended hashes but never published the docs
-            val prior = store.map(_.join(
-              guarded.select(col(idCol).as("doc_id")), Seq("doc_id"),
-              "left_anti")).orNull
+            val prior = Some(storeDir).filter(EtlControl.nonEmptyDir(spark, _))
+              .map(spark.read.parquet(_).join(
+                guarded.select(col(idCol).as("doc_id")), Seq("doc_id"),
+                "left_anti")).orNull
             dedupAgainst(guarded, prior)
               .write.mode(SaveMode.Append).parquet(outDir)
           }
           // store maintenance from the FULL delivered batch (not the
           // guard survivors): heals the output-landed/store-missed tear
-          val newHashes = store.fold(hashes(batchD))(s =>
-            hashes(batchD).join(s.select(col(hashCol)), Seq(hashCol), "left_anti"))
+          val newHashes = Incremental.newRows(spark, storeDir, hashes(batchD),
+            Seq(hashCol))
           if (!newHashes.isEmpty)
             newHashes.write.mode(SaveMode.Append).parquet(storeDir)
         } finally {

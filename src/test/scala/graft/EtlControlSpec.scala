@@ -348,6 +348,20 @@ class EtlControlSpec extends SparkTestBase {
       ("b3", 3L, "SUCCESS")))
   }
 
+  test("snapshot cycle: an empty pre-made target dir takes the bootstrap commit") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-snapempty").toFile.getAbsolutePath
+    val (ctl, tgt) = (s"$base/control", s"$base/target")
+    new java.io.File(tgt).mkdirs()
+    val snap = Seq(1L -> "a", 2L -> "b", 3L -> "c").toDF("k", "v")
+    assert(EtlControl.runSnapshotCycle(spark, ctl, "dim", snap, Seq("k"), tgt,
+      "b1") === ((3L, 0L, 0L)))
+    assert(spark.read.parquet(tgt).as[(Long, String)].collect().sorted.toSeq
+      === Seq(1L -> "a", 2L -> "b", 3L -> "c"))
+    assert(spark.read.parquet(ctl).select("batch_id", "records_loaded", "status")
+      .as[(String, Long, String)].collect().toSeq === Seq(("b1", 3L, "SUCCESS")))
+  }
+
   test("retention drop removes expired partitions without touching survivors") {
     import graft.sources.ParquetSink
     val dir = Files.createTempDirectory("retention").toString + "/events"

@@ -109,6 +109,24 @@ class LshArtifactSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet == fresh)
   }
 
+  test("a crashed first append's leftover _temporary/ is no artifact: refresh equals a clean run") {
+    val docs = Tables.load(spark, sf0001, "documents")
+      .select("doc_id", "text")
+    val artifact = tmp("lsh-artifact5") + "/bb"
+    new java.io.File(artifact, "_temporary/0").mkdirs()
+    assert(LshArtifact.refresh(spark, tmp("lsh-control5"), artifact, "docs",
+      docs, "doc_id", "text", batchId = "b1") == docs.count())
+    val clean = tmp("lsh-artifact6") + "/bb"
+    LshArtifact.refresh(spark, tmp("lsh-control6"), clean, "docs", docs,
+      "doc_id", "text", batchId = "b1")
+    def pairs(dir: String) = LshArtifact.verifiedPairs(spark, dir, docs,
+        "doc_id", "text", threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(LshArtifact.bandBuckets(spark, artifact).select("doc").distinct()
+      .count() == docs.count())
+    assert(pairs(artifact) == pairs(clean) && pairs(clean).nonEmpty)
+  }
+
   test("dailyDedupRun: two growth days + worst-ordered crash equal the full rebuild") {
     import graft.operators.DupGroups
     val control = tmp("daily-control")

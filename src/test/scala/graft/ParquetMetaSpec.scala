@@ -30,6 +30,10 @@ class ParquetMetaSpec extends SparkTestBase {
 
   test("listing skips hidden/metadata files and recurses directories") {
     val tmp = java.nio.file.Files.createTempDirectory("pqmeta").toFile
+    val kb = new java.io.File(tmp.getParentFile, tmp.getName + "-kb")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+    }
     try {
       val sub = new java.io.File(tmp, "part=a"); sub.mkdirs()
       spark.range(7).toDF("id").coalesce(1)
@@ -41,12 +45,14 @@ class ParquetMetaSpec extends SparkTestBase {
       assert(files.nonEmpty &&
         files.forall(_.getName.endsWith(".parquet")))
       assert(ParquetMeta.rowCount(spark, tmp.getPath) == 7L)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      rm(tmp)
-    }
+      // a `_`-prefixed partition dir holds data: Spark keeps names with `=`
+      spark.range(10).toDF("id")
+        .withColumn("__kb", org.apache.spark.sql.functions.lit(1))
+        .coalesce(1).write.partitionBy("__kb").parquet(kb.getPath)
+      assert(new java.io.File(kb, "__kb=1").isDirectory)
+      assert(ParquetMeta.rowCount(spark, kb.getPath) ==
+        spark.read.parquet(kb.getPath).count())
+    } finally { rm(tmp); rm(kb) }
   }
 
   test("q01 metadata rowCounts ≡ scan-based twin (rows and order)") {

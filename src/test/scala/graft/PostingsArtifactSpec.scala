@@ -112,6 +112,21 @@ class PostingsArtifactSpec extends SparkTestBase {
         "doc_id", "text", "source", n = 3, minJaccard = 0.3)))
   }
 
+  test("a crashed first append's leftover _temporary/ is no artifact: refresh equals a clean run") {
+    val artifact = tmp("post-artifact5") + "/shs"
+    new java.io.File(artifact, "_temporary/0").mkdirs()
+    assert(PostingsArtifact.refresh(spark, tmp("post-control5"), artifact,
+      "docs", docs, "doc_id", "text", "source", batchId = "b1") == docs.count())
+    assert(PostingsArtifact.shingleFrame(spark, artifact).select("doc")
+      .distinct().count() == docs.count())
+    val clean = tmp("post-artifact6") + "/shs"
+    PostingsArtifact.refresh(spark, tmp("post-control6"), clean, "docs", docs,
+      "doc_id", "text", "source", batchId = "b1")
+    val got = pairSet(PostingsArtifact.pairs(spark, artifact, minJaccard = 0.3))
+    assert(got == pairSet(PostingsArtifact.pairs(spark, clean, minJaccard = 0.3)) &&
+      got.nonEmpty)
+  }
+
   test("refreshPairs: growth days + crash replay maintain a pair table equal to from-scratch") {
     val root = tmp("pairs-root")
     val (ctl, art, pr) = (root + "/ctl", root + "/art", root + "/pairs")
