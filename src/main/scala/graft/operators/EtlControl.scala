@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -566,19 +566,23 @@ object EtlControl {
     if (successRows(spark, controlDir, sourceId)
         .exists(_("batch_id") == batchId))
       return (spark.read.parquet(assignDir).count(), false)
-    val updated =
-      if (!nonEmptyDir(spark, assignDir))
-        DupGroups.connectedComponents(pairs, aCol, bCol)
-      else
-        DupGroups.updateClusters(spark.read.parquet(assignDir), pairs,
-          aCol, bCol)
-    ParquetSink.atomicReplace(spark, assignDir)(
-      staging => updated.write.parquet(staging))
-    // the assignment is durably in parquet now — free the CC result's
-    // reliable-checkpoint files, or a per-cycle caller (the streaming
-    // continuousDedup path) grows the checkpoint store one snapshot
-    // per batch forever
-    CacheRegistry.freeReliableCheckpoints(updated)
+    // the presence test runs inside the replace, after its crash
+    // recovery has restored an assignment left aside by an interrupted
+    // swap
+    ParquetSink.atomicReplace(spark, assignDir) { staging =>
+      val updated =
+        if (!nonEmptyDir(spark, assignDir))
+          DupGroups.connectedComponents(pairs, aCol, bCol)
+        else
+          DupGroups.updateClusters(spark.read.parquet(assignDir), pairs,
+            aCol, bCol)
+      // once staged, the assignment is durably in parquet — free the CC
+      // result's reliable-checkpoint files, or a per-cycle caller (the
+      // streaming continuousDedup path) grows the checkpoint store one
+      // snapshot per batch forever
+      try updated.write.parquet(staging)
+      finally CacheRegistry.freeReliableCheckpoints(updated)
+    }
     val n = spark.read.parquet(assignDir).count()
     if (!failBeforeCommit)
       commitRun(spark, controlDir, sourceId, batchId, watermarkUs, n)
@@ -615,20 +619,38 @@ object EtlControl {
   }
 
   /** One self-driving incremental cycle against a parquet target:
-    * read watermark → window stats (+ quality gate) → MERGE into target
-    * (staged atomic swap) → commit new watermark. Returns
+    * read watermark → MERGE the window into the target (staged atomic
+    * swap), counting the window stats and the quality gate in the
+    * MERGE's own write → commit new watermark. Returns
     * (newWatermarkUs, deltaRows).
+    *
+    * One Spark pass per window: the window's row count, its max ts and
+    * its rows above the prior watermark, and the counters of
+    * `expectations`, are aggregates observed in the MERGE write (see
+    * [[Incremental.Gate]]), after the keep-last exchange, in the
+    * write's result stage: Spark applies a result task's accumulator
+    * updates once per partition, so a re-run task or stage counts
+    * nothing twice. Target rows pass through the same operator, so
+    * every counter conditions on the row coming from `source`.
     *
     * `expectations` is the batch's quality gate over the whole
     * `source`, not just the window — the reference validates a loaded
-    * batch before it loads it (misa_crm_loader.py:1021). The gate's
-    * counters ride in the window-stats aggregate the cycle runs anyway,
-    * so the gate costs no pass of its own: with expectations the one
-    * aggregate scans all of `source` and counts the window with
-    * conditional aggregates; without, it scans only the pushed-down
-    * window. A failed expectation throws
-    * [[Validate.ValidationException]] before anything is staged, so the
+    * batch before it loads it (misa_crm_loader.py:1021). With
+    * expectations the MERGE reads all of `source`, and the rows outside
+    * the window travel through the write as ineligible rows: the gate
+    * counts them, but they never win a key and are never written.
+    * Without, it reads only the pushed-down window. A [[Validate.Unique]]
+    * on a column other than the sole merge key cannot be counted exactly
+    * in that write, so it alone runs as one aggregate before the MERGE
+    * ([[Validate.inMerge]]). A failed expectation throws
+    * [[Validate.ValidationException]] after the staged write and before
+    * the target is published: the staged copy is deleted, and the
     * target and the control log stay as they were.
+    *
+    * A window with no rows publishes nothing and commits IDLE at the
+    * same watermark. `knownEmpty` says the caller knows `source` has no
+    * rows (a landing that received none); the cycle then runs no Spark
+    * job at all and checks the gate against an empty source's counts.
     *
     * `failBeforeCommit` is a crash-injection hook for the
     * exactly-once spec: it stops after the target is published but
@@ -638,26 +660,37 @@ object EtlControl {
       sourceId: String, source: DataFrame, tsCol: String,
       keys: Seq[String], targetDir: String, defaultWatermarkUs: Long,
       batchId: String, failBeforeCommit: Boolean = false,
-      expectations: Seq[Validate.Expectation] = Nil): (Long, Long) = {
+      expectations: Seq[Validate.Expectation] = Nil,
+      knownEmpty: Boolean = false): (Long, Long) = {
     val wm = lastWatermarkMicros(spark, controlDir, sourceId, defaultWatermarkUs)
-    // literal timestamp predicate on the scan column → PushedFilters
-    val inWindow = col(tsCol) >= timestamp_micros(lit(wm))
-    val delta = source.where(inWindow)
-    val windowStats = Seq(
-      count(when(inWindow, 1)).as("n"),
-      max(when(inWindow, unix_micros(col(tsCol)))).as("mx"),
-      count(when(unix_micros(col(tsCol)) > wm, 1)).as("nNew"))
-    val gate = if (expectations.isEmpty) Nil else Validate.counters(expectations)
-    val stats = (if (gate.isEmpty) delta else source)
-      .agg(windowStats.head, windowStats.tail ++ gate: _*).head()
-    if (gate.nonEmpty)
-      Validate.requirePassed(s"$sourceId/$batchId",
-        Validate.verdicts(expectations, stats, windowStats.length))
-    val (nRows, newWm) =
-      (stats.getLong(0), if (stats.isNullAt(1)) wm else stats.getLong(1))
-    val nNew = stats.getLong(2)
-    if (nRows > 0)
-      Incremental.mergeInto(spark, targetDir, delta, keys, Seq(col(tsCol)))
+    val batch = s"$sourceId/$batchId"
+    val (nRows, newWm, nNew) =
+      if (knownEmpty) {
+        // every counter of an empty source reads 0
+        Validate.requirePassed(batch, Validate.verdicts(expectations,
+          Row.fromSeq(Seq.fill(expectations.length + 1)(0L)), 0))
+        (0L, wm, 0L)
+      } else {
+        // literal timestamp predicate on the scan column → PushedFilters
+        val inWindow = col(tsCol) >= timestamp_micros(lit(wm))
+        val ts = unix_micros(col(tsCol))
+        val windowStats = Seq(
+          count(when(Incremental.fromUpdates && inWindow, 1)).as("n"),
+          max(when(Incremental.fromUpdates && inWindow, ts)).as("mx"),
+          count(when(Incremental.fromUpdates && ts > wm, 1)).as("nNew"))
+        val (gate, verdicts) =
+          if (expectations.isEmpty) (Nil, (_: Row, _: Int) => Nil)
+          else Validate.inMerge(source, keys, expectations)
+        val stats = Incremental.mergeInto(spark, targetDir,
+          if (gate.isEmpty) source.where(inWindow) else source, keys,
+          Seq(col(tsCol)), Some(Incremental.Gate(inWindow, windowStats ++ gate,
+            publish = { row =>
+              Validate.requirePassed(batch, verdicts(row, windowStats.length))
+              row.getLong(0) > 0
+            }))).get
+        (stats.getLong(0), if (stats.isNullAt(1)) wm else stats.getLong(1),
+          stats.getLong(2))
+      }
     // a cycle that saw only the replayed boundary rows commits as IDLE:
     // audit-visible, but excluded from the watermark read and from
     // expectedRowBounds (an idle period must not poison the row-count

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.{ParquetMeta, ParquetSink}
@@ -53,23 +54,73 @@ object Incremental {
       order: Seq[Column] = Nil): DataFrame =
     keepLastOf(base, updates, keys, order)(_.repartitionByRange(keys.map(col): _*))
 
+  /** What a gated [[mergeInto]] counts inside its own write.
+    * `eligible` marks the rows of `updates` that may merge; the others
+    * travel through the write for the counters only, never win a key
+    * and are never written. `counters` are named aggregates over every
+    * row of the write, target rows included, so each one conditions on
+    * [[fromUpdates]]; [[repeatOfKey]] is the key-level view.
+    * `publish` reads their values once the merged rows are staged: true
+    * publishes them, false leaves the target as it was, and a throw
+    * fails the MERGE with nothing published. */
+  final case class Gate(eligible: Column, counters: Seq[Column],
+      publish: Row => Boolean)
+
+  /** In a [[Gate]]'s counters: the row is one of `updates`. */
+  val fromUpdates: Column = col("__src") === 1
+
+  /** In a [[Gate]]'s counters: the row is one of `updates`, and another
+    * row of `updates` with the same key comes before it in the key's
+    * keep-last order — a key held by k rows of `updates` has k − 1 of
+    * them. */
+  val repeatOfKey: Column = fromUpdates && col("__seen") > 1
+
   /** `base` ∪ `updates` (projected onto `base`'s columns), each row
     * tagged with its source, then keep-last on `keys` by `order` and
-    * the tag; `exchange` may re-partition the tagged rows first. */
+    * the tag; `exchange` may re-partition the tagged rows first.
+    *
+    * With a gate, eligibility ranks first, so an ineligible row wins
+    * only a key no eligible row holds and is then dropped, and the
+    * gate's counters are observed between the keep-last window and its
+    * filter. The window runs after the keep-last exchange, in the
+    * stage that consumes the merged rows: for a write that is the
+    * result stage, whose accumulator updates Spark applies once per
+    * partition even when a task or a map stage is re-run, so every
+    * row is counted exactly once. */
   private def keepLastOf(base: DataFrame, updates: DataFrame, keys: Seq[String],
-      order: Seq[Column])(exchange: DataFrame => DataFrame): DataFrame = {
+      order: Seq[Column], gate: Option[(Gate, Observation)] = None)(
+      exchange: DataFrame => DataFrame): DataFrame = {
     val cols = base.columns.toSeq
-    val tagged = base.select(cols.map(col): _*).withColumn("__src", lit(0))
-      .unionByName(updates.select(cols.map(col): _*).withColumn("__src", lit(1)))
-    Dedup.keepLast(exchange(tagged), keys, order :+ col("__src")).drop("__src")
+    def tagged(df: DataFrame, src: Int, eligible: Column) =
+      df.select(cols.map(col) ++ Seq(lit(src).as("__src")) ++
+        gate.map(_ => eligible.as("__ok")): _*)
+    val rows = exchange(tagged(base, 0, lit(true))
+      .unionByName(tagged(updates, 1, gate.fold(lit(true))(_._1.eligible))))
+    gate match {
+      case None => Dedup.keepLast(rows, keys, order :+ col("__src")).drop("__src")
+      case Some((g, observation)) =>
+        val w = Window.partitionBy(keys.map(col): _*)
+          .orderBy((col("__ok") +: order :+ col("__src")).map(_.desc): _*)
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        rows.withColumn("__rn", row_number().over(w))
+          .withColumn("__seen", count(when(fromUpdates, 1)).over(w))
+          .observe(observation, g.counters.head, g.counters.tail: _*)
+          .where(col("__rn") === 1 && col("__ok"))
+          .select(cols.map(col): _*)
+    }
   }
 
   /** The keep-last rows of `updates` MERGEd into `target` by [[upsert]],
-    * or of `updates` alone when there is no target yet: a bootstrap load
+    * or into an empty base when there is no target yet: a bootstrap load
     * can already carry several versions of one key. */
   private[graft] def mergeRows(target: Option[DataFrame], updates: DataFrame,
-      keys: Seq[String], order: Seq[Column]): DataFrame =
-    target.fold(Dedup.keepLast(updates, keys, order))(upsert(_, updates, keys, order))
+      keys: Seq[String], order: Seq[Column],
+      gate: Option[(Gate, Observation)] = None): DataFrame =
+    keepLastOf(target.getOrElse(updates.limit(0)), updates, keys, order, gate)(identity)
+
+  /** How long a gated write waits for its observed counters, which
+    * Spark delivers through a listener once the write has finished. */
+  private val ObservedTimeout = scala.concurrent.duration.Duration(10, "min")
 
   /** MERGE `updates` into the keep-last parquet target at `targetDir`
     * (misa_crm_loader.py:215-500 on a plain filesystem): one row per
@@ -77,16 +128,25 @@ object Incremental {
     * update over the target row. An absent or empty target is
     * bootstrapped from `updates`. The merged rows read the live target,
     * so they are written to staging and published by
-    * [[graft.sources.ParquetSink.atomicReplace]], which rewrites the
+    * [[graft.sources.ParquetSink.atomicReplaceIf]], which rewrites the
     * whole target; the presence test runs after its crash recovery has
-    * restored a target left aside by an interrupted swap. */
+    * restored a target left aside by an interrupted swap.
+    *
+    * A `gate` is counted in the same write (see [[Gate]]), so checking
+    * it costs no Spark job; its `publish` runs after the staged write
+    * and before the publish. Returns the gate's counter values. */
   def mergeInto(spark: SparkSession, targetDir: String, updates: DataFrame,
-      keys: Seq[String], order: Seq[Column]): Unit =
-    ParquetSink.atomicReplace(spark, targetDir) { staging =>
+      keys: Seq[String], order: Seq[Column],
+      gate: Option[Gate] = None): Option[Row] =
+    ParquetSink.atomicReplaceIf(spark, targetDir) { staging =>
       val target = Some(targetDir).filter(EtlControl.nonEmptyDir(spark, _))
         .map(ParquetMeta.readParquet(spark, _))
-      mergeRows(target, updates, keys, order).write.parquet(staging)
-    }
+      val observed = gate.map(_ -> Observation())
+      mergeRows(target, updates, keys, order, observed).write.parquet(staging)
+      observed.map { case (_, o) =>
+        scala.concurrent.Await.result(o.future, ObservedTimeout)
+      }
+    }(row => gate.zip(row).forall { case (g, r) => g.publish(r) })
 
   /** The exactly-once guard of an append-only parquet store: the rows of
     * `rows` whose `keys` the store at `storeDir` does not already hold
@@ -97,12 +157,19 @@ object Incremental {
     * (a doc-id replay window); on id-ranged append files the reader
     * skips older files from their footer min/max. The store side keeps
     * its duplicate keys: a left-anti join's result does not depend on
-    * them. */
+    * them. A `_temporary/` left in the store by a crashed append is
+    * deleted first: it can hold committed task files that readers skip
+    * but the next append's job commit would publish beside the replayed
+    * rows (one writer per store is assumed, as for any plain-FS
+    * append). */
   private[graft] def newRows(spark: SparkSession, storeDir: String,
-      rows: DataFrame, keys: Seq[String], window: Column = lit(true)): DataFrame =
+      rows: DataFrame, keys: Seq[String], window: Column = lit(true)): DataFrame = {
+    val pending = new org.apache.hadoop.fs.Path(storeDir, "_temporary")
+    pending.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(pending, true)
     if (!EtlControl.nonEmptyDir(spark, storeDir)) rows
     else rows.join(spark.read.parquet(storeDir).where(window)
       .select(keys.map(col): _*), keys, "left_anti")
+  }
 
   /** Delete-by-key then insert (bridge refresh). The delta key set is
     * small relative to base → broadcast the anti-join side. */
@@ -112,16 +179,17 @@ object Incremental {
       .unionByName(delta.select(base.columns.map(col).toSeq: _*))
   }
 
-  /** Full-load replace with FK-safe ordering: children cleared before
-    * parents, parents written before children. Returns the (table, df)
-    * write sequence; the caller owns the sink. `fkOrder` lists parents
-    * first (e.g. orders before lineitem). */
+  /** Full-load replace with FK-safe ordering: parents written before
+    * children, so a caller clearing the old tables first clears them in
+    * the reverse order. Returns the (table, df) write sequence; the
+    * caller owns the sink. `fkOrder` lists parents first (e.g. orders
+    * before lineitem). */
   def fullLoadReplace(
       tables: Map[String, DataFrame],
       fkOrder: Seq[String]): Seq[(String, DataFrame)] = {
-    val clearOrder = fkOrder.reverse.filter(tables.contains)
-    require(clearOrder.nonEmpty, "no tables to replace")
-    fkOrder.filter(tables.contains).map(t => t -> tables(t))
+    val writes = fkOrder.filter(tables.contains).map(t => t -> tables(t))
+    require(writes.nonEmpty, "no tables to replace")
+    writes
   }
 
   /** Snapshot diff — change-data-capture between two full loads: one

@@ -15,6 +15,12 @@ import org.apache.spark.sql.functions._
   * per-expectation violations report. A 100 TB batch pays one scan
   * for its whole quality gate.
   *
+  * An incremental ETL cycle pays no pass for its gate at all: the same
+  * counters, conditioned on the source's rows, are observed inside the
+  * MERGE's own write ([[inMerge]]), and the gate is checked before the
+  * target is published. Only a [[Unique]] on a column other than the
+  * sole merge key keeps an aggregate of its own there.
+  *
   * Report schema: (expectation, column, n_rows, n_bad, bad_rate,
   * threshold, passed) — one row per expectation, SQL-replayable for
   * the oracle. [[requireValid]] is the fail-the-batch form.
@@ -79,32 +85,72 @@ object Validate {
   final case class Verdict(expectation: Expectation, nRows: Long,
       nBad: Long, badRate: Double, passed: Boolean)
 
-  /** Per-expectation violation counter (null-safe: sums coalesce to 0
-    * on an empty frame). */
-  private def badCount(e: Expectation): Column = e match {
-    case NotNull(c, _) =>
-      coalesce(sum(when(col(c).isNull, 1L)), lit(0L))
-    case TypeConforms(c, t, _) =>
-      coalesce(sum(when(col(c).isNotNull && col(c).try_cast(t).isNull, 1L)), lit(0L))
-    case InSet(c, allowed, _) =>
-      coalesce(sum(when(col(c).isNotNull && !col(c).isin(allowed: _*), 1L)), lit(0L))
+  /** The row-local violation test of an expectation; [[Unique]] and
+    * [[RowCountBetween]] have none. */
+  private def violates(e: Expectation): Column = e match {
+    case NotNull(c, _) => col(c).isNull
+    case TypeConforms(c, t, _) => col(c).isNotNull && col(c).try_cast(t).isNull
+    case InSet(c, allowed, _) => col(c).isNotNull && !col(c).isin(allowed: _*)
     case InRange(c, mn, mx, _) =>
       val out = (mn.map(col(c) < lit(_)) ++ mx.map(col(c) > lit(_)))
         .reduceOption(_ || _).getOrElse(lit(false))
-      coalesce(sum(when(col(c).isNotNull && out, 1L)), lit(0L))
-    case Unique(c, _) =>
-      coalesce(count(col(c)) - count_distinct(col(c)), lit(0L))
-    case RowCountBetween(_, _) => lit(0L)
+      col(c).isNotNull && out
+    case Unique(_, _) | RowCountBetween(_, _) => lit(false)
   }
 
-  /** The aggregate columns of one gate: the row count, then one
-    * violation counter per expectation. Callers add them to an
-    * aggregate they already run and read the verdicts back with
-    * [[verdicts]], so the gate costs no pass of its own. */
-  private[graft] def counters(expectations: Seq[Expectation]): Seq[Column] =
-    count(lit(1)).as("__n") +: expectations.zipWithIndex.map { case (e, i) =>
-      badCount(e).as(s"__bad$i")
+  /** The exact duplicate count of a [[Unique]] column over a whole
+    * frame: non-null values minus distinct ones. */
+  private def distinctDupes(c: String): Column =
+    count(col(c)) - count_distinct(col(c))
+
+  /** The aggregate columns of one gate over the rows where `rows`
+    * holds: the row count, then one violation counter per expectation
+    * (null-safe: every counter reads 0 on no rows). A [[Unique]] counts
+    * `unique(column)`. Callers add them to an aggregate they already
+    * run and read the verdicts back with [[verdicts]], so the gate costs
+    * no pass of its own. */
+  private[graft] def counters(expectations: Seq[Expectation],
+      rows: Column = lit(true),
+      unique: String => Column = distinctDupes): Seq[Column] =
+    count(when(rows, 1)).as("__n") +: expectations.zipWithIndex.map { case (e, i) =>
+      (e match {
+        case Unique(c, _) => coalesce(unique(c), lit(0L))
+        case RowCountBetween(_, _) => lit(0L)
+        case _ => coalesce(sum(when(rows && violates(e), 1L)), lit(0L))
+      }).as(s"__bad$i")
     }
+
+  /** A gate counted inside the write of a gated
+    * [[Incremental.mergeInto]] over `updates`: the [[counters]] of its
+    * `updates` rows, and the reader of their [[verdicts]] from the
+    * observed row at field `at`. A [[Unique]] on the sole merge key
+    * counts the key's repeats ([[Incremental.repeatOfKey]]) — exact,
+    * since the write sees every key's rows together. A Unique on any
+    * other column is not countable from rows partitioned by the key, so
+    * those counters alone run here as one aggregate over `updates`, a
+    * pass of its own before the MERGE, and the reader puts their values
+    * in place. */
+  private[graft] def inMerge(updates: DataFrame, keys: Seq[String],
+      expectations: Seq[Expectation]): (Seq[Column], (Row, Int) => Seq[Verdict]) = {
+    val apart = expectations.zipWithIndex.collect {
+      case (Unique(c, _), i) if keys != Seq(c) => (c, i)
+    }
+    val counted = if (apart.isEmpty) Nil else {
+      val cs = apart.map { case (c, _) => distinctDupes(c) }
+      val row = updates.agg(cs.head, cs.tail: _*).head()
+      apart.indices.map(row.getLong)
+    }
+    val cs = counters(expectations, Incremental.fromUpdates, c =>
+      if (keys == Seq(c)) sum(when(Incremental.repeatOfKey && col(c).isNotNull, 1L))
+      else lit(0L))
+    def read(row: Row, at: Int): Seq[Verdict] = {
+      val values = apart.map(_._2).zip(counted).foldLeft(row.toSeq) {
+        case (vs, (i, bad)) => vs.updated(at + 1 + i, bad)
+      }
+      verdicts(expectations, Row.fromSeq(values), at)
+    }
+    (cs, read)
+  }
 
   /** The verdicts of `expectations` from the [[counters]] values of one
     * aggregate row, starting at field `at`. The rate and the comparison

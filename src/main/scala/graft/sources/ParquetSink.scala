@@ -222,7 +222,17 @@ object ParquetSink {
     * table format turns this into a metadata commit). Filesystem is
     * resolved from the TARGET's scheme, not the default FS. */
   def atomicReplace(spark: org.apache.spark.sql.SparkSession,
-      targetDir: String)(write: String => Unit): Unit = {
+      targetDir: String)(write: String => Unit): Unit =
+    atomicReplaceIf(spark, targetDir)(write)(_ => true)
+
+  /** [[atomicReplace]] that publishes the staged copy only when
+    * `publish` accepts what `write` returned; otherwise the staging dir
+    * is deleted and the target stays as it was. A `publish` that throws
+    * fails the replace like a failed `write`. Crash recovery of an
+    * interrupted earlier swap runs first either way. Returns `write`'s
+    * result. */
+  def atomicReplaceIf[A](spark: org.apache.spark.sql.SparkSession,
+      targetDir: String)(write: String => A)(publish: A => Boolean): A = {
     val conf = spark.sparkContext.hadoopConfiguration
     // Path normalizes trailing slashes — siblings MUST derive from the
     // normalized form, or "/data/t/" would stage INSIDE the target
@@ -247,23 +257,29 @@ object ParquetSink {
     val tag = java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(dst.toString + s"__staged_$tag")
     val aside = new org.apache.hadoop.fs.Path(dst.toString + s"__old_$tag")
-    try write(staging.toString)
-    catch {
-      case e: Throwable =>
-        // never leave a half-written staging dir behind the live target
-        fs.delete(staging, true)
-        throw e
+    val (out, accepted) =
+      try {
+        val out = write(staging.toString)
+        (out, publish(out))
+      } catch {
+        case e: Throwable =>
+          // never leave a half-written staging dir behind the live target
+          fs.delete(staging, true)
+          throw e
+      }
+    if (!accepted) fs.delete(staging, true)
+    else {
+      val hadOld = fs.exists(dst)
+      if (hadOld) {
+        require(fs.rename(dst, aside), s"could not move $dst aside")
+      }
+      if (!fs.rename(staging, dst)) {
+        // restore the old target before failing — never leave it missing
+        if (hadOld) fs.rename(aside, dst)
+        throw new java.io.IOException(s"could not publish $staging to $dst")
+      }
+      if (hadOld) fs.delete(aside, true)
     }
-    val hadOld = fs.exists(dst)
-    if (hadOld) {
-      require(fs.rename(dst, aside), s"could not move $dst aside")
-    }
-    if (!fs.rename(staging, dst)) {
-      // restore the old target before failing — never leave it missing
-      if (hadOld) fs.rename(aside, dst)
-      throw new java.io.IOException(s"could not publish $staging to $dst")
-    }
-    if (hadOld) fs.delete(aside, true)
-    ()
+    out
   }
 }

@@ -125,7 +125,7 @@ class ControlLogSpec extends SparkTestBase {
     sameAsAllOld()
   }
 
-  test("control-log appends and point reads run no Spark job; a small incremental cycle runs at most 4") {
+  test("control-log appends and point reads run no Spark job; a small incremental cycle runs at most 2") {
     val root = tmp("control-jobs")
     val (control, target) = (s"$root/control", s"$root/target")
     val t0 = 1704067200000000L
@@ -155,7 +155,7 @@ class ControlLogSpec extends SparkTestBase {
       EtlControl.runIncrementalCycle(spark, control, "events", second, "ts",
         Seq("event_id"), target, t0, "b2")
     }
-    assert(cycleJobs <= 4, s"$cycleJobs jobs")
+    assert(cycleJobs <= 2, s"$cycleJobs jobs")
     assert(spark.read.parquet(target).count() == second.count())
   }
 

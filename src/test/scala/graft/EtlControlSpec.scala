@@ -12,6 +12,17 @@ class EtlControlSpec extends SparkTestBase {
       .select("event_id", "ts", "user_id", "event_type", "value")
       .where(col("ts") < lit(upTo).cast("timestamp"))
 
+  /** Every regular file under `dir`, by relative path, with its bytes. */
+  private def files(dir: String): Map[String, Seq[Byte]] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.filter(Files.isRegularFile(_)).toArray.toSeq.map { f =>
+      val path = f.asInstanceOf[java.nio.file.Path]
+      root.relativize(path).toString -> Files.readAllBytes(path).toSeq
+    }.toMap
+    finally walk.close()
+  }
+
   test("dedup-cluster cycle: daily pair batches fold exactly-once; crash replay converges to the full rebuild") {
     import spark.implicits._
     import graft.operators.DupGroups
@@ -492,17 +503,8 @@ class EtlControlSpec extends SparkTestBase {
         spark.read.parquet(s"$plain/target"))
       assert(g.count() == p.count() && g.except(p).isEmpty && p.except(g).isEmpty)
     }
-    // a failing gate throws before anything is staged: the target's
-    // files are byte-identical and no commit row is written
-    def files(dir: String): Map[String, Seq[Byte]] = {
-      val root = java.nio.file.Paths.get(dir)
-      val walk = Files.walk(root)
-      try walk.filter(Files.isRegularFile(_)).toArray.toSeq.map { f =>
-        val path = f.asInstanceOf[java.nio.file.Path]
-        root.relativize(path).toString -> Files.readAllBytes(path).toSeq
-      }.toMap
-      finally walk.close()
-    }
+    // a failing gate throws before the target is published: the
+    // target's files are byte-identical and no commit row is written
     val (target, control) = (files(s"$gated/target"), files(s"$gated/control"))
     val wm = EtlControl.lastWatermarkMicros(spark, s"$gated/control", "events", t0)
     val e = intercept[Validate.ValidationException] {
@@ -671,5 +673,240 @@ class EtlControlSpec extends SparkTestBase {
     assert(log.count() == n * rounds)
     assert(log.select("source_id", "batch_id").distinct().count() == n * rounds)
     assert(!new java.io.File(control, "_temporary").exists())
+  }
+
+  test("a duplicate key in the window fails Unique inside the MERGE pass; nothing is published") {
+    import graft.operators.Validate
+    val dir = Files.createTempDirectory("etlgate-dup").toString
+    val (control, target) = (s"$dir/control", s"$dir/target")
+    val t0 = 1704067200000000L
+    EtlControl.runIncrementalCycle(spark, control, "events", feed("2024-01-10"),
+      "ts", Seq("event_id"), target, t0, "b1")
+    val next = feed("2024-01-20")
+    val dup = next.orderBy(col("ts").desc, col("event_id")).limit(1)
+    val (before, log) = (files(target), files(control))
+    val exps = Seq(Validate.NotNull("event_id"), Validate.Unique("event_id"))
+    var e: Validate.ValidationException = null
+    // the gate rides in the MERGE write: its map stage and its write
+    // are the cycle's only jobs
+    assert(jobsOf {
+      e = intercept[Validate.ValidationException] {
+        EtlControl.runIncrementalCycle(spark, control, "events",
+          next.unionByName(dup), "ts", Seq("event_id"), target, t0, "b2",
+          expectations = exps)
+      }
+    } == 2)
+    assert(e.getMessage == "events/b2: 1 expectation(s) failed: unique(event_id)")
+    assert(files(target) == before && files(control) == log)
+    assert(new java.io.File(dir).list().toSeq.sorted == Seq("control", "target"))
+    // the same window without the duplicate passes and publishes
+    val (_, n) = EtlControl.runIncrementalCycle(spark, control, "events", next,
+      "ts", Seq("event_id"), target, t0, "b2", expectations = exps)
+    assert(n > 0 && spark.read.parquet(target).count() == next.count())
+  }
+
+  test("out-of-window source rows count in the gate and never reach the target") {
+    import spark.implicits._
+    import graft.operators.Validate
+    val dir = Files.createTempDirectory("etlgate-window").toString
+    val (control, target) = (s"$dir/control", s"$dir/target")
+    def src(rows: (Long, Int, Double)*) = rows.toDF("k", "sec", "amount")
+      .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("amount"))
+    def cycle(batch: String, rows: Seq[(Long, Int, Double)],
+        exps: Seq[Validate.Expectation]) =
+      EtlControl.runIncrementalCycle(spark, control, "s", src(rows: _*), "ts",
+        Seq("k"), target, 0L, batch, expectations = exps)
+    def rows = spark.read.parquet(target).orderBy("k")
+      .as[(Long, java.sql.Timestamp, Double)].collect().toSeq
+        .map { case (k, ts, a) => (k, ts.getTime / 1000, a) }
+    assert(cycle("b1", Seq((1L, 10, 1.0), (2L, 20, 2.0)), Nil) == (20000000L, 2L))
+    // watermark 20 s: (1, 5 s), (2, 19 s) and (5, 6 s) are out of the
+    // window. The gate counts them (5 source rows, one negative amount,
+    // one repeat of key 2), but they must neither overwrite keys 1 and 2
+    // nor add key 5
+    val late = Seq((1L, 5, -1.0), (2L, 19, 9.0), (2L, 20, 2.0), (3L, 30, 3.0),
+      (5L, 6, 5.0))
+    val e = intercept[Validate.ValidationException](cycle("b2", late,
+      Seq(Validate.InRange("amount", Some(0.0), None, maxBadRate = 0.19))))
+    assert(e.getMessage == "s/b2: 1 expectation(s) failed: in_range(amount)")
+    val dupe = intercept[Validate.ValidationException](cycle("b2", late,
+      Seq(Validate.InRange("amount", Some(0.0), None, maxBadRate = 0.2),
+        Validate.RowCountBetween(5, 5), Validate.Unique("k"))))
+    assert(dupe.getMessage == "s/b2: 1 expectation(s) failed: unique(k)")
+    assert(rows == Seq((1L, 10L, 1.0), (2L, 20L, 2.0)))
+    assert(cycle("b2", late, Seq(
+      Validate.InRange("amount", Some(0.0), None, maxBadRate = 0.2),
+      Validate.RowCountBetween(5, 5), Validate.Unique("k", 0.2))) == (30000000L, 2L))
+    assert(rows == Seq((1L, 10L, 1.0), (2L, 20L, 2.0), (3L, 30L, 3.0)))
+  }
+
+  test("an empty source publishes nothing: the target files stay untouched") {
+    import graft.operators.Validate
+    val dir = Files.createTempDirectory("etl-empty").toString
+    val (control, target) = (s"$dir/control", s"$dir/target")
+    val t0 = 1704067200000000L
+    val (wm, _) = EtlControl.runIncrementalCycle(spark, control, "events",
+      feed("2024-01-10"), "ts", Seq("event_id"), target, t0, "b1")
+    val before = files(target)
+    val empty = feed("2024-01-10").limit(0)
+    val exps = Seq(Validate.NotNull("event_id"), Validate.Unique("event_id"))
+    // a source the caller knows is empty runs no Spark job at all
+    assert(jobsOf {
+      assert(EtlControl.runIncrementalCycle(spark, control, "events", empty,
+        "ts", Seq("event_id"), target, t0, "b2", expectations = exps,
+        knownEmpty = true) == (wm, 0L))
+    } == 0)
+    // one found empty by the MERGE pass stages its copy and drops it
+    assert(EtlControl.runIncrementalCycle(spark, control, "events", empty,
+      "ts", Seq("event_id"), target, t0, "b3", expectations = exps) == (wm, 0L))
+    assert(files(target) == before)
+    assert(new java.io.File(dir).list().toSeq.sorted == Seq("control", "target"))
+    val status = spark.read.parquet(control).where(col("batch_id") =!= "b1")
+      .select("status", "watermark_us").collect().map(r => (r.getString(0), r.getLong(1)))
+    assert(status.toSeq == Seq(("IDLE", wm), ("IDLE", wm)))
+    // an empty source still fails a gate that wants rows, without a job
+    val e = intercept[Validate.ValidationException](
+      EtlControl.runIncrementalCycle(spark, control, "events", empty, "ts",
+        Seq("event_id"), target, t0, "b4",
+        expectations = Seq(Validate.RowCountBetween(1, 10)), knownEmpty = true))
+    assert(e.getMessage == "events/b4: 1 expectation(s) failed: row_count()")
+  }
+
+  test("a Unique on a non-key column is still exact") {
+    import spark.implicits._
+    import graft.operators.Validate
+    val dir = Files.createTempDirectory("etlgate-nonkey").toString
+    val (control, target) = (s"$dir/control", s"$dir/target")
+    def src(rows: (Long, Int, String)*) = rows.toDF("k", "sec", "sku")
+      .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("sku"))
+    def cycle(batch: String, rows: Seq[(Long, Int, String)], maxDupRate: Double) =
+      EtlControl.runIncrementalCycle(spark, control, "s", src(rows: _*), "ts",
+        Seq("k"), target, 0L, batch,
+        expectations = Seq(Validate.Unique("sku", maxDupRate)))
+    // distinct keys, 2 repeated skus in 5 rows (one null sku): rate 0.4.
+    // Each repeat sits under another key, so no key-partitioned count
+    // can see it
+    val rows = Seq((1L, 1, "a"), (2L, 2, "a"), (3L, 3, "b"), (4L, 4, "b"),
+      (5L, 5, null))
+    val e = intercept[Validate.ValidationException](cycle("b1", rows, 0.39))
+    assert(e.getMessage == "s/b1: 1 expectation(s) failed: unique(sku)")
+    assert(!new java.io.File(target).exists())
+    assert(cycle("b1", rows, 0.4) == (5000000L, 5L))
+    assert(spark.read.parquet(target).count() == 5)
+  }
+
+  test("the counters observed in the MERGE write equal Validate.check's report") {
+    import spark.implicits._
+    import graft.operators.{Incremental, Validate}
+    import Validate._
+    val base = Files.createTempDirectory("etlgate-grid").toString
+    var dirs = 0
+    for (n <- Seq(0, 1, 7, 40); nulls <- Seq(0, 3); targetRows <- Seq(0, 5)) {
+      // keys repeat every 5th row, so Unique on the key has repeats; the
+      // `grp` column repeats under distinct keys
+      val src = (0 until n).map(i => (if (i % 5 == 4) (i - 1).toLong else i.toLong,
+          i, if (i < nulls) None else Some(i % 3), if (i % 2 == 0) "a" else "z"))
+        .toDF("k", "sec", "grp", "cat")
+        .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("grp"), col("cat"))
+      dirs += 1
+      val target = s"$base/t$dirs"
+      if (targetRows > 0)
+        (0 until targetRows).map(i => (i.toLong, 100 + i, Option(i), "q"))
+          .toDF("k", "sec", "grp", "cat")
+          .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("grp"), col("cat"))
+          .write.parquet(target)
+      val exps = Seq(NotNull("grp"), NotNull("grp", 0.5), Unique("k"),
+        Unique("k", 0.1), Unique("grp"), InSet("cat", Seq("a")),
+        InRange("grp", Some(0.0), Some(1.0)), TypeConforms("cat", "int"),
+        RowCountBetween(1, 10), RowCountBetween(0, 100))
+      val (counters, verdictsOf) = Validate.inMerge(src, Seq("k"), exps)
+      // half the source is out of the window: the gate still counts it
+      val stats = Incremental.mergeInto(spark, target, src, Seq("k"),
+        Seq(col("ts")), Some(Incremental.Gate(
+          col("ts") >= timestamp_seconds(lit(n / 2)), counters,
+          publish = _ => false))).get
+      val observed = verdictsOf(stats, 0).map(v => (v.expectation.label,
+        v.expectation.column, v.expectation.threshold, v.nRows, v.nBad,
+        v.badRate, v.passed)).sorted
+      val report = Validate.check(src, exps).collect().toSeq.map(r =>
+        (r.getString(0), r.getString(1), r.getDouble(5), r.getLong(2),
+          r.getLong(3), r.getDouble(4), r.getBoolean(6))).sorted
+      assert(observed == report, s"n=$n nulls=$nulls target=$targetRows")
+    }
+  }
+
+  test("a gate's counters are observed above the keep-last exchange, in the write's result stage") {
+    import org.apache.spark.sql.execution.CollectMetricsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.operators.{Incremental, Validate}
+    val target = feed("2024-01-10")
+    val src = feed("2024-01-20")
+    val (counters, _) = Validate.inMerge(src, Seq("event_id"),
+      Seq(Validate.NotNull("ts"), Validate.Unique("event_id")))
+    val merged = Incremental.mergeRows(Some(target), src, Seq("event_id"),
+      Seq(col("ts")), Some(Incremental.Gate(lit(true), counters, _ => true) ->
+        org.apache.spark.sql.Observation()))
+    val plan = merged.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val observe = plan.collect { case c: CollectMetricsExec => c }
+    assert(observe.length == 1, plan)
+    def exchanges(p: org.apache.spark.sql.execution.SparkPlan) =
+      p.collect { case e: Exchange => e }.length
+    // every exchange sits below the observation: nothing re-partitions
+    // its output, so it runs in the stage that writes
+    assert(exchanges(observe.head) >= 1 && exchanges(plan) == exchanges(observe.head), plan)
+  }
+
+  test("dedup cycle: a replay after a crash between move-aside and publish keeps the prior assignment") {
+    import spark.implicits._
+    import graft.operators.DupGroups
+    val control = Files.createTempDirectory("dedup-crash-control").toString
+    val base = Files.createTempDirectory("dedup-crash").toString
+    val assign = s"$base/cc"
+    val p1 = Seq((1L, 2L), (10L, 11L))
+    val p2 = Seq((2L, 3L), (40L, 41L))
+    EtlControl.runDedupCycle(spark, control, "pairs", p1.toDF("a", "b"),
+      "a", "b", assign, batchId = "d1")
+    // batch d2 crashed after moving the assignment aside, before its
+    // publish: only `<assign>__old_<tag>` is left
+    assert(new java.io.File(assign).renameTo(new java.io.File(s"$base/cc__old_x")))
+    EtlControl.runDedupCycle(spark, control, "pairs", p2.toDF("a", "b"),
+      "a", "b", assign, batchId = "d2")
+    val got = spark.read.parquet(assign).as[(Long, Long)].collect().toMap
+    val want = DupGroups.connectedComponents((p1 ++ p2).toDF("a", "b"), "a", "b")
+      .as[(Long, Long)].collect().toMap
+    assert(got == want)
+    assert(new java.io.File(base).list().toSeq == Seq("cc"))
+  }
+
+  test("a guarded append after a crashed one lands no committed task file twice") {
+    import spark.implicits._
+    import graft.operators.Incremental
+    val base = Files.createTempDirectory("append-crash").toString
+    val store = s"$base/store"
+    def append(ids: Seq[Long]): Unit =
+      Incremental.newRows(spark, store, ids.toDF("id"), Seq("id"))
+        .write.mode("append").parquet(store)
+    // a crash after a task commit and before the job commit leaves that
+    // task's rows under _temporary/0/task_*, where readers skip them
+    def plantStale(ids: Seq[Long]): Unit = {
+      val written = s"$base/written-${ids.mkString("-")}"
+      ids.toDF("id").coalesce(1).write.parquet(written)
+      val part = new java.io.File(written).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val task = new java.io.File(s"$store/_temporary/0/task_202601010000_0000_m_000000")
+      assert(task.mkdirs())
+      assert(part.renameTo(new java.io.File(task, part.getName)))
+    }
+    // a first append that crashed leaves only _temporary/
+    plantStale(Seq(1L, 2L))
+    append(Seq(1L, 2L))
+    plantStale(Seq(3L))
+    append(Seq(3L, 4L))
+    val ids = spark.read.parquet(store).as[Long].collect().toSeq.sorted
+    assert(ids == Seq(1L, 2L, 3L, 4L))
   }
 }

@@ -321,14 +321,14 @@ class PipelineSpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
     val jobs = seen.toArray(Array.empty[java.util.Properties])
       .filter(_.getProperty("graft.test.mark") == null)
-    // three sources, each several jobs: landing, validate, MERGE, logs
-    assert(jobs.length >= 3 * 4, s"${jobs.length} jobs")
+    // three sources, each with the two jobs of its MERGE write
+    assert(jobs.length >= 3 * 2, s"${jobs.length} jobs")
     assert(jobs.forall(p =>
       p.getProperty("spark.jobGroup.id") == "pipe-props-group" &&
         p.getProperty("graft.test.caller") == "pipe-props"))
   }
 
-  test("a three-source cycle with a four-expectation gate runs at most 15 Spark jobs") {
+  test("a three-source cycle with a four-expectation gate runs at most 6 Spark jobs") {
     val root = Files.createTempDirectory("pipe-jobs").toString
     // the gate of the bench's order sources: NotNull + Unique on the key,
     // a range and a status set
@@ -342,7 +342,7 @@ class PipelineSpec extends SparkTestBase {
     var res: Seq[Pipeline.CycleResult] = Nil
     val jobs = jobsOf { res = Pipeline.runIncremental(spark, cfg, runners, root, "b2") }
     assert(res.map(_.loadedRows) == Seq(4L, 4L, 4L))
-    assert(jobs <= 15, s"$jobs jobs")
+    assert(jobs <= 6, s"$jobs jobs")
     assert(successes(cfg, "b2") == cfg.sources.map(_.id).toSet)
   }
 }
