@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, ExpressionColumn, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.plans.LongParam
 import graft.sources.{ParquetMeta, ParquetSink}
 
 /** The etl_control watermark cycle that makes incremental runs
@@ -565,7 +566,7 @@ object EtlControl {
       failBeforeCommit: Boolean = false): (Long, Boolean) = {
     if (successRows(spark, controlDir, sourceId)
         .exists(_("batch_id") == batchId))
-      return (spark.read.parquet(assignDir).count(), false)
+      return (ParquetMeta.readParquet(spark, assignDir).count(), false)
     // the presence test runs inside the replace, after its crash
     // recovery has restored an assignment left aside by an interrupted
     // swap
@@ -574,7 +575,7 @@ object EtlControl {
         if (!nonEmptyDir(spark, assignDir))
           DupGroups.connectedComponents(pairs, aCol, bCol)
         else
-          DupGroups.updateClusters(spark.read.parquet(assignDir), pairs,
+          DupGroups.updateClusters(ParquetMeta.readParquet(spark, assignDir), pairs,
             aCol, bCol)
       // once staged, the assignment is durably in parquet — free the CC
       // result's reliable-checkpoint files, or a per-cycle caller (the
@@ -583,7 +584,7 @@ object EtlControl {
       try updated.write.parquet(staging)
       finally CacheRegistry.freeReliableCheckpoints(updated)
     }
-    val n = spark.read.parquet(assignDir).count()
+    val n = ParquetMeta.readParquet(spark, assignDir).count()
     if (!failBeforeCommit)
       commitRun(spark, controlDir, sourceId, batchId, watermarkUs, n)
     (n, true)
@@ -671,18 +672,22 @@ object EtlControl {
           Row.fromSeq(Seq.fill(expectations.length + 1)(0L)), 0))
         (0L, wm, 0L)
       } else {
-        // literal timestamp predicate on the scan column → PushedFilters
-        val inWindow = col(tsCol) >= timestamp_micros(lit(wm))
+        // the gate reads the watermark from generated code's references,
+        // so a cycle with a new watermark reuses the compiled classes
+        val wmParam = ExpressionColumn(LongParam(wm))
+        val inWindow = col(tsCol) >= timestamp_micros(wmParam)
         val ts = unix_micros(col(tsCol))
         val windowStats = Seq(
           count(when(Incremental.fromUpdates && inWindow, 1)).as("n"),
           max(when(Incremental.fromUpdates && inWindow, ts)).as("mx"),
-          count(when(Incremental.fromUpdates && ts > wm, 1)).as("nNew"))
+          count(when(Incremental.fromUpdates && ts > wmParam, 1)).as("nNew"))
         val (gate, verdicts) =
           if (expectations.isEmpty) (Nil, (_: Row, _: Int) => Nil)
           else Validate.inMerge(source, keys, expectations)
         val stats = Incremental.mergeInto(spark, targetDir,
-          if (gate.isEmpty) source.where(inWindow) else source, keys,
+          // literal timestamp predicate on the scan column → PushedFilters
+          if (gate.isEmpty) source.where(col(tsCol) >= timestamp_micros(lit(wm)))
+          else source, keys,
           Seq(col(tsCol)), Some(Incremental.Gate(inWindow, windowStats ++ gate,
             publish = { row =>
               Validate.requirePassed(batch, verdicts(row, windowStats.length))

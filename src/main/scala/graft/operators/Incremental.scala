@@ -167,7 +167,7 @@ object Incremental {
     val pending = new org.apache.hadoop.fs.Path(storeDir, "_temporary")
     pending.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(pending, true)
     if (!EtlControl.nonEmptyDir(spark, storeDir)) rows
-    else rows.join(spark.read.parquet(storeDir).where(window)
+    else rows.join(ParquetMeta.readParquet(spark, storeDir).where(window)
       .select(keys.map(col): _*), keys, "left_anti")
   }
 

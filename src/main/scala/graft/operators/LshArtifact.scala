@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetMeta
+
 /** Persisted LSH signature artifact: band buckets written ONCE as a
   * lake artifact (parquet), incrementally appended as the corpus
   * grows, and read back by every dedup run — the cross-run analogue of
@@ -87,7 +89,7 @@ object LshArtifact {
 
   /** The persisted (doc, band, band_hash) frame. */
   def bandBuckets(spark: SparkSession, artifactDir: String): DataFrame =
-    spark.read.parquet(artifactDir)
+    ParquetMeta.readParquet(spark, artifactDir)
 
   /** Candidate pairs from the artifact alone — ZERO signature
     * computation; the self-join's two sides are pruned parquet scans

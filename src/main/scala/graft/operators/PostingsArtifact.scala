@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetMeta
+
 /** Persisted Jaccard shingle artifact: the (doc, block, sz, shs)
   * shingle-hash frame written ONCE as a lake artifact (parquet) and
   * incrementally appended as the corpus grows — [[LshArtifact]]'s
@@ -79,7 +81,7 @@ object PostingsArtifact {
 
   /** The persisted (doc, block, sz, shs) frame. */
   def shingleFrame(spark: SparkSession, artifactDir: String): DataFrame =
-    spark.read.parquet(artifactDir)
+    ParquetMeta.readParquet(spark, artifactDir)
 
   /** Exact blocked-Jaccard pairs from the artifact alone — ZERO text
     * access, ZERO tokenization: postings, document frequencies, prefix
@@ -138,5 +140,5 @@ object PostingsArtifact {
 
   /** The persisted (doc_a, doc_b, jaccard) frame. */
   def allPairs(spark: SparkSession, pairsDir: String): DataFrame =
-    spark.read.parquet(pairsDir)
+    ParquetMeta.readParquet(spark, pairsDir)
 }

@@ -9,6 +9,7 @@ import graft.Tables
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.operators._
 import graft.plans.{PiiScanExpr, TextFullStatsExpr, TextGateExpr, TextRepScoresExpr, TextScoresExpr, TokenCountExpr}
+import graft.sources.ParquetMeta
 
 /** SURVEY.md §2 rows 17–21: LLM-data-pipeline operators over the
   * `documents` and `embeddings` tables. SQL-expressible ops carry a
@@ -243,7 +244,7 @@ object LlmQueries {
     val qv = t(s, dir, "embeddings").where(col("vec_id") === 7)
       .select("embedding").head().getSeq[Any](0)
       .map { case f: Float => f.toDouble; case d: Double => d }.toArray
-    val layout = s.read.parquet(ivfLayoutDir(s, dir))
+    val layout = ParquetMeta.readParquet(s, ivfLayoutDir(s, dir))
       .where(col("vec_id") =!= 7)
     Ann.ivfTopKOnLayout(layout, qv, "vec_id", "embedding", k = 10,
         q22Centroids(s, dir), nprobe = 5)
@@ -440,7 +441,7 @@ object LlmQueries {
   def q82IvfPqLayout(s: SparkSession, dir: String): DataFrame = {
     val (cb, _) = pqArtifacts(s, dir)
     val e = t(s, dir, "embeddings")
-    val layout = s.read.parquet(ivfPqLayoutDir(s, dir))
+    val layout = ParquetMeta.readParquet(s, ivfPqLayoutDir(s, dir))
     graft.operators.Pq.ivfPqTopK(layout,
         e.where(col("vec_id") =!= 7), e.where(col("vec_id") === 7),
         "vec_id", "embedding", k = 10, cb, q22Centroids(s, dir),
@@ -566,7 +567,7 @@ object LlmQueries {
     // native token_count kernel, which shrank the pass the distributed
     // form duplicates.) Output is identical either way — the bucketed
     // form's equality with the windowed one is spec-pinned.
-    val docRows = graft.sources.ParquetMeta.rowCount(
+    val docRows = ParquetMeta.rowCount(
       s, s"$dir/documents.parquet")
     val packed =
       if (docRows > Q58_DISTRIBUTED_PACK_MIN_DOCS)
@@ -660,7 +661,7 @@ object LlmQueries {
   def q61CorpusPipeline(s: SparkSession, dir: String): DataFrame = {
     val sp = Sampling.hashSplit(q61Clean(s, dir), "doc_id")
       .select("doc_id", "split", "n_tokens")
-    val docRows = graft.sources.ParquetMeta.rowCount(
+    val docRows = ParquetMeta.rowCount(
       s, s"$dir/documents.parquet")
     val packed =
       if (docRows > Q61_DISTRIBUTED_PACK_MIN_DOCS)
@@ -1173,7 +1174,7 @@ object LlmQueries {
     * the chain is cheaper than the exchange. */
   private def sortBarrier(s: SparkSession, dir: String,
       df: DataFrame): DataFrame =
-    if (graft.sources.ParquetMeta.rowCount(s, s"$dir/documents.parquet")
+    if (ParquetMeta.rowCount(s, s"$dir/documents.parquet")
         < SORT_BARRIER_MIN_SEEDS) df
     else df.repartition(s.sparkContext.defaultParallelism)
 

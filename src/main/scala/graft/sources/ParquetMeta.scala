@@ -3,18 +3,19 @@ package graft.sources
 import java.util.UUID
 
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, SparkToParquetSchemaConverter}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
@@ -44,19 +45,26 @@ import org.apache.spark.sql.types._
   * file); equality with the scan-based count is spec'd per table in
   * ParquetMetaSpec, both paths.
   *
-  * The same driver-side footer work backs the ETL cycles: their known-
-  * schema reads ([[readParquet]]) take the schema from one footer, and
-  * [[writeFile]] writes the rows the driver already holds — control-log
-  * rows and fetched pages — as Spark-compatible parquet without a job.
+  * The same driver-side footer work backs graft's flat parquet reads:
+  * [[readParquet]] takes the schema from one footer instead of a Spark
+  * job, and [[writeFile]] writes the rows the driver already holds —
+  * control-log rows and fetched pages — as Spark-compatible parquet
+  * without a job.
   */
 object ParquetMeta {
 
   /** Spark's file-index rule for names that hold no table data:
     * metadata and in-flight entries (`_SUCCESS`, `_temporary`, `.crc`
-    * checksums). A `_`-prefixed name containing `=` is a partition
-    * directory (`__kb=3`) and stays visible. */
+    * checksums, `._COPYING_` uploads). A `_`-prefixed name containing
+    * `=` is a partition directory (`__kb=3`) and stays visible. */
   private[graft] def isHidden(name: String): Boolean =
-    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".")
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** Parquet summary files, which Spark's file index lists although
+    * they are `_`-prefixed. */
+  private def isSummary(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
 
   /** Data files under `path` (recursively), or `path` itself if a
     * file. Hidden/metadata entries ([[isHidden]]) excluded — the same
@@ -137,37 +145,70 @@ object ParquetMeta {
 
   /** The Spark schema Spark's writer stamps into a file's footer
     * (`org.apache.spark.sql.parquet.row.metadata`), if there is one. */
-  private[graft] def sparkSchema(reader: ParquetFileReader)
-      : Option[org.apache.spark.sql.types.StructType] =
+  private[graft] def sparkSchema(reader: ParquetFileReader): Option[StructType] =
     Option(reader.getFooter.getFileMetaData.getKeyValueMetaData.get(
-        org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport.SPARK_METADATA_KEY))
-      .flatMap(json => scala.util.Try(
-        org.apache.spark.sql.types.DataType.fromJson(json)).toOption)
-      .collect { case s: org.apache.spark.sql.types.StructType => s }
+        ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
 
-  /** The Spark schema of the flat parquet directory `path`, read on the
-    * driver from the footer of one data file, the first in listing
-    * order. That is the file Spark's own inference opens when schemas
-    * are not merged, minus the Spark job it runs to open it. None when
-    * the footer has no Spark schema, the directory has subdirectories
-    * (partitions) or no data file, or the session merges schemas. */
-  def footerSchema(spark: SparkSession, path: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    if (spark.sessionState.conf.isParquetSchemaMergingEnabled) return None
+  /** The schema `spark.read.parquet(path)` infers for the flat parquet
+    * file or directory `path`, read on the driver from one footer: no
+    * Spark job. Spark's non-merging inference opens the footer of the
+    * first data file in path order and converts it with
+    * `ParquetFileFormat.readSchemaFromFooter`; this does the same, with
+    * a converter built from the five session settings Spark's own
+    * (`mergeSchemasInParallel`) reads. Both footer kinds resolve: the
+    * Spark schema Spark's writer stamps under
+    * `org.apache.spark.sql.parquet.row.metadata`, or, for any other
+    * writer (pyarrow, parquet-mr), the converted parquet schema; either
+    * way with every field nullable, as Spark's read relaxes it.
+    * `inferTimestampNTZ` overrides the session's
+    * `spark.sql.parquet.inferTimestampNTZ.enabled` for this conversion
+    * only.
+    *
+    * None, so the caller takes Spark's own inference, wherever this
+    * mirror is not exact: a session that merges schemas over more than
+    * one data file, a partitioned directory (any subdirectory), a
+    * directory holding summary files (`_metadata`, `_common_metadata`,
+    * which inference reads first), one with no data file, an absent
+    * path, and a footer that cannot be read. Hidden entries
+    * ([[isHidden]]), a crashed write's `_temporary/` among them, are
+    * skipped as Spark's file index skips them. */
+  def footerSchema(spark: SparkSession, path: String,
+      inferTimestampNTZ: Option[Boolean] = None): Option[StructType] = {
+    val sql = spark.sessionState.conf
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
-    val entries = root.getFileSystem(conf).listStatus(root).toSeq
-      .filterNot(s => isHidden(s.getPath.getName))
-    if (entries.isEmpty || entries.exists(_.isDirectory)) return None
-    val reader = open(conf, entries.head.getPath)
-    try sparkSchema(reader) finally reader.close()
+    val listed = Try(root.getFileSystem(conf).listStatus(root).toSeq).getOrElse(Nil)
+    val files = listed.filterNot(s => isHidden(s.getPath.getName))
+    val exact = files.nonEmpty && !files.exists(_.isDirectory) &&
+      !listed.exists(s => isSummary(s.getPath.getName)) &&
+      (files.lengthCompare(1) == 0 || !sql.isParquetSchemaMergingEnabled)
+    if (!exact) return None
+    val first = files.minBy(_.getPath.toString).getPath
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = sql.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = sql.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = inferTimestampNTZ.getOrElse(sql.parquetInferTimestampNTZEnabled),
+      nanosAsLong = sql.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = sql.parquetReaderRespectUnknownTypeAnnotation)
+    Try {
+      val reader = open(conf, first)
+      try ParquetFileFormat.readSchemaFromFooter(
+        new Footer(first, reader.getFooter), converter).toNullable
+      finally reader.close()
+    }.toOption
   }
 
-  /** `spark.read.parquet(path)` without the schema-inference job when
-    * [[footerSchema]] knows the schema; the plain read otherwise. */
-  def readParquet(spark: SparkSession, path: String)
-      : org.apache.spark.sql.DataFrame =
-    footerSchema(spark, path) match {
+  /** graft's reader for flat parquet files and directories:
+    * `spark.read.parquet(path)` without its schema-inference job when
+    * [[footerSchema]] resolves the schema on the driver, and the plain
+    * read, job included, in every case it does not. With
+    * `inferTimestampNTZ` the footer's naive timestamps map as it says;
+    * the plain read keeps the session's rule. */
+  def readParquet(spark: SparkSession, path: String,
+      inferTimestampNTZ: Option[Boolean] = None): DataFrame =
+    footerSchema(spark, path, inferTimestampNTZ) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None => spark.read.parquet(path)
     }
@@ -312,7 +353,7 @@ object ParquetMeta {
     * ParquetMetaSpec. Output: (column_name, n_rows, n_nulls, num_min,
     * num_max), one row per requested column. */
   def columnStats(spark: SparkSession, path: String, cols: Seq[String],
-      maxDriverFiles: Int = 256): org.apache.spark.sql.DataFrame = {
+      maxDriverFiles: Int = 256): DataFrame = {
     require(cols.nonEmpty, "no columns given")
     val files = listDataFiles(spark, path)
     val merged =

@@ -84,7 +84,7 @@ object ParquetSink {
     val nOut = math.max(1, math.ceil(
       before.map(_.getLen).sum.toDouble / targetBytes).toInt)
     atomicReplace(spark, path) { staging =>
-      val df = spark.read.parquet(path)
+      val df = ParquetMeta.readParquet(spark, path)
       val packed =
         if (sortCols.isEmpty) df.coalesce(nOut)
         else df.repartitionByRange(nOut, sortCols.map(col): _*)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.{CacheRegistry, EtlControl, Incremental, TextDedup}
+import graft.sources.ParquetMeta
 
 /** The reference's 15-minute incremental micro-batch DAG
   * (dags/incremental_etl_dag.py) re-expressed as Structured Streaming:
@@ -206,7 +207,7 @@ object StreamingDedup {
           else if (!corpusExists) batchDistinct
           else {
             if (!hwmInit) {
-              corpusHwm = spark.read.parquet(corpusDir)
+              corpusHwm = ParquetMeta.readParquet(spark, corpusDir)
                 .agg(max(col(idCol).cast("long"))).head() match {
                   case r if r.isNullAt(0) => None
                   case r => Some(r.getLong(0))
@@ -246,7 +247,7 @@ object StreamingDedup {
         if (corpusExists || appended)
           graft.operators.LshArtifact.dailyDedupRun(spark, controlDir,
             artifactDir, assignDir, sourceId,
-            spark.read.parquet(corpusDir), idCol, textCol,
+            ParquetMeta.readParquet(spark, corpusDir), idCol, textCol,
             batchId = s"stream-$id", threshold = threshold,
             numPerm = numPerm, bands = bands, shingleN = shingleN)
         ()
@@ -330,7 +331,7 @@ object StreamingDedup {
             // is (re)processing — restores the pre-crash prior when a
             // torn run appended hashes but never published the docs
             val prior = Some(storeDir).filter(EtlControl.nonEmptyDir(spark, _))
-              .map(spark.read.parquet(_).join(
+              .map(ParquetMeta.readParquet(spark, _).join(
                 guarded.select(col(idCol).as("doc_id")), Seq("doc_id"),
                 "left_anti")).orNull
             dedupAgainst(guarded, prior)

@@ -185,7 +185,7 @@ class ControlLogSpec extends SparkTestBase {
     assert(slow.select("batch_id").as[String].collect().toSeq == Seq("b1"))
   }
 
-  test("footer-schema reads equal spark.read.parquet, and fall back without a Spark footer") {
+  test("footer-schema reads equal spark.read.parquet with or without a Spark footer, and fall back for partitions") {
     import org.apache.parquet.example.data.simple.SimpleGroup
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     val root = tmp("footer-schema")
@@ -199,10 +199,11 @@ class ControlLogSpec extends SparkTestBase {
       new org.apache.hadoop.fs.Path(s"$root/foreign/part-0.parquet"))
       .withType(plainType).build()
     try w.write(new SimpleGroup(plainType).append("x", 7L)) finally w.close()
-    assert(ParquetMeta.footerSchema(spark, s"$root/foreign").isEmpty)
+    assert(ParquetMeta.footerSchema(spark, s"$root/foreign") ==
+      Some(spark.read.parquet(s"$root/foreign").schema))
     assert(ParquetMeta.readParquet(spark, s"$root/foreign").collect()
       .map(_.getLong(0)).toSeq == Seq(7L))
-    for (d <- Seq(s"$root/flat", s"$root/parted")) {
+    for (d <- Seq(s"$root/flat", s"$root/parted", s"$root/foreign")) {
       val (viaFooter, plain) = (ParquetMeta.readParquet(spark, d), spark.read.parquet(d))
       assert(viaFooter.schema == plain.schema)
       assert(viaFooter.except(plain).isEmpty && plain.except(viaFooter).isEmpty)

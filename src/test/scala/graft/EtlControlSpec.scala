@@ -909,4 +909,24 @@ class EtlControlSpec extends SparkTestBase {
     val ids = spark.read.parquet(store).as[Long].collect().toSeq.sorted
     assert(ids == Seq(1L, 2L, 3L, 4L))
   }
+
+  test("a gated cycle with a new watermark compiles no new class") {
+    import spark.implicits._
+    import graft.operators.Validate
+    val dir = Files.createTempDirectory("etl-codegen").toString
+    val (control, target) = (s"$dir/control", s"$dir/target")
+    def cycle(batch: String, secs: Seq[Int]) =
+      EtlControl.runIncrementalCycle(spark, control, "s",
+        secs.map(s => (s.toLong, s, s.toDouble)).toDF("k", "sec", "amount")
+          .select(col("k"), timestamp_seconds(col("sec")).as("ts"), col("amount")),
+        "ts", Seq("k"), target, 0L, batch,
+        expectations = Seq(Validate.NotNull("k"), Validate.InRange("amount", Some(0.0), None)))
+    cycle("b1", Seq(1, 2))
+    assert(cycle("b2", Seq(2, 3, 4)) == (4000000L, 3L))
+    def compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val before = compiles
+    assert(cycle("b3", Seq(4, 5, 6, 7)) == (7000000L, 4L))
+    assert(compiles == before)
+    assert(spark.read.parquet(target).count() == 7L)
+  }
 }

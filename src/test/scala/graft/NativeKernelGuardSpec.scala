@@ -68,10 +68,11 @@ class NativeKernelGuardSpec extends AnyFunSuite {
 
   /** The kernels that stay classes: three pin objects in generated code
     * and four keep their loop there; every other kernel is a row of the
-    * kernel table on its three generic expressions. */
+    * kernel table on its three generic expressions. `LongParam` is no
+    * kernel: it pins a per-call value in generated code. */
   private val kernelClasses = Set("MinHashSignature", "BloomMightContain",
     "CmsEstimate", "VecDot", "VecL2Sq", "PqEncode", "PqAdc",
-    "UnaryKernel", "BinaryKernel", "TernaryKernel")
+    "UnaryKernel", "BinaryKernel", "TernaryKernel", "LongParam")
 
   test("no expression case class under plans/ outside the kernel classes") {
     val caseClass = "case class (\\w+)".r

@@ -7,7 +7,8 @@ import graft.sources.ParquetMeta
 
 /** Footer-metadata row counts: exactness against the scan-based count
   * on every table (single-file and directory layouts), the distributed
-  * path forced, and the q01 metadata form vs its scan twin. */
+  * path forced, and the q01 metadata form vs its scan twin. Footer
+  * schemas: equality with Spark's own inference, and its fallbacks. */
 class ParquetMetaSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -41,10 +42,21 @@ class ParquetMetaSpec extends SparkTestBase {
       // droppings a committer might leave behind
       new java.io.File(tmp, "_SUCCESS").createNewFile()
       new java.io.File(sub, ".stale.crc").createNewFile()
+      // a crashed write's task file under _temporary/, of another schema
+      val crashed = new java.io.File(sub, "_temporary/0/task_0")
+      spark.range(3).selectExpr("cast(id as string) as s").coalesce(1)
+        .write.parquet(crashed.getPath)
       val files = ParquetMeta.listDataFiles(spark, tmp.getPath)
       assert(files.nonEmpty &&
         files.forall(_.getName.endsWith(".parquet")))
       assert(ParquetMeta.rowCount(spark, tmp.getPath) == 7L)
+      // the footer schema skips what Spark's file index skips
+      assert(ParquetMeta.footerSchema(spark, sub.getPath) ==
+        Some(spark.read.parquet(sub.getPath).schema))
+      assert(ParquetMeta.footerSchema(spark, tmp.getPath).isEmpty) // partitioned
+      // summary files are read first by Spark's inference: fall back
+      new java.io.File(sub, "_common_metadata").createNewFile()
+      assert(ParquetMeta.footerSchema(spark, sub.getPath).isEmpty)
       // a `_`-prefixed partition dir holds data: Spark keeps names with `=`
       spark.range(10).toDF("id")
         .withColumn("__kb", org.apache.spark.sql.functions.lit(1))
@@ -53,6 +65,55 @@ class ParquetMetaSpec extends SparkTestBase {
       assert(ParquetMeta.rowCount(spark, kb.getPath) ==
         spark.read.parquet(kb.getPath).count())
     } finally { rm(tmp); rm(kb) }
+  }
+
+  test("footerSchema equals Spark's inference for every sf0.001 table, and loading one runs no job") {
+    for (t <- Tables.allTables) {
+      val p = s"$sf0001/$t.parquet"
+      assert(ParquetMeta.footerSchema(spark, p) == Some(spark.read.parquet(p).schema), t)
+    }
+    for (t <- Tables.starTables) assert(jobsOf(Tables.load(spark, sf0001, t)) == 0, t)
+    // events under the NTZ rule: its naive `ts` maps as the rule says
+    val events = s"$sf0001/events.parquet"
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    spark.conf.set(key, "false")
+    val ltz = try spark.read.parquet(events).schema finally spark.conf.unset(key)
+    assert(ParquetMeta.footerSchema(spark, events, inferTimestampNTZ = Some(false)) ==
+      Some(ltz))
+    assert(ltz("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(Tables.loadEvents(spark, sf0001).schema("ts").dataType ==
+      org.apache.spark.sql.types.TimestampType)
+    // a session that merges schemas: exact for one data file only
+    val tmp = java.nio.file.Files.createTempDirectory("pqmerge").toString
+    Seq(1L).toDF("a").write.mode("append").parquet(tmp)
+    Seq(2L).toDF("b").write.mode("append").parquet(tmp)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      assert(ParquetMeta.footerSchema(spark, tmp).isEmpty)
+      assert(ParquetMeta.readParquet(spark, tmp).columns.sorted.toSeq == Seq("a", "b"))
+      assert(ParquetMeta.footerSchema(spark, events) ==
+        Some(spark.read.parquet(events).schema))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("loadEvents never changes the session's NTZ setting") {
+    val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val before = spark.conf.getOption(key)
+    @volatile var done = false
+    val (polls, changes) = (new java.util.concurrent.atomic.AtomicLong,
+      new java.util.concurrent.atomic.AtomicLong)
+    val poller = new Thread(() => while (!done) {
+      if (spark.conf.getOption(key) != before) changes.incrementAndGet()
+      polls.incrementAndGet()
+    })
+    poller.start()
+    val reader = new Thread(() =>
+      for (_ <- 1 to 20) Tables.loadEvents(spark, sf0001).schema)
+    reader.start()
+    reader.join()
+    done = true
+    poller.join()
+    assert(polls.get > 0 && changes.get == 0)
   }
 
   test("q01 metadata rowCounts ≡ scan-based twin (rows and order)") {
